@@ -11,7 +11,7 @@ import graft.lake.Merge
   * a named query over the driver fixtures, plus the harness-breadth suite
   * (joins, agg variants, set ops, windows, streaming-shaped batch
   * queries). Scale rationale lives on each query; plans audited via
-  * `PlanAudit`.
+  * `ProfileQuery`.
   */
 object CoreQueries {
   import Tables._

@@ -107,8 +107,8 @@ object CoreQueries20 {
       // file-identity contract, which the default hit-fraction policy
       // may legitimately skip on a state this small (a handful of
       // hash-collided files). The policy itself is pinned
-      // deterministically in MedallionSpec and measured in
-      // MedallionScale (SCALE.md).
+      // deterministically in MedallionSpec and measured in SCALE.md
+      // ("Gold refresh goes FILE-granular", r16).
       val m = new graft.lake.Medallion(s, root,
         goldStateFiles = 32, goldRefreshCrossover = 1.1)
       val ev = events(s, d)

@@ -185,7 +185,7 @@ object CoreQueries24 {
         count(lit(1)).as("n"), count(col("o_orderpriority")).as("n_pri"),
         min("o_totalprice").as("mn_price"), max("o_totalprice").as("mx_price"),
         min("o_orderpriority").as("mn_pri"), max("o_orderdate").as("mx_date"))
-      val out = org.apache.spark.sql.graft.GraftMetadataAggregates(s)(
+      val out = org.apache.spark.sql.graft.GraftMetadataAggregates(
         agg.queryExecution.optimizedPlan)
       if (!out.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
         sys.error("q_meta_agg: the metadata-aggregate rule declined; " +
@@ -208,7 +208,7 @@ object CoreQueries24 {
         Seq("o_orderpriority"))
       val agg = t.read().groupBy(col("o_orderpriority").as("pri"))
         .agg(count(lit(1)).as("n"), max("o_totalprice").as("mx0"))
-      val out = org.apache.spark.sql.graft.GraftMetadataAggregates(s)(
+      val out = org.apache.spark.sql.graft.GraftMetadataAggregates(
         agg.queryExecution.optimizedPlan)
       if (!out.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
         sys.error("q_meta_group: the grouped metadata rule declined; " +

@@ -94,8 +94,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => org.apache.spark.sql.graft.RangeJoinBanding)
     // metadata-only count/min/max over lake snapshots (r18 — Delta's
     // OptimizeMetadataOnlyDeltaQuery shape): exact-or-decline
-    ext.injectOptimizerRule(s =>
-      org.apache.spark.sql.graft.GraftMetadataAggregates(s))
+    ext.injectOptimizerRule(_ => org.apache.spark.sql.graft.GraftMetadataAggregates)
     // SQL DML over catalog lake tables: UPDATE / MERGE INTO / arbitrary-
     // predicate DELETE route to the lake's file-granular primitives
     // (Delta's DeltaAnalysis shape — see GraftDmlRules)

@@ -140,7 +140,7 @@ object LlmQueries11 {
     // Intra-doc repetition strip: zero-shuffle by construction — the
     // segment list, the keep-first pass, the rebuild, and the md5 proof
     // are all scan-local expressions. Two O(L²) traps fixed in round 14
-    // (SelfRepScale measures both):
+    // (SCALE.md "q_selfrep_strip: TWO quadratics removed, measured"):
     //  1. the keep-first fold was an aggregate HOF with an
     //     array_contains accumulator — O(L²) comparisons; replaced by
     //     array_sort by (seg, idx) → adjacent-dedup → re-sort by idx,

@@ -3,8 +3,14 @@ package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
-/** Measurement tool (guide §1): per-JOB time attribution inside one
-  * query — `runMain graft.ProfileQuery <sfDir> <query>[,<query>...]`.
+/** Measurement tool (guide §1): per-query timing, per-JOB time
+  * attribution and the formatted physical plan —
+  * `runMain graft.ProfileQuery <sfDir> <query>[,<query>...]`.
+  *
+  * Each query runs twice. The first (cold) run pays planning, codegen
+  * and first-touch I/O; the second (warm) run is profiled. Their gap
+  * separates the fixed overhead from the data-path cost, because a
+  * single `count()` timing hides it.
   *
   * The lake lifecycle queries (commit → stats → rewrite → read) are
   * many small Spark jobs; the bench's per-query wall number can't say
@@ -68,16 +74,20 @@ object ProfileQuery {
     val all = SparkEntry.queries
     names.foreach { n =>
       require(all.contains(n), s"unknown query $n")
-      all(n)(spark, sfDir).count() // warm
+      val t0Cold = System.nanoTime()
+      all(n)(spark, sfDir).count()
+      val cold = (System.nanoTime() - t0Cold) / 1e9
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      jobs.clear(); stageToJob.clear(); order.clear()
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      jobs.clear(); stageToJob.clear(); order.clear()
       val t0 = System.nanoTime()
-      all(n)(spark, sfDir).count()
+      val df = all(n)(spark, sfDir)
+      df.count()
       val wall = (System.nanoTime() - t0) / 1e9
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
-      println(f"\n===== $n wall=${wall}%.3f s  jobs=${jobs.size} =====")
+      println(f"\n===== $n cold=${cold}%.3f s  warm=${wall}%.3f s  " +
+        f"jobs=${jobs.size} =====")
       import scala.jdk.CollectionConverters._
       var prevEnd = 0L
       var jobSum = 0.0; var gapSum = 0.0
@@ -95,6 +105,8 @@ object ProfileQuery {
       println(f"  TOTAL wall=${wall}%.3f  jobTime=${jobSum}%.3f  " +
         f"interJobGaps=${gapSum}%.3f  preFirstJob+tail=" +
         f"${wall - jobSum - gapSum}%.3f")
+      println(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
     }

@@ -79,6 +79,31 @@ object Tables {
     }
   }
 
+  /** Shuffle-partition count for a keyed stateful stream (r20).
+    *
+    * Each state-store partition pays fixed cost per micro-batch (store
+    * load + delta write + fsync), so a keyed streaming aggregate wants
+    * its state partitions sized to the aggregate's KEY CARDINALITY, not
+    * the session's data-parallel shuffle width — 32 near-empty stores
+    * per batch is the anti-pattern at any cluster size. Callers pass the
+    * observed key cardinality of the stream's initial data — free when
+    * collected via `Dataset.observe` on the seed commit's own write (an
+    * approx-distinct as a separate job measured ~0.2 s of pure fixed
+    * overhead) — capped by the session's shuffle parallelism;
+    * `spark.graft.stream.statePartitions` overrides for production
+    * tuning (the by-name param keeps the override path job-free).
+    */
+  def statePartitions(s: SparkSession, distinctKeys: => Long): Int =
+    s.conf.getOption("spark.graft.stream.statePartitions")
+      .map { raw =>
+        val n = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"spark.graft.stream.statePartitions must be an integer, got '$raw'"))
+        require(n > 0, s"spark.graft.stream.statePartitions must be positive, got '$raw'")
+        n
+      }
+      .getOrElse(math.max(1L, math.min(distinctKeys,
+        s.sessionState.conf.numShufflePartitions.toLong)).toInt)
+
   /** Conditional scan-parallelism widener (r19, guide §2.5 "one huge
     * unsplittable file": repartition immediately after the read).
     *
@@ -101,33 +126,9 @@ object Tables {
     * frames, never joined plans — `df.rdd` on a join would execute its
     * broadcast side).
     */
-  /** Shuffle-partition count for a keyed stateful stream (r20).
-    *
-    * Each state-store partition pays fixed cost per micro-batch (store
-    * load + delta write + fsync), so a keyed streaming aggregate wants
-    * its state partitions sized to the aggregate's KEY CARDINALITY, not
-    * the session's data-parallel shuffle width — 32 near-empty stores
-    * per batch is the anti-pattern at any cluster size. Callers pass the
-    * observed key cardinality of the stream's initial data — free when
-    * collected via `Dataset.observe` on the seed commit's own write (an
-    * approx-distinct as a separate job measured ~0.2 s of pure fixed
-    * overhead) — capped by the session's shuffle parallelism;
-    * `spark.graft.stream.statePartitions` overrides for production
-    * tuning (the by-name param keeps the override path job-free).
-    */
-  def statePartitions(s: SparkSession, distinctKeys: => Long): Int =
-    s.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.trim.toInt)
-      .getOrElse(math.max(1L, math.min(distinctKeys,
-        s.sessionState.conf.numShufflePartitions.toLong)).toInt)
-
   def widen(df: DataFrame, key: org.apache.spark.sql.Column*): DataFrame = {
     val spark = df.sparkSession
-    val enabled = spark.conf.getOption("spark.graft.scan.widen")
-      .forall(_.trim != "false") // A/B + rollback gate, default on
-    val cores = spark.sparkContext.defaultParallelism
-    val parts = if (enabled) df.rdd.getNumPartitions else Int.MaxValue
-    if (parts >= cores) df
+    if (df.rdd.getNumPartitions >= spark.sparkContext.defaultParallelism) df
     else {
       val n = spark.sessionState.conf.numShufflePartitions
       if (key.isEmpty) df.repartition(n) else df.repartition(n, key: _*)

@@ -14,7 +14,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  2. CONDITIONAL PUT of an arbiter entry keyed by `dst`, recording
   *     the winner's `tmp` path + owner + wall time. Exactly one
   *     concurrent writer's put succeeds — this is the commit's
-  *     linearization point;
+  *     linearization point. A put that succeeds only because an
+  *     earlier winner already published and released the entry sees
+  *     `dst` on a second probe and loses;
   *  3. the put winner copies its tmp to `dst` (plain write: the
   *     arbiter entry already made it the only legitimate writer of
   *     `dst`), removes the entry, wins;
@@ -98,6 +100,10 @@ class ConditionalPutCommitPublisher extends VersionedTable.CommitPublisher {
     val body = s"""{"tmp":"${tmp.toString}","owner":"$owner",""" +
       s""""ts":${System.currentTimeMillis()}}"""
     if (putEntryIfAbsent(fs, entry, body)) {
+      // An earlier winner may have published `dst` and released its
+      // entry between our exists probe and our put: entries are only
+      // released once `dst` exists, so re-probing here decides it.
+      if (fs.exists(dst)) { removeEntry(fs, entry); return false }
       // we are the arbitrated winner: publish OUR content
       if (!copy(fs, tmp, dst)) {
         // leave the entry: any later writer completes from our tmp

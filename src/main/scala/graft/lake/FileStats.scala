@@ -93,6 +93,20 @@ object FileStats {
       nulls: Long,
       rows: Long)
 
+  private[lake] def jsonEscape(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  /** A stats sidecar's JSONL lines: one per (file, column), sorted by
+    * file then column — what a commit writes and the planner parses. */
+  private[lake] def sidecarLines(stats: Map[String, Map[String, ColStats]]): Seq[String] =
+    stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
+      cols.toSeq.sortBy(_._1).map { case (c, s) =>
+        def opt(o: Option[String]) = o.map(x => "\"" + jsonEscape(x) + "\"").getOrElse("null")
+        s"""{"file":"${jsonEscape(f)}","col":"${jsonEscape(c)}","kind":"${s.kind}",""" +
+          s""""min":${opt(s.min)},"max":${opt(s.max)},"nulls":${s.nulls},"rows":${s.rows}}"""
+      }
+    }
+
   /** Stats-eligible type → kind tag. Temporal types are "num" because
     * collection integer-encodes them (see above). */
   def statKind(dt: DataType): Option[String] = dt match {

@@ -41,7 +41,8 @@ import org.apache.spark.sql.functions._
   * file-size target (128 MB–1 GB each) as the state grows — the same
   * contract hive-partitioned overwrites have with partition sizing.
   * With files held at a fixed size, refresh cost stays FLAT as total
-  * state grows (measured: graft.MedallionScale, SCALE.md round 15).
+  * state grows (SCALE.md "Bucket-partitioned Gold: refresh cost ~FLAT
+  * as state grows 10×", round 15).
   *
   * Aggregates maintained: n / vsum (avg = vsum/n at read) — plain
   * signed-group algebra — plus vmin / vmax with the standard
@@ -65,14 +66,15 @@ import org.apache.spark.sql.functions._
   *   cost is ≈ hit-fraction × the overwrite's (one read + one write of
   *   hit files vs of all files; the fold join is shared and smaller),
   *   plus a metadata-only stats probe — so it pays almost to hit =
-  *   total. Measured (graft.MedallionScale, 4M-group state, SCALE.md
-  *   round 16): a half-the-buckets batch hits 62% of files and runs
-  *   0.66–0.79× of the forced-overwrite wall; a one-bucket batch reads
-  *   1 of 205 files at a flat ~1s regardless of state size. The
-  *   default 0.9 falls back only when nearly every file is hit anyway —
-  *   there the overwrite is strictly simpler AND re-balances the state
-  *   into `goldStateFiles` fresh files. 0 forces the full overwrite
-  *   every refresh (the measurement baseline); ≥ 1 never falls back.
+  *   total. Measured (4M-group state, SCALE.md "Gold refresh goes
+  *   FILE-granular", round 16): a half-the-buckets batch hits 62% of
+  *   files and runs 0.66–0.79× of the forced-overwrite wall; a
+  *   one-bucket batch reads 1 of 205 files at a flat ~1s regardless of
+  *   state size. The default 0.9 falls back only when nearly every
+  *   file is hit anyway — there the overwrite is strictly simpler AND
+  *   re-balances the state into `goldStateFiles` fresh files. 0 forces
+  *   the full overwrite every refresh (the measurement baseline);
+  *   ≥ 1 never falls back.
   */
 final class Medallion(spark: SparkSession, root: String,
                       goldStateFiles: Int = 32,
@@ -272,9 +274,9 @@ final class Medallion(spark: SparkSession, root: String,
             // paid ~three reads for its pre-scan + kept-rows machinery
             // (measured 1.5× SLOWER than a full overwrite at
             // half-the-buckets; the file path measures 0.66–0.79× at a
-            // 62% hit fraction, MedallionScale/SCALE.md r16). The plain
-            // overwrite remains
-            // the fallback when the hit FRACTION crosses
+            // 62% hit fraction, SCALE.md "Gold refresh goes
+            // FILE-granular", r16). The plain overwrite remains the
+            // fallback when the hit FRACTION crosses
             // `goldRefreshCrossover` — at that point reading the rest
             // of the state costs less than the scope bookkeeping.
             val (hitFiles, totalFiles) = gold.latestVersion() match {
@@ -376,8 +378,7 @@ final class Medallion(spark: SparkSession, root: String,
                   hitFiles, aligned, "gold", head.toLong)
               }
               goldCursor.advance(head)
-              GoldRefresh(head, touched, nRescan,
-                if (fullRewrite) totalFiles else hitFiles.size, totalFiles)
+              GoldRefresh(head, touched, nRescan)
             } finally { if (mayRescan) merged.unpersist(); () }
           } else {
             // a metadata-only / netted-empty range: nothing to fold
@@ -396,11 +397,7 @@ final class Medallion(spark: SparkSession, root: String,
 }
 
 /** One Gold refresh's scale-proof observables: the consumed Silver
-  * version, the buckets the batch touched, how many groups needed the
-  * min/max delete-rescan, and the refresh's file economics — how many
-  * state files the touched buckets hit (= what was read and replaced)
-  * out of how many the state holds (0/0 on a seeding or skipped
-  * refresh). */
+  * version, the buckets the batch touched, and how many groups needed
+  * the min/max delete-rescan. */
 case class GoldRefresh(consumedVersion: Int, touchedBuckets: Seq[Any],
-                       rescannedGroups: Long, hitFiles: Int = 0,
-                       totalFiles: Int = 0)
+                       rescannedGroups: Long)

@@ -834,7 +834,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   /** Job-description scope (guide §1.5): labels every Spark job `f`
     * submits as `lake:<desc>` so ProfileQuery / the UI can attribute
     * the commit protocol's many small jobs. Thread-local; restores the
-    * caller's description (Bench/TimeQuery group labels survive). */
+    * caller's description (Bench group labels survive). */
   private def labeled[T](desc: String)(f: => T): T = {
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
@@ -1096,7 +1096,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   private def statsFile(v: Int, nonce: String) =
     new Path(logDir, f"v$v%08d-$nonce-stats.jsonl")
 
-  private def jesc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+  import FileStats.{jsonEscape => jesc}
 
   private def writeStats(names: Seq[String], v: Int, nonce: String,
       footers: Seq[(String, org.apache.parquet.hadoop.metadata.ParquetMetadata)] = Nil,
@@ -1104,25 +1104,16 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     if (names.isEmpty) return
     // Footer gear (r19): derive the sidecar from the staging pass's own
     // parquet footers — value-identical by construction (see
-    // collectFromFooters), zero extra jobs. Any column it can't prove
-    // falls back to the distributed aggregate, i.e. the exact pre-r19
-    // behavior. `spark.graft.lake.stats.footerGear=false` forces the
-    // distributed pass (parity testing / rollback).
-    val footerGear = spark.conf
-      .getOption("spark.graft.lake.stats.footerGear").forall(_.trim != "false")
+    // collectFromFooters; FooterStatsSpec pins the parity), zero extra
+    // jobs. Any column it can't prove falls back to the distributed
+    // aggregate, i.e. the exact pre-r19 behavior.
     val fromFooters =
-      if (footerGear && schema.isDefined && footers.size == names.size)
+      if (schema.isDefined && footers.size == names.size)
         FileStats.collectFromFooters(spark, schema.get, footers)
       else None
     val stats = fromFooters.getOrElse(
       FileStats.collect(spark, names.map(n => s"$tablePath/$n")))
-    val lines = stats.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
-      cols.toSeq.sortBy(_._1).map { case (c, s) =>
-        def opt(o: Option[String]) = o.map(x => "\"" + jesc(x) + "\"").getOrElse("null")
-        s"""{"file":"${jesc(f)}","col":"${jesc(c)}","kind":"${s.kind}",""" +
-          s""""min":${opt(s.min)},"max":${opt(s.max)},"nulls":${s.nulls},"rows":${s.rows}}"""
-      }
-    }
+    val lines = FileStats.sidecarLines(stats)
     if (lines.isEmpty) return
     val dir = new Path(logDir)
     if (!fs.exists(dir)) fs.mkdirs(dir)
@@ -1420,20 +1411,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     dvs.isEmpty && c.colMap.isEmpty && c.droppedPhys.isEmpty
   }
 
-  /** True when the snapshot's ONLY non-plain feature is a deletion-
-    * vector overlay (no column mapping, no drop tombstones): the r17
-    * native fast path — vectorized parquet scan through
-    * [[org.apache.spark.sql.graft.GraftFileIndex]] with the DV
-    * anti-join on top — covers exactly these. Column-mapped snapshots
-    * keep the featureful bridge. */
-  def isDvOnlySnapshot(version: Option[Int] = None): Boolean = {
-    val v = version.orElse(latestVersion())
-      .getOrElse(sys.error(s"no committed versions at $tablePath"))
-    val c = readCommit(v)
-    val (dvs, _) = splitDv(c.files)
-    dvs.nonEmpty && c.colMap.isEmpty && c.droppedPhys.isEmpty
-  }
-
   /** Snapshot read of a DV-ONLY snapshot on the NATIVE scan: the data
     * side is the same log-planned, stats-skipping, vectorized
     * [[org.apache.spark.sql.graft.GraftFileIndex]] relation plain
@@ -1679,10 +1656,11 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * the file set in half does the EXACT distributed stats join run
     * (sparse keys spread across the keyspace) — and then only on the
     * files the range kept, and only with `exactGear = true`: the
-    * automatic rule passes false by default, capping its worst case at
-    * one small aggregate rather than a per-query shuffle (the r18
-    * DppScale adjudication measured the always-join gear LOSING to the
-    * plain scan on uncorrelated layouts). */
+    * automatic rule passes false, capping its worst case at one small
+    * aggregate rather than a per-query shuffle (SCALE.md "Join-driven
+    * pruning + metadata aggregates, measured", r18: the always-join
+    * gear's ~0.4 s fixed cost LOST to the plain scan on uncorrelated
+    * layouts). */
   def scopeFilesForKeys(keys: DataFrame, keyCols: Seq[String],
                         version: Option[Int] = None,
                         exactGear: Boolean = true): Seq[String] = {

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    join at 100 TB is never constructed);
   *  - SimHash: 64-bit signature, banded bucketing, Hamming verify.
   *
-  * Physical-shape notes (measured on this engine, see PlanAudit):
+  * Physical-shape notes (measured on this engine, see PLANS.md "Dedup sketches"):
   *  - Signatures use explode + grouped min/sum aggregation, NOT
   *    higher-order-function projections: Spark HOF lambdas
   *    (`transform`/`aggregate`) evaluate interpreted (no codegen) and are
@@ -67,12 +67,6 @@ object Dedup {
     GraftColumnBridge.column(
       org.apache.spark.sql.graft.ShinglesExpr(GraftColumnBridge.expression(text), n))
   }
-
-  /** (doc_id, shingle-hash) exploded — shingle strings hashed exactly
-    * once; everything downstream works on longs. */
-  private def shingleHashes(docs: DataFrame, shingleN: Int): DataFrame =
-    docs.select(col("doc_id"), explode(shingles(col("text"), shingleN)).as("shingle"))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
 
   /** Prime modulus for the replayable hash family (minhash permutations,
     * band buckets): all arithmetic stays well under 2^63, so any

@@ -71,7 +71,8 @@ object CurationPipeline {
     // signature pass, both exact-verify shingle sides, the survivor
     // anti-join under each of the two chunk-stage consumers) — without
     // this checkpoint the gopher aggregation + join re-runs for every
-    // one of them (PlanAudit: 4.4s → 2.5s warm at sf0.1 from this line).
+    // one of them (4.4s → 2.5s warm at sf0.1 from this line; PLANS.md
+    // "Curation pipeline").
     val kept = checked.join(
       quality.filter(col("keep"))
         .select("doc_id", "n_tokens", "rep_ratio", "alpha_ratio"), "doc_id")

@@ -36,12 +36,13 @@ import graft.lake.{FileStats, VersionedTable}
   * slice a selective dim filter actually touches, on a completely
   * unmodified user query.
   *
-  * Cost posture (the r18 DppScale lesson: a pruning gear that costs a
-  * shuffle per query LOSES on uncorrelated layouts): the automatic
-  * path runs ONLY the range-first gear — one tiny aggregate over the
-  * dim keys plus a driver-side stats fold. Its worst case (nothing
-  * prunes) adds one small dim-side job; the exact distributed stats
-  * join stays behind `spark.graft.lake.dfp.exactGear` (default false).
+  * Cost posture (SCALE.md "Join-driven pruning + metadata aggregates,
+  * measured", r18: a pruning gear that costs a shuffle per query — a
+  * measured ~0.4 s fixed cost — LOSES to the plain scan on uncorrelated
+  * layouts): the automatic path runs ONLY the range-first gear — one
+  * tiny aggregate over the dim keys plus a driver-side stats fold. Its
+  * worst case (nothing prunes) adds one small dim-side job; the exact
+  * distributed stats join is left to explicit `readForKeys` callers.
   * The dim side executes once more than the join itself needs — the
   * same duplication Spark's own runtime bloom filters accept.
   *
@@ -237,12 +238,10 @@ case class GraftDynamicFileScanExec(
     @transient graftSession: SparkSession) extends LeafExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val exactGear = graftSession.conf.getOption("spark.graft.lake.dfp.exactGear")
-      .exists(_.trim.equalsIgnoreCase("true"))
     val keysDf = GraftColumnBridge.ofRows(graftSession, keysPlan)
       .toDF(factKeys: _*)
     val hit = table.scopeFilesForKeys(keysDf, factKeys, Some(version),
-      exactGear = exactGear)
+      exactGear = false)
     GraftDynamicFileScanExec.lastScope.set(
       (table.tablePath, hit.size, table.snapshotDataFiles(Some(version)).size))
     val base = table.readSnapshotFiles(hit, Some(version))

@@ -115,11 +115,11 @@ class GraftFileIndex(spark: SparkSession, val table: VersionedTable,
     * FILES at runtime, the thing a literal-only stats translator can
     * never do). Empty when the table is unpartitioned OR any file's
     * tuple is unrecoverable (lost sidecar, mixed file) — then the index
-    * stays flat, which is never wrong, just less pruned. */
+    * stays flat, which is never wrong, just less pruned. Measured 1.8×
+    * over the flat index on a 64-partition star join (SCALE.md
+    * "Join-driven pruning + metadata aggregates, measured", r18). */
   private val partTuples: Map[String, InternalRow] =
-    if (table.partitionColumnsAt(pinnedVersion).isEmpty ||
-        !spark.conf.getOption("spark.graft.lake.partitionedIndex")
-          .forall(_.trim.equalsIgnoreCase("true"))) Map.empty
+    if (table.partitionColumnsAt(pinnedVersion).isEmpty) Map.empty
     else table.partitionTuplesInternal(Some(pinnedVersion)).getOrElse(Map.empty)
 
   private val partFields: Seq[StructField] = {

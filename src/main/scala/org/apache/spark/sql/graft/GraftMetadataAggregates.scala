@@ -1,6 +1,5 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -43,25 +42,20 @@ import graft.lake.FileStats
   *    [[FileStats.internalValue]] — NaN-poisoned files have no stats
   *    and decline the rewrite (correct: NaN would BE the max).
   *
-  * Gate: `spark.graft.lake.metadataAggregates` (default true).
+  * Measured 7× over the full scan for `count(*)` on a 64-file fact, and
+  * constant at any scale (SCALE.md "Join-driven pruning + metadata
+  * aggregates, measured", r18).
   */
-case class GraftMetadataAggregates(session: SparkSession)
-    extends Rule[LogicalPlan] {
+object GraftMetadataAggregates extends Rule[LogicalPlan] {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = session.conf
-      .getOption("spark.graft.lake.metadataAggregates")
-      .forall(_.trim.equalsIgnoreCase("true"))
-    if (!enabled) plan
-    else plan.transformDown {
-      case agg @ Aggregate(Seq(), aggExprs, child, _) =>
-        rewrite(agg, aggExprs, child).getOrElse(agg)
-      case agg @ Aggregate(groupings, aggExprs, child, _)
-          if groupings.forall(_.isInstanceOf[AttributeReference]) =>
-        rewriteGrouped(agg,
-          groupings.map(_.asInstanceOf[AttributeReference]), aggExprs, child)
-          .getOrElse(agg)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+    case agg @ Aggregate(Seq(), aggExprs, child, _) =>
+      rewrite(agg, aggExprs, child).getOrElse(agg)
+    case agg @ Aggregate(groupings, aggExprs, child, _)
+        if groupings.forall(_.isInstanceOf[AttributeReference]) =>
+      rewriteGrouped(agg,
+        groupings.map(_.asInstanceOf[AttributeReference]), aggExprs, child)
+        .getOrElse(agg)
   }
 
   /** Pick the winning numeric bound among per-file bound STRINGS by

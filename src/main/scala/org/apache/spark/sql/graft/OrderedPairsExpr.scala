@@ -44,19 +44,20 @@ case class OrderedPairsExpr(child: Expression)
 }
 
 object OrderedPairs {
-  /** Anchor-major combination expansion; called from generated code. */
+  /** Anchor-major combination expansion; called from generated code.
+    * A null element pairs like any other, as a null struct field. */
   def compute(xs: ArrayData): ArrayData = {
     val n = xs.numElements()
     if (n < 2) return new GenericArrayData(Array.empty[Any])
+    val elems = Array.tabulate[Any](n)(i =>
+      if (xs.isNullAt(i)) null else xs.getUTF8String(i))
     val out = new Array[Any](n * (n - 1) / 2)
     var k = 0
     var i = 0
     while (i < n - 1) {
-      val x = xs.getUTF8String(i)
       var j = i + 1
       while (j < n) {
-        out(k) = new GenericInternalRow(
-          Array[Any](x, xs.getUTF8String(j)): Array[Any])
+        out(k) = new GenericInternalRow(Array[Any](elems(i), elems(j)))
         k += 1
         j += 1
       }

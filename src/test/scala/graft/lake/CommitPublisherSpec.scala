@@ -189,4 +189,28 @@ class CommitPublisherSpec extends AnyFunSuite {
       assert(reopened.history()(2)._2 == "append")
     } finally s.conf.unset("spark.graft.lake.commitPublisher")
   }
+
+  test("a put that lands after an earlier winner published and released its entry loses") {
+    val s = mosSpark
+    val dir = "mos://" + Files.createTempDirectory("graft-cput-late").toString
+    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    def write(p: Path, body: String): Unit = {
+      val out = fs.create(p, false); out.write(body.getBytes("UTF-8")); out.close()
+    }
+    val dst = new Path(dir, "v00000001.json")
+    val (tmpA, tmpB) = (new Path(dir, ".tmp-a.json"), new Path(dir, ".tmp-b.json"))
+    write(tmpA, "A"); write(tmpB, "B")
+    // writer A runs its whole publish between B's exists probe and B's put
+    val late = new ConditionalPutCommitPublisher {
+      override protected def putEntryIfAbsent(fs: FileSystem, entry: Path,
+                                              body: String): Boolean = {
+        assert(new ConditionalPutCommitPublisher().publishIfAbsent(fs, tmpA, dst))
+        super.putEntryIfAbsent(fs, entry, body)
+      }
+    }
+    assert(!late.publishIfAbsent(fs, tmpB, dst), "both writers won the same version")
+    val in = fs.open(dst)
+    try assert(new String(in.readAllBytes(), "UTF-8") == "A") finally in.close()
+    assert(!fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith(".arbiter-")))
+  }
 }

@@ -64,7 +64,7 @@ class ConvertSpec extends AnyFunSuite {
     t.convertFromParquet()
     // add actions carried footer-exact rows → metadata count answers
     val agg = t.read().agg(count(lit(1)).as("n"), min("k").as("mn"), max("k").as("mx"))
-    val out = org.apache.spark.sql.graft.GraftMetadataAggregates(spark)(
+    val out = org.apache.spark.sql.graft.GraftMetadataAggregates(
       agg.queryExecution.optimizedPlan)
     assert(out.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
       s"metadata rule declined on converted table:\n${agg.queryExecution.optimizedPlan}")

@@ -10,38 +10,34 @@ import graft.TestSpark
 
 /** Parity proof for the r19 footer-derived stats gear: the sidecar a
   * commit writes from its staged files' parquet FOOTERS must be
-  * line-identical (modulo file names) to what the distributed
-  * [[FileStats.collect]] aggregate writes — across every stats-eligible
-  * type and the adversarial edges (NaN/Inf poisoning, all-null columns,
-  * >64-char strings with the truncation sentinel, negative dates,
-  * decimals at INT32/INT64/BINARY widths, null-heavy columns). The
-  * footer gear must DECLINE (fall back, not mis-serialize) whenever a
-  * column can't be proven value-identical — the INT96 case is covered
-  * by flipping the session's outputTimestampType.
+  * line-identical to what the distributed [[FileStats.collect]]
+  * aggregate computes over the same committed files — across every
+  * stats-eligible type and the adversarial edges (NaN/Inf poisoning,
+  * all-null columns, >64-char strings with the truncation sentinel,
+  * negative dates, decimals at INT32/INT64/BINARY widths, null-heavy
+  * columns). The footer gear must DECLINE (fall back, not
+  * mis-serialize) whenever a column can't be proven value-identical —
+  * the INT96 case is covered by flipping the session's
+  * outputTimestampType.
   */
 class FooterStatsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** Commit `df` twice — footer gear on vs forced-off — and return both
-    * sidecars' content normalized: per file (in name order), the sorted
-    * stat lines with the file name field blanked. */
+  /** Commit `df` once and return (the sidecar the commit wrote, the
+    * sidecar [[FileStats.collect]] yields when run directly on the
+    * committed files), both as sorted JSONL lines. */
   private def bothSidecars(df: DataFrame): (Seq[String], Seq[String]) = {
-    def sidecar(footerGear: Boolean): Seq[String] = {
-      val dir = Files.createTempDirectory("graft-fstats").toString + "/t"
-      spark.conf.set("spark.graft.lake.stats.footerGear", footerGear.toString)
-      try VersionedTable(spark, dir).commitOverwrite(df)
-      finally spark.conf.unset("spark.graft.lake.stats.footerGear")
-      val log = new java.io.File(dir, "_graft_log")
-      val stats = log.listFiles().filter(_.getName.endsWith("-stats.jsonl"))
-      assert(stats.length == 1, s"expected one stats sidecar, got ${stats.toSeq}")
-      val lines = Files.readAllLines(stats.head.toPath)
-      import scala.jdk.CollectionConverters._
-      // drop the per-run file name: {"file":"v00000000-<nonce>-part-i...
-      lines.asScala.toSeq
-        .map(_.replaceAll("\"file\":\"[^\"]*-part-(\\d+)[^\"]*\"", "\"file\":\"part-$1\""))
-        .sorted
-    }
-    (sidecar(footerGear = true), sidecar(footerGear = false))
+    val dir = Files.createTempDirectory("graft-fstats").toString + "/t"
+    val t = VersionedTable(spark, dir)
+    t.commitOverwrite(df)
+    val log = new java.io.File(dir, "_graft_log")
+    val stats = log.listFiles().filter(_.getName.endsWith("-stats.jsonl"))
+    assert(stats.length == 1, s"expected one stats sidecar, got ${stats.toSeq}")
+    import scala.jdk.CollectionConverters._
+    val written = Files.readAllLines(stats.head.toPath).asScala.toSeq.sorted
+    val collected = FileStats.sidecarLines(
+      FileStats.collect(spark, t.snapshotDataFiles().map(f => s"$dir/$f"))).sorted
+    (written, collected)
   }
 
   private def assertParity(df: DataFrame): Unit = {

@@ -25,7 +25,7 @@ class MetadataAggregatesSpec extends AnyFunSuite {
 
   /** Apply the rule to df's optimized plan; Some(rewritten) if it fired. */
   private def rewritten(df: DataFrame): Option[DataFrame] = {
-    val out = GraftMetadataAggregates(spark)(df.queryExecution.optimizedPlan)
+    val out = GraftMetadataAggregates(df.queryExecution.optimizedPlan)
     if (out.isInstanceOf[LocalRelation])
       Some(org.apache.spark.sql.graft.PlanProbe.ofRows(spark, out))
     else None
