@@ -43,12 +43,11 @@ final class ChangeFeedReader(val table: VersionedTable, statePath: String) {
     if (!Files.exists(p)) -1
     else {
       val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      """"version"\s*:\s*(-?\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toInt).getOrElse(sys.error(
-          s"ChangeFeedReader: cursor file $statePath exists but holds no " +
-            s"""parseable {"version":N} — refusing to silently replay """ +
-            s"the whole feed; fix or delete the cursor (content: " +
-            s"${text.take(200)})"))
+      LogCodec.decodeVersion(text).getOrElse(sys.error(
+        s"ChangeFeedReader: cursor file $statePath exists but holds no " +
+          s"""parseable {"version":N} — refusing to silently replay """ +
+          s"the whole feed; fix or delete the cursor (content: " +
+          s"${text.take(200)})"))
     }
   }
 
@@ -70,8 +69,7 @@ final class ChangeFeedReader(val table: VersionedTable, statePath: String) {
   def advance(toVersion: Int): Unit = {
     if (toVersion <= lastProcessed()) return
     val tmp = Paths.get(statePath + s".tmp-${System.nanoTime()}")
-    Files.write(tmp,
-      s"""{"version":$toVersion}""".getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, LogCodec.encodeVersion(toVersion).getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, Paths.get(statePath),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }

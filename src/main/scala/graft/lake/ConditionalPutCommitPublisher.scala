@@ -97,8 +97,7 @@ class ConditionalPutCommitPublisher extends VersionedTable.CommitPublisher {
     val entry = entryPath(dst)
     val owner = ProcessHandle.current().pid().toString + "@" +
       java.net.InetAddress.getLocalHost.getHostName
-    val body = s"""{"tmp":"${tmp.toString}","owner":"$owner",""" +
-      s""""ts":${System.currentTimeMillis()}}"""
+    val body = LogCodec.encodeArbiterEntry(tmp.toString, owner, System.currentTimeMillis())
     if (putEntryIfAbsent(fs, entry, body)) {
       // An earlier winner may have published `dst` and released its
       // entry between our exists probe and our put: entries are only
@@ -119,11 +118,8 @@ class ConditionalPutCommitPublisher extends VersionedTable.CommitPublisher {
       // lost the put — complete a stalled winner before conceding
       readEntry(fs, entry) match {
         case Some(b) if !fs.exists(dst) =>
-          val winnerTmp = """"tmp"\s*:\s*"([^"]*)"""".r
-            .findFirstMatchIn(b).map(m => new Path(m.group(1)))
-          val ts = """"ts"\s*:\s*(\d+)""".r
-            .findFirstMatchIn(b).map(_.group(1).toLong).getOrElse(0L)
-          winnerTmp match {
+          val (winnerTmp, ts) = LogCodec.decodeArbiterEntry(b)
+          winnerTmp.map(new Path(_)) match {
             case Some(wt) if fs.exists(wt) =>
               if (copy(fs, wt, dst)) removeEntry(fs, entry)
             case _ =>

@@ -112,212 +112,40 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
                             pcols: Seq[String] = Nil,
                             props: Seq[(String, String)] = Nil)
 
-  /** The physical log record: file deltas vs version - 1. `full = true`
-    * marks a legacy record (pre-delta log format) whose `add` carries the
-    * COMPLETE snapshot file list — applied as replace, not append.
-    * `dvTargets` (delete-dv commits only) names the DATA files the
-    * commit's deletion vectors mark rows in — the row-level read-set
-    * racing rewrites validate against without opening the DV parquet.
-    * `addMeta` carries each added file's byte size and row count (the
-    * Delta `add`-action `size`/`stats` fields): the metadata that lets a
-    * read plan its scan — file statuses, split sizing, `sizeInBytes` for
-    * AQE/broadcast — from the LOG alone, with zero directory listings.
-    * Records written before this field (bare-name `add` lists) parse
-    * with an empty map; their files' sizes fall back to one listing. */
-  private case class DeltaRec(version: Int, action: String, add: Seq[String],
-                              remove: Seq[String], schemaDdl: String,
-                              rows: Long, ts: Long, full: Boolean = false,
-                              txnApp: String = "", txnVer: Long = -1L,
-                              dvTargets: Seq[String] = Nil,
-                              constraints: Seq[(String, String)] = Nil,
-                              colMap: Seq[(String, String)] = Nil,
-                              droppedPhys: Seq[String] = Nil,
-                              addMeta: Map[String, VersionedTable.FileMeta] = Map.empty,
-                              pcols: Seq[String] = Nil,
-                              props: Seq[(String, String)] = Nil)
-
-  // One flat JSON object written by us (file names contain no quotes or
-  // commas); spark.read.json would also work but costs a job per lookup.
+  // Log files are small UTF-8 JSON documents that LogCodec encodes and
+  // decodes (a spark.read.json would cost a job per lookup).
   private def readBody(p: Path): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
-  private def strField(body: String, p: Path, k: String): String =
-    strFieldOpt(body, k).getOrElse(sys.error(s"bad log record $p: missing $k"))
-  private def strFieldOpt(body: String, k: String): Option[String] =
-    s""""$k"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(body)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-  private def numField(body: String, p: Path, k: String): Long =
-    s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(body)
-      .map(_.group(1).toLong).getOrElse(sys.error(s"bad log record $p: missing $k"))
-  private def listField(body: String, p: Path, k: String): Seq[String] =
-    (s""""$k"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(body)
-      .map(_.group(1)).getOrElse(sys.error(s"bad log record $p: missing $k"))
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-  private def listJson(xs: Seq[String]): String =
-    xs.map(f => "\"" + f + "\"").mkString("[", ",", "]")
-
-  // File-entry arrays carry per-file metadata as objects — the Delta
-  // add-action shape `{"path":…,"size":…,"rows":…}` — while arrays
-  // written by the pre-meta format hold bare name strings. One parser
-  // accepts both (upgrade-in-place: new code keeps reading old logs);
-  // entries are homogeneous per record by construction. Neither file
-  // names nor the fixed keys contain `]`, so the array-capture regex
-  // stays valid for both shapes.
-  private val fileEntryRe =
-    """\{"path":"((?:[^"\\]|\\.)*)","size":(-?\d+),"rows":(-?\d+)(?:,"mtime":(-?\d+))?\}""".r
-  private def fileEntriesField(body: String, p: Path, k: String)
-      : (Seq[String], Map[String, VersionedTable.FileMeta]) = {
-    val inner = (s""""$k"\\s*:\\s*\\[([^\\]]*)\\]""").r.findFirstMatchIn(body)
-      .map(_.group(1)).getOrElse(sys.error(s"bad log record $p: missing $k"))
-    if (inner.trim.startsWith("{")) {
-      val entries = fileEntryRe.findAllMatchIn(inner).map { m =>
-        junesc(m.group(1)) -> VersionedTable.FileMeta(
-          m.group(2).toLong, m.group(3).toLong,
-          Option(m.group(4)).map(_.toLong).getOrElse(-1L))
-      }.toSeq
-      (entries.map(_._1), entries.filter(_._2.size >= 0).toMap)
-    } else {
-      val names = inner.split(",").map(_.trim.stripPrefix("\"")
-        .stripSuffix("\"")).filter(_.nonEmpty).toSeq
-      (names, Map.empty)
-    }
-  }
-  // commit records never carry mtime (the record's own `ts` IS the add
-  // time, stamped on read); checkpoints flatten history, so THEIR
-  // entries persist each file's original add time explicitly
-  private def fileEntriesJson(names: Seq[String],
-                              meta: Map[String, VersionedTable.FileMeta]): String =
-    names.map { n =>
-      val m = meta.getOrElse(n, VersionedTable.FileMeta(-1L, -1L))
-      val mt = if (m.mtime >= 0) s""","mtime":${m.mtime}""" else ""
-      s"""{"path":"${esc(n)}","size":${m.size},"rows":${m.rows}$mt}"""
-    }.mkString("[", ",", "]")
-  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  // CHECK constraints ride every commit record as a JSON object (like
-  // the schema DDL: small, carried in full, so reading ONE record gives
-  // the version's complete table definition). Values are SQL
-  // expressions, escaped, so commas/braces inside them live inside
-  // quoted strings — the pairs-only pattern below parses them robustly.
-  private def constraintsJson(cs: Seq[(String, String)]): String =
-    cs.map { case (n, e) => s""""${esc(n)}":"${esc(e)}"""" }
-      .mkString("{", ",", "}")
-
-  /** Commit-record field names a user-chosen key must never shadow: the
-    * record reader locates optional fields by a `"name"` substring probe
-    * (readDelta's hot path avoids a full JSON parse), and a property or
-    * constraint NAMED like a field serializes as that exact substring —
-    * e.g. SET TBLPROPERTIES('pcols'='x') on an unpartitioned table would
-    * make every later read probe for a `pcols` array that isn't there
-    * and fail the table until manual log surgery; a 'txnApp' key would
-    * misparse into the idempotency ledger. Values are immune: the
-    * probes anchor on `"name":` and a VALUE equal to a field name is
-    * followed by `,` or `}` (a value containing quotes escapes them to
-    * `\"`, which the anchored probe doesn't match) — so only KEYS are
-    * position-ambiguous, and only keys are rejected. */
-  private val reservedRecordKeys = Set(
-    "version", "action", "add", "remove", "files", "fmeta", "schema",
-    "rows", "ts", "txnApp", "txnVer", "dvTargets", "constraints",
-    "colmap", "droppedPhys", "pcols", "props")
-
-  private def rejectReservedKey(k: String, what: String): Unit =
-    if (reservedRecordKeys.contains(k)) sys.error(
-      s"graft-lake: '$k' is a reserved commit-record field name and " +
-        s"cannot be used as a $what")
-  private val constraintPairRe =
-    """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-  private def parseConstraints(body: String): Seq[(String, String)] =
-    parsePairs(body, "\"constraints\":{")
-
-  /** Column mapping (Delta's column-mapping mode, name-based): the
-    * commit record carries a SPARSE logical→physical overlay —
-    * `colmap` holds only columns whose physical (in-file) name differs
-    * from the logical one, so a table that never renamed pays nothing
-    * — plus `droppedPhys`, the physical names of dropped columns,
-    * whose residual bytes still live inside data files and must never
-    * be re-bound to a new column of the same logical name. Like the
-    * schema DDL and constraints these are carried IN FULL on every
-    * record: one record read gives the version's complete definition.
-    */
-  private def parseColMap(body: String): Seq[(String, String)] =
-    parsePairs(body, "\"colmap\":{")
-
-  private def parsePairs(body: String, anchor: String): Seq[(String, String)] = {
-    val i = body.indexOf(anchor)
-    if (i < 0) return Nil
-    val tail = body.substring(i + anchor.length)
-    // pairs parse greedily until the first char after a pair isn't a
-    // comma — i.e. the object's closing brace
-    val out = scala.collection.mutable.ListBuffer.empty[(String, String)]
-    var rest = tail
-    var done = false
-    while (!done) constraintPairRe.findPrefixMatchOf(rest) match {
-      case Some(m) =>
-        out += ((junesc(m.group(1)), junesc(m.group(2))))
-        rest = rest.substring(m.end)
-        if (rest.startsWith(",")) rest = rest.substring(1) else done = true
-      case None => done = true
-    }
-    out.toList
+  private def writeBody(p: Path, body: String): Unit = {
+    val out = fs.create(p, false)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Committed records are immutable, so a tiny per-instance memo makes
-    * the commit protocol's repeated metadata lookups (prev files, schema,
-    * row count within one commitAppend) a single file read. */
-  @volatile private var lastDelta: Option[DeltaRec] = None
+  /** Decoded commit records by version. Committed records are immutable,
+    * so the memo never goes stale; it makes the commit protocol's
+    * repeated metadata lookups and a poll's range walks (e.g.
+    * [[changeTypesPossible]] then [[changesBetween]]) one file read per
+    * record. Capped like `stagedMeta`: cleared when it outgrows
+    * `DeltaMemoCap`. */
+  private val deltaMemo =
+    scala.collection.concurrent.TrieMap[Int, LogCodec.CommitRecord]()
+  private val DeltaMemoCap = 1024
 
-  private def readDelta(v: Int): DeltaRec = {
-    lastDelta.filter(_.version == v).getOrElse {
+  private def readDelta(v: Int): LogCodec.CommitRecord =
+    deltaMemo.getOrElse(v, {
       val p = versionFile(v)
-      val body = readBody(p)
-      // Legacy fallback: records written by the pre-delta log format carry
-      // a complete `files` list instead of add/remove — read them as a
-      // full-replace delta so old persisted tables stay readable.
-      val legacy = !body.contains("\"add\":")
-      val ((add, addMeta0), remove) =
-        if (legacy) (fileEntriesField(body, p, "files"), Seq.empty[String])
-        else (fileEntriesField(body, p, "add"), listField(body, p, "remove"))
-      val recTs = numField(body, p, "ts")
-      // the add record's own commit timestamp IS each added file's
-      // modification time — stamped here so the log-planned scan's
-      // synthetic statuses surface a real `file_modification_time`
-      // (a re-reference commit re-stamps with ITS time; documented on
-      // FileMeta)
-      val addMeta = addMeta0.map { case (n, m) =>
-        n -> (if (m.mtime >= 0) m else m.copy(mtime = recTs)) }
-      // txn probes only when the record carries a marker — readDelta is
-      // the per-record hot path of every snapshot resolution
-      val hasTxn = body.contains("\"txnApp\":")
-      val d = DeltaRec(numField(body, p, "version").toInt, strField(body, p, "action"),
-        add, remove,
-        strField(body, p, "schema"), numField(body, p, "rows"),
-        recTs, full = legacy,
-        txnApp = if (hasTxn) strFieldOpt(body, "txnApp").getOrElse("") else "",
-        txnVer = if (hasTxn)
-          s""""txnVer"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(body)
-            .map(_.group(1).toLong).getOrElse(-1L)
-        else -1L,
-        dvTargets = if (body.contains("\"dvTargets\":"))
-          listField(body, p, "dvTargets") else Nil,
-        constraints = parseConstraints(body),
-        colMap = parseColMap(body),
-        droppedPhys = if (body.contains("\"droppedPhys\":"))
-          listField(body, p, "droppedPhys") else Nil,
-        addMeta = addMeta,
-        pcols = if (body.contains("\"pcols\":"))
-          listField(body, p, "pcols") else Nil,
-        props = parsePairs(body, "\"props\":{"))
+      val d = LogCodec.decodeCommit(readBody(p), p)
       // every file meta that passes through resolution accumulates in
       // the name-keyed index (names globally unique, content immutable
       // — an entry can never go stale); the explicit-subset reader
       // answers statuses from it with zero filesystem probes
-      d.addMeta.foreach { case (n, m) =>
-        if (m.size >= 0) fileMetaIndex.put(n, m) }
-      lastDelta = Some(d)
+      d.addMeta.foreach { case (n, m) => fileMetaIndex.put(n, m) }
+      if (deltaMemo.size >= DeltaMemoCap) deltaMemo.clear()
+      deltaMemo.put(v, d)
       d
-    }
-  }
+    })
 
   // ---- checkpoints -----------------------------------------------------
 
@@ -332,22 +160,13 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       .sorted.toSeq
   }
 
+  /** A checkpoint's file list and file meta. Legacy checkpoints carry
+    * no meta: sizes unknown for the base files (readers fall back to
+    * one listing). */
   private def readCheckpointFiles(v: Int): (Seq[String], Map[String, VersionedTable.FileMeta]) = {
     val p = checkpointFile(v)
-    val body = readBody(p)
-    // legacy checkpoints: bare-name files array, no fmeta — sizes
-    // unknown for the base files (readers fall back to one listing)
-    val files = listField(body, p, "files")
-    val meta0 =
-      if (!body.contains("\"fmeta\":")) Map.empty[String, VersionedTable.FileMeta]
-      else fileEntriesField(body, p, "fmeta")._2
-    // checkpoints written before fmeta carried mtime: the checkpoint's
-    // own commit ts is an AT-OR-BEFORE bound on every file's add time —
-    // surfaced over epoch 0 for _metadata.file_modification_time
-    val ckptTs = numField(body, p, "ts")
-    val meta = meta0.map { case (n, m) =>
-      n -> (if (m.mtime >= 0) m else m.copy(mtime = ckptTs)) }
-    meta.foreach { case (n, m) => if (m.size >= 0) fileMetaIndex.put(n, m) }
+    val (files, meta) = LogCodec.decodeCheckpoint(readBody(p), p)
+    meta.foreach { case (n, m) => fileMetaIndex.put(n, m) }
     (files, meta)
   }
 
@@ -374,9 +193,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   private def lastCheckpointVersion(): Option[Int] = try {
     if (!fs.exists(lastCheckpointPath)) None
     else {
-      val v = numField(readBody(lastCheckpointPath), lastCheckpointPath, "version").toInt
       // Stale/torn guard: trust the pointer only if its checkpoint exists.
-      if (fs.exists(checkpointFile(v))) Some(v) else None
+      LogCodec.decodeVersion(readBody(lastCheckpointPath))
+        .filter(v => fs.exists(checkpointFile(v)))
     }
   } catch { case _: Throwable => None }
 
@@ -415,8 +234,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   private def writeLastCheckpointPointer(v: Int): Unit = try {
     if (lastCheckpointVersion().exists(_ >= v)) return // monotonic
     val tmp = new Path(logDir, s".tmp-lastckpt-${System.nanoTime()}")
-    val out = fs.create(tmp, false)
-    try out.write(s"""{"version":$v}""".getBytes("UTF-8")) finally out.close()
+    writeBody(tmp, LogCodec.encodeVersion(v))
     publishReplace(tmp, lastCheckpointPath)
   } catch { case e: Throwable =>
     System.err.println(s"[lake] _last_checkpoint write failed " +
@@ -429,19 +247,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   private def writeCheckpoint(c: Commit, meta: Map[String, VersionedTable.FileMeta]): Unit = try {
     val dst = checkpointFile(c.version)
     if (fs.exists(dst)) { writeLastCheckpointPointer(c.version); return }
-    // `files` keeps the legacy bare-name shape (older readers keep
-    // working); `fmeta` carries the per-file size/rows the snapshot
-    // resolution seeds its status map from — entries whose meta the
-    // log never recorded (pre-meta commits) are written size -1 and
-    // dropped on read, falling back to the listing for just them
-    val body =
-      s"""{"version":${c.version},"rows":${c.rows},"ts":${c.ts},""" +
-        s""""files":${listJson(c.files)},""" +
-        s""""fmeta":${fileEntriesJson(c.files, meta)},""" +
-        s""""schema":"${esc(c.schemaDdl)}"}"""
     val tmp = new Path(logDir, s".tmp-ckpt-v${c.version}-${System.nanoTime()}.json")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeBody(tmp, LogCodec.encodeCheckpoint(c.version, c.rows, c.ts, c.files,
+      meta, c.schemaDdl))
     if (fs.rename(tmp, dst)) writeLastCheckpointPointer(c.version)
     else fs.delete(tmp, false)
   } catch { case e: Throwable =>
@@ -464,16 +272,13 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
 
   private def vacuumHorizon(): Int = try {
     if (!fs.exists(vacuumHorizonPath)) -1
-    else numField(readBody(vacuumHorizonPath), vacuumHorizonPath, "horizon").toInt
+    else LogCodec.decodeHorizon(readBody(vacuumHorizonPath)).getOrElse(-1)
   } catch { case _: Throwable => -1 }
 
   private def writeVacuumHorizon(h: Int): Unit = try {
     if (vacuumHorizon() >= h) return // monotonic
     val tmp = new Path(logDir, s".tmp-vachorizon-${System.nanoTime()}")
-    val out = fs.create(tmp, false)
-    try out.write(
-      s"""{"horizon":$h,"ts":${System.currentTimeMillis()}}""".getBytes("UTF-8"))
-    finally out.close()
+    writeBody(tmp, LogCodec.encodeHorizon(h, System.currentTimeMillis()))
     // atomic replace: no window where the horizon file is missing, and a
     // crash mid-update can't lose the previous horizon. (Racing vacuums
     // remain the caller's contract — see vacuum's minAgeMs note.)
@@ -773,39 +578,15 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         VersionedTable.FileMeta(sz, -1L)
       }))
     }.toMap
-    // txnApp/txnVer (Delta's setTransaction): written atomically WITH the
-    // record, so "which batch landed" can never diverge from "what data
-    // landed" — the exactly-once anchor for streaming sinks
-    val txn = if (c.txnApp.isEmpty) ""
-      else s""","txnApp":"${esc(c.txnApp)}","txnVer":${c.txnVer}"""
-    val dvt = if (c.dvTargets.isEmpty) ""
-      else s""","dvTargets":${listJson(c.dvTargets)}"""
-    val cons = if (c.constraints.isEmpty) ""
-      else s""","constraints":${constraintsJson(c.constraints)}"""
-    val cmap = if (c.colMap.isEmpty) ""
-      else s""","colmap":${constraintsJson(c.colMap)}"""
-    val dropped = if (c.droppedPhys.isEmpty) ""
-      else s""","droppedPhys":${listJson(c.droppedPhys)}"""
-    // partition columns and table properties are table DEFINITION,
-    // carried in full on every record like the schema DDL/constraints:
-    // one record read gives the version's complete definition
-    val pcj = if (c.pcols.isEmpty) ""
-      else s""","pcols":${listJson(c.pcols)}"""
-    val prj = if (c.props.isEmpty) ""
-      else s""","props":${constraintsJson(c.props)}"""
-    // record-level "rows"/"ts" BEFORE the add array: the field parsers
-    // are first-match regexes, and the add entries each carry their own
-    // "rows" key — ordering keeps the record scalar unambiguous while
-    // legacy records (rows after schema, bare-name adds) parse the same
-    val body =
-      s"""{"version":${c.version},"action":"${c.action}",""" +
-        s""""rows":${c.rows},"ts":${c.ts},""" +
-        s""""add":${fileEntriesJson(add, addMeta)},"remove":${listJson(remove)},""" +
-        s""""schema":"${esc(c.schemaDdl)}"""" +
-        s"""$txn$dvt$cons$cmap$dropped$pcj$prj}"""
+    // txnApp/txnVer (Delta's setTransaction) ride the record itself, so
+    // "which batch landed" can never diverge from "what data landed"
+    val body = LogCodec.encodeCommit(LogCodec.CommitRecord(c.version, c.action,
+      add, remove, c.schemaDdl, c.rows, c.ts, txnApp = c.txnApp,
+      txnVer = c.txnVer, dvTargets = c.dvTargets, constraints = c.constraints,
+      colMap = c.colMap, droppedPhys = c.droppedPhys, addMeta = addMeta,
+      pcols = c.pcols, props = c.props))
     val tmp = new Path(logDir, s".tmp-v${c.version}-${System.nanoTime()}.json")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeBody(tmp, body)
     if (fs.exists(dst) || !publishExclusive(tmp, dst)) {
       fs.delete(tmp, false)
       sys.error(s"concurrent commit conflict: version ${c.version} already exists")
@@ -1096,8 +877,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   private def statsFile(v: Int, nonce: String) =
     new Path(logDir, f"v$v%08d-$nonce-stats.jsonl")
 
-  import FileStats.{jsonEscape => jesc}
-
   private def writeStats(names: Seq[String], v: Int, nonce: String,
       footers: Seq[(String, org.apache.parquet.hadoop.metadata.ParquetMetadata)] = Nil,
       schema: Option[StructType] = None): Unit = try {
@@ -1117,8 +896,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     if (lines.isEmpty) return
     val dir = new Path(logDir)
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val out = fs.create(statsFile(v, nonce), false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
+    writeBody(statsFile(v, nonce), lines.mkString("\n") + "\n")
   } catch { case e: Throwable =>
     // Stats are an optimization: a failed collection must never fail the
     // commit — files without stats are simply never pruned.
@@ -1158,13 +936,10 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val lines = BloomSidecars.collect(spark,
       names.map(n => s"$tablePath/$n"), cols, maxItems, fpp)
     if (lines.isEmpty) return
-    val body = lines.sortBy(l => (l._1, l._2)).map { case (f, c, b64) =>
-      s"""{"file":"${jesc(f)}","col":"${jesc(c)}","b64":"$b64"}"""
-    }.mkString("\n") + "\n"
     val dir = new Path(logDir)
     if (!fs.exists(dir)) fs.mkdirs(dir)
-    val out = fs.create(bloomSidecarFile(v, nonce), false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    writeBody(bloomSidecarFile(v, nonce), lines.sortBy(l => (l._1, l._2))
+      .map { case (f, c, b64) => LogCodec.encodeBloomLine(f, c, b64) }.mkString("\n") + "\n")
   } catch { case e: Throwable =>
     // blooms are an optimization with the stats posture: a failed
     // collection never fails the commit — the files are just never
@@ -1172,9 +947,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     System.err.println(s"[lake] bloom collection failed for v$v " +
       s"(no bloom skipping for its files): ${e.getMessage}")
   }
-
-  private val bloomLineRe =
-    """\{"file":"((?:[^"\\]|\\.)*)","col":"((?:[^"\\]|\\.)*)","b64":"([A-Za-z0-9+/=]*)"\}""".r
 
   /** Sidecar paths at the current head (cached per head, like the
     * stats snapshot) — the distributed gear hands these straight to a
@@ -1208,12 +980,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       bloomCache.getOrElseUpdate(p.getName, {
         val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
         val lines = try src.getLines().toList finally src.close()
-        lines.flatMap {
-          case bloomLineRe(f, c, b64) =>
-            Some((junesc(f), junesc(c),
-              java.util.Base64.getDecoder.decode(b64)))
-          case _ => None
-        }
+        lines.flatMap(LogCodec.decodeBloomLine)
       })
     }.groupBy(_._1).map { case (f, seq) =>
       f -> seq.map(t => t._2 -> t._3).toMap }
@@ -1273,17 +1040,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     }
   }
 
-  private val statLineRe =
-    ("""\{"file":"((?:[^"\\]|\\.)*)","col":"((?:[^"\\]|\\.)*)","kind":"(num|str)",""" +
-      """"min":(null|"(?:[^"\\]|\\.)*"),"max":(null|"(?:[^"\\]|\\.)*"),""" +
-      """"nulls":(\d+),"rows":(\d+)\}""").r
-
-  private def junesc(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
-
-  private def parseStatValue(raw: String): Option[String] =
-    if (raw == "null") None
-    else Some(junesc(raw.substring(1, raw.length - 1)))
-
   /** All stats lines across every sidecar, keyed file → column → stats.
     * O(total files ever committed) driver-side metadata — the same order
     * as the commit records themselves.
@@ -1313,12 +1069,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       sidecarCache.getOrElseUpdate(p.getName, {
         val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
         val lines = try src.getLines().toList finally src.close()
-        lines.flatMap {
-          case statLineRe(f, c, kind, mn, mx, nulls, rows) =>
-            Some((junesc(f), junesc(c), FileStats.ColStats(kind,
-              parseStatValue(mn), parseStatValue(mx), nulls.toLong, rows.toLong)))
-          case _ => None
-        }
+        lines.flatMap(LogCodec.decodeStatsLine)
       })
     }.groupBy(_._1).map { case (f, seq) =>
       f -> seq.map(t => t._2 -> t._3).toMap
@@ -1913,7 +1664,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     require(!name.startsWith(VersionedTable.NotNullPrefix),
       s"constraint names starting with '${VersionedTable.NotNullPrefix}' " +
         "are reserved — use setNotNull(column)")
-    rejectReservedKey(name, "constraint name")
     val v0 = latestVersion().getOrElse(sys.error(s"no commits at $tablePath"))
     val c = readCommit(v0)
     if (c.constraints.exists(_._1 == name))
@@ -2375,7 +2125,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * no-rebase rule as constraints: racing definition changes abort. */
   def setProperties(kv: Seq[(String, String)]): Int = {
     require(kv.nonEmpty, "setProperties needs at least one property")
-    kv.foreach(p => rejectReservedKey(p._1, "table property key"))
     val v0 = latestVersion().getOrElse(sys.error(s"no commits at $tablePath"))
     val c = readCommit(v0)
     val merged = (c.props.filterNot(p => kv.exists(_._1 == p._1)) ++ kv)

@@ -26,18 +26,13 @@ final case class WatermarkEntry(incrementalColumn: String, lastValue: String)
 
 final class Watermark(path: String) {
 
-  private val EntryRe =
-    """"([^"]+)"\s*:\s*\{\s*"incremental_column"\s*:\s*"([^"]+)"\s*,\s*"last_value"\s*:\s*"([^"]*)"\s*\}""".r
-
+  /** Every table's entry; a store that does not parse fails naming
+    * the file, so an update never silently drops the other tables. */
   def readAll(): Map[String, WatermarkEntry] = {
     val p = Paths.get(path)
     if (!Files.exists(p)) Map.empty
-    else {
-      val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      EntryRe.findAllMatchIn(text).map { m =>
-        m.group(1) -> WatermarkEntry(m.group(2), m.group(3))
-      }.toMap
-    }
+    else LogCodec.decodeWatermarks(
+      new String(Files.readAllBytes(p), StandardCharsets.UTF_8), path)
   }
 
   /** S1: entry for one table; the reference raises on a missing table —
@@ -48,10 +43,7 @@ final class Watermark(path: String) {
 
   /** S3: upsert one table's last_value, atomically (temp file + move). */
   def update(table: String, entry: WatermarkEntry): Unit = {
-    val updated = readAll() + (table -> entry)
-    val json = updated.toSeq.sortBy(_._1).map { case (t, e) =>
-      s""""$t": {"incremental_column": "${e.incrementalColumn}", "last_value": "${e.lastValue}"}"""
-    }.mkString("{", ", ", "}")
+    val json = LogCodec.encodeWatermarks(readAll() + (table -> entry))
     val tmp = Paths.get(path + ".tmp")
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, Paths.get(path), StandardCopyOption.REPLACE_EXISTING,

@@ -46,6 +46,12 @@ object CurationPipeline {
     * of the dedup subplan, the stage carrying the metrics collector can
     * be skipped and the observation completes empty. Run an action on
     * `.chunks` for the final output.
+    *
+    * `Result.chunks` has exactly the columns `doc_id`, `chunk_idx`,
+    * `n_chunk_tokens`, `chunk_text`, `n_tokens`, `rep_ratio`,
+    * `alpha_ratio`. Only `doc_id` and `text` flow past the expectations
+    * cut, so any other input column (e.g. `lang`, `source`, `n_chars`)
+    * does not reach the output; join it back on `doc_id` if needed.
     */
   def run(docs: DataFrame, cfg: Config = Config()): Result = {
     val exps = Seq(

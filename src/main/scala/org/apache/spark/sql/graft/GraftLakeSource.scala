@@ -9,7 +9,7 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, Da
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
-import graft.lake.VersionedTable
+import graft.lake.{LogCodec, VersionedTable}
 
 /** Structured Streaming SOURCE for the versioned lake — the trigger-
   * driven completion of [[graft.lake.ChangeFeedReader]]'s poll API:
@@ -507,22 +507,13 @@ object GraftLakeSource {
   }
 
   private[graft] def offsetJson(version: Int, index: Long): String =
-    if (index < 0) version.toString
-    else s"""{"version":$version,"index":$index}"""
+    LogCodec.encodeOffset(version, index)
 
   private[graft] def parseOffset(o: OffsetV2): (Int, Long) = o match {
     case l: LongOffset => (l.offset.toInt, -1L)
     case other =>
-      val j = other.json.trim
-      if (j.matches("-?\\d+")) (j.toInt, -1L)
-      else {
-        val v = """"version"\s*:\s*(-?\d+)""".r.findFirstMatchIn(j)
-          .map(_.group(1).toInt).getOrElse(sys.error(
-            s"graft-lake: unparseable offset $j"))
-        val i = """"index"\s*:\s*(-?\d+)""".r.findFirstMatchIn(j)
-          .map(_.group(1).toLong).getOrElse(-1L)
-        (v, i)
-      }
+      LogCodec.decodeOffset(other.json).getOrElse(sys.error(
+        s"graft-lake: unparseable offset ${other.json.trim}"))
   }
 }
 

@@ -198,4 +198,19 @@ class DataSkippingSpec extends AnyFunSuite {
     // prefix lower bound; the unsafe truncated max answers "maybe")
     assert(t.readWhere(col("s") === long).count() == 1)
   }
+
+  test("string stats holding a line break survive the sidecar and still prune") {
+    val t = freshTable()
+    // LLM text often starts with whitespace: the min "\nalpha" must be
+    // escaped in the JSONL sidecar, not split across two lines
+    t.commitOverwrite(Seq(("\nalpha", 1L), ("zeta", 2L), ("mid", 3L))
+      .toDF("s", "k").coalesce(1))
+    val (files, stats) = t.snapshotStatsAt(0)
+    assert(files.size == 1)
+    val s = stats(files.head).get("s")
+    assert(s.flatMap(_.min).contains("\nalpha"), s"string stats lost: $s")
+    assert(s.flatMap(_.max).contains("zeta"))
+    assert(t.candidateFiles(col("s") === "zzzz").isEmpty)
+    assert(t.readWhere(col("s") === "\nalpha").count() == 1)
+  }
 }

@@ -56,6 +56,13 @@ class LakeSpec extends AnyFunSuite {
     // (the reference's seek(0)-without-truncate hazard, main.py:73-75)
     wm.update("ticker", WatermarkEntry("f", "x"))
     assert(wm.get("ticker") == WatermarkEntry("f", "x"))
+    // values holding a quote or a backslash are escaped, and the other
+    // tables' entries survive the rewrite
+    for (v <- Seq("a\"b", "c:\\dir\\", "\"}, \"x\": {")) {
+      wm.update("other", WatermarkEntry("c", v))
+      assert(wm.get("other") == WatermarkEntry("c", v))
+      assert(wm.get("ticker") == WatermarkEntry("f", "x"))
+    }
   }
 
   test("S2: HTTP-date watermark derivation matches the reference format") {

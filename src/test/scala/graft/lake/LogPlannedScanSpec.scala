@@ -192,6 +192,22 @@ class LogPlannedScanSpec extends AnyFunSuite {
       (1L to 120L))
   }
 
+  test("a poll's two range walks read each commit record once") {
+    val path = countingPath()
+    val t = VersionedTable(spark, path)
+    t.commitOverwrite(Seq((0L, "a")).toDF("id", "v"))
+    (1L to 5L).foreach(i => t.commitAppend(Seq((i, "b")).toDF("id", "v")))
+    val cold = VersionedTable(spark, path)
+    CountingLocalFs.reset()
+    assert(cold.changeTypesPossible(0, 5) == ((true, false)))
+    assert(cold.changesBetween(0, 5).count() == 5L)
+    (1 to 5).foreach { v =>
+      val name = f"v$v%08d.json"
+      val opens = CountingLocalFs.opened.toArray.count(_.toString.endsWith("/" + name))
+      assert(opens == 1, s"$name opened $opens times")
+    }
+  }
+
   test("verifyListing integrity mode catches a missing snapshot file at plan time") {
     val dir = Files.createTempDirectory("graft-logplan-verify").toString + "/t"
     val t = VersionedTable(spark, dir)

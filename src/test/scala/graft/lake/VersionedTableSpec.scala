@@ -1049,23 +1049,23 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.readSnapshotFiles(hits).select("v").as[String].collect().toSeq == Seq("a"))
   }
 
-  test("reserved commit-record field names are rejected as property keys and constraint names") {
+  test("property keys and constraint names equal to commit-record field names round-trip") {
     val t = freshTable()
     t.commitOverwrite(Seq((1L, "a")).toDF("id", "v"))
-    // r17 advice: a 'pcols' property serialized a record where the
-    // pcols substring probe fired with no array behind it — every
-    // subsequent read of the table failed until manual log surgery
-    for (k <- Seq("pcols", "dvTargets", "droppedPhys", "txnApp", "add", "props")) {
-      val e = intercept[RuntimeException](t.setProperties(Seq(k -> "x")))
-      assert(e.getMessage.contains("reserved"), s"$k: ${e.getMessage}")
-    }
-    intercept[RuntimeException](t.addConstraint("colmap", "id > 0"))
-    // the table is still fully readable (nothing committed)
-    assert(t.read().count() == 1)
-    // ordinary keys and VALUES that merely contain a field name are fine
-    t.setProperties(Seq("owner.pcols.note" -> "pcols", "team" -> "\"pcols\""))
-    assert(t.properties().toMap.get("team").contains("\"pcols\""))
-    assert(t.read().count() == 1)
+    // the log is read as a parsed tree, so a key inside `props` or
+    // `constraints` can never be taken for a top-level record field
+    val keys = Seq("pcols", "dvTargets", "droppedPhys", "txnApp", "add", "props")
+    keys.foreach(k => t.setProperties(Seq(k -> "x")))
+    t.addConstraint("colmap", "id > 0")
+    t.setProperties(Seq("team" -> "\"pcols\""))
+    val fresh = VersionedTable(spark, t.tablePath)
+    assert(fresh.read().count() == 1)
+    assert(fresh.partitionColumns().isEmpty)
+    assert(fresh.lastCommittedBatch("x").isEmpty)
+    assert(fresh.constraints().toMap.get("colmap").contains("id > 0"))
+    val props = fresh.properties().toMap
+    keys.foreach(k => assert(props.get(k).contains("x"), s"$k: $props"))
+    assert(props.get("team").contains("\"pcols\""))
   }
 
   test("log-planned native reads surface the add-commit time as file_modification_time") {
