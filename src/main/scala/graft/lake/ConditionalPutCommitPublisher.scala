@@ -29,13 +29,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  5. entry present but the recorded tmp is GONE and `dst` never
   *     appeared: unrecoverable external interference — steal the entry
   *     only after a long stall (30 min, the claim-file rule: a bounded
-  *     wedge beats clobbering a live writer), else concede.
+  *     wedge beats clobbering a live writer), else concede. The stall
+  *     is measured from the entry's recorded put time, or from the
+  *     entry object's modification time when it records none (an
+  *     entry that does not decode must never read as infinitely old).
   *
-  * The arbiter here is a sibling `.arbiter-<name>` object created with
-  * O_EXCL (`CREATE_NEW`) through java.nio on the store's backing path —
-  * the in-tree stand-in for the real external CAS (a DynamoDB
-  * put-if-absent, an S3 `If-None-Match:*` conditional PUT, a GCS
-  * `x-goog-if-generation-match:0`). It is genuinely atomic ACROSS
+  * The arbiter here is a sibling `.arbiter-<name>` object published
+  * WITH its body in one atomic step — a hard link from a fully written
+  * side file, which fails if the entry exists — through java.nio on
+  * the store's backing path, so no reader ever sees a created but
+  * still empty entry. It is the in-tree stand-in for the real
+  * external CAS (a DynamoDB put-if-absent, an S3 `If-None-Match:*`
+  * conditional PUT, a GCS `x-goog-if-generation-match:0`). It is genuinely atomic ACROSS
   * PROCESSES on the host, so the multi-process stress harness
   * exercises the whole protocol; swapping in a cloud arbiter changes
   * `putEntryIfAbsent`/`readEntry`/`removeEntry` only. Thread-safe;
@@ -47,16 +52,21 @@ class ConditionalPutCommitPublisher extends VersionedTable.CommitPublisher {
 
   private def localOf(p: Path) = java.nio.file.Paths.get(p.toUri.getPath)
 
-  /** The conditional put — the ONE primitive a cloud arbiter replaces. */
+  /** The conditional put — the ONE primitive a cloud arbiter replaces.
+    * Entry and body appear together: the body goes to a side file
+    * first, and `createLink` publishes it under the entry's name,
+    * failing atomically when the entry already exists. */
   protected def putEntryIfAbsent(fs: FileSystem, entry: Path,
-                                 body: String): Boolean =
-    try {
-      java.nio.file.Files.write(localOf(entry),
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
+                                 body: String): Boolean = {
+    val e = localOf(entry)
+    val side = e.resolveSibling(
+      s".cput-${e.getFileName}-${java.util.UUID.randomUUID().toString.take(8)}")
+    java.nio.file.Files.write(side,
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try { java.nio.file.Files.createLink(e, side); true }
+    catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    finally java.nio.file.Files.deleteIfExists(side)
+  }
 
   protected def readEntry(fs: FileSystem, entry: Path): Option[String] =
     try Some(new String(java.nio.file.Files.readAllBytes(localOf(entry)),
@@ -124,7 +134,9 @@ class ConditionalPutCommitPublisher extends VersionedTable.CommitPublisher {
               if (copy(fs, wt, dst)) removeEntry(fs, entry)
             case _ =>
               // tmp gone, dst never appeared: bounded-wedge steal rule
-              if (System.currentTimeMillis() - ts > 30L * 60 * 1000)
+              val putAt = if (ts > 0) Some(ts)
+                else scala.util.Try(fs.getFileStatus(entry).getModificationTime).toOption
+              if (putAt.exists(System.currentTimeMillis() - _ > 30L * 60 * 1000))
                 removeEntry(fs, entry)
           }
         case _ => () // dst appeared or entry vanished — race resolved

@@ -250,7 +250,7 @@ object LogCodec {
     } catch { case _: java.io.IOException => None }
 
   /** (winner's tmp path, put time) of an arbiter entry; an unreadable
-    * entry reads as (None, 0). */
+    * entry reads as (None, 0), and 0 means no recorded put time. */
   def decodeArbiterEntry(json: String): (Option[String], Long) =
     parseObject(json).fold((Option.empty[String], 0L))(o =>
       (text(o, "tmp"), long(o, "ts").getOrElse(0L)))

@@ -733,10 +733,10 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   // data files — Delta's deletion-vector model on the same log. DV files
   // ride the ordinary snapshot file list (prefix-partitioned out by every
   // reader), so checkpoints, restore, vacuum referencing, and the
-  // add/remove delta log all work on them unchanged. Reads overlay them
-  // with a `_metadata.row_index` anti-join; a DV entry whose data file
-  // has since been rewritten is inert (the join is keyed by file NAME and
-  // the name left the snapshot), which is what lets copy-on-write
+  // add/remove delta log all work on them unchanged. Every read overlays
+  // them in [[dvOverlay]], keyed by (file NAME, `_metadata.row_index`); a
+  // DV entry whose data file has since been rewritten is inert (the name
+  // left the snapshot), which is what lets copy-on-write
   // rewrites ABSORB deletions — the rewrite reads through the overlay, so
   // its output files simply no longer contain the rows — without ever
   // editing a committed DV. `optimize` drops all DV files outright (it
@@ -748,35 +748,88 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   private def splitDv(files: Seq[String]): (Seq[String], Seq[String]) =
     files.partition(isDv)
 
-  /** Data files read WITH their in-file row position (`_g_file` = file
-    * name, `_g_pos` = `_metadata.row_index`) and the deletion-vector
-    * overlay applied: rows marked in `dvFiles` are anti-joined away. The
-    * DV side is deleted-rows-sized, so the anti-join broadcasts under
-    * AQE at any corpus size; with no DVs this is a plain scan plus two
-    * metadata columns. */
-  private def readWithPos(dataFiles: Seq[String], dvFiles: Seq[String],
-                          schemaHint: Option[StructType] = None): DataFrame = {
-    import org.apache.spark.sql.functions.substring_index
+  /** THE lake scan — one construction behind `read`, `readWhere`,
+    * `readSnapshotFiles` and every mutation pre-scan and rewrite: the
+    * commit's snapshot as the log-planned
+    * [[org.apache.spark.sql.graft.GraftFileIndex]] relation
+    * (`files = None`: stats and bloom pruning run inside its
+    * `listFiles`) or an explicit data-file subset through the
+    * log-answered subset index, then the snapshot's deletion-vector
+    * overlay ([[dvOverlay]]), then [[alignToSchema]] to the logical
+    * schema. DV entries for files outside a subset match no row, so
+    * disjoint subsets union to the full snapshot. `keep` carries the
+    * overlay's position columns (`_g_file`, `_g_pos`) past the
+    * alignment for callers that mark or locate rows. */
+  private def scan(c: Commit, files: Option[Seq[String]] = None,
+                   keep: Seq[String] = Nil): DataFrame = {
+    val base = files match {
+      case None => org.apache.spark.sql.graft.GraftFileIndex.frame(spark,
+        org.apache.spark.sql.graft.GraftFileIndex.nativeRelationAt(
+          spark, this, tablePath, c.version))
+      case Some(names) => readFiles(names, Some(physReadSchema(c)))
+    }
+    alignToSchema(dvOverlay(base, splitDv(c.files)._1, c.version,
+        withPos = keep.nonEmpty),
+      StructType.fromDDL(c.schemaDdl), keep, physMap(c))
+  }
+
+  /** The ONE deletion-vector overlay, over any file-source frame
+    * exposing `_metadata`: rows marked in `dvs` (the DV list of
+    * snapshot `v`) are dropped. Two gears, chosen from the vectors'
+    * total marked positions in the DV parquet FOOTERS (metadata only):
+    * up to `spark.graft.lake.dvBroadcastMaxRows` the vectors broadcast
+    * as a scan-local row-index filter
+    * ([[org.apache.spark.sql.graft.DvNotDeleted]]); above it, the
+    * distributed anti-join on (`_g_file`, `_g_pos`). `withPos` appends
+    * `_g_file` (file name) and `_g_pos` (`_metadata.row_index`) to the
+    * output under either gear; with no vectors this is the base scan
+    * (plus those two columns when asked). */
+  private def dvOverlay(base: DataFrame, dvs: Seq[String], v: Int,
+                        withPos: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{collect_list, sort_array, substring_index}
     // substring_index, not split+element_at: one substring per row
     // instead of an array allocation (measured 24% on 9.6M rows)
-    val withPos = readFiles(dataFiles, schemaHint).select(col("*"),
+    def positioned(df: DataFrame): DataFrame = df.select(col("*"),
       substring_index(col("_metadata.file_path"), "/", -1).as("_g_file"),
       col("_metadata.row_index").as("_g_pos"))
-    if (dvFiles.isEmpty) withPos
-    else {
-      val dv = readFiles(dvFiles, Some(VersionedTable.DvSchema))
+    val cap = spark.conf.getOption("spark.graft.lake.dvBroadcastMaxRows")
+      .map(_.trim.toLong).getOrElse(4000000L)
+    if (dvs.nonEmpty && stagedRowCount(dvs) > cap) {
+      // oversized vectors: the distributed anti-join (same semantics,
+      // join-shaped cost; the DV side is deleted-rows-sized)
+      val dv = readFiles(dvs, Some(VersionedTable.DvSchema))
         .select(col("file").as("_g_file"), col("pos").as("_g_pos"))
-      withPos.join(dv, Seq("_g_file", "_g_pos"), "left_anti")
+      val live = positioned(base).join(dv, Seq("_g_file", "_g_pos"), "left_anti")
+      if (withPos) live else live.drop("_g_file", "_g_pos")
+    } else {
+      // Delta's row-index-filter shape: the vectors broadcast as
+      // file → sorted positions and apply as a SCAN-LOCAL predicate —
+      // no join build side, no per-row string hashing,
+      // scan+filter+consumer in one codegen span. Measured ~5× over
+      // the anti-join on scan-bound aggregates (SCALE.md r17).
+      // Broadcast cached per version (DV content is immutable once
+      // committed).
+      val live = if (dvs.isEmpty) base else {
+        val b = dvBroadcasts.getOrElseUpdate(v, {
+          if (dvBroadcasts.size > 64) dvBroadcasts.clear()
+          val rows = readFiles(dvs, Some(VersionedTable.DvSchema))
+            .groupBy("file").agg(sort_array(collect_list("pos")).as("ps"))
+            .collect()
+          spark.sparkContext.broadcast(rows.map(r =>
+            r.getString(0) -> r.getSeq[Long](1).toArray).toMap)
+        })
+        base.filter(org.apache.spark.sql.graft.DvNotDeleted.column(
+          col("_metadata.file_path"), col("_metadata.row_index"), b))
+      }
+      if (withPos) positioned(live) else live
     }
   }
 
-  /** Snapshot rows of the given data files through the DV overlay, with
-    * the position helper columns dropped — the row set every reader and
-    * every copy-on-write rewrite must see. */
-  private def readLive(dataFiles: Seq[String], dvFiles: Seq[String],
-                       schemaHint: Option[StructType] = None): DataFrame =
-    if (dvFiles.isEmpty) readFiles(dataFiles, schemaHint)
-    else readWithPos(dataFiles, dvFiles, schemaHint).drop("_g_file", "_g_pos")
+  /** Per-version DV broadcast cache for [[dvOverlay]] — committed
+    * vectors are immutable, so an entry can never go stale. */
+  @transient private lazy val dvBroadcasts =
+    scala.collection.concurrent.TrieMap.empty[Int,
+      org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]]
 
   /** The PHYSICAL read schema of the commit's snapshot — the logical
     * fields under their in-file (mapped) names, all nullable. Handing
@@ -789,9 +842,14 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * mergeSchema union produced. */
   private def physReadSchema(c: Commit): StructType = {
     val map = physMap(c)
+    // fully NULLABLE, whatever the DDL says (the parquet relations
+    // also relax nested fields): pre-evolution files lack evolved
+    // columns (the reader null-fills them), and CoW rewrites
+    // legitimately store nulls there — a NOT NULL read schema makes
+    // the vectorized reader skip null tracking and return garbage
+    // (0.0) or fail the file outright
     StructType(StructType.fromDDL(c.schemaDdl).map(f =>
-      org.apache.spark.sql.types.StructField(
-        map.getOrElse(f.name, f.name), f.dataType, nullable = true)))
+      f.copy(name = map.getOrElse(f.name, f.name), nullable = true)))
   }
 
   /** `df` (a physical-frame file read) projected to the snapshot's
@@ -802,15 +860,21 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * read of those files would show. Under column mapping the lookup
     * goes through the logical→physical overlay (a renamed column reads
     * its stable physical name; a dropped column's residual physical
-    * bytes are simply never selected). */
+    * bytes are simply never selected). Returns `df` itself when the
+    * projection would be the identity, and otherwise projects an
+    * unrenamed column as a bare attribute, so a plain snapshot read
+    * stays a `LogicalRelation` (under a pure-attribute reorder when
+    * partitioned) — the shape the lake's optimizer rules unwrap. */
   private def alignToSchema(df: DataFrame, schema: StructType,
                             keep: Seq[String] = Nil,
                             colMap: Map[String, String] = Map.empty): DataFrame = {
     val have = df.columns.toSet
-    df.select(schema.map { f =>
-      val p = colMap.getOrElse(f.name, f.name)
-      if (have.contains(p)) col(p).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
+    val phys = schema.map(f => colMap.getOrElse(f.name, f.name))
+    if (phys == schema.fieldNames.toSeq && df.columns.toSeq == phys ++ keep) df
+    else df.select(schema.zip(phys).map { case (f, p) =>
+      if (!have.contains(p)) lit(null).cast(f.dataType).as(f.name)
+      else if (p == f.name) col(p)
+      else col(p).as(f.name)
     } ++ keep.map(col): _*)
   }
 
@@ -825,8 +889,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
 
   private def physMap(c: Commit): Map[String, String] = c.colMap.toMap
 
-  /** [[physReadSchema]] at a pinned version — the native mapped scan's
-    * data schema ([[org.apache.spark.sql.graft.GraftFileIndex.nativeMappedRead]]). */
+  /** [[physReadSchema]] at a pinned version — the snapshot relation's
+    * data schema ([[org.apache.spark.sql.graft.GraftFileIndex.nativeRelationAt]]). */
   def physicalReadSchemaAt(version: Int): StructType =
     physReadSchema(readCommit(version))
 
@@ -864,11 +928,12 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   // data — O(commit), never O(table)). File names are globally unique and
   // file content is immutable, so a stats line stays valid for as long as
   // any later snapshot carries the file forward; readers assemble a
-  // snapshot's stats by name lookup across the sidecars. [[readWhere]]
-  // uses them to drop provably-irrelevant files BEFORE Spark lists the
-  // scan — the metadata layer that turns a selective predicate on a
-  // 100 TB table into a megabyte-scale read (row-group pushdown still
-  // applies inside surviving files).
+  // snapshot's stats by name lookup across the sidecars. The snapshot
+  // relation's `listFiles` (every `read(...).filter`, [[readWhere]]) and
+  // the mutation pre-scans use them to drop provably-irrelevant files
+  // BEFORE Spark lists the scan — the metadata layer that turns a
+  // selective predicate on a 100 TB table into a megabyte-scale read
+  // (row-group pushdown still applies inside surviving files).
 
   // Nonce-suffixed so two writers racing for one version never collide
   // on the sidecar either; stats lines are keyed by (globally unique)
@@ -1103,9 +1168,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal(true))
   }
 
-  /** Files of the snapshot that MAY hold rows matching `predicate`
-    * according to the per-file stats (conservative: files without stats
-    * or with un-analyzable predicate shapes are always kept). */
   /** `files` narrowed to those whose min/max stats MAY hold a matching
     * row (conservative: files without stats, or un-analyzable predicate
     * shapes, are always kept). Shared by the read AND mutation paths —
@@ -1138,98 +1200,18 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   }
 
   /** True when the snapshot is readable as PLAIN PARQUET with the
-    * commit's logical schema — no deletion-vector overlay to anti-join,
-    * no column-mapping overlay or drop tombstones to realign. The SQL
-    * front door uses this to choose Spark's NATIVE file-scan path
-    * (vectorized + whole-stage codegen via `HadoopFsRelation`) over the
-    * featureful V1 row bridge: on the common case — a table that has
-    * only ever seen appends/overwrites/optimize/CoW mutations — the SQL
-    * door then scans at exactly the Scala API's speed. Schema-evolution
-    * commits stay plain (the parquet reader null-fills absent
-    * columns from the provided data schema). */
+    * commit's logical schema — no deletion-vector overlay to apply, no
+    * column-mapping overlay or drop tombstones to realign. The SQL
+    * front door's query-tree rewrite splices the bare snapshot relation
+    * for such a flat snapshot and [[read]]'s frame otherwise.
+    * Schema-evolution commits stay plain (the parquet reader null-fills
+    * absent columns from the provided data schema). */
   def isPlainParquetSnapshot(version: Option[Int] = None): Boolean = {
     val v = version.orElse(latestVersion())
       .getOrElse(sys.error(s"no committed versions at $tablePath"))
-    isPlain(readCommit(v))
-  }
-
-  /** The ONE plainness predicate — `read()`'s native gate and
-    * [[isPlainParquetSnapshot]] must never diverge (a fourth
-    * plainness-breaking feature added to one site but not the other
-    * would scan a featureful snapshot natively and return wrong rows). */
-  private def isPlain(c: Commit): Boolean = {
-    val (dvs, _) = splitDv(c.files)
-    dvs.isEmpty && c.colMap.isEmpty && c.droppedPhys.isEmpty
-  }
-
-  /** Snapshot read of a DV-ONLY snapshot on the NATIVE scan: the data
-    * side is the same log-planned, stats-skipping, vectorized
-    * [[org.apache.spark.sql.graft.GraftFileIndex]] relation plain
-    * snapshots use (filters above the overlay push through the
-    * anti-join to the scan, so row-group pushdown AND file-level stats
-    * pruning both apply), with the deleted-row positions anti-joined
-    * away by (file, `_metadata.row_index`). The DV side is
-    * deleted-rows-sized and broadcasts under AQE. This removes the
-    * ~1.4× row-bridge scan tax from exactly the tables where MoR
-    * deletes accumulate (r16 verdict item 3). */
-  private def nativeDvRead(v: Int): DataFrame = {
     val c = readCommit(v)
-    val (dvs, _) = splitDv(c.files)
-    dvOverlay(org.apache.spark.sql.graft.GraftFileIndex.nativeRead(
-      spark, this, tablePath, v), dvs, v)
+    splitDv(c.files)._1.isEmpty && c.colMap.isEmpty && c.droppedPhys.isEmpty
   }
-
-  /** The deletion-vector overlay over an arbitrary NATIVE base scan
-    * (any frame exposing `_metadata`): broadcast row-index filter when
-    * the vectors are small, distributed anti-join when not. Factored
-    * out of [[nativeDvRead]] (r18) so the column-mapped native path
-    * composes the same overlay over its physical-schema base. */
-  private def dvOverlay(base: DataFrame, dvs: Seq[String], v: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{collect_list, sort_array, substring_index}
-    // total marked positions from the DV parquet FOOTERS (metadata
-    // only) — decides the overlay shape
-    val dvRows = stagedRowCount(dvs)
-    val cap = spark.conf.getOption("spark.graft.lake.dvBroadcastMaxRows")
-      .map(_.trim.toLong).getOrElse(4000000L)
-    if (dvRows <= cap) {
-      // Delta's row-index-filter shape: the vectors broadcast as
-      // file → sorted positions and apply as a SCAN-LOCAL predicate
-      // ([[org.apache.spark.sql.graft.DvNotDeleted]]) — no join build
-      // side, no per-row string hashing, scan+filter+consumer in one
-      // codegen span. Measured ~5× over the anti-join on scan-bound
-      // aggregates (SCALE.md r17). Broadcast cached per version (DV
-      // content is immutable once committed).
-      val b = dvBroadcasts.getOrElseUpdate(v, {
-        if (dvBroadcasts.size > 64) dvBroadcasts.clear()
-        val rows = readFiles(dvs, Some(VersionedTable.DvSchema))
-          .groupBy("file").agg(sort_array(collect_list("pos")).as("ps"))
-          .collect()
-        val map = rows.map(r =>
-          r.getString(0) -> r.getSeq[Long](1).toArray).toMap
-        spark.sparkContext.broadcast(map)
-      })
-      base.filter(org.apache.spark.sql.graft.DvNotDeleted.column(
-        col("_metadata.file_path"), col("_metadata.row_index"), b))
-    } else {
-      // oversized vectors: the distributed anti-join overlay (same
-      // semantics, join-shaped cost). substring_index, not
-      // split+element_at: one substring per row instead of an array
-      // allocation — measured 24% faster at 9.6M rows.
-      val withPos = base.select(col("*"),
-        substring_index(col("_metadata.file_path"), "/", -1).as("_g_file"),
-        col("_metadata.row_index").as("_g_pos"))
-      val dv = readFiles(dvs, Some(VersionedTable.DvSchema))
-        .select(col("file").as("_g_file"), col("pos").as("_g_pos"))
-      withPos.join(dv, Seq("_g_file", "_g_pos"), "left_anti")
-        .drop("_g_file", "_g_pos")
-    }
-  }
-
-  /** Per-version DV broadcast cache for [[nativeDvRead]] — committed
-    * vectors are immutable, so an entry can never go stale. */
-  @transient private lazy val dvBroadcasts =
-    scala.collection.concurrent.TrieMap.empty[Int,
-      org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]]
 
   /** The commit's logical schema at `version` (latest by default). */
   def schemaAt(version: Option[Int] = None): StructType = {
@@ -1240,8 +1222,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
 
   /** Data files of the snapshot that MAY hold rows matching
     * `predicate` per the min/max sidecar stats — the pruning decision
-    * [[readWhere]] acts on, exposed for mutation pre-scans and for the
-    * format-string relation's skipping observability. */
+    * the snapshot relation's `listFiles` acts on under [[readWhere]],
+    * also the format-string relation's file list. */
   def candidateFiles(predicate: org.apache.spark.sql.Column,
                      version: Option[Int] = None): Seq[String] = {
     val v = version.orElse(latestVersion())
@@ -1509,32 +1491,17 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     }
   }
 
-  /** Snapshot read restricted by `predicate`, with stats-based file
-    * pruning (Delta data skipping): files whose min/max/null stats prove
-    * they hold no matching row are never handed to the scan. The
-    * predicate is ALSO applied normally, so pruning is pure optimization
-    * — `readWhere(p)` ≡ `read().filter(p)` on any table.
+  /** Snapshot read restricted by `predicate`: exactly
+    * `read(version).filter(predicate)`. Stats and bloom data skipping
+    * (Delta's) happen inside the snapshot relation — the filter pushes
+    * down to the scan, and [[org.apache.spark.sql.graft.GraftFileIndex]]'s
+    * `listFiles` drops files whose sidecars prove they hold no matching
+    * row ([[candidateFiles]]) before Spark plans splits. The scan
+    * re-applies the predicate, so pruning is pure optimization.
     */
   def readWhere(predicate: org.apache.spark.sql.Column,
-                version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(latestVersion())
-      .getOrElse(sys.error(s"no committed versions at $tablePath"))
-    version.foreach(checkVacuumHorizon(_, "time travel to"))
-    val keep = candidateFiles(predicate, Some(v))
-    if (keep.isEmpty) {
-      val schema = StructType.fromDDL(readCommit(v).schemaDdl)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .filter(predicate)
-    } else {
-      // DV entries for pruned files never match the anti-join key, so
-      // passing the snapshot's full DV list stays correct under pruning.
-      val c = readCommit(v)
-      val (dvs, _) = splitDv(c.files)
-      alignToSchema(readLive(keep, dvs, Some(physReadSchema(c))),
-        StructType.fromDDL(c.schemaDdl),
-        colMap = physMap(c)).filter(predicate)
-    }
-  }
+                version: Option[Int] = None): DataFrame =
+    read(version).filter(predicate)
 
   /** Data files (deletion vectors excluded) of the snapshot at
     * `version`, in a DETERMINISTIC order (sorted by name — names are
@@ -1551,25 +1518,15 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
 
   /** Snapshot rows restricted to `dataFiles` (a subset of
     * [[snapshotDataFiles]] at the same version), read through the FULL
-    * snapshot's deletion-vector overlay and column mapping — DV entries
-    * for files outside the subset never match the anti-join key, so the
-    * union of disjoint chunks equals `read(version)` exactly. The
-    * streaming source's bounded-bootstrap unit. */
+    * snapshot's deletion-vector overlay and column mapping ([[scan]]),
+    * so the union of disjoint chunks equals `read(version)` exactly.
+    * The streaming source's bounded-bootstrap unit. */
   def readSnapshotFiles(dataFiles: Seq[String],
                         version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion())
       .getOrElse(sys.error(s"no committed versions at $tablePath"))
     version.foreach(checkVacuumHorizon(_, "time travel to"))
-    val c = readCommit(v)
-    val schema = StructType.fromDDL(c.schemaDdl)
-    if (dataFiles.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val (dvs, _) = splitDv(c.files)
-      alignToSchema(readLive(dataFiles, dvs, Some(physReadSchema(c))),
-        schema, colMap = physMap(c))
-    }
+    scan(readCommit(v), Some(dataFiles))
   }
 
   /** Lowest version whose CHANGE FEED is still fully readable: reading
@@ -2377,50 +2334,15 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   }
 
   /** Snapshot read; `version = None` reads the latest. Time travel =
-    * pass an older version.
+    * pass an older version. Every snapshot — plain, deletion-vector
+    * overlaid, column-mapped — reads through the same [[scan]]: the
+    * log-planned native relation, the overlay, the logical alignment.
     */
   def read(version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion())
       .getOrElse(sys.error(s"no committed versions at $tablePath"))
     version.foreach(checkVacuumHorizon(_, "time travel to"))
-    val c = readCommit(v)
-    val (dvs, data) = splitDv(c.files)
-    if (data.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL(c.schemaDdl))
-    // plain snapshot (no DV overlay, no mapping): the NATIVE scan —
-    // ONE directory listing via GraftFileIndex instead of per-path
-    // statuses, explicit schema instead of footer merging, stats
-    // skipping wired into the index's listFiles. The common case, and
-    // the one whose planning cost must stay O(1)-ish at 100k files.
-    else if (isPlain(c))
-      org.apache.spark.sql.graft.GraftFileIndex.nativeRead(
-        spark, this, tablePath, v)
-    // DV-only snapshot: the native scan + anti-join overlay (r17) —
-    // same vectorized data side as the plain path, deleted positions
-    // joined away; column alignment below stays (a no-op projection
-    // here, but it pins nullability and column order)
-    else if (c.colMap.isEmpty && c.droppedPhys.isEmpty)
-      alignToSchema(nativeDvRead(v), StructType.fromDDL(c.schemaDdl))
-    // COLUMN-MAPPED snapshot (with or without a DV overlay), r18: the
-    // same native GraftFileIndex data side as plain snapshots —
-    // log-planned statuses, stats pruning through the physical→logical
-    // translation, partition exposure — reading the commit's PHYSICAL
-    // schema (renames read their stable in-file name; dropped columns'
-    // residual bytes are never selected), the DV overlay composed in
-    // between, and the physical→logical projection on top (which also
-    // null-backfills a metadata-only ADD COLUMN's field and pins
-    // nullability/order). Before r18 this branch rode the row-shaped
-    // subset reader, and the SQL door kept mapped tables on the V1
-    // bridge — the measured ~1.4× scan tax, paid forever after the
-    // first RENAME/DROP COLUMN.
-    else {
-      val base = org.apache.spark.sql.graft.GraftFileIndex.nativeMappedRead(
-        spark, this, tablePath, v)
-      val live = if (dvs.isEmpty) base else dvOverlay(base, dvs, v)
-      alignToSchema(live, StructType.fromDDL(c.schemaDdl),
-        colMap = physMap(c))
-    }
+    scan(readCommit(v))
   }
 
   /** Latest version committed at or before `tsMillis` (Delta's
@@ -2549,7 +2471,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         // DVs are row-disjoint), so no prior-DV subtraction is needed.
         val dvPos = readFiles(d.add.filter(isDv), Some(VersionedTable.DvSchema))
           .select(col("file").as("_g_file"), col("pos").as("_g_pos"))
-        val dels = aligned(readWithPos(d.dvTargets, Nil)
+        val dels = aligned(dvOverlay(readFiles(d.dvTargets), Nil, v, withPos = true)
             .join(dvPos, Seq("_g_file", "_g_pos"), "left_semi")
             .drop("_g_file", "_g_pos"))
           .withColumn("_commit_version", lit(v))
@@ -2562,13 +2484,15 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       val removed = d.remove.sorted
       // Prior MoR deletions overlay the REPLACED side: a rewrite absorbs
       // them, and without the overlay the diff would re-emit rows whose
-      // deletion was already surfaced by the delete-dv commit.
-      lazy val prevDvs = resolveFiles(v - 1).filter(isDv)
+      // deletion was already surfaced by the delete-dv commit. The
+      // vectors are snapshot v-1's, so the overlay is keyed by v-1.
+      def replaced = aligned(dvOverlay(readFiles(removed.filterNot(isDv)),
+        resolveFiles(v - 1).filter(isDv), v - 1))
       (added.nonEmpty, removed.nonEmpty) match {
         case (false, false) => None
         case (true, false)  => Some(tagged(added, v, "insert"))
         case (false, true)  =>
-          Some(aligned(readLive(removed.filterNot(isDv), prevDvs))
+          Some(replaced
             .withColumn("_commit_version", lit(v))
             .withColumn("_change_type", lit("delete")))
         case (true, true)   =>
@@ -2580,7 +2504,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           // sides twice; a group's count imbalance yields its inserts
           // OR deletes directly (same grouping equality — NaN/-0.0
           // normalization — and the same multiset replication).
-          val oldRows = aligned(readLive(removed.filterNot(isDv), prevDvs))
+          val oldRows = replaced
           val newRows = aligned(readFiles(added.filterNot(isDv)))
             .select(oldRows.columns.map(col): _*)
           val cols = oldRows.columns.toSeq
@@ -2628,7 +2552,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * `hit`, via one column-pruned scan of the snapshot. The result is
     * O(affected files) driver-side — file metadata, not data. */
   private def affectedFiles(c: Commit, hit: org.apache.spark.sql.Column): Seq[String] = {
-    val (dvs, data) = splitDv(c.files)
+    val (_, data) = splitDv(c.files)
     // stats-prune BEFORE scanning: only files whose min/max may hold a
     // matching row are read at all — the pre-scan of a selective
     // mutation on a 100 TB table is bounded by the predicate, not the
@@ -2637,9 +2561,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // re-count — a dead row).
     val cand = pruneByStats(data, c.schemaDdl, hit, physMap(c), c.droppedPhys)
     if (cand.isEmpty) Seq.empty
-    else alignToSchema(readWithPos(cand, dvs, Some(physReadSchema(c))),
-        StructType.fromDDL(c.schemaDdl),
-        keep = Seq("_g_file", "_g_pos"), colMap = physMap(c))
+    else scan(c, Some(cand), keep = Seq("_g_file"))
       .filter(hit)
       .select(col("_g_file")).distinct()
       .collect().map(_.getString(0)).toSeq
@@ -2657,7 +2579,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         // pre-scan, and DV overlay. Legacy pre-meta files fall back.
         val metas = names.flatMap(n =>
           fileMetaIndex.get(n).filter(_.size >= 0).map(n -> _))
-        if (metas.size == names.size && names.nonEmpty)
+        if (metas.size == names.size)
           org.apache.spark.sql.graft.GraftFileIndex.subsetRead(
             spark, tablePath, metas, sch)
         else spark.read.schema(sch)
@@ -2839,8 +2761,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           // through the overlay: prior MoR deletions in the affected
           // files are ABSORBED by this rewrite (their rows stay gone,
           // their DV entries go inert), and `removed` counts live rows
-          val before = alignToSchema(readLive(affected, dvs, Some(physReadSchema(c))),
-            StructType.fromDDL(c.schemaDdl), colMap = physMap(c))
+          val before = scan(c, Some(affected))
           val kept = before.filter(not(hit))
           // row accounting from log metadata + staged footers (r19):
           // new total = old total - affected files' live rows + staged
@@ -2875,15 +2796,13 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
                 maxRetries: Int = 10): Option[Int] =
     latestVersion().flatMap { v0 =>
       val c = readCommit(v0)
-      val (dvs, data) = splitDv(c.files)
+      val (_, data) = splitDv(c.files)
       // stats-prune the mark scan like every other mutation pre-scan
       val cand = pruneByStats(data, c.schemaDdl, condition, physMap(c), c.droppedPhys)
       if (cand.isEmpty) None
       else {
         val hit = coalesce(condition, lit(false))
-        val marks = alignToSchema(readWithPos(cand, dvs, Some(physReadSchema(c))),
-            StructType.fromDDL(c.schemaDdl), keep = Seq("_g_file", "_g_pos"),
-            colMap = physMap(c))
+        val marks = scan(c, Some(cand), keep = Seq("_g_file", "_g_pos"))
           .filter(hit)
           .select(col("_g_file").as("file"), col("_g_pos").as("pos"))
         // one small file per commit: the vector is deleted-rows-sized.
@@ -2925,16 +2844,14 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       val unknown = assignments.keySet -- cols.toSet
       if (unknown.nonEmpty)
         sys.error(s"updateMoR assigns unknown columns $unknown")
-      val (dvs, data) = splitDv(c.files)
+      val (_, data) = splitDv(c.files)
       val cand = pruneByStats(data, c.schemaDdl, condition, physMap(c), c.droppedPhys)
       if (cand.isEmpty) None
       else {
         val hit = coalesce(condition, lit(false))
         // aligned: pre-evolution candidate files must filter on, and
         // produce new images carrying, the full snapshot schema
-        val marked = alignToSchema(readWithPos(cand, dvs, Some(physReadSchema(c))),
-            StructType.fromDDL(c.schemaDdl), keep = Seq("_g_file", "_g_pos"),
-            colMap = physMap(c))
+        val marked = scan(c, Some(cand), keep = Seq("_g_file", "_g_pos"))
           .filter(hit)
         // repartition, not coalesce: keep the mark scan parallel (see
         // deleteMoR) — only the marked rows cross the shuffle
@@ -3024,9 +2941,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         val affected = affectedFiles(c, hit)
         if (affected.isEmpty) None
         else {
-          val (dvs, _) = splitDv(c.files)
-          val rewritten = alignToSchema(readLive(affected, dvs, Some(physReadSchema(c))),
-            StructType.fromDDL(c.schemaDdl), colMap = physMap(c)).select(cols.map { n =>
+          val rewritten = scan(c, Some(affected)).select(cols.map { n =>
             assignments.get(n) match {
               case Some(e) => when(hit, e).otherwise(col(n)).as(n)
               case None    => col(n)
@@ -3060,14 +2975,12 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           else Some(commitAppend(source, maxRetries = 0))
         } else {
           val srcKeys = source.select(keys.map(source.col): _*).distinct()
-          val (dvs, data) = splitDv(c.files)
-          // `_metadata` is a scan-level column: readWithPos projects it
-          // BEFORE the join (post-join it no longer resolves), and the
-          // DV overlay keeps MoR-deleted keys from matching (a deleted
-          // key must INSERT, not resurrect the dead row's file).
-          val snapKeys = alignToSchema(readWithPos(data, dvs),
-              StructType.fromDDL(c.schemaDdl), keep = Seq("_g_file"),
-              colMap = physMap(c))
+          val (dvs, _) = splitDv(c.files)
+          // `_metadata` is a scan-level column: the overlay projects the
+          // file name BEFORE the join (post-join it no longer resolves),
+          // and keeps MoR-deleted keys from matching (a deleted key must
+          // INSERT, not resurrect the dead row's file).
+          val snapKeys = scan(c, keep = Seq("_g_file"))
             .select(keys.map(col) :+ col("_g_file"): _*)
           val affected = snapKeys.join(srcKeys, keys, "left_semi")
             .select("_g_file").distinct()
@@ -3079,8 +2992,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           } else {
             // all NEW content in an upsert comes from the source rows
             checkConstraints(source, c.constraints)
-            val before = alignToSchema(readLive(affected, dvs, Some(physReadSchema(c))),
-              StructType.fromDDL(c.schemaDdl), colMap = physMap(c))
+            val before = scan(c, Some(affected))
             val rewritten = Merge.upsert(before, source, keys)
             val beforeCnt = liveRowCount(affected, dvs)
             Some(commitRewrite("merge", c, affected, rewritten, -1L,
@@ -3184,8 +3096,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         val (dvs, data) = splitDv(c.files)
         val srcKeys = source.select(keys.map(source.col): _*).distinct()
         // affected files: one column-pruned pos-scan feeds both probes
-        val snap = alignToSchema(readWithPos(data, dvs), schema,
-          keep = Seq("_g_file"), colMap = physMap(c))
+        val snap = scan(c, keep = Seq("_g_file"))
         val matchedFiles =
           if (matched.isEmpty || data.isEmpty) Seq.empty[String]
           else snap.join(srcKeys, keys, "left_semi")
@@ -3204,8 +3115,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
                 c.droppedPhys, alias = "t")
               catch { case _: Throwable => data }
             if (bcand.isEmpty) Seq.empty[String]
-            else alignToSchema(readWithPos(bcand, dvs), schema,
-                keep = Seq("_g_file"), colMap = physMap(c))
+            else scan(c, Some(bcand), keep = Seq("_g_file"))
               .as("t").join(srcKeys, keys, "left_anti")
               .filter(coalesce(hit, lit(false)))
               .select("_g_file").distinct().collect().map(_.getString(0)).toSeq
@@ -3218,9 +3128,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           else {
             val liveKeys =
               if (data.isEmpty) source.select(keys.map(source.col): _*).limit(0)
-              else alignToSchema(readLive(data, dvs), schema,
-                  colMap = physMap(c))
-                .select(keys.map(col): _*)
+              else scan(c).select(keys.map(col): _*)
             Some(Merge.applyInserts(source, liveKeys, keys, insertCls, columns))
           }
         if (affected.isEmpty) {
@@ -3229,8 +3137,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
             case Some(ins) => Some(commitAppend(ins, maxRetries = 0))
           }
         } else {
-          val before = alignToSchema(readLive(affected, dvs, Some(physReadSchema(c))), schema,
-            colMap = physMap(c))
+          val before = scan(c, Some(affected))
           val matchedOut =
             if (matched.isEmpty) before.join(srcKeys, keys, "left_semi")
               .select(columns.map(col): _*)
@@ -3313,8 +3220,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       if (affected.isEmpty)
         appendWithTxn(df, allowNewColumns = false, maxRetries = 0, txnApp, txnVer)
       else {
-        val before = alignToSchema(readLive(affected, dvs, Some(physReadSchema(c))),
-          StructType.fromDDL(c.schemaDdl), colMap = physMap(c))
+        val before = scan(c, Some(affected))
         val kept = before.filter(not(hit))
         // staged = kept ∪ incoming, so the universal rewrite accounting
         // (old - affected live + staged) already includes `newRows`
@@ -3406,16 +3312,10 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   def optimize(targetRowsPerFile: Long): Int = {
     val v0 = latestVersion().getOrElse(sys.error(s"no commits at $tablePath"))
     val c = readCommit(v0)
-    val (dvs, data) = splitDv(c.files)
     // row count from the maintained commit metadata (footer-exact by
     // protocol, live-row exact under DVs) — no full count scan
     val nFiles = math.max(1, math.ceil(c.rows.toDouble / targetRowsPerFile).toInt)
-    val compacted =
-      if (data.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType.fromDDL(c.schemaDdl))
-      else alignToSchema(readLive(data, dvs),
-        StructType.fromDDL(c.schemaDdl), colMap = physMap(c)).repartition(nFiles)
+    val compacted = scan(c).repartition(nFiles)
     // read-set = the whole snapshot INCLUDING its deletion vectors:
     // optimize rewrites every data file through the overlay, leaving
     // every DV entry inert, so the DVs drop out of the new snapshot —
@@ -3443,13 +3343,12 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     require(targetRowsPerFile > 0, "compactSmallFiles needs a positive target")
     val v0 = latestVersion().getOrElse(sys.error(s"no commits at $tablePath"))
     val c = readCommit(v0)
-    val (dvs, data) = splitDv(c.files)
+    val (_, data) = splitDv(c.files)
     val meta = snapshotFileMeta(Some(v0))
     val small = data.filter(f => meta.get(f)
       .exists(m => m.rows >= 0 && m.rows < targetRowsPerFile / 2))
     if (small.size < math.max(2, minSmallFiles)) return None
-    val live = alignToSchema(readLive(small, dvs, Some(physReadSchema(c))),
-      StructType.fromDDL(c.schemaDdl), colMap = physMap(c))
+    val live = scan(c, Some(small))
     val smallRows = small.flatMap(meta.get).map(_.rows).sum // pre-DV upper bound
     val nOut = math.max(1, math.ceil(smallRows.toDouble / targetRowsPerFile).toInt)
     // partitioned tables re-split per value in staging (one-value-per-

@@ -22,12 +22,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * ~5× faster than the string-keyed broadcast anti-join on a
   * 9.6M-row scan-bound aggregate (SCALE.md r17).
   *
-  * Used by [[graft.lake.VersionedTable]]'s native DV read when the
+  * The small-vector gear of [[graft.lake.VersionedTable]]'s one DV
+  * overlay, so every lake reader uses it — `read`, `readWhere`,
+  * `readSnapshotFiles`, the SQL door's native replan, the change
+  * feed's replaced-file side, and every mutation pre-scan and rewrite
+  * (CoW, MoR, merge, replaceWhere, optimize, compaction) — when the
   * snapshot's total deleted-position count fits the broadcast budget
   * (`spark.graft.lake.dvBroadcastMaxRows`, default 4M ≈ 32 MB of
-  * longs); larger vectors keep the distributed anti-join overlay —
-  * same semantics, join-shaped cost. Codegen'd; the interpreted eval
-  * path mirrors it for completeness.
+  * longs); larger vectors take the distributed anti-join gear — same
+  * semantics, join-shaped cost. Codegen'd; the interpreted eval path
+  * mirrors it for completeness.
   */
 case class DvNotDeleted(left: Expression, right: Expression,
                         dv: Broadcast[Map[String, Array[Long]]])

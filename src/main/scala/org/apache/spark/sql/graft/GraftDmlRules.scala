@@ -109,16 +109,15 @@ case class GraftDmlRules(session: SparkSession) extends Rule[LogicalPlan] {
 
   /** The native replan of a pure lake READ, version pinned ONCE through
     * the feature check and the plan (the plainness-vs-build race rule —
-    * see GraftFileIndex.nativeRelationIfPlain's note):
-    *  - plain flat snapshot → a HadoopFsRelation over the log-planned
-    *    file index (vectorized + codegen + stats skipping);
-    *  - plain PARTITIONED snapshot (r18) → the lake's logical-order
-    *    read plan spliced in (real partition attributes underneath, so
-    *    Catalyst's static + dynamic partition pruning fire);
-    *  - DV-only snapshot (r17) → the native DV-overlay plan;
-    *  - column-mapped / dropped-column snapshots, with or without DVs
-    *    (r18) → the native mapped plan (physical-schema scan +
-    *    logical projection + overlay).
+    * a concurrent MoR delete must never be scanned as plain parquet):
+    *  - plain flat snapshot → the bare HadoopFsRelation over the
+    *    log-planned file index (vectorized + codegen + stats skipping);
+    *  - every other snapshot — plain PARTITIONED (r18), DV overlaid,
+    *    column-mapped, dropped-column — → `VersionedTable.read`'s plan
+    *    spliced in: the same relation under the DV overlay and the
+    *    logical-order projection (real partition attributes
+    *    underneath, so Catalyst's static + dynamic partition pruning
+    *    fire).
     * Every splice keeps the replaced node's attribute ids so
     * references above keep resolving. */
   private def nativeReadPlan(table: VersionedTable, path: String,
@@ -146,7 +145,7 @@ case class GraftDmlRules(session: SparkSession) extends Rule[LogicalPlan] {
       // DV-only, r18 the mapped shapes), so the SQL door always
       // splices it. The V1 bridge relations remain only as the
       // WRITABLE table surfaces (inserts must route through the commit
-      // log — see GraftFileIndex.nativeRelationIfPlain's SAFETY note).
+      // log — see GraftFileIndex.nativeRelationAt's SAFETY note).
       Some(spliceLogicalOrder(table.read(Some(v)), output))
     }
   }

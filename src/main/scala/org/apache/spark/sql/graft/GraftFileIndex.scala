@@ -7,7 +7,8 @@ import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.lake.VersionedTable
@@ -23,13 +24,14 @@ import graft.lake.VersionedTable
   * pushdown and column pruning. The V1 row-bridge relation
   * ([[GraftLakeRelation]]) measured ~1.4× slower on scan-bound
   * aggregates purely from its InternalRow→Row→InternalRow hop; this
-  * path removes the hop on the common case (no deletion vectors, no
-  * column mapping — [[VersionedTable.isPlainParquetSnapshot]]). It
-  * serves [[VersionedTable.read]] directly, and SQL-door reads through
-  * the extensions' query-tree rewrite (GraftDmlRules) — NOT through
-  * the V1 provider or the V2 catalog table, whose bridge relations
-  * must stay in place so inserts route through the commit log (see
-  * the companion's SAFETY note).
+  * path removes the hop for EVERY snapshot — plain, deletion-vector
+  * overlaid ([[VersionedTable]]'s `dvOverlay` sits on top) or
+  * column-mapped (physical read schema, `toLogical` below). It serves
+  * [[VersionedTable.read]] and `readWhere` directly, and SQL-door
+  * reads through the extensions' query-tree rewrite (GraftDmlRules) —
+  * NOT through the V1 provider or the V2 catalog table, whose bridge
+  * relations must stay in place so inserts route through the commit
+  * log (see [[GraftFileIndex.nativeRelationAt]]'s SAFETY note).
   *
   * Data skipping stays in front: `listFiles` routes the scan's data
   * filters through the lake's min/max sidecar stats
@@ -189,132 +191,49 @@ class GraftFileIndex(spark: SparkSession, val table: VersionedTable,
 }
 
 object GraftFileIndex {
-  /** The plain-snapshot NATIVE relation, or None when the snapshot
-    * needs the featureful bridge. ONE atomic decision: the version is
-    * resolved HERE and pinned through the plainness check, the schema,
-    * and the index — checking "is it plain?" on latest and then
-    * building on a re-resolved latest would let a concurrent MoR
-    * delete's DV snapshot be scanned as plain parquet (deleted rows
-    * resurrected).
+  /** The snapshot at an ALREADY-PINNED version as a native relation —
+    * the ONE construction behind every log-planned lake read: every
+    * [[VersionedTable]] snapshot scan (plain, deletion-vector overlaid
+    * or column-mapped alike) and the extensions' query-tree read
+    * rewrite. The data schema is the commit's PHYSICAL read schema
+    * ([[VersionedTable.physicalReadSchemaAt]]: the logical fields under
+    * their in-file names, all nullable, field metadata kept — for an
+    * unmapped table exactly the logical schema made nullable), and the
+    * physical→logical name map is wired into the index so stats
+    * pruning still fires on translated predicates. When the index
+    * recovered partition tuples, the partition columns move from
+    * `dataSchema` to `partitionSchema`: Spark fills their values from
+    * the directory metadata (the column is never even READ from the
+    * files — they do store it, harmlessly) and its partition-pruning
+    * machinery, static and dynamic, operates on them. NOTE the
+    * relation's column order is then dataSchema ++ partitionSchema;
+    * [[VersionedTable.read]] restores the logical order.
     *
     * SAFETY: a HadoopFsRelation is insertable through Spark's generic
     * file-source path (`InsertIntoHadoopFsRelationCommand` writes —
     * and for overwrite DELETES — the directory with no commit), so
     * this relation must NEVER be what a writable table surface
-    * resolves to. It backs [[VersionedTable.read]] (a DataFrame) and
+    * resolves to. It backs [[VersionedTable]]'s DataFrame reads and
     * the extensions' QUERY-TREE read rewrite only; the V1 provider and
     * the V2 catalog keep their bridge relations, whose inserts route
     * through the commit log or fail loudly. */
-  def nativeRelationIfPlain(spark: SparkSession, table: VersionedTable,
-                            path: String, version: Option[Int])
-      : Option[org.apache.spark.sql.execution.datasources.HadoopFsRelation] = {
-    val v = version.orElse(table.latestVersion()).getOrElse(sys.error(
-      s"graft-lake: no committed versions at $path"))
-    if (!table.isPlainParquetSnapshot(Some(v))) None
-    else Some(nativeRelationAt(spark, table, path, v))
-  }
-
-  /** The native relation at an ALREADY-PINNED plain version —
-    * [[VersionedTable.read]]'s entry (it resolved and checked the
-    * commit itself). When the index recovered partition tuples, the
-    * partition columns move from `dataSchema` to `partitionSchema`:
-    * Spark fills their values from the directory metadata (the column
-    * is never even READ from the files — they do store it, harmlessly)
-    * and its partition-pruning machinery, static and dynamic, operates
-    * on them. NOTE the relation's column order is then
-    * dataSchema ++ partitionSchema; [[nativeRead]] restores the
-    * logical order. */
   def nativeRelationAt(spark: SparkSession, table: VersionedTable,
-                       path: String, version: Int)
-      : org.apache.spark.sql.execution.datasources.HadoopFsRelation = {
-    val classicSpark =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val index = new GraftFileIndex(spark, table, path, Some(version))
+                       path: String, version: Int): HadoopFsRelation = {
+    val index = new GraftFileIndex(spark, table, path, Some(version),
+      table.physicalMapAt(version).map(_.swap))
     val pset = index.partitionSchema.fieldNames.toSet
-    // fully NULLABLE, whatever the DDL says: pre-evolution files lack
-    // evolved columns (the reader null-fills them), and CoW rewrites
-    // legitimately store nulls there — a NOT NULL read schema makes
-    // the vectorized reader skip null tracking and return garbage
-    // (0.0) or fail the file outright. File reads were always
-    // nullable on the old mergeSchema path too.
-    val full = table.schemaAt(Some(version)).asNullable
-    org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema =
-        if (pset.isEmpty) full
-        else StructType(full.filterNot(f => pset.contains(f.name))),
-      bucketSpec = None,
-      fileFormat =
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      options = Map.empty)(classicSpark)
-  }
-
-  /** [[nativeRelationAt]] as a DataFrame — the plain-snapshot body of
-    * [[VersionedTable.read]]. A partitioned relation surfaces columns
-    * as dataSchema ++ partitionSchema; the projection restores the
-    * commit's logical order (Catalyst collapses it when it's already
-    * the identity). */
-  def nativeRead(spark: SparkSession, table: VersionedTable,
-                 path: String, version: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val classicSpark =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rel = nativeRelationAt(spark, table, path, version)
-    val df = org.apache.spark.sql.classic.Dataset.ofRows(classicSpark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(
-        rel, isStreaming = false))
-    if (rel.partitionSchema.isEmpty) df
-    else df.select(table.schemaAt(Some(version)).fieldNames.toSeq
-      .map(org.apache.spark.sql.functions.col): _*)
-  }
-
-  /** The COLUMN-MAPPED snapshot's native data side (r18): the same
-    * log-planned, stats-pruned, vectorized [[GraftFileIndex]] scan the
-    * plain path uses, but with the commit's PHYSICAL read schema (the
-    * in-file column names renames left behind; dropped columns'
-    * residual bytes excluded entirely) and the physical→logical name
-    * map wired into the index so stats pruning still fires on the
-    * translated predicate. Returns the PHYSICAL frame — the caller
-    * ([[VersionedTable.read]]) aligns it to the logical schema and
-    * applies the DV overlay when present. Before r18 a mapped snapshot
-    * paid the ~1.4× V1 row-bridge scan tax on every SQL read, forever
-    * after its first RENAME/DROP COLUMN. */
-  def nativeMappedRead(spark: SparkSession, table: VersionedTable,
-                       path: String, version: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val classicSpark =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val phys = table.physicalReadSchemaAt(version)
-    val toLogical = table.physicalMapAt(version).map(_.swap)
-    val index = new GraftFileIndex(spark, table, path, Some(version), toLogical)
-    val pset = index.partitionSchema.fieldNames.toSet
-    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = index.partitionSchema,
-      dataSchema =
-        if (pset.isEmpty) phys
-        else StructType(phys.filterNot(f => pset.contains(f.name))),
-      bucketSpec = None,
-      fileFormat =
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      options = Map.empty)(classicSpark)
-    val df = org.apache.spark.sql.classic.Dataset.ofRows(classicSpark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(
-        rel, isStreaming = false))
-    if (pset.isEmpty) df
-    else df.select(phys.fieldNames.toSeq
-      .map(org.apache.spark.sql.functions.col): _*)
+    parquetRelation(spark, index, StructType(
+      table.physicalReadSchemaAt(version).filterNot(f => pset.contains(f.name))))
   }
 
   /** An EXPLICIT file subset as a DataFrame with statuses taken from
-    * the commit log's recorded meta (r17) — the internal reader under
-    * every pruned/mutation-pre-scan/DV read ([[VersionedTable]]'s
-    * `readFiles`). `spark.read.parquet(paths...)` would re-derive each
-    * file's status through an InMemoryFileIndex — O(subset) driver
-    * filesystem round-trips per read that the log already answers.
-    * Never exposed bare in a writable position (every caller wraps it
-    * in projections/joins; see the companion's SAFETY note). */
+    * the commit log's recorded meta (r17) — the base of every
+    * [[VersionedTable]] read of a file list (pruned mutation pre-scans,
+    * rewrites, streaming chunks, DV vectors). `spark.read.parquet(paths...)`
+    * would re-derive each file's status through an InMemoryFileIndex —
+    * O(subset) filesystem round-trips at planning time per read that
+    * the log already answers. Never exposed bare in a writable position (see
+    * [[nativeRelationAt]]'s SAFETY note). */
   def subsetRead(spark: SparkSession, path: String,
                  files: Seq[(String, graft.lake.VersionedTable.FileMeta)],
                  schema: StructType): org.apache.spark.sql.DataFrame = {
@@ -336,18 +255,21 @@ object GraftFileIndex {
       override def toString: String =
         s"GraftSubsetIndex[$path, ${statuses.length} files]"
     }
-    val classicSpark =
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = StructType(Nil),
-      dataSchema = schema.asNullable,
-      bucketSpec = None,
-      fileFormat =
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
-      options = Map.empty)(classicSpark)
-    org.apache.spark.sql.classic.Dataset.ofRows(classicSpark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(
-        rel, isStreaming = false))
+    frame(spark, parquetRelation(spark, index, schema))
   }
+
+  /** `rel` as a DataFrame over a plain (non-streaming) LogicalRelation. */
+  def frame(spark: SparkSession, rel: HadoopFsRelation): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LogicalRelation(rel, isStreaming = false))
+
+  /** A parquet relation over `index`, its data schema made nullable
+    * down to nested fields (see [[VersionedTable.physicalReadSchemaAt]]). */
+  private def parquetRelation(spark: SparkSession, index: FileIndex,
+                              dataSchema: StructType): HadoopFsRelation =
+    HadoopFsRelation(location = index, partitionSchema = index.partitionSchema,
+      dataSchema = dataSchema.asNullable, bucketSpec = None,
+      fileFormat = new ParquetFileFormat(), options = Map.empty)(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
 }

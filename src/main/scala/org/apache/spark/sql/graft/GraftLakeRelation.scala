@@ -23,7 +23,7 @@ import graft.lake.VersionedTable
   * Deliberately a V1 `BaseRelation` + `PrunedFilteredScan`, the same
   * choice Delta's `DeltaDataSource` makes for its batch path: the
   * relation's scan is built FROM the lake's own reader
-  * ([[VersionedTable.readWhere]]), so deletion-vector overlays, column
+  * ([[VersionedTable.readSnapshotFiles]]), so deletion-vector overlays, column
   * mapping, time travel, and — the scale lever — file-stats data
   * skipping all apply behind the format string. A DataSourceV2
   * `PartitionReader` would have to re-implement parquet + DV + mapping
@@ -31,7 +31,7 @@ import graft.lake.VersionedTable
   *
   * Pushdown contract: Catalyst hands the WHERE clause down as
   * `sources.Filter`s; every translatable conjunct becomes a Column
-  * predicate for `readWhere`, which drops provably-irrelevant files
+  * predicate for `candidateFiles`, which drops provably-irrelevant files
   * BEFORE Spark lists the scan (min/max sidecar stats), and the full
   * filter is re-applied on top (V1 filters are advisory), so pruning is
   * pure optimization. Untranslatable shapes simply don't prune. At

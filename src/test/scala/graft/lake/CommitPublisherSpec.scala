@@ -213,4 +213,20 @@ class CommitPublisherSpec extends AnyFunSuite {
     try assert(new String(in.readAllBytes(), "UTF-8") == "A") finally in.close()
     assert(!fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith(".arbiter-")))
   }
+
+  test("an arbiter entry read before its body is written is not taken as stale") {
+    val s = mosSpark
+    val dir = "mos://" + Files.createTempDirectory("graft-cput-empty").toString
+    val fs = new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val dst = new Path(dir, "v00000001.json")
+    val tmp = new Path(dir, ".tmp-b.json")
+    val b = fs.create(tmp, false); b.write("B".getBytes("UTF-8")); b.close()
+    // a winner's entry caught between creation and its body: no tmp,
+    // no ts — a fresh entry, whose winner is still publishing
+    val entry = new Path(dir, ".arbiter-v00000001.json")
+    fs.create(entry, false).close()
+    assert(!new ConditionalPutCommitPublisher().publishIfAbsent(fs, tmp, dst))
+    assert(fs.exists(entry), "a loser deleted the winner's fresh entry")
+    assert(!fs.exists(dst))
+  }
 }

@@ -132,6 +132,12 @@ class LakeSqlSpec extends AnyFunSuite {
       s"DV snapshot read must overlay the deleted positions:\n$dvPlan")
     assert(t.read().count() == 90)
     assert(t.read().filter(col("id") <= 10).count() == 9)
+    // readWhere is read().filter: the same log-planned relation under
+    // the same scan-local overlay, not a subset scan with an anti-join
+    val wherePlan = t.readWhere(col("id") <= 10).queryExecution.executedPlan.toString
+    assert(wherePlan.contains("GraftFileIndex") && wherePlan.contains("dv_not_deleted"),
+      s"readWhere must scan the snapshot relation through the row-index filter:\n$wherePlan")
+    assert(t.readWhere(col("id") <= 10).count() == 9)
     // the oversized-vector fallback is the anti-join — same rows
     spark.conf.set("spark.graft.lake.dvBroadcastMaxRows", "1")
     try {

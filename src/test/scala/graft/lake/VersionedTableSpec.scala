@@ -580,7 +580,19 @@ class VersionedTableSpec extends AnyFunSuite {
 
   // ---- deletion vectors (merge-on-read deletes) ------------------------
 
-  test("MoR delete: rows gone, data files untouched, time travel intact, live-row accounting") {
+  /** Registers `body` once per DV overlay gear: under `name` at the
+    * default budget (broadcast row-index filter), and under
+    * `name [anti-join gear]` with `spark.graft.lake.dvBroadcastMaxRows`
+    * at 0, so every vector — single-row ones too — takes the anti-join. */
+  private def dvTest(name: String)(body: => Any): Unit = {
+    test(name)(body)
+    test(s"$name [anti-join gear]") {
+      spark.conf.set("spark.graft.lake.dvBroadcastMaxRows", "0")
+      try body finally spark.conf.unset("spark.graft.lake.dvBroadcastMaxRows")
+    }
+  }
+
+  dvTest("MoR delete: rows gone, data files untouched, time travel intact, live-row accounting") {
     val t = freshTable()
     t.commitOverwrite((1L to 10L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(2)) // v0
     val filesV0 = t.readCommit(0).files
@@ -605,7 +617,7 @@ class VersionedTableSpec extends AnyFunSuite {
       .collect().sorted.toSeq == Seq(8L, 9L))
   }
 
-  test("racing MoR deletes, disjoint rows in the SAME data file: both land (row-level validation)") {
+  dvTest("racing MoR deletes, disjoint rows in the SAME data file: both land (row-level validation)") {
     val path = Files.createTempDirectory("graft-vt").toString + "/t"
     VersionedTable(spark, path)
       .commitOverwrite((1L to 10L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1))
@@ -634,7 +646,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.history().last._3 == 6L)
   }
 
-  test("MoR deletes marking the SAME row: row-level check aborts loudly naming both commits") {
+  dvTest("MoR deletes marking the SAME row: row-level check aborts loudly naming both commits") {
     val t = freshTable()
     t.commitOverwrite((1L to 6L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1)) // v0
     val base = t.readCommit(0)
@@ -670,7 +682,7 @@ class VersionedTableSpec extends AnyFunSuite {
       Seq(1L, 3L, 4L, 6L))
   }
 
-  test("MoR delete vs CoW rewrite: either order conflicts loudly (positions must never dangle)") {
+  dvTest("MoR delete vs CoW rewrite: either order conflicts loudly (positions must never dangle)") {
     // CoW rewrite based BEFORE a racing DV commit on its read-set: abort
     val t = freshTable()
     t.commitOverwrite((1L to 6L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1)) // v0
@@ -702,7 +714,7 @@ class VersionedTableSpec extends AnyFunSuite {
       err2.getMessage)
   }
 
-  test("CoW rewrites absorb deletion vectors; optimize purges them from the snapshot") {
+  dvTest("CoW rewrites absorb deletion vectors; optimize purges them from the snapshot") {
     val t = freshTable()
     t.commitOverwrite((1L to 6L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1)) // v0
     assert(t.deleteMoR(col("id") <= 2L).contains(1))                                // v1
@@ -721,7 +733,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.read(Some(1)).select("id").as[Long].collect().sorted.toSeq == (3L to 6L))
   }
 
-  test("change feed: delete-dv emits exactly the marked rows; a later rewrite emits no phantoms") {
+  dvTest("change feed: delete-dv emits exactly the marked rows; a later rewrite emits no phantoms") {
     val t = freshTable()
     t.commitOverwrite((1L to 6L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1)) // v0
     assert(t.deleteMoR(col("id") <= 2L).contains(1))                                // v1
@@ -736,7 +748,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(upd == Seq((6L, "delete"), (6L, "insert")))
   }
 
-  test("MoR update: one commit = vector + new images, files untouched, CDC emits pairs") {
+  dvTest("MoR update: one commit = vector + new images, files untouched, CDC emits pairs") {
     val t = freshTable()
     t.commitOverwrite((1L to 6L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1)) // v0
     val filesV0 = t.readCommit(0).files
@@ -770,7 +782,7 @@ class VersionedTableSpec extends AnyFunSuite {
       Seq("one", "r2", "r3", "r4", "X", "X"))
   }
 
-  test("MoR DML on a schema-evolved table: row positions resolve through null-backfilled reads") {
+  dvTest("MoR DML on a schema-evolved table: row positions resolve through null-backfilled reads") {
     // the risky interplay: _metadata.row_index must stay correct when
     // the scan merge-schemas old files (null-backfilled new column)
     val t = freshTable()
@@ -790,7 +802,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.history().last._3 == 2L)
   }
 
-  test("deletion vectors on compacted files: MoR after optimize targets the new layout") {
+  dvTest("deletion vectors on compacted files: MoR after optimize targets the new layout") {
     val t = freshTable()
     t.commitOverwrite((1L to 8L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(2)) // v0
     assert(t.deleteMoR(col("id") === 1L).contains(1))                               // v1
@@ -805,7 +817,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.history().last._3 == 4L)
   }
 
-  test("CHECK constraints survive schema evolution and gate the evolved batch") {
+  dvTest("CHECK constraints survive schema evolution and gate the evolved batch") {
     val t = freshTable()
     t.commitOverwrite(Seq((1L, 10.0)).toDF("id", "x"))                              // v0
     t.addConstraint("x_pos", "x > 0")                                               // v1
@@ -821,7 +833,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.read().count() == 2)
   }
 
-  test("vacuum keeps deletion vectors referenced by retained versions") {
+  dvTest("vacuum keeps deletion vectors referenced by retained versions") {
     val t = freshTable()
     t.commitOverwrite((1L to 6L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1)) // v0
     assert(t.deleteMoR(col("id") === 1L).contains(1))                               // v1
