@@ -89,13 +89,9 @@ object Tables {
     * observed key cardinality of the stream's initial data — free when
     * collected via `Dataset.observe` on the seed commit's own write (an
     * approx-distinct as a separate job measured ~0.2 s of pure fixed
-    * overhead) — times [[StateKeyHeadroom]], capped by the session's
-    * shuffle parallelism. The state partition count is fixed for the
-    * stream's lifetime (it is baked into the checkpoint), so the
-    * headroom keeps a stream whose key set grows past the seed's from
-    * being under-partitioned forever. `spark.graft.stream.statePartitions`
-    * overrides for production tuning (the by-name param keeps the
-    * override path job-free).
+    * overhead) — capped by the session's shuffle parallelism;
+    * `spark.graft.stream.statePartitions` overrides for production
+    * tuning (the by-name param keeps the override path job-free).
     */
   def statePartitions(s: SparkSession, distinctKeys: => Long): Int =
     s.conf.getOption("spark.graft.stream.statePartitions")
@@ -105,11 +101,8 @@ object Tables {
         require(n > 0, s"spark.graft.stream.statePartitions must be positive, got '$raw'")
         n
       }
-      .getOrElse(math.max(1L, math.min(StateKeyHeadroom * distinctKeys,
+      .getOrElse(math.max(1L, math.min(distinctKeys,
         s.sessionState.conf.numShufflePartitions.toLong)).toInt)
-
-  /** State partitions per observed seed key (see [[statePartitions]]). */
-  val StateKeyHeadroom = 2L
 
   /** Conditional scan-parallelism widener (r19, guide §2.5 "one huge
     * unsplittable file": repartition immediately after the read).

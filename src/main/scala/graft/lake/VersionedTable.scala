@@ -776,9 +776,10 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   /** The ONE deletion-vector overlay, over any file-source frame
     * exposing `_metadata`: rows marked in `dvs` (the DV list of
     * snapshot `v`) are dropped. Two gears, chosen from the vectors'
-    * total marked positions in the DV parquet FOOTERS (metadata only):
-    * up to `spark.graft.lake.dvBroadcastMaxRows` the vectors broadcast
-    * as a scan-local row-index filter
+    * total marked positions as the commit log records them (the DV
+    * parquet footers for files it has no count for): up to
+    * `spark.graft.lake.dvBroadcastMaxRows` the vectors broadcast as a
+    * scan-local row-index filter
     * ([[org.apache.spark.sql.graft.DvNotDeleted]]); above it, the
     * distributed anti-join on (`_g_file`, `_g_pos`). `withPos` appends
     * `_g_file` (file name) and `_g_pos` (`_metadata.row_index`) to the
@@ -786,7 +787,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * (plus those two columns when asked). */
   private def dvOverlay(base: DataFrame, dvs: Seq[String], v: Int,
                         withPos: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{collect_list, sort_array, substring_index}
+    import org.apache.spark.sql.functions.substring_index
     // substring_index, not split+element_at: one substring per row
     // instead of an array allocation (measured 24% on 9.6M rows)
     def positioned(df: DataFrame): DataFrame = df.select(col("*"),
@@ -794,7 +795,10 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       col("_metadata.row_index").as("_g_pos"))
     val cap = spark.conf.getOption("spark.graft.lake.dvBroadcastMaxRows")
       .map(_.trim.toLong).getOrElse(4000000L)
-    if (dvs.nonEmpty && stagedRowCount(dvs) > cap) {
+    val logged = dvs.flatMap(f =>
+      fileMetaIndex.get(f).filter(_.rows >= 0).map(f -> _.rows)).toMap
+    def marked = logged.values.sum + stagedRowCount(dvs.filterNot(logged.contains))
+    if (dvs.nonEmpty && marked > cap) {
       // oversized vectors: the distributed anti-join (same semantics,
       // join-shaped cost; the DV side is deleted-rows-sized)
       val dv = readFiles(dvs, Some(VersionedTable.DvSchema))
@@ -807,16 +811,21 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // no join build side, no per-row string hashing,
       // scan+filter+consumer in one codegen span. Measured ~5× over
       // the anti-join on scan-bound aggregates (SCALE.md r17).
-      // Broadcast cached per version (DV content is immutable once
-      // committed).
+      // Broadcast cached per version, built from the per-file decoded
+      // vectors: a new version decodes only the vectors it added.
       val live = if (dvs.isEmpty) base else {
         val b = dvBroadcasts.getOrElseUpdate(v, {
           if (dvBroadcasts.size > 64) dvBroadcasts.clear()
-          val rows = readFiles(dvs, Some(VersionedTable.DvSchema))
-            .groupBy("file").agg(sort_array(collect_list("pos")).as("ps"))
-            .collect()
-          spark.sparkContext.broadcast(rows.map(r =>
-            r.getString(0) -> r.getSeq[Long](1).toArray).toMap)
+          import scala.collection.parallel.CollectionConverters._
+          dvs.filterNot(dvDecoded.contains).par.foreach(dvVector)
+          val parts = dvs.flatMap(dvVector).groupMap(_._1)(_._2)
+          spark.sparkContext.broadcast(parts.map {
+            case (f, Seq(ps)) => f -> ps
+            case (f, pss) =>
+              val all = pss.toArray.flatten
+              java.util.Arrays.sort(all)
+              f -> all
+          })
         })
         base.filter(org.apache.spark.sql.graft.DvNotDeleted.column(
           col("_metadata.file_path"), col("_metadata.row_index"), b))
@@ -830,6 +839,50 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   @transient private lazy val dvBroadcasts =
     scala.collection.concurrent.TrieMap.empty[Int,
       org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]]
+
+  /** One committed deletion vector, decoded on the driver straight
+    * from its parquet pages: data file → sorted marked positions. A
+    * vector is deleted-rows-sized and immutable, so each is read once
+    * per instance with no Spark job; a bounded memo (a miss re-reads
+    * the file). */
+  private def dvVector(dv: String): Map[String, Array[Long]] =
+    dvDecoded.getOrElse(dv, {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(s"$tablePath/$dv"), spark.sparkContext.hadoopConfiguration)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val byFile = scala.collection.mutable.HashMap
+        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+        var pages = r.readNextRowGroup()
+        while (pages != null) {
+          val rows = io.getRecordReader(pages,
+            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(schema))
+          var i = 0L
+          while (i < pages.getRowCount) {
+            val g = rows.read()
+            if (g.getFieldRepetitionCount("file") > 0 &&
+                g.getFieldRepetitionCount("pos") > 0)
+              byFile.getOrElseUpdate(g.getString("file", 0),
+                new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong("pos", 0)
+            i += 1
+          }
+          pages = r.readNextRowGroup()
+        }
+      } finally r.close()
+      val decoded = byFile.iterator.map { case (f, b) =>
+        val ps = b.result()
+        java.util.Arrays.sort(ps)
+        f -> ps
+      }.toMap
+      if (dvDecoded.size > 4096) dvDecoded.clear()
+      dvDecoded.put(dv, decoded)
+      decoded
+    })
+
+  @transient private lazy val dvDecoded =
+    scala.collection.concurrent.TrieMap.empty[String, Map[String, Array[Long]]]
 
   /** The PHYSICAL read schema of the commit's snapshot — the logical
     * fields under their in-file (mapped) names, all nullable. Handing

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate, PredicateHelper}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -53,7 +53,7 @@ class GraftFileIndex(spark: SparkSession, val table: VersionedTable,
                      // listFiles translates through this before pruning.
                      // Empty for unmapped tables.
                      private[graft] val toLogical: Map[String, String] = Map.empty)
-    extends FileIndex {
+    extends FileIndex with PredicateHelper {
   // PIN the snapshot version once: everything this index answers —
   // file list, statuses, stats pruning — must come from ONE version.
   // Re-resolving "latest" per call would let a commit landing between
@@ -124,13 +124,14 @@ class GraftFileIndex(spark: SparkSession, val table: VersionedTable,
     if (table.partitionColumnsAt(pinnedVersion).isEmpty) Map.empty
     else table.partitionTuplesInternal(Some(pinnedVersion)).getOrElse(Map.empty)
 
-  private val partFields: Seq[StructField] = {
-    val schema = table.schemaAt(Some(pinnedVersion))
+  private val logicalSchema: StructType = table.schemaAt(Some(pinnedVersion))
+  private val logicalColumns: Set[String] = logicalSchema.fieldNames.toSet
+
+  private val partFields: Seq[StructField] =
     if (partTuples.isEmpty) Nil
     else table.partitionColumnsAt(pinnedVersion)
-      .flatMap(p => schema.find(_.name == p))
+      .flatMap(p => logicalSchema.find(_.name == p))
       .map(f => StructField(f.name, f.dataType, nullable = true))
-  }
 
   override def rootPaths: Seq[Path] = Seq(new Path(path))
   override def partitionSchema: StructType = StructType(partFields)
@@ -141,14 +142,21 @@ class GraftFileIndex(spark: SparkSession, val table: VersionedTable,
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    // only conjuncts over the table's own columns reach the stats
+    // matcher: a deletion-vector overlay's row-index filter references
+    // `_metadata`, which the commit schema cannot resolve, and must not
+    // take the data conjuncts' pruning down with it
+    val prunable = dataFilters.flatMap(splitConjunctivePredicates)
+      .filter(_.references.forall(a =>
+        logicalColumns.contains(toLogical.getOrElse(a.name, a.name))))
     val keep =
-      if (dataFilters.isEmpty) snapshot
+      if (prunable.isEmpty) snapshot
       else Try {
         // resolved attrs → name references, which the stats matcher
         // resolves against the commit schema; any shape it can't
         // translate falls back to the full list (pruning is pure
         // optimization — the scan re-applies every filter)
-        val pred = dataFilters.map(e => GraftColumnBridge.column(
+        val pred = prunable.map(e => GraftColumnBridge.column(
           e.transform { case a: AttributeReference =>
             UnresolvedAttribute.quoted(toLogical.getOrElse(a.name, a.name)) }))
           .reduce(_ && _)

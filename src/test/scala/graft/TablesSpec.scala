@@ -18,19 +18,9 @@ class TablesSpec extends AnyFunSuite {
         withOverride(bad)(Tables.statePartitions(spark, 1L)))
       assert(e.getMessage.contains(Key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
-  }
-
-  test("without an override, state partitions are twice the observed key count, capped by shuffle parallelism") {
-    val shuffle = "spark.sql.shuffle.partitions"
-    val was = spark.conf.get(shuffle)
-    spark.conf.set(shuffle, "16")
-    try {
-      assert(Tables.statePartitions(spark, 0L) == 1)
-      assert(Tables.statePartitions(spark, 1L) == 2)
-      assert(Tables.statePartitions(spark, 5L) == 10)
-      assert(Tables.statePartitions(spark, 8L) == 16)
-      assert(Tables.statePartitions(spark, 9L) == 16)
-      assert(Tables.statePartitions(spark, 1000L) == 16)
-    } finally spark.conf.set(shuffle, was)
+    // no override: the observed key count, capped by shuffle parallelism
+    assert(Tables.statePartitions(spark, 2L) == 2)
+    assert(Tables.statePartitions(spark, 1000L) ==
+      spark.sessionState.conf.numShufflePartitions)
   }
 }

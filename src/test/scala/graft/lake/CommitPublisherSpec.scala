@@ -229,4 +229,36 @@ class CommitPublisherSpec extends AnyFunSuite {
     assert(fs.exists(entry), "a loser deleted the winner's fresh entry")
     assert(!fs.exists(dst))
   }
+
+  test("an entry made by the conditional put is never visible without its body") {
+    val entry = new Path(Files.createTempDirectory("graft-cput-body")
+      .resolve(".arbiter-v00000001.json").toString)
+    val fs = entry.getFileSystem(new org.apache.hadoop.conf.Configuration())
+    val pub = new ConditionalPutCommitPublisher {
+      def put(body: String): Boolean = putEntryIfAbsent(fs, entry, body)
+      def read(): Option[String] = readEntry(fs, entry)
+      def remove(): Unit = removeEntry(fs, entry)
+    }
+    val body = LogCodec.encodeArbiterEntry("tmp", "w", 42L)
+    // a reader polls the entry while a writer puts and releases it over
+    // and over: every body it sees must decode to the put time
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val torn = new java.util.concurrent.atomic.AtomicInteger(0)
+    val reader = new Thread(() => while (!stop.get) pub.read().foreach { b =>
+      seen.incrementAndGet()
+      if (LogCodec.decodeArbiterEntry(b)._2 != 42L) torn.incrementAndGet()
+    })
+    reader.start()
+    try (1 to 3000).foreach { _ => assert(pub.put(body)); pub.remove() }
+    finally { stop.set(true); reader.join() }
+    assert(seen.get > 0, "the reader never saw an entry")
+    assert(torn.get == 0, s"${torn.get} of ${seen.get} reads saw an entry without its body")
+    // exclusive: a put on a live entry loses and leaves the body intact
+    assert(pub.put(body))
+    assert(!pub.put(LogCodec.encodeArbiterEntry("other", "x", 7L)))
+    assert(pub.read().map(LogCodec.decodeArbiterEntry(_)._2).contains(42L))
+    assert(!Files.list(java.nio.file.Paths.get(entry.getParent.toUri.getPath))
+      .anyMatch(_.getFileName.toString.startsWith(".cput-")))
+  }
 }

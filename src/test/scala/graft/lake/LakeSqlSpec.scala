@@ -138,6 +138,9 @@ class LakeSqlSpec extends AnyFunSuite {
     assert(wherePlan.contains("GraftFileIndex") && wherePlan.contains("dv_not_deleted"),
       s"readWhere must scan the snapshot relation through the row-index filter:\n$wherePlan")
     assert(t.readWhere(col("id") <= 10).count() == 9)
+    // ... and still skips files by stats: the overlay's `_metadata`
+    // conjunct must not take the data filter's pruning down with it
+    assert(GraftLakeRelation.lastScanFiles.get(dir) < t.snapshotDataFiles().size)
     // the oversized-vector fallback is the anti-join — same rows
     spark.conf.set("spark.graft.lake.dvBroadcastMaxRows", "1")
     try {
@@ -146,6 +149,8 @@ class LakeSqlSpec extends AnyFunSuite {
       assert(joinPlan.toLowerCase.contains("leftanti"),
         s"oversized vectors must fall back to the anti-join:\n$joinPlan")
       assert(big.read().count() == 90)
+      assert(big.readWhere(col("id") <= 10).count() == 9)
+      assert(GraftLakeRelation.lastScanFiles.get(dir) < big.snapshotDataFiles().size)
     } finally spark.conf.unset("spark.graft.lake.dvBroadcastMaxRows")
     // a metadata-only added column stays on the fast path, null-filled
     val dir2 = scratch("graft-sql-native2") + "/t"
