@@ -12,12 +12,15 @@ import org.apache.spark.sql.functions._
   *
   * Exactly-once end to end, by composing two idempotence mechanisms
   * with the at-least-once cursor:
-  *  - Silver refresh applies upstream DELETES first (a conditional
-  *    merge keyed on the change rows — a replay finds the keys already
-  *    gone and commits nothing), then appends the cleaned INSERTS via
-  *    [[VersionedTable.commitAppendIdempotent]] tagged
-  *    (`"silver"`, consumed Bronze version) — a replayed batch no-ops
-  *    on the txn marker;
+  *  - Silver refresh applies upstream DELETES first (a deletion-vector
+  *    delete keyed on the change rows, [[VersionedTable.deleteMoR]] —
+  *    a replay finds the keys already hidden by the overlay and commits
+  *    nothing), then appends the cleaned INSERTS tagged (`"silver"`,
+  *    consumed Bronze version) in the
+  *    [[VersionedTable.commitAppendIdempotent]] ledger — a replayed
+  *    batch no-ops on the txn marker. Silver's deletes therefore reach
+  *    Gold's change feed as vector-marked rows (a read of the targeted
+  *    files), never as a file rewrite to diff;
   *  - Gold folds SIGNED algebraic partials (insert = +1, delete = −1 —
   *    count/sum form a GROUP, so DV deletes and rewrites maintain
   *    exactly, not just monoid appends) into a BUCKET-PARTITIONED state
@@ -110,11 +113,14 @@ final class Medallion(spark: SparkSession, root: String,
     *     cursor advance (a replayed delete leg must never touch the
     *     rows its own insert leg added);
     *  2. delete leg: every key that appears with a delete ANYWHERE in
-    *     the range (tombstones AND the old images of updates) goes
-    *     through a conditional-merge delete — replays find the keys
-    *     already gone and commit nothing;
+    *     the range (tombstones AND the old images of updates) is marked
+    *     in one deletion vector ([[VersionedTable.deleteMoR]] by keys,
+    *     no data file rewritten) — replays find the keys already hidden
+    *     by the overlay, mark nothing and commit nothing;
     *  3. insert leg: the netted final images append exactly-once via
-    *     the (appId="silver", batchId=consumed version) marker.
+    *     the (appId="silver", batchId=consumed version) marker; a leg
+    *     that stages no row commits nothing (no emptiness probe — the
+    *     staged footers answer it).
     */
   def refreshSilver(clean: DataFrame => DataFrame,
                     keys: Seq[String]): Option[Int] = {
@@ -127,8 +133,8 @@ final class Medallion(spark: SparkSession, root: String,
         // Which legs can the polled range possibly carry? A pure-log-
         // record decision (r20): an append-only range provably has no
         // delete rows, a pure-delete range no inserts — the skipped
-        // leg's emptiness-probe job never runs (zero cluster round
-        // trips for the common append-only sync at any scale).
+        // leg's jobs never run (zero cluster round trips for the
+        // common append-only sync's delete leg at any scale).
         val (mayIns, mayDel) = silverCursor.table.changeTypesPossible(from, head)
         val changes = changes0.cache()
         try {
@@ -138,19 +144,15 @@ final class Medallion(spark: SparkSession, root: String,
               when(col("_change_type") === "insert", 1).otherwise(0).desc)
           val finals = changes.withColumn("_g_rk", row_number().over(w))
             .filter(col("_g_rk") === 1).drop("_g_rk")
-          if (mayDel) {
-            val delKeys = clean(changes.filter(col("_change_type") === "delete")
+          if (mayDel)
+            silver.deleteMoR(clean(changes.filter(col("_change_type") === "delete")
                 .drop("_commit_version", "_change_type"))
-              .select(keys.map(col): _*).distinct()
-            if (silver.latestVersion().nonEmpty && !delKeys.isEmpty)
-              silver.mergeConditional(delKeys, keys, Seq(Merge.MatchedDelete(None)))
-          }
-          if (mayIns) {
-            val ins = clean(finals.filter(col("_change_type") === "insert")
-              .drop("_commit_version", "_change_type"))
-            if (!ins.isEmpty)
-              silver.commitAppendIdempotent(ins, "silver", head.toLong)
-          }
+              .select(keys.map(col): _*), keys)
+          if (mayIns)
+            silver.appendNonEmptyIdempotent(
+              clean(finals.filter(col("_change_type") === "insert")
+                .drop("_commit_version", "_change_type")),
+              "silver", head.toLong)
         } finally changes.unpersist()
       }
       silverCursor.advance(head)

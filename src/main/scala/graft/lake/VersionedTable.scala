@@ -893,17 +893,18 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * schema-checked against it), and files predating an evolution
     * simply null-fill the missing fields, exactly the semantics the
     * mergeSchema union produced. */
-  private def physReadSchema(c: Commit): StructType = {
-    val map = physMap(c)
+  private def physReadSchema(c: Commit): StructType =
+    physReadSchema(c.schemaDdl, physMap(c))
+
+  private def physReadSchema(schemaDdl: String, map: Map[String, String]): StructType =
     // fully NULLABLE, whatever the DDL says (the parquet relations
     // also relax nested fields): pre-evolution files lack evolved
     // columns (the reader null-fills them), and CoW rewrites
     // legitimately store nulls there — a NOT NULL read schema makes
     // the vectorized reader skip null tracking and return garbage
     // (0.0) or fail the file outright
-    StructType(StructType.fromDDL(c.schemaDdl).map(f =>
+    StructType(StructType.fromDDL(schemaDdl).map(f =>
       f.copy(name = map.getOrElse(f.name, f.name), nullable = true)))
-  }
 
   /** `df` (a physical-frame file read) projected to the snapshot's
     * LOGICAL schema: a mutation whose affected files are ALL
@@ -2240,6 +2241,17 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     else appendWithTxn(df, allowNewColumns, maxRetries, appId, batchId)
   }
 
+  /** [[commitAppendIdempotent]] for an incremental applier that must
+    * not record an empty batch: stages `df` once and commits nothing
+    * (None) when no row was staged — the staged footers answer
+    * "empty?", so the input runs once instead of once more under an
+    * `isEmpty` probe. Streaming sinks keep the public form, which
+    * records every delivered batch id, empty ones included. */
+  private[lake] def appendNonEmptyIdempotent(df: DataFrame, appId: String,
+                                             batchId: Long): Option[Int] =
+    appendWithTxn(df, allowNewColumns = false, maxRetries = 10, appId, batchId,
+      skipEmpty = true)
+
   /** Latest batch id committed under `appId` (None if the app never
     * committed). Scans the log backwards from the head, so the cost is
     * O(commits since the app's last batch) — one bounded probe at query
@@ -2267,7 +2279,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
 
   private def appendWithTxn(df: DataFrame, allowNewColumns: Boolean,
                             maxRetries: Int, txnApp: String,
-                            txnVer: Long): Option[Int] = {
+                            txnVer: Long, skipEmpty: Boolean = false): Option[Int] = {
     checkSchema(df, allowNewColumns)
     // column mapping: stage under the head's PHYSICAL names; evolution-
     // added columns allocate fresh physical ids that never collide with
@@ -2303,6 +2315,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // second evaluation of the input; on a streaming sink that was
     // re-reading each micro-batch twice).
     val rows = stagedRowCount(files)
+    if (skipEmpty && files.isEmpty) return None
     var attempt = 0
     var committed: Option[Int] = None
     var done = false
@@ -2510,8 +2523,16 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       def aligned(df: DataFrame): DataFrame =
         if (vMap.isEmpty && d.droppedPhys.isEmpty) df
         else alignToSchema(df, vSchema, colMap = vMap)
+      // files of snapshot `at` read under `rec`'s physical schema: the
+      // log supplies both the schema (no mergeSchema inference job) and
+      // the statuses (a handle that has not seen a file yet learns its
+      // meta by resolving the snapshot holding it — no status probes)
+      def logRead(names: Seq[String], rec: LogCodec.CommitRecord, at: Int): DataFrame = {
+        if (!names.forall(fileMetaIndex.contains)) resolveSnap(at)
+        readFiles(names, Some(physReadSchema(rec.schemaDdl, rec.colMap.toMap)))
+      }
       def tagged(names: Seq[String], v: Int, change: String): DataFrame =
-        aligned(readFiles(names))
+        aligned(logRead(names, d, v))
           .withColumn("_commit_version", lit(v))
           .withColumn("_change_type", lit(change))
       if (d.dvTargets.nonEmpty) {
@@ -2524,7 +2545,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         // DVs are row-disjoint), so no prior-DV subtraction is needed.
         val dvPos = readFiles(d.add.filter(isDv), Some(VersionedTable.DvSchema))
           .select(col("file").as("_g_file"), col("pos").as("_g_pos"))
-        val dels = aligned(dvOverlay(readFiles(d.dvTargets), Nil, v, withPos = true)
+        val dels = aligned(dvOverlay(logRead(d.dvTargets, d, v), Nil, v, withPos = true)
             .join(dvPos, Seq("_g_file", "_g_pos"), "left_semi")
             .drop("_g_file", "_g_pos"))
           .withColumn("_commit_version", lit(v))
@@ -2538,9 +2559,13 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // Prior MoR deletions overlay the REPLACED side: a rewrite absorbs
       // them, and without the overlay the diff would re-emit rows whose
       // deletion was already surfaced by the delete-dv commit. The
-      // vectors are snapshot v-1's, so the overlay is keyed by v-1.
-      def replaced = aligned(dvOverlay(readFiles(removed.filterNot(isDv)),
-        resolveFiles(v - 1).filter(isDv), v - 1))
+      // vectors are snapshot v-1's, so the overlay is keyed by v-1, and
+      // the replaced files are read under v-1's physical schema.
+      def replaced = {
+        val prevDvs = resolveFiles(v - 1).filter(isDv)
+        aligned(dvOverlay(logRead(removed.filterNot(isDv), readDelta(v - 1), v - 1),
+          prevDvs, v - 1))
+      }
       (added.nonEmpty, removed.nonEmpty) match {
         case (false, false) => None
         case (true, false)  => Some(tagged(added, v, "insert"))
@@ -2558,7 +2583,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           // OR deletes directly (same grouping equality — NaN/-0.0
           // normalization — and the same multiset replication).
           val oldRows = replaced
-          val newRows = aligned(readFiles(added.filterNot(isDv)))
+          val newRows = aligned(logRead(added.filterNot(isDv), d, v))
             .select(oldRows.columns.map(col): _*)
           val cols = oldRows.columns.toSeq
           val side = "_g_cdf_side"
@@ -2853,29 +2878,58 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // stats-prune the mark scan like every other mutation pre-scan
       val cand = pruneByStats(data, c.schemaDdl, condition, physMap(c), c.droppedPhys)
       if (cand.isEmpty) None
-      else {
-        val hit = coalesce(condition, lit(false))
-        val marks = scan(c, Some(cand), keep = Seq("_g_file", "_g_pos"))
-          .filter(hit)
-          .select(col("_g_file").as("file"), col("_g_pos").as("pos"))
-        // one small file per commit: the vector is deleted-rows-sized.
-        // repartition, NOT coalesce — coalesce(1) would propagate up the
-        // shuffle-free mark pipeline and run the whole corpus scan in a
-        // single task; the shuffle barrier moves only the marked rows.
-        val dvFiles = stage(marks.repartition(1), nextVersion,
-          prefix = "dv-", collectStats = false)
-        val deleted = stagedRowCount(dvFiles)
-        if (deleted == 0) {
-          dvFiles.foreach(f => fs.delete(new Path(s"$tablePath/$f"), false))
-          None
-        } else {
-          val targets = readFiles(dvFiles, Some(VersionedTable.DvSchema))
-            .select("file").distinct()
-            .collect().map(_.getString(0)).toSeq.sorted
-          Some(commitDv(c, dvFiles, targets, -deleted, maxRetries = maxRetries))
-        }
-      }
+      else commitMarks(c, scan(c, Some(cand), keep = DvPos)
+        .filter(coalesce(condition, lit(false))), maxRetries)
     }
+
+  /** DELETE by keys, merge-on-read: every live row whose `keyCols`
+    * tuple appears in `keys` is marked in a deletion vector (a left
+    * semi-join of the snapshot scan against the keys — null keys match
+    * nothing, as in an equi-join) and no data file is rewritten — the
+    * keyed sibling of the predicate form, for tombstone batches too
+    * large or too dynamic for an `isin` list. Rows already hidden by
+    * the overlay are not live, so a replayed delete marks nothing and
+    * commits nothing (None). Conflict rules are [[commitDv]]'s. */
+  def deleteMoR(keys: DataFrame, keyCols: Seq[String]): Option[Int] =
+    latestVersion().flatMap { v0 =>
+      val c = readCommit(v0)
+      if (splitDv(c.files)._2.isEmpty) None
+      else commitMarks(c, scan(c, keep = DvPos)
+        .join(keys.select(keyCols.map(col): _*), keyCols, "left_semi"),
+        maxRetries = 10)
+    }
+
+  /** The overlay's position columns a mark scan keeps. */
+  private val DvPos = Seq("_g_file", "_g_pos")
+
+  /** The shared tail of both [[deleteMoR]] forms: stage the marked rows'
+    * positions and commit them as a `delete-dv`. */
+  private def commitMarks(c: Commit, marked: DataFrame, maxRetries: Int): Option[Int] =
+    stageDv(marked).map { case (dvFiles, deleted) =>
+      commitDv(c, dvFiles, dvTargets(dvFiles), -deleted, maxRetries = maxRetries)
+    }
+
+  /** The data files a staged vector marks rows in, sorted — from the
+    * driver-side decode [[dvVector]] (memoized, so the overlay's next
+    * broadcast map reuses it), not a Spark job over the vector file. */
+  private def dvTargets(dvFiles: Seq[String]): Seq[String] =
+    dvFiles.flatMap(dvVector(_).keys).distinct.sorted
+
+  /** Stage the (file, pos) of `marked` rows — a [[scan]] keeping
+    * [[DvPos]] — as one deletion-vector file: (vector files, marked
+    * rows), or None when no row is marked (staging drops zero-row part
+    * files, so nothing is left behind). One small file per commit: the
+    * vector is marked-rows-sized. repartition, NOT coalesce —
+    * coalesce(1) would propagate up the shuffle-free mark pipeline and
+    * run the whole mark scan in a single task; the shuffle barrier moves
+    * only the marked rows. */
+  private def stageDv(marked: DataFrame): Option[(Seq[String], Long)] = {
+    val dvFiles = stage(
+      marked.select(col("_g_file").as("file"), col("_g_pos").as("pos"))
+        .repartition(1),
+      nextVersion, prefix = "dv-", collectStats = false)
+    if (dvFiles.isEmpty) None else Some((dvFiles, stagedRowCount(dvFiles)))
+  }
 
   /** UPDATE SET WHERE, merge-on-read (Delta's DV-backed update): ONE
     * commit marks the matching live rows in a deletion vector AND adds
@@ -2901,35 +2955,22 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       val cand = pruneByStats(data, c.schemaDdl, condition, physMap(c), c.droppedPhys)
       if (cand.isEmpty) None
       else {
-        val hit = coalesce(condition, lit(false))
         // aligned: pre-evolution candidate files must filter on, and
         // produce new images carrying, the full snapshot schema
-        val marked = scan(c, Some(cand), keep = Seq("_g_file", "_g_pos"))
-          .filter(hit)
-        // repartition, not coalesce: keep the mark scan parallel (see
-        // deleteMoR) — only the marked rows cross the shuffle
-        val dvFiles = stage(
-          marked.select(col("_g_file").as("file"), col("_g_pos").as("pos"))
-            .repartition(1),
-          nextVersion, prefix = "dv-", collectStats = false)
-        val updated = stagedRowCount(dvFiles)
-        if (updated == 0) {
-          dvFiles.foreach(f => fs.delete(new Path(s"$tablePath/$f"), false))
-          None
-        } else {
-          // every marked row satisfied `hit`, so assignments apply flatly
-          val newImages = marked.drop("_g_file", "_g_pos").select(cols.map { n =>
+        val marked = scan(c, Some(cand), keep = DvPos)
+          .filter(coalesce(condition, lit(false)))
+        stageDv(marked).map { case (dvFiles, _) =>
+          // every marked row satisfied the condition, so assignments
+          // apply flatly
+          val newImages = marked.drop(DvPos: _*).select(cols.map { n =>
             assignments.get(n).map(_.as(n)).getOrElse(col(n))
           }: _*)
           checkConstraints(newImages, c.constraints)
           val newFiles = stage(
             toPhysical(newImages, StructType.fromDDL(c.schemaDdl), physMap(c)),
             nextVersion, pcols = c.pcols)
-          val targets = readFiles(dvFiles, Some(VersionedTable.DvSchema))
-            .select("file").distinct()
-            .collect().map(_.getString(0)).toSeq.sorted
-          Some(commitDv(c, dvFiles, targets, 0L, action = "update-dv",
-            extraFiles = newFiles, maxRetries = maxRetries))
+          commitDv(c, dvFiles, dvTargets(dvFiles), 0L, action = "update-dv",
+            extraFiles = newFiles, maxRetries = maxRetries)
         }
       }
     }
@@ -3352,10 +3393,10 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val missing = files.filter(statRows(_).isEmpty)
     val counted = files.flatMap(statRows).sum +
       (if (missing.isEmpty) 0L else readFiles(missing).count())
-    val marks =
-      if (dvs.isEmpty) 0L
-      else readFiles(dvs, Some(VersionedTable.DvSchema))
-        .filter(col("file").isin(files: _*)).count()
+    // marked positions from the driver-side vector decode, not a job
+    val fileSet = files.toSet
+    val marks = dvs.iterator.flatMap(dvVector)
+      .collect { case (f, ps) if fileSet(f) => ps.length.toLong }.sum
     counted - marks
   }
 

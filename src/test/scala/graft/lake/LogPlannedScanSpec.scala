@@ -19,6 +19,10 @@ class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     CountingLocalFs.listed.add(f.toUri.getPath)
     super.listStatus(f)
   }
+  override def getFileStatus(f: Path): FileStatus = {
+    CountingLocalFs.probed.add(f.toUri.getPath)
+    super.getFileStatus(f)
+  }
   override def open(f: Path, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream = {
     CountingLocalFs.opened.add(f.toUri.getPath)
@@ -29,7 +33,8 @@ class CountingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 object CountingLocalFs {
   val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def reset(): Unit = { listed.clear(); opened.clear() }
+  val probed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { listed.clear(); opened.clear(); probed.clear() }
   def listingsOf(pathSuffix: String): Int = {
     val it = listed.iterator()
     var n = 0
@@ -206,6 +211,74 @@ class LogPlannedScanSpec extends AnyFunSuite {
       val opens = CountingLocalFs.opened.toArray.count(_.toString.endsWith("/" + name))
       assert(opens == 1, s"$name opened $opens times")
     }
+  }
+
+  /** (result, Spark jobs started while `body` ran): a listener counts
+    * job starts, with the async listener bus drained on both sides. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graft.ListenerDrain.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.graft.ListenerDrain.drain(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("planning a change feed runs no Spark job and probes no data file: append, MoR delete, CoW rewrite") {
+    val path = countingPath()
+    val t = VersionedTable(spark, path)
+    t.commitOverwrite((1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"))   // v0
+    t.commitAppend((21L to 30L).map(i => (i, s"v$i")).toDF("id", "v"))   // v1
+    assert(t.deleteMoR(col("id") <= 3L).contains(2))                      // v2
+    assert(t.delete(col("id") === 25L).contains(3))                       // v3
+    // a cold handle: the range's records are all it has read
+    val cold = VersionedTable(spark, path)
+    CountingLocalFs.reset()
+    val (feed, jobs) = jobsDuring(cold.changesBetween(0, 3))
+    // status probes and listings of data files while planning (the
+    // deletion vectors themselves are decoded on the driver by design)
+    val probes = (CountingLocalFs.probed.toArray ++ CountingLocalFs.listed.toArray)
+      .map(_.toString).filter(p => p.endsWith(".parquet") && !p.contains("/dv-"))
+    assert(jobs == 0, s"building the change feed ran $jobs Spark job(s)")
+    assert(probes.isEmpty, s"data files probed while planning: ${probes.toSeq}")
+    val rows = feed.select("id", "_change_type").as[(Long, String)].collect().sorted.toSeq
+    assert(rows == ((21L to 30L).map(i => (i, "insert")) ++
+      Seq((1L, "delete"), (2L, "delete"), (3L, "delete"), (25L, "delete"))).sorted)
+  }
+
+  test("a change feed across addColumn and renameColumn reads old files under each commit's schema") {
+    val dir = Files.createTempDirectory("graft-logplan-evolve").toString + "/t"
+    val t = VersionedTable(spark, dir)
+    t.commitOverwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))          // v0
+    t.addColumn("x", org.apache.spark.sql.types.IntegerType)             // v1
+    t.commitAppend(Seq((3L, "c", 7)).toDF("id", "v", "x"))               // v2
+    t.renameColumn("v", "w")                                             // v3
+    t.commitAppend(Seq((4L, "d", 8)).toDF("id", "w", "x"))               // v4
+    assert(t.deleteMoR(col("id") === 1L).contains(5))                    // v5: pre-change file
+    assert(t.update(col("id") === 2L, Map("x" -> lit(5))).contains(6))   // v6: CoW rewrite of it
+    val cold = VersionedTable(spark, dir)
+    val (feed, jobs) = jobsDuring(cold.changesBetween(-1, 6))
+    assert(jobs == 0, s"building the change feed ran $jobs Spark job(s)")
+    def at(v: Int, cols: String*): Seq[Seq[Any]] =
+      feed.filter(col("_commit_version") === v)
+        .select((cols :+ "_change_type").map(col): _*)
+        .collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(at(0, "id", "v") == Seq(Seq(1L, "a", "insert"), Seq(2L, "b", "insert")))
+    assert(at(2, "id", "v", "x") == Seq(Seq(3L, "c", 7, "insert")))
+    assert(at(4, "id", "w", "x") == Seq(Seq(4L, "d", 8, "insert")))
+    // rows of files written before both changes: the added column reads
+    // null, the renamed one under its new name
+    assert(at(5, "id", "w", "x") == Seq(Seq(1L, "a", null, "delete")))
+    assert(at(6, "id", "w", "x").toSet ==
+      Set(Seq(2L, "b", null, "delete"), Seq(2L, "b", 5, "insert")))
   }
 
   test("verifyListing integrity mode catches a missing snapshot file at plan time") {

@@ -261,6 +261,49 @@ class MedallionSpec extends AnyFunSuite {
     assert(m.silver.read().select("value").as[Double].head() == 9.0)
   }
 
+  test("Bronze deletes land on Silver as one deletion vector; Silver's data files stay") {
+    val m = new Medallion(spark, scratch("graft-med"))
+    m.ingest(raw((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0))); refreshAll(m)
+    val silverFiles = m.silver.snapshotDataFiles()
+    assert(m.bronze.deleteMoR(col("event_id") === 2L).nonEmpty)
+    m.ingest(raw((4L, "b", 4.0)))
+    refreshAll(m)
+    assert(m.silver.history().map(_._2) == Seq("append", "delete-dv", "append"))
+    assert(silverFiles.toSet.subsetOf(m.silver.snapshotDataFiles().toSet))
+    assert(m.silver.read().select("event_id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 3L, 4L))
+    // Gold folds the vector-marked Silver rows as deletes
+    assert(goldMap(m) == Map("a" -> ((1L, 1.0)), "b" -> ((2L, 7.0))))
+  }
+
+  test("a crash between the delete leg and the insert leg: the replay's delete leg commits nothing, the insert leg lands once") {
+    val m = new Medallion(spark, scratch("graft-med"))
+    m.ingest(raw((1L, "a", 1.0), (2L, "b", 2.0))); refreshAll(m)
+    m.bronze.update(col("event_id") === 1L, Map("value" -> lit(5.0)))
+    // `clean` runs once per leg, delete leg first: failing its second
+    // call crashes the refresh after the delete leg has committed
+    var calls = 0
+    val crashing: DataFrame => DataFrame = { df =>
+      calls += 1
+      if (calls == 2) throw new IllegalStateException("crash before the insert leg")
+      clean(df)
+    }
+    intercept[IllegalStateException](m.refreshSilver(crashing, Seq("event_id")))
+    assert(m.silver.history().map(_._2) == Seq("append", "delete-dv"))
+    assert(m.silverCursor.lastProcessed() == 0)
+    assert(m.silver.read().select("event_id").as[Long].collect().toSeq == Seq(2L))
+    // the replay re-polls the same range: key 1 is already hidden
+    assert(m.refreshSilver(clean, Seq("event_id")).contains(1))
+    assert(m.silver.history().map(_._2) == Seq("append", "delete-dv", "append"))
+    assert(m.silver.historyDF().filter(col("txn_app") === "silver")
+      .select("txn_batch").as[Long].collect().toSeq == Seq(0L, 1L))
+    assert(m.silver.read().select("event_id", "value").as[(Long, Double)]
+      .collect().sorted.toSeq == Seq((1L, 5.0), (2L, 2.0)))
+    assert(m.refreshSilver(clean, Seq("event_id")).isEmpty)
+    m.refreshGold(col("etype"), lit("all"), col("value"))
+    assert(goldMap(m) == Map("a" -> ((1L, 5.0)), "b" -> ((1L, 2.0))))
+  }
+
   test("a malformed cursor file fails loudly instead of silently replaying the whole feed") {
     val dir = scratch("graft-cfr")
     val t = VersionedTable(spark, s"$dir/t")

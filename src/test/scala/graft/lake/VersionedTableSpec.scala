@@ -843,6 +843,28 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.read(Some(1)).select("id").as[Long].collect().sorted.toSeq == (2L to 6L))
   }
 
+  dvTest("MoR delete by keys: marks the live rows whose keys appear, rewrites nothing, replays as a no-op") {
+    val t = freshTable()
+    t.commitOverwrite((1L to 8L).map(i => (i, i % 2, s"r$i")).toDF("id", "g", "v")
+      .coalesce(2))                                                                   // v0
+    val filesV0 = t.readCommit(0).files
+    // duplicate, unmatched and null key tuples: only (3,1) and (4,0) match
+    val keys = Seq[(Option[Long], Option[Long])]((Some(3L), Some(1L)), (Some(3L), Some(1L)),
+      (Some(4L), Some(0L)), (Some(5L), Some(0L)), (None, Some(1L))).toDF("id", "g")
+    assert(t.deleteMoR(keys, Seq("id", "g")).contains(1))
+    val filesV1 = t.readCommit(1).files
+    assert(filesV1.filterNot(_.startsWith("dv-")).toSet == filesV0.toSet)
+    assert(t.readCommit(1).dvTargets.toSet.subsetOf(filesV0.toSet))
+    assert(t.history().last._2 == "delete-dv" && t.history().last._3 == 6L)
+    assert(t.read().select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 5L, 6L, 7L, 8L))
+    // the same keys again: already hidden by the overlay — nothing marked
+    assert(t.deleteMoR(keys, Seq("id", "g")).isEmpty)
+    assert(t.versions() == Seq(0, 1))
+    assert(t.changesBetween(0, 1).select("id", "_change_type").as[(Long, String)]
+      .collect().sorted.toSeq == Seq((3L, "delete"), (4L, "delete")))
+  }
+
   test("8-way append contention: every writer lands exactly once through multi-round rebases") {
     // The 2-writer race proves ONE rebase; 8 simultaneous writers prove
     // the retry LOOP — a loser can lose the re-attempt again (up to 7
