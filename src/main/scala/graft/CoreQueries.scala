@@ -217,8 +217,9 @@ object CoreQueries {
     // Full MERGE semantics (Delta when_matched_update_all +
     // when_not_matched_insert_all) as a pure query: matched target rows
     // replaced by their source version, unmatched targets survive,
-    // unmatched sources insert. [[lake.VersionedTable.merge]] runs this
-    // same relational core on the affected-file slice (copy-on-write).
+    // unmatched sources insert. [[lake.VersionedTable.merge]] gives the
+    // same result through the lake's one merge, `mergeConditional`
+    // (one join of the affected-file slice with the source).
     q("q_merge_upsert",
       """WITH target AS (SELECT o_orderkey, o_totalprice FROM orders
         |  WHERE o_orderkey % 3 = 0),

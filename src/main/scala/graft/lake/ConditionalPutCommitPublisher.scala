@@ -16,7 +16,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     concurrent writer's put succeeds — this is the commit's
   *     linearization point. A put that succeeds only because an
   *     earlier winner already published and released the entry sees
-  *     `dst` on a second probe and loses;
+  *     `dst` on a second probe and loses — unless `dst` holds its own
+  *     bytes: a put loser may complete the winner's commit from the
+  *     winner's tmp (step 4) before the winner re-probes, and that
+  *     commit is the winner's;
   *  3. the put winner copies its tmp to `dst` (plain write: the
   *     arbiter entry already made it the only legitimate writer of
   *     `dst`), removes the entry, wins;
@@ -86,14 +89,7 @@ class ConditionalPutCommitPublisher extends VersionedTable.CommitPublisher {
     * writes identical bytes. */
   private def copy(fs: FileSystem, from: Path, to: Path): Boolean =
     try {
-      val in = fs.open(from)
-      val buf = try {
-        val out = new java.io.ByteArrayOutputStream()
-        val b = new Array[Byte](64 * 1024)
-        var n = in.read(b)
-        while (n >= 0) { out.write(b, 0, n); n = in.read(b) }
-        out.toByteArray
-      } finally in.close()
+      val buf = bytes(fs, from)
       val side = new Path(to.getParent,
         s".cput-${to.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
       val out = fs.create(side, true)
@@ -101,6 +97,11 @@ class ConditionalPutCommitPublisher extends VersionedTable.CommitPublisher {
       if (fs.rename(side, to)) true
       else { fs.delete(side, false); false }
     } catch { case _: Throwable => false }
+
+  private def bytes(fs: FileSystem, p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
+  }
 
   override def publishIfAbsent(fs: FileSystem, tmp: Path, dst: Path): Boolean = {
     if (fs.exists(dst)) return false
@@ -111,8 +112,15 @@ class ConditionalPutCommitPublisher extends VersionedTable.CommitPublisher {
     if (putEntryIfAbsent(fs, entry, body)) {
       // An earlier winner may have published `dst` and released its
       // entry between our exists probe and our put: entries are only
-      // released once `dst` exists, so re-probing here decides it.
-      if (fs.exists(dst)) { removeEntry(fs, entry); return false }
+      // released once `dst` exists, so re-probing here decides it —
+      // by content, since a put loser may already have completed OUR
+      // commit from our tmp (then `dst` holds our bytes and we won).
+      if (fs.exists(dst)) {
+        removeEntry(fs, entry)
+        val ours = java.util.Arrays.equals(bytes(fs, dst), bytes(fs, tmp))
+        if (ours) fs.delete(tmp, false)
+        return ours
+      }
       // we are the arbitrated winner: publish OUR content
       if (!copy(fs, tmp, dst)) {
         // leave the entry: any later writer completes from our tmp

@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions.{col, lit, when}
 
 /** S10: the reference's insert-only MERGE (`guardar_nueva_data`,
@@ -10,10 +11,12 @@ import org.apache.spark.sql.functions.{col, lit, when}
   *
   * Without Delta jars the identical observable semantics are a LEFT ANTI
   * join (existence test) followed by an append, under a single-writer
-  * assumption (the reference is single-writer too). For the delta-rs
-  * features beyond that — versioned commits, conflict detection, time
-  * travel — see [[VersionedTable.insertOnlyMerge]], which runs this same
-  * anti-join core through the transaction log.
+  * assumption (the reference is single-writer too). [[insertCandidates]]
+  * and [[upsert]] are those relational cores as pure queries (the oracle
+  * queries `q_merge_insert_only` / `q_merge_upsert` and the plain-parquet
+  * [[insertOnlyMerge]] run them). The versioned table has ONE merge,
+  * [[VersionedTable.mergeConditional]], over the clause grammar below:
+  * its `merge` and `insertOnlyMerge` are clause lists on it.
   *
   * Scale notes: the anti join shuffles both sides on the merge key unless
   * the *target key set* is small enough to broadcast. For an append-mostly
@@ -41,8 +44,7 @@ object Merge {
     * unmatched target rows survive, unmatched source rows insert —
     * i.e. `target ▷ source ∪ source`. The anti join carries the full
     * target row (it must survive), so unlike [[insertCandidates]] only
-    * the SOURCE side prunes to keys. [[VersionedTable.merge]] runs this
-    * on the affected-file slice only (copy-on-write).
+    * the SOURCE side prunes to keys.
     */
   def upsert(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
     val srcKeys = source.select(keys.map(source.col): _*).distinct()
@@ -103,83 +105,98 @@ object Merge {
   final case class NotMatchedBySourceUpdate(condition: Option[Column],
                                             set: Map[String, Column]) extends MergeClause
 
-  /** Index of the first clause whose condition holds, -1 when none does
-    * — first-match-wins, built right-to-left so clause 0 tests first. */
-  private def firstMatch(clauses: Seq[MergeClause]): Column =
-    clauses.zipWithIndex.foldRight(lit(-1)) { case ((cl, i), acc) =>
-      when(cl.condition.getOrElse(lit(true)), lit(i)).otherwise(acc)
+  def isMatched(cl: MergeClause): Boolean = cl match {
+    case _: MatchedUpdate | _: MatchedDelete => true
+    case _                                   => false
+  }
+  def isBySource(cl: MergeClause): Boolean = cl match {
+    case _: NotMatchedBySourceDelete | _: NotMatchedBySourceUpdate => true
+    case _                                                         => false
+  }
+  def isInsert(cl: MergeClause): Boolean = cl.isInstanceOf[NotMatchedInsert]
+
+  /** `c` with every name reference not already qualified by `side`
+    * qualified by it: a one-sided clause's plain names resolve in the
+    * joined frame, where a name both sides carry would be ambiguous. */
+  private def onSide(c: Column, side: String): Column =
+    GraftColumnBridge.column(GraftColumnBridge.expression(c).transform {
+      case a: UnresolvedAttribute if a.nameParts.head != side =>
+        UnresolvedAttribute(side +: a.nameParts)
+    })
+
+  /** A clause's condition, resolvable in the joined frame. */
+  private def condOf(cl: MergeClause): Column = {
+    val c = cl.condition.getOrElse(lit(true))
+    if (isBySource(cl)) onSide(c, "t") else if (isInsert(cl)) onSide(c, "s") else c
+  }
+
+  /** Index of the first clause of `clauses` whose condition holds, -1
+    * when none does — built right-to-left so the first tests first. */
+  private def firstMatch(clauses: Seq[(MergeClause, Int)]): Column =
+    clauses.foldRight(lit(-1)) { case ((cl, i), acc) =>
+      when(condOf(cl), lit(i)).otherwise(acc)
     }
 
-  /** Resolve the matched half of a conditional merge over one
-    * target-slice ⋈ source join: rows claimed by a delete clause drop,
-    * update clauses produce their new image, unclaimed rows carry
-    * through. `columns` is the target schema's column order. Pure —
+  /** The rewrite of a conditional merge as ONE join of the affected
+    * target `slice` with the `source`, plus a per-row clause pick:
+    *  - a slice row with a source partner takes the first matched
+    *    clause that holds (update image, delete, or carried through);
+    *  - a slice row without one takes the first by-source clause;
+    *  - with `withInserts` (a FULL outer join) a source row without a
+    *    slice partner takes the first insert clause, or drops. That is
+    *    only sound when the slice holds every live key the source
+    *    carries — the matched-file probe guarantees it — so source rows
+    *    unmatched here are unmatched by the whole table.
+    * Without matched clauses the join sees only the distinct source
+    * keys: a key sent twice must not duplicate the target row it
+    * matches. `columns` is the target schema's column order. Pure —
     * [[VersionedTable.mergeConditional]] drives it under the commit
-    * protocol; MergeClauseSpec pins the semantics standalone. */
-  def applyMatched(targetSlice: DataFrame, source: DataFrame, keys: Seq[String],
-                   clauses: Seq[MergeClause], columns: Seq[String]): DataFrame = {
-    require(clauses.forall(c => c.isInstanceOf[MatchedUpdate] ||
-      c.isInstanceOf[MatchedDelete]), "applyMatched takes matched clauses only")
-    val joined = targetSlice.as("t").join(source.as("s"),
-      keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _), "inner")
-      .withColumn("_g_act", firstMatch(clauses))
-    val deleteIdxs = clauses.zipWithIndex.collect {
-      case (_: MatchedDelete, i) => i }
-    val kept = if (deleteIdxs.isEmpty) joined
-      else joined.filter(!col("_g_act").isin(deleteIdxs: _*))
+    * protocol; MergeClauseSpec pins the semantics. */
+  def rewrite(slice: DataFrame, source: DataFrame, keys: Seq[String],
+              clauses: Seq[MergeClause], columns: Seq[String],
+              withInserts: Boolean): DataFrame = {
+    val indexed =
+      (if (withInserts) clauses else clauses.filterNot(isInsert)).zipWithIndex
+    val src =
+      if (clauses.exists(isMatched)) source
+      else source.select(keys.map(source.col): _*).distinct()
+    val joined = slice.withColumn("_g_t", lit(true)).as("t")
+      .join(src.withColumn("_g_s", lit(true)).as("s"),
+        keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
+        if (withInserts) "full_outer" else "left_outer")
+    val inT = col("t._g_t").isNotNull
+    val act = when(inT && col("s._g_s").isNotNull,
+        firstMatch(indexed.filter(x => isMatched(x._1))))
+      .when(inT, firstMatch(indexed.filter(x => isBySource(x._1))))
+      .otherwise(firstMatch(indexed.filter(x => isInsert(x._1))))
+    val deletes = indexed.collect {
+      case (_: MatchedDelete | _: NotMatchedBySourceDelete, i) => i }
+    // a delete claim drops the row; so does a source row no insert claims
+    val keep = (inT || col("_g_act") >= 0) &&
+      (if (deletes.isEmpty) lit(true) else !col("_g_act").isin(deletes: _*))
     val out = columns.map { n =>
-      clauses.zipWithIndex.foldRight(col(s"t.$n")) { case ((cl, i), acc) =>
-        cl match {
-          case MatchedUpdate(_, None) =>
-            when(col("_g_act") === i, col(s"s.$n")).otherwise(acc)
-          case MatchedUpdate(_, Some(set)) =>
-            when(col("_g_act") === i,
-              set.getOrElse(n, col(s"t.$n"))).otherwise(acc)
-          case _ => acc // delete rows already filtered
+      indexed.foldRight(col(s"t.$n")) { case ((cl, i), acc) =>
+        val image = cl match {
+          case MatchedUpdate(_, None)           => Some(col(s"s.$n"))
+          case MatchedUpdate(_, Some(set))      => set.get(n)
+          case NotMatchedBySourceUpdate(_, set) => set.get(n).map(onSide(_, "t"))
+          case _: NotMatchedInsert              => Some(col(s"s.$n"))
+          case _                                => None
         }
+        image.fold(acc)(when(col("_g_act") === i, _).otherwise(acc))
       }.as(n)
     }
-    kept.select(out: _*)
+    joined.withColumn("_g_act", act).filter(keep).select(out: _*)
   }
 
-  /** Resolve the not-matched-by-source half over the unmatched target
-    * rows (aliased `t`): by-source deletes drop, by-source updates
-    * assign, unclaimed rows carry through. */
-  def applyBySource(unmatched: DataFrame, clauses: Seq[MergeClause],
-                    columns: Seq[String]): DataFrame = {
-    require(clauses.forall(c => c.isInstanceOf[NotMatchedBySourceDelete] ||
-      c.isInstanceOf[NotMatchedBySourceUpdate]),
-      "applyBySource takes by-source clauses only")
-    if (clauses.isEmpty) return unmatched.select(columns.map(col): _*)
-    val acted = unmatched.as("t").withColumn("_g_act", firstMatch(clauses))
-    val deleteIdxs = clauses.zipWithIndex.collect {
-      case (_: NotMatchedBySourceDelete, i) => i }
-    val kept = if (deleteIdxs.isEmpty) acted
-      else acted.filter(!col("_g_act").isin(deleteIdxs: _*))
-    val out = columns.map { n =>
-      clauses.zipWithIndex.foldRight(col(s"t.$n")) { case ((cl, i), acc) =>
-        cl match {
-          case NotMatchedBySourceUpdate(_, set) =>
-            when(col("_g_act") === i,
-              set.getOrElse(n, col(s"t.$n"))).otherwise(acc)
-          case _ => acc
-        }
-      }.as(n)
-    }
-    kept.select(out: _*)
-  }
-
-  /** Source rows a NOT MATCHED insert clause claims (aliased `s`),
-    * projected to the target column order. `targetKeys` must be the
-    * FULL snapshot's key set — a source row matching a key in an
-    * unaffected file must not insert. */
-  def applyInserts(source: DataFrame, targetKeys: DataFrame, keys: Seq[String],
-                   clauses: Seq[MergeClause], columns: Seq[String]): DataFrame = {
-    require(clauses.forall(_.isInstanceOf[NotMatchedInsert]),
-      "applyInserts takes not-matched insert clauses only")
-    val unmatched = source.join(targetKeys, keys, "left_anti").as("s")
-    if (clauses.isEmpty) unmatched.select(columns.map(col): _*).limit(0)
-    else unmatched.withColumn("_g_act", firstMatch(clauses))
+  /** Source rows an insert clause claims (aliased `s`), projected to
+    * `columns`. The rows must already be unmatched by the whole target:
+    * the caller's probe or full-key anti-join decided that. */
+  def inserts(unmatched: DataFrame, clauses: Seq[MergeClause],
+              columns: Seq[String]): DataFrame = {
+    require(clauses.forall(isInsert), "inserts takes insert clauses only")
+    unmatched.as("s")
+      .withColumn("_g_act", firstMatch(clauses.zipWithIndex))
       .filter(col("_g_act") >= 0)
       .select(columns.map(col): _*)
   }

@@ -127,8 +127,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * so the memo never goes stale; it makes the commit protocol's
     * repeated metadata lookups and a poll's range walks (e.g.
     * [[changeTypesPossible]] then [[changesBetween]]) one file read per
-    * record. Capped like `stagedMeta`: cleared when it outgrows
-    * `DeltaMemoCap`. */
+    * record. Capped: cleared when it outgrows `DeltaMemoCap`. */
   private val deltaMemo =
     scala.collection.concurrent.TrieMap[Int, LogCodec.CommitRecord]()
   private val DeltaMemoCap = 1024
@@ -572,7 +571,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // O(table). Unknown rows (-1) stay unknown; unknown size only if
     // even the probe failed.
     val addMeta: Map[String, VersionedTable.FileMeta] = add.map { n =>
-      n -> stagedMeta.getOrElse(n, metaHint.getOrElse(n, {
+      n -> metaHint.getOrElse(n, fileMetaIndex.getOrElse(n, {
         val sz = try fs.getFileStatus(new Path(tablePath, n)).getLen
                  catch { case _: Throwable => -1L }
         VersionedTable.FileMeta(sz, -1L)
@@ -651,9 +650,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // they carry no data but would ride the snapshot forever, and with
     // no min/max stats to prune on, every stats-scoped read and rewrite
     // keeps them conservatively. The footer pass that decides this also
-    // MEMOIZES each survivor's row count, so [[stagedRowCount]] right
-    // after the commit doesn't re-open the same footers
-    // the staging listing already knows each part's byte length —
+    // records each survivor's row count in [[fileMetaIndex]], so
+    // [[fileRows]] right after the commit doesn't re-open the same
+    // footers; the staging listing already knows each part's byte length —
     // captured here so the commit record's add action carries
     // size+rows with ZERO extra filesystem calls (rename preserves
     // length; the .crc sidecars and _SUCCESS are filtered out)
@@ -689,19 +688,11 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         finally r.close()
       }.seq
     }
-    // the memo is consumed by stagedRowCount, but not every staging
-    // path asks (rewrite commits derive rows from the commit metadata)
-    // — cap it so orphaned entries can't accumulate on a long-lived
-    // instance (it's an optimization only; a miss re-opens the footer)
-    if (stagedCounts.size > 8192) stagedCounts.clear()
-    if (stagedMeta.size > 8192) stagedMeta.clear()
     val namedWithFooter = counted.filter(_._3 > 0).zipWithIndex.map {
       case ((p, len, cnt, footer), i) =>
         val name = f"${prefix}v$v%08d-$nonce-part-$i%05d.parquet"
         if (!fs.rename(p, new Path(tablePath, name)))
           sys.error(s"failed to move staged file $p")
-        stagedCounts.put(name, cnt)
-        stagedMeta.put(name, VersionedTable.FileMeta(len, cnt))
         fileMetaIndex.put(name, VersionedTable.FileMeta(len, cnt))
         name -> footer
     }
@@ -714,17 +705,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     }
     named.toSeq
   }
-
-  /** Row counts of files this instance staged, consumed (removed) by
-    * the first [[stagedRowCount]] that asks — a bounded memo, never a
-    * correctness dependency (misses fall back to the footer). */
-  private val stagedCounts = scala.collection.concurrent.TrieMap[String, Long]()
-
-  /** (size, rows) of files this instance staged — NOT consumed (a
-    * rebase retry re-reads the same names), read by [[writeCommit]] to
-    * record the add action's file meta; a miss pays one status probe. */
-  private val stagedMeta =
-    scala.collection.concurrent.TrieMap[String, VersionedTable.FileMeta]()
 
   // ---- deletion vectors (merge-on-read deletes) ------------------------
   //
@@ -766,7 +746,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       case None => org.apache.spark.sql.graft.GraftFileIndex.frame(spark,
         org.apache.spark.sql.graft.GraftFileIndex.nativeRelationAt(
           spark, this, tablePath, c.version))
-      case Some(names) => readFiles(names, Some(physReadSchema(c)))
+      case Some(names) => readFiles(names, physReadSchema(c))
     }
     alignToSchema(dvOverlay(base, splitDv(c.files)._1, c.version,
         withPos = keep.nonEmpty),
@@ -797,11 +777,11 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       .map(_.trim.toLong).getOrElse(4000000L)
     val logged = dvs.flatMap(f =>
       fileMetaIndex.get(f).filter(_.rows >= 0).map(f -> _.rows)).toMap
-    def marked = logged.values.sum + stagedRowCount(dvs.filterNot(logged.contains))
+    def marked = logged.values.sum + fileRows(dvs.filterNot(logged.contains))
     if (dvs.nonEmpty && marked > cap) {
       // oversized vectors: the distributed anti-join (same semantics,
       // join-shaped cost; the DV side is deleted-rows-sized)
-      val dv = readFiles(dvs, Some(VersionedTable.DvSchema))
+      val dv = readFiles(dvs, VersionedTable.DvSchema)
         .select(col("file").as("_g_file"), col("pos").as("_g_pos"))
       val live = positioned(base).join(dv, Seq("_g_file", "_g_pos"), "left_anti")
       if (withPos) live else live.drop("_g_file", "_g_pos")
@@ -1899,7 +1879,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val files = stage(df, v, pcols = pcols)
     // footer-exact row count — no second evaluation of the input
     writeCommit(Commit(v, "overwrite", files, df.schema.toDDL,
-      stagedRowCount(files), System.currentTimeMillis(),
+      fileRows(files), System.currentTimeMillis(),
       txnApp = txnApp, txnVer = txnVer,
       constraints = prevCons, pcols = pcols, props = props))
     v
@@ -2314,7 +2294,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // and spares EVERY append the separate df.count() action (a full
     // second evaluation of the input; on a streaming sink that was
     // re-reading each micro-batch twice).
-    val rows = stagedRowCount(files)
+    val rows = fileRows(files)
     if (skipEmpty && files.isEmpty) return None
     var attempt = 0
     var committed: Option[Int] = None
@@ -2381,16 +2361,17 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     committed
   }
 
-  /** Exact row count of staged files from their parquet footers —
-    * O(files) metadata reads, zero data scanned. Footers open in
-    * parallel: on an object store each open is a remote round-trip, and
-    * a many-file append paying them serially on the driver would undo
-    * the win over the old distributed `df.count()` this replaced. */
-  private def stagedRowCount(files: Seq[String]): Long = {
+  /** Exact row count of `files`: the per-file meta staging and the log
+    * recorded ([[fileMetaIndex]]), else the parquet footers — O(files)
+    * metadata reads, zero data scanned. Footers open in parallel: on an
+    * object store each open is a remote round-trip, and a many-file
+    * append paying them serially on the driver would undo the win over
+    * the old distributed `df.count()` this replaced. */
+  private def fileRows(files: Seq[String]): Long = {
     import scala.collection.parallel.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     files.par.map { f =>
-      stagedCounts.remove(f).getOrElse {
+      fileMetaIndex.get(f).map(_.rows).filter(_ >= 0).getOrElse {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromPath(new Path(s"$tablePath/$f"), conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -2434,22 +2415,12 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           .map(v => readDelta(v).ts).getOrElse(-1L)})"))))
 
   /** Insert-only merge (delta-rs `when_not_matched_insert_all`): source
-    * rows whose keys exist in the snapshot are dropped, the rest append.
-    * A no-op source commits nothing.
+    * rows whose keys exist in the snapshot are dropped, the rest append
+    * — [[mergeConditional]] with one unconditional insert clause. A
+    * no-op source commits nothing.
     */
   def insertOnlyMerge(source: DataFrame, keys: Seq[String]): Option[Int] =
-    latestVersion() match {
-      case None => Some(commitOverwrite(source))
-      case Some(_) =>
-        val candidates = Merge.insertCandidates(source, read(), keys)
-        // maxRetries = 0: the candidate set is a READ-SET decision (keys
-        // absent from the snapshot we read) — a racing commit may have
-        // inserted those keys, so rebasing the append would silently
-        // break key uniqueness. Abort loudly; the caller re-runs the
-        // merge on fresh state and the anti-join drops the dupes.
-        if (candidates.isEmpty) None
-        else Some(commitAppend(candidates, maxRetries = 0))
-    }
+    mergeConditional(source, keys, Seq(Merge.NotMatchedInsert(None)))
 
   /** Change data feed: row-level changes in versions
     * (fromVersion, toVersion], with `_commit_version` and
@@ -2529,7 +2500,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // meta by resolving the snapshot holding it — no status probes)
       def logRead(names: Seq[String], rec: LogCodec.CommitRecord, at: Int): DataFrame = {
         if (!names.forall(fileMetaIndex.contains)) resolveSnap(at)
-        readFiles(names, Some(physReadSchema(rec.schemaDdl, rec.colMap.toMap)))
+        readFiles(names, physReadSchema(rec.schemaDdl, rec.colMap.toMap))
       }
       def tagged(names: Seq[String], v: Int, change: String): DataFrame =
         aligned(logRead(names, d, v))
@@ -2543,7 +2514,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         // vector. The marked rows were live at the writer's base by
         // construction (the mark pass scans through the overlay; racing
         // DVs are row-disjoint), so no prior-DV subtraction is needed.
-        val dvPos = readFiles(d.add.filter(isDv), Some(VersionedTable.DvSchema))
+        val dvPos = readFiles(d.add.filter(isDv), VersionedTable.DvSchema)
           .select(col("file").as("_g_file"), col("pos").as("_g_pos"))
         val dels = aligned(dvOverlay(logRead(d.dvTargets, d, v), Nil, v, withPos = true)
             .join(dvPos, Seq("_g_file", "_g_pos"), "left_semi")
@@ -2645,26 +2616,21 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       .collect().map(_.getString(0)).toSeq
   }
 
-  private def readFiles(names: Seq[String],
-                        schemaHint: Option[StructType] = None): DataFrame =
-    schemaHint match {
-      case Some(sch) =>
-        // log-answered statuses (r17): when every file's size is known
-        // from the commit log, the subset scans through an explicit
-        // FileIndex with ZERO per-file status probes —
-        // `spark.read.parquet` pays an InMemoryFileIndex round-trip per
-        // file, O(subset) planning I/O on every pruned read, mutation
-        // pre-scan, and DV overlay. Legacy pre-meta files fall back.
-        val metas = names.flatMap(n =>
-          fileMetaIndex.get(n).filter(_.size >= 0).map(n -> _))
-        if (metas.size == names.size)
-          org.apache.spark.sql.graft.GraftFileIndex.subsetRead(
-            spark, tablePath, metas, sch)
-        else spark.read.schema(sch)
-          .parquet(names.map(f => s"$tablePath/$f"): _*)
-      case None => spark.read.option("mergeSchema", "true")
-        .parquet(names.map(f => s"$tablePath/$f"): _*)
-    }
+  private def readFiles(names: Seq[String], schema: StructType): DataFrame = {
+    // log-answered statuses (r17): when every file's size is known from
+    // the commit log, the subset scans through an explicit FileIndex
+    // with ZERO per-file status probes — `spark.read.parquet` pays an
+    // InMemoryFileIndex round-trip per file, O(subset) planning I/O on
+    // every pruned read, mutation pre-scan, and DV overlay. Legacy
+    // pre-meta files fall back.
+    val metas = names.flatMap(n =>
+      fileMetaIndex.get(n).filter(_.size >= 0).map(n -> _))
+    if (metas.size == names.size)
+      org.apache.spark.sql.graft.GraftFileIndex.subsetRead(
+        spark, tablePath, metas, schema)
+    else spark.read.schema(schema)
+      .parquet(names.map(f => s"$tablePath/$f"): _*)
+  }
 
   /** Serializable-style conflict check for a rewrite based on snapshot
     * `base` whose file-level read-set is `readSet` (the files it chose
@@ -2789,15 +2755,16 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * but only after [[rebaseTarget]] proves every racing commit touched
     * a DISJOINT file set. A delete racing a blind append (the common
     * production race: Bronze ingest vs retention job) now lands both;
-    * genuine overlap still aborts loudly. Row accounting rebases
-    * additively: racing commits changed disjoint rows, so the head's
-    * count plus this rewrite's delta is exact.
+    * genuine overlap still aborts loudly. Row accounting is the one
+    * rule every rewrite shares, from metadata alone: the staged
+    * footers' rows minus the replaced data files' live rows
+    * ([[liveRowCount]]), added to the head's total — racing commits
+    * changed disjoint rows, so the rebased total is exact.
     */
   private[lake] def commitRewrite(action: String, c: Commit, affected: Seq[String],
-                            rewritten: DataFrame, newRows: Long,
+                            rewritten: DataFrame,
                             maxRetries: Int = 10,
-                            txnApp: String = "", txnVer: Long = -1L,
-                            newRowsFromStaged: Long => Long = null): Int = {
+                            txnApp: String = "", txnVer: Long = -1L): Int = {
     // every rewrite path hands in a LOGICAL frame aligned to the base
     // snapshot's schema; under column mapping the staged files must
     // store the stable PHYSICAL names. Rewrites of a partitioned table
@@ -2806,16 +2773,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       toPhysical(rewritten, StructType.fromDDL(c.schemaDdl), physMap(c)),
       nextVersion, pcols = c.pcols)
     val readSet = affected.toSet
-    // r19: the staging pass's parquet footers already counted every
-    // output row — callers derive the row accounting from THAT number
-    // (newRowsFromStaged) instead of re-running their whole rewrite
-    // plan under a separate `.count()` action (for a MERGE that action
-    // was a second full execution of the upsert join).
-    val effectiveNewRows =
-      if (newRowsFromStaged == null) newRows
-      else newRowsFromStaged(files.map(f =>
-        stagedMeta.get(f).map(_.rows).getOrElse(stagedRowCount(Seq(f)))).sum)
-    val rowDelta = effectiveNewRows - c.rows
+    val (dvs, _) = splitDv(c.files)
+    val rowDelta = fileRows(files) - liveRowCount(affected.filterNot(isDv), dvs)
     commitRebasing(action, c, readSet,
       mkFiles = headC => headC.files.filterNot(readSet) ++ files,
       mkRows = headC => headC.rows + rowDelta,
@@ -2834,21 +2793,11 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         val hit = coalesce(condition, lit(false))
         val affected = affectedFiles(c, hit)
         if (affected.isEmpty) None
-        else {
-          val (dvs, _) = splitDv(c.files)
-          // through the overlay: prior MoR deletions in the affected
-          // files are ABSORBED by this rewrite (their rows stay gone,
-          // their DV entries go inert), and `removed` counts live rows
-          val before = scan(c, Some(affected))
-          val kept = before.filter(not(hit))
-          // row accounting from log metadata + staged footers (r19):
-          // new total = old total - affected files' live rows + staged
-          // survivors — no count() actions (kept.count() was a second
-          // full execution of the rewrite plan)
-          val beforeCnt = liveRowCount(affected, dvs)
-          Some(commitRewrite("delete", c, affected, kept, -1L,
-            newRowsFromStaged = st => c.rows - beforeCnt + st))
-        }
+        // through the overlay: prior MoR deletions in the affected
+        // files are ABSORBED by this rewrite (their rows stay gone,
+        // their DV entries go inert)
+        else Some(commitRewrite("delete", c, affected,
+          scan(c, Some(affected)).filter(not(hit))))
       }
     }
 
@@ -2928,7 +2877,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       marked.select(col("_g_file").as("file"), col("_g_pos").as("pos"))
         .repartition(1),
       nextVersion, prefix = "dv-", collectStats = false)
-    if (dvFiles.isEmpty) None else Some((dvFiles, stagedRowCount(dvFiles)))
+    if (dvFiles.isEmpty) None else Some((dvFiles, fileRows(dvFiles)))
   }
 
   /** UPDATE SET WHERE, merge-on-read (Delta's DV-backed update): ONE
@@ -3004,9 +2953,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // conflicts use rebaseTarget's shared rules: a rewrite of a
       // targeted file makes our positions dangle, so it aborts there.)
       onDvOverlap = (v, racingAction, racingDvs, shared) => {
-        val ours = readFiles(dvFiles, Some(VersionedTable.DvSchema))
+        val ours = readFiles(dvFiles, VersionedTable.DvSchema)
           .filter(col("file").isin(shared.toSeq: _*))
-        val theirs = readFiles(racingDvs, Some(VersionedTable.DvSchema))
+        val theirs = readFiles(racingDvs, VersionedTable.DvSchema)
           .filter(col("file").isin(shared.toSeq: _*))
         val clash = ours.join(theirs, Seq("file", "pos"), "left_semi")
         if (!clash.isEmpty) sys.error(
@@ -3044,60 +2993,25 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           // assignments can push rows out of bounds — CHECK the result
           // (a racing constraint change aborts in rebaseTarget)
           checkConstraints(rewritten, c.constraints)
-          Some(commitRewrite("update", c, affected, rewritten, c.rows))
+          Some(commitRewrite("update", c, affected, rewritten))
         }
       }
     }
 
   /** Full MERGE (upsert): matched target rows are replaced by their
     * source row, unmatched source rows insert — Delta
-    * `when_matched_update_all + when_not_matched_insert_all`. Only files
-    * containing a matched key rewrite; a pure-insert merge degenerates
-    * to an append. Returns the new version (None for an empty source).
+    * `when_matched_update_all + when_not_matched_insert_all`, i.e.
+    * [[mergeConditional]] with those two clauses. Only files containing
+    * a matched key rewrite; a pure-insert merge degenerates to an
+    * append. Returns the new version (None when nothing is claimed).
     */
   def merge(source: DataFrame, keys: Seq[String]): Option[Int] =
-    latestVersion() match {
-      case None => Some(commitOverwrite(source))
-      case Some(v0) =>
-        checkSchema(source, allowNewColumns = false)
-        val c = readCommit(v0)
-        if (c.files.isEmpty) {
-          // append degenerates from a MERGE decision (no rows to match)
-          // — read-set-dependent, so conflicts abort loudly (see
-          // insertOnlyMerge)
-          if (source.isEmpty) None
-          else Some(commitAppend(source, maxRetries = 0))
-        } else {
-          val srcKeys = source.select(keys.map(source.col): _*).distinct()
-          val (dvs, _) = splitDv(c.files)
-          // `_metadata` is a scan-level column: the overlay projects the
-          // file name BEFORE the join (post-join it no longer resolves),
-          // and keeps MoR-deleted keys from matching (a deleted key must
-          // INSERT, not resurrect the dead row's file).
-          val snapKeys = scan(c, keep = Seq("_g_file"))
-            .select(keys.map(col) :+ col("_g_file"): _*)
-          val affected = snapKeys.join(srcKeys, keys, "left_semi")
-            .select("_g_file").distinct()
-            .collect().map(_.getString(0)).toSeq
-          if (affected.isEmpty) {
-            // "no keys matched" is a read-set decision too — no rebase
-            if (source.isEmpty) None
-            else Some(commitAppend(source, maxRetries = 0))
-          } else {
-            // all NEW content in an upsert comes from the source rows
-            checkConstraints(source, c.constraints)
-            val before = scan(c, Some(affected))
-            val rewritten = Merge.upsert(before, source, keys)
-            val beforeCnt = liveRowCount(affected, dvs)
-            Some(commitRewrite("merge", c, affected, rewritten, -1L,
-              newRowsFromStaged = st => c.rows - beforeCnt + st))
-          }
-        }
-    }
+    mergeConditional(source, keys,
+      Seq(Merge.MatchedUpdate(None, None), Merge.NotMatchedInsert(None)))
 
-  /** Conditional MERGE (Delta's full WHEN grammar): one atomic commit
-    * applying, per row, the FIRST clause of its group whose condition
-    * holds —
+  /** Conditional MERGE (Delta's full WHEN grammar) — the lake's ONE
+    * merge: one atomic commit applying, per row, the FIRST clause of
+    * its group whose condition holds —
     *  - matched target rows: [[Merge.MatchedUpdate]] (update-all or
     *    SET-list) / [[Merge.MatchedDelete]], conditions and assignments
     *    over the `t`/`s`-aliased join (see [[Merge]]'s frame contract);
@@ -3113,46 +3027,45 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * Only files holding a claimed row rewrite: matched-key files plus
     * files where a by-source clause's condition MAY hold on an
     * unmatched row (an unconditional by-source sweep touches every
-    * file holding unmatched rows — inherent to the semantics).
-    * Constraints re-validate on the rewritten content; a racing
+    * file holding unmatched rows — inherent to the semantics). The
+    * matched-file probe also enforces Delta's rule that a target row
+    * is matched by at most one source row (the multiple-source-rows
+    * error); duplicate source keys that match nothing are legal. The
+    * rewrite is one join of the affected slice with the source
+    * ([[Merge.rewrite]]); only a merge with insert clauses and no
+    * matched clause pays a separate anti-join against the full live key
+    * set. Constraints re-validate on the rewritten content; a racing
     * constraint or schema change aborts in [[rebaseTarget]] as usual.
-    * Duplicate source keys are rejected up front (a matched target row
-    * would be claimed by several source rows — Delta's
-    * multiple-source-rows error). When insert OR by-source clauses are
-    * present the commit does NOT rebase across racing commits
-    * (`maxRetries` forced to 0): "key absent from the snapshot" and
-    * "target row unmatched by the source" are both read-set decisions
-    * over the WHOLE table — a racing append may have inserted the key,
-    * or added unmatched rows the by-source sweep never probed (Delta
-    * conflicts concurrent appends with by-source merges for exactly
-    * this reason; same rule as [[insertOnlyMerge]]). Returns the new
+    * When insert OR by-source clauses are present the commit does NOT
+    * rebase across racing commits (`maxRetries` forced to 0): "key
+    * absent from the snapshot" and "target row unmatched by the source"
+    * are both read-set decisions over the WHOLE table — a racing append
+    * may have inserted the key, or added unmatched rows the by-source
+    * sweep never probed (Delta conflicts concurrent appends with
+    * by-source merges for exactly this reason). Returns the new
     * version, or None when no clause claimed any row.
     *
     * On a NONEXISTENT table there is no target schema to project to,
     * so insert clauses seed the table with the FULL source schema —
-    * including flag columns like `op`. If the pipeline's flag columns
-    * must stay out of the table, create it (e.g. an empty overwrite
-    * with the intended schema) before the first merge.
+    * including flag columns like `op` — and create it even when they
+    * claim no row. If the pipeline's flag columns must stay out of the
+    * table, create it (e.g. an empty overwrite with the intended
+    * schema) before the first merge.
     */
   def mergeConditional(source: DataFrame, keys: Seq[String],
                        clauses: Seq[Merge.MergeClause],
                        maxRetries: Int = 10): Option[Int] = {
     require(clauses.nonEmpty, "mergeConditional needs at least one clause")
-    val matched = clauses.filter(cl => cl.isInstanceOf[Merge.MatchedUpdate] ||
-      cl.isInstanceOf[Merge.MatchedDelete])
-    val insertCls = clauses.filter(_.isInstanceOf[Merge.NotMatchedInsert])
-    val bySource = clauses.filter(cl =>
-      cl.isInstanceOf[Merge.NotMatchedBySourceDelete] ||
-        cl.isInstanceOf[Merge.NotMatchedBySourceUpdate])
+    val matched = clauses.filter(Merge.isMatched)
+    val insertCls = clauses.filter(Merge.isInsert)
+    val bySource = clauses.filter(Merge.isBySource)
     val retries = if (insertCls.nonEmpty || bySource.nonEmpty) 0 else maxRetries
     latestVersion() match {
       case None =>
         // no table yet: only insert clauses can claim anything
-        val cols = source.columns.toSeq
-        val ins = Merge.applyInserts(source,
-          source.select(keys.map(source.col): _*).limit(0), keys,
-          insertCls, cols)
-        if (ins.isEmpty) None else Some(commitOverwrite(ins))
+        if (insertCls.isEmpty) None
+        else Some(commitOverwrite(
+          Merge.inserts(source, insertCls, source.columns.toSeq)))
       case Some(v0) =>
         val c = readCommit(v0)
         val schema = StructType.fromDDL(c.schemaDdl)
@@ -3178,23 +3091,10 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         if (missing.nonEmpty || changed.nonEmpty) sys.error(
           s"mergeConditional: source is missing target column(s) $missing " +
             s"/ has changed type(s) $changed")
-        if (matched.nonEmpty) {
-          val dup = source.groupBy(keys.map(source.col): _*)
-            .agg(org.apache.spark.sql.functions.count(lit(1)).as("_g_n"))
-            .filter(col("_g_n") > 1).limit(1).collect()
-          if (dup.nonEmpty) sys.error(
-            s"mergeConditional: multiple source rows share merge key " +
-              s"(e.g. ${keys.zip(dup.head.toSeq).mkString(", ")}) — a " +
-              s"matched target row must be claimed by exactly one source row")
-        }
-        val (dvs, data) = splitDv(c.files)
-        val srcKeys = source.select(keys.map(source.col): _*).distinct()
-        // affected files: one column-pruned pos-scan feeds both probes
-        val snap = scan(c, keep = Seq("_g_file"))
+        val (_, data) = splitDv(c.files)
         val matchedFiles =
           if (matched.isEmpty || data.isEmpty) Seq.empty[String]
-          else snap.join(srcKeys, keys, "left_semi")
-            .select("_g_file").distinct().collect().map(_.getString(0)).toSeq
+          else matchedFilesOf(c, source, keys)
         val bySrcFiles =
           if (bySource.isEmpty || data.isEmpty) Seq.empty[String]
           else {
@@ -3210,43 +3110,59 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
               catch { case _: Throwable => data }
             if (bcand.isEmpty) Seq.empty[String]
             else scan(c, Some(bcand), keep = Seq("_g_file"))
-              .as("t").join(srcKeys, keys, "left_anti")
+              .as("t").join(source.select(keys.map(source.col): _*).distinct(),
+                keys, "left_anti")
               .filter(coalesce(hit, lit(false)))
               .select("_g_file").distinct().collect().map(_.getString(0)).toSeq
           }
         val affected = (matchedFiles ++ bySrcFiles).distinct
-        // inserts probe the FULL live key set — a source key matched in
-        // an UNAFFECTED file must not insert
-        val insRows =
-          if (insertCls.isEmpty) None
-          else {
-            val liveKeys =
-              if (data.isEmpty) source.select(keys.map(source.col): _*).limit(0)
-              else scan(c).select(keys.map(col): _*)
-            Some(Merge.applyInserts(source, liveKeys, keys, insertCls, columns))
-          }
-        if (affected.isEmpty) {
-          insRows.filter(!_.isEmpty) match {
-            case None      => None
-            case Some(ins) => Some(commitAppend(ins, maxRetries = 0))
-          }
-        } else {
-          val before = scan(c, Some(affected))
-          val matchedOut =
-            if (matched.isEmpty) before.join(srcKeys, keys, "left_semi")
-              .select(columns.map(col): _*)
-            else Merge.applyMatched(before, source, keys, matched, columns)
-          val bySrcOut = Merge.applyBySource(
-            before.join(srcKeys, keys, "left_anti"), bySource, columns)
-          val rewritten = insRows.foldLeft(
-            matchedOut.unionByName(bySrcOut))(_.unionByName(_))
+        // Source rows no live key matches, where the rewrite's join
+        // cannot tell them: the matched probe found every live source
+        // key, so after it they are the source rows outside the slice
+        // (none live at all when it found no file); without a matched
+        // clause only the full live key set decides.
+        val unmatched =
+          if (insertCls.isEmpty || (matched.nonEmpty && affected.nonEmpty)) None
+          else if (matched.nonEmpty || data.isEmpty) Some(source)
+          else Some(source.join(scan(c).select(keys.map(col): _*), keys, "left_anti"))
+        val ins = unmatched.map(Merge.inserts(_, insertCls, columns))
+        if (affected.isEmpty)
+          // staged footers answer "empty?": no probe before the append
+          ins.flatMap(appendWithTxn(_, allowNewColumns = false,
+            maxRetries = 0, "", -1L, skipEmpty = true))
+        else {
+          val rewritten = ins.foldLeft(Merge.rewrite(scan(c, Some(affected)),
+            source, keys, clauses, columns,
+            withInserts = matched.nonEmpty && insertCls.nonEmpty))(_.unionByName(_))
           checkConstraints(rewritten, c.constraints)
-          val beforeCnt = liveRowCount(affected, dvs)
-          Some(commitRewrite("merge", c, affected, rewritten, -1L,
-            maxRetries = retries,
-            newRowsFromStaged = st => c.rows - beforeCnt + st))
+          Some(commitRewrite("merge", c, affected, rewritten, maxRetries = retries))
         }
     }
+  }
+
+  /** Data files holding a live row whose key some source row carries —
+    * the matched-clause probe. The same job enforces Delta's
+    * one-source-row-per-target-row rule: a live key that two or more
+    * source rows carry is an error. */
+  private def matchedFilesOf(c: Commit, source: DataFrame,
+                             keys: Seq[String]): Seq[String] = {
+    val srcKeys = source.groupBy(keys.map(source.col): _*)
+      .agg(count(lit(1)).as("_g_n"))
+    // `_metadata` is a scan-level column: the overlay projects the file
+    // name BEFORE the join, and keeps MoR-deleted keys from matching (a
+    // deleted key must INSERT, not resurrect the dead row's file)
+    val hits = scan(c, keep = Seq("_g_file"))
+      .select(keys.map(col) :+ col("_g_file"): _*)
+      .join(srcKeys, keys)
+    val files = hits.groupBy("_g_file")
+      .agg(org.apache.spark.sql.functions.max("_g_n")).collect()
+    if (files.exists(_.getLong(1) > 1)) {
+      val dup = hits.filter(col("_g_n") > 1).select(keys.map(col): _*).head()
+      sys.error(s"merge: multiple source rows match the target row with key " +
+        s"${keys.zip(dup.toSeq).mkString(", ")} — a matched target row must " +
+        s"be claimed by exactly one source row")
+    }
+    files.map(_.getString(0)).toSeq
   }
 
   /** Predicate-scoped overwrite (Delta's `replaceWhere`): atomically
@@ -3292,20 +3208,18 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     checkSchema(df, allowNewColumns = false)
     val c = readCommit(v0)
     val hit = coalesce(predicate, lit(false))
-    // one pass over the incoming batch yields both the scope check and
-    // the row count (the staged write below is its second and last
-    // evaluation)
+    // one pass over the incoming batch checks the scope (the staged
+    // write below is its second and last evaluation; the row total
+    // comes from the staged footers)
     val counts = df.agg(
-      org.apache.spark.sql.functions.sum(when(not(hit), 1L).otherwise(0L)),
-      org.apache.spark.sql.functions.count(lit(1))).head()
+      org.apache.spark.sql.functions.sum(when(not(hit), 1L).otherwise(0L))).head()
     val violations = if (counts.isNullAt(0)) 0L else counts.getLong(0)
     if (violations > 0) sys.error(
       s"replaceWhere: $violations incoming row(s) do not satisfy the " +
         s"predicate — a scoped overwrite must only write rows inside its " +
         s"own scope, or re-runs stop being idempotent")
-    val newRows = counts.getLong(1)
     checkConstraints(df, c.constraints) // kept rows are valid by induction
-    val (dvs, data) = splitDv(c.files)
+    val (_, data) = splitDv(c.files)
     if (data.isEmpty) {
       // empty table: the scoped overwrite degenerates to an append
       appendWithTxn(df, allowNewColumns = false, maxRetries = 0, txnApp, txnVer)
@@ -3315,14 +3229,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         appendWithTxn(df, allowNewColumns = false, maxRetries = 0, txnApp, txnVer)
       else {
         val before = scan(c, Some(affected))
-        val kept = before.filter(not(hit))
-        // staged = kept ∪ incoming, so the universal rewrite accounting
-        // (old - affected live + staged) already includes `newRows`
-        val beforeCnt = liveRowCount(affected, dvs)
         Some(commitRewrite("replaceWhere", c, affected,
-          kept.unionByName(df.select(before.columns.map(col): _*)),
-          -1L, txnApp = txnApp, txnVer = txnVer,
-          newRowsFromStaged = st => c.rows - beforeCnt + st))
+          before.filter(not(hit)).unionByName(df.select(before.columns.map(col): _*)),
+          txnApp = txnApp, txnVer = txnVer))
       }
     }
   }
@@ -3362,8 +3271,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
                               txnApp: String, txnVer: Long): Int = {
     val v0 = latestVersion().getOrElse(sys.error(s"no commits at $tablePath"))
     val c = readCommit(v0)
-    val (dvs, data) = splitDv(c.files)
-    val dataSet = data.toSet
+    val dataSet = splitDv(c.files)._2.toSet
     val bad = replaced.filterNot(dataSet)
     if (bad.nonEmpty) sys.error(
       s"replaceFiles: ${bad.size} file(s) are not data files of the " +
@@ -3371,33 +3279,18 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         s"from snapshotDataFiles/candidateFiles at the same version")
     checkSchema(df, allowNewColumns = false)
     checkConstraints(df, c.constraints)
-    val replacedLive = liveRowCount(replaced, dvs)
-    val files = stage(
-      toPhysical(df, StructType.fromDDL(c.schemaDdl), physMap(c)),
-      nextVersion, pcols = c.pcols)
-    val newRows = stagedRowCount(files)
-    val readSet = replaced.toSet
-    commitRebasing("replaceFiles", c, readSet,
-      mkFiles = headC => headC.files.filterNot(readSet) ++ files,
-      mkRows = headC => headC.rows - replacedLive + newRows,
-      maxRetries = 10, txnApp = txnApp, txnVer = txnVer)
+    commitRewrite("replaceFiles", c, replaced, df, txnApp = txnApp, txnVer = txnVer)
   }
 
-  /** Live rows in `files`: footer-exact rows from the stats sidecars
-    * minus the deletion-vector marks targeting them — metadata, never
-    * a data scan (stats-less files pay one footer count each). */
+  /** Live rows in data `files`: their footer-exact row counts
+    * ([[fileRows]]) minus the deletion-vector marks targeting them —
+    * metadata, never a data scan. */
   private def liveRowCount(files: Seq[String], dvs: Seq[String]): Long = {
-    val stats = readAllStats()
-    def statRows(f: String): Option[Long] =
-      stats.get(f).flatMap(_.values.headOption).map(_.rows)
-    val missing = files.filter(statRows(_).isEmpty)
-    val counted = files.flatMap(statRows).sum +
-      (if (missing.isEmpty) 0L else readFiles(missing).count())
     // marked positions from the driver-side vector decode, not a job
     val fileSet = files.toSet
     val marks = dvs.iterator.flatMap(dvVector)
       .collect { case (f, ps) if fileSet(f) => ps.length.toLong }.sum
-    counted - marks
+    fileRows(files) - marks
   }
 
   /** Compact the current snapshot to ~targetRowsPerFile (content
@@ -3416,7 +3309,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // the compaction that also purges soft-deleted rows (Delta's
     // OPTIMIZE + DV rewrite). A racing append rebases cleanly; a racing
     // rewrite or DV commit aborts (overlap).
-    commitRewrite("optimize", c, c.files, compacted, c.rows)
+    commitRewrite("optimize", c, c.files, compacted)
   }
 
   /** Compact only the snapshot's SMALL files (r19 — Delta's
@@ -3448,7 +3341,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // partitioned tables re-split per value in staging (one-value-per-
     // file invariant); only flat tables take the explicit repartition
     val shaped = if (c.pcols.isEmpty) live.repartition(nOut) else live
-    Some(commitRewrite("compact", c, small, shaped, c.rows))
+    Some(commitRewrite("compact", c, small, shaped))
   }
 
   /** Restore the table to an earlier version's contents as a NEW commit

@@ -23,7 +23,7 @@ import graft.lake.VersionedTable
   * Deliberately a V1 `BaseRelation` + `PrunedFilteredScan`, the same
   * choice Delta's `DeltaDataSource` makes for its batch path: the
   * relation's scan is built FROM the lake's own reader
-  * ([[VersionedTable.readSnapshotFiles]]), so deletion-vector overlays, column
+  * ([[VersionedTable.read]]), so deletion-vector overlays, column
   * mapping, time travel, and — the scale lever — file-stats data
   * skipping all apply behind the format string. A DataSourceV2
   * `PartitionReader` would have to re-implement parquet + DV + mapping
@@ -31,8 +31,8 @@ import graft.lake.VersionedTable
   *
   * Pushdown contract: Catalyst hands the WHERE clause down as
   * `sources.Filter`s; every translatable conjunct becomes a Column
-  * predicate for `candidateFiles`, which drops provably-irrelevant files
-  * BEFORE Spark lists the scan (min/max sidecar stats), and the full
+  * filter on the snapshot read, whose file index drops provably-irrelevant
+  * files BEFORE Spark lists the scan (min/max sidecar stats), and the full
   * filter is re-applied on top (V1 filters are advisory), so pruning is
   * pure optimization. Untranslatable shapes simply don't prune. At
   * 100 TB this is what turns `WHERE day = X` through a SQL view into a
@@ -50,42 +50,33 @@ class GraftLakeRelation(spark: SparkSession, val path: String,
 
   override def buildScan(requiredColumns: Array[String],
                          filters: Array[Filter]): RDD[Row] =
-    GraftLakeRelation.scanRows(table, path, version, requiredColumns, filters)
+    GraftLakeRelation.scanRows(table, version, requiredColumns, filters)
 
   override def toString: String =
     s"GraftLakeRelation[$path${version.map(v => s"@v$v").getOrElse("")}]"
 }
 
 object GraftLakeRelation {
-  /** Observable for tests and operators: data files the last format-
-    * string scan of each table path handed to Spark AFTER stats
-    * pruning — the `numFiles`-style proof that a selective SQL
+  /** Observable for tests and operators: data files the last scan of
+    * each table path handed to Spark AFTER stats pruning (recorded by
+    * [[GraftFileIndex.listFiles]], which every snapshot read plans
+    * through) — the `numFiles`-style proof that a selective SQL
     * predicate reached the lake's skipping layer. */
   val lastScanFiles = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
   /** The shared V1 scan body — used by this relation's
     * `PrunedFilteredScan` AND by the catalog table's `V1Scan` bridge
-    * ([[catalog.GraftTable]]), so both SQL doors prune by file stats
-    * through the exact same path. ONE stats pass: the surviving files
-    * are decided here and handed straight to the chunk reader
-    * (`readWhere` would recompute the same candidateFiles internally —
-    * a duplicated O(files × columns) metadata pass on every scan). */
-  private[graft] def scanRows(table: VersionedTable, path: String,
+    * ([[catalog.GraftTable]]): the snapshot read filtered by the
+    * translated predicate, so the one pruning decision
+    * ([[GraftFileIndex.listFiles]]) serves both SQL doors and every
+    * DataFrame read alike. */
+  private[graft] def scanRows(table: VersionedTable,
                               version: Option[Int],
                               requiredColumns: Array[String],
                               filters: Array[Filter]): RDD[Row] = {
-    val pred = filters.flatMap(f => translate(f).map(_._1))
+    val base = filters.flatMap(f => translate(f).map(_._1))
       .reduceOption(_ && _)
-    val base = pred match {
-      case Some(p) =>
-        val keep = table.candidateFiles(p, version)
-        lastScanFiles.put(path, keep.size)
-        table.readSnapshotFiles(keep, version).filter(p)
-      case None =>
-        val all = table.snapshotDataFiles(version)
-        lastScanFiles.put(path, all.size)
-        table.read(version)
-    }
+      .foldLeft(table.read(version))(_.filter(_))
     val projected =
       if (requiredColumns.isEmpty) base.select()
       else base.select(requiredColumns.map(col).toSeq: _*)

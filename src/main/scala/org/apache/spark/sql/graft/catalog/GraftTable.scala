@@ -143,7 +143,7 @@ class GraftScanBuilder(table: VersionedTable, path: String,
           override def sqlContext: SQLContext = context
           override def schema: StructType = outSchema
           override def buildScan(): RDD[Row] =
-            GraftLakeRelation.scanRows(table, path, version, cols, fs)
+            GraftLakeRelation.scanRows(table, version, cols, fs)
         }.asInstanceOf[T]
       override def description(): String =
         s"GraftLakeScan[$path, pushed=${fs.mkString(",")}]"

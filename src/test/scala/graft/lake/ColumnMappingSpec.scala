@@ -142,7 +142,7 @@ class ColumnMappingSpec extends AnyFunSuite {
     t.renameColumn("v", "label")                               // v6
     val e = intercept[RuntimeException](
       t.commitRewrite("delete", base4, base4.files.filterNot(_.startsWith("dv-")),
-        t.read(Some(5)).limit(1), 1L))
+        t.read(Some(5)).limit(1)))
     assert(e.getMessage.contains("schema change"), e.getMessage)
   }
 

@@ -36,6 +36,37 @@ object RecordingPublisher {
   val calls = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
+/** A conditional-put publisher whose next won put, once armed, lets a
+  * rival publisher run its whole publish of the same version before
+  * this one re-probes: the rival loses the put and completes this
+  * writer's commit from its tmp. Records (rival result, own result). */
+class SelfCompletingPublisher extends ConditionalPutCommitPublisher {
+  override protected def putEntryIfAbsent(fs: FileSystem, entry: Path,
+                                          body: String): Boolean = {
+    val won = super.putEntryIfAbsent(fs, entry, body)
+    if (won && SelfCompletingPublisher.armed.getAndSet(false)) {
+      val dst = new Path(entry.getParent, entry.getName.stripPrefix(".arbiter-"))
+      val rivalTmp = new Path(entry.getParent, ".tmp-rival.json")
+      val out = fs.create(rivalTmp, true)
+      try out.write("rival".getBytes("UTF-8")) finally out.close()
+      SelfCompletingPublisher.results +=
+        new ConditionalPutCommitPublisher().publishIfAbsent(fs, rivalTmp, dst)
+      fs.delete(rivalTmp, false)
+    }
+    won
+  }
+  override def publishIfAbsent(fs: FileSystem, tmp: Path, dst: Path): Boolean = {
+    val track = SelfCompletingPublisher.armed.get
+    val r = super.publishIfAbsent(fs, tmp, dst)
+    if (track) SelfCompletingPublisher.results += r
+    r
+  }
+}
+object SelfCompletingPublisher {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val results = scala.collection.mutable.ArrayBuffer.empty[Boolean]
+}
+
 /** r18: the commit protocol NAMES its storage contract. Local FS keeps
   * the hard-link/claim protocol; HDFS-like schemes ride their atomic
   * rename-refuses-existing contract; anything else must either plug a
@@ -143,7 +174,16 @@ class CommitPublisherSpec extends AnyFunSuite {
       val reopened = VersionedTable(s, t.tablePath)
       assert(reopened.versions() == (0 to 25).toSeq,
         s"ledger forked or gapped: ${reopened.versions()}")
-      assert(reopened.read().count() == 3 + 24)
+      // count() is answered from the head record's `rows` total, so the
+      // recorded total and the rows the resolved file list holds are
+      // checked apart: a short total is a row-accounting fault, short
+      // rows a file missing from the snapshot
+      assert(reopened.rowCountAt(25) == 3 + 24,
+        s"recorded row total ${reopened.rowCountAt(25)} != 27")
+      val files = reopened.commitFiles(25)
+      assert(reopened.read().collect().length == 3 + 24,
+        s"the ${files.size} resolved files hold " +
+          s"${reopened.read().collect().length} rows, not 27")
       // no arbiter litter after clean resolution
       val fs = new Path(t.tablePath).getFileSystem(
         s.sparkContext.hadoopConfiguration)
@@ -212,6 +252,28 @@ class CommitPublisherSpec extends AnyFunSuite {
     val in = fs.open(dst)
     try assert(new String(in.readAllBytes(), "UTF-8") == "A") finally in.close()
     assert(!fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith(".arbiter-")))
+  }
+
+  test("a put winner whose commit a rival completed before its re-probe still wins") {
+    val s = mosSpark
+    s.conf.set("spark.graft.lake.commitPublisher",
+      classOf[SelfCompletingPublisher].getName)
+    try {
+      val t = VersionedTable(s, "mos://" +
+        Files.createTempDirectory("graft-cput-self").toString + "/t")
+      t.commitOverwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))     // v0
+      SelfCompletingPublisher.armed.set(true)
+      SelfCompletingPublisher.results.clear()
+      t.commitAppend(Seq((3L, "c")).toDF("id", "v"))
+      // the armed publish: its rival lost the put and completed OUR
+      // commit from our tmp; we still won it
+      assert(SelfCompletingPublisher.results.toSeq == Seq(false, true),
+        s"(rival, ours) = ${SelfCompletingPublisher.results}")
+      val reopened = VersionedTable(s, t.tablePath)
+      assert(reopened.versions() == Seq(0, 1), s"${reopened.versions()}")
+      assert(reopened.rowCountAt(1) == 3L)
+      assert(reopened.read().collect().length == 3)
+    } finally s.conf.unset("spark.graft.lake.commitPublisher")
   }
 
   test("an arbiter entry read before its body is written is not taken as stale") {

@@ -2,16 +2,34 @@ package graft.lake
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.lake.Merge._
 
+/** A publish arbiter that runs one injected action (a racing writer's
+  * commit) right before the next publish it arbitrates, then publishes
+  * rename-if-absent — so the racer deterministically takes the version
+  * the caller is about to claim. Top-level: instantiated by reflection
+  * from `spark.graft.lake.commitPublisher`. */
+class RacingPublisher extends VersionedTable.CommitPublisher {
+  override def publishIfAbsent(fs: FileSystem, tmp: Path, dst: Path): Boolean = {
+    Option(RacingPublisher.racer.getAndSet(null)).foreach(_())
+    !fs.exists(dst) && fs.rename(tmp, dst)
+  }
+}
+object RacingPublisher {
+  val racer = new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
+}
+
 /** Conditional MERGE clauses (Delta's full WHEN grammar) — the pure
   * relational cores in [[Merge]] and the atomic commit protocol in
-  * [[VersionedTable.mergeConditional]], including the interplay rows
-  * the r13 verdict asked for (merge×DV, merge×constraints).
+  * [[VersionedTable.mergeConditional]], the lake's one merge (`merge`
+  * and `insertOnlyMerge` are clause lists on it), including the
+  * interplay rows the r13 verdict asked for (merge×DV,
+  * merge×constraints).
   */
 class MergeClauseSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -193,5 +211,68 @@ class MergeClauseSpec extends AnyFunSuite {
       Seq(NotMatchedInsert(Some(col("s.x") > 15)))).contains(0))
     assert(t.read().select("id").as[Long].collect().sorted.toSeq ==
       Seq(2L, 3L, 4L))
+  }
+
+  test("merge aborts when a racing append lands a key it inserts (no rebase)") {
+    spark.conf.set("spark.graft.lake.commitPublisher", classOf[RacingPublisher].getName)
+    try {
+      val t = freshTable()
+      t.commitOverwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v")) // v0
+      // the racer appends key 5 through a second handle just before the
+      // merge publishes its rewrite (update id=2, insert id=5)
+      RacingPublisher.racer.set(() => VersionedTable(spark, t.tablePath)
+        .commitAppend(Seq((5L, "racer")).toDF("id", "v")))
+      val e = intercept[RuntimeException](
+        t.merge(Seq((2L, "B2"), (5L, "e")).toDF("id", "v"), Seq("id")))
+      assert(e.getMessage.contains("concurrent commit conflict"), e.getMessage)
+      // the racer's append is the only v1; key 5 is never duplicated
+      assert(t.versions() == Seq(0, 1))
+      assert(t.read().orderBy("id").select("id", "v").as[(Long, String)]
+        .collect().toSeq == Seq((1L, "a"), (2L, "b"), (5L, "racer")))
+    } finally {
+      RacingPublisher.racer.set(null)
+      spark.conf.unset("spark.graft.lake.commitPublisher")
+    }
+  }
+
+  test("merge rejects a target row matched by two source rows") {
+    val t = freshTable()
+    t.commitOverwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val e = intercept[RuntimeException](
+      t.merge(Seq((2L, "p"), (2L, "q"), (7L, "n")).toDF("id", "v"), Seq("id")))
+    assert(e.getMessage.contains("multiple source rows"), e.getMessage)
+    assert(t.latestVersion().contains(0))
+  }
+
+  test("duplicate source keys that match no target row all insert (Delta's rule)") {
+    val t = freshTable()
+    t.commitOverwrite(base())
+    val src = Seq((1L, "A", 11L), (9L, "p", 90L), (9L, "q", 91L)).toDF("id", "v", "x")
+    assert(t.mergeConditional(src, Seq("id"),
+      Seq(MatchedUpdate(None, None), NotMatchedInsert(None))).contains(1))
+    assert(t.read().filter(col("id").isin(1L, 9L)).orderBy("id", "v")
+      .select("id", "v").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "A"), (9L, "p"), (9L, "q")))
+    assert(t.history().last._3 == 6L)
+  }
+
+  test("merge projects away extra source columns, on the rewrite and the append path") {
+    val t = freshTable()
+    t.commitOverwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    assert(t.merge(Seq((2L, "B2", "x"), (5L, "e", "y")).toDF("id", "v", "op"),
+      Seq("id")).contains(1))
+    assert(t.merge(Seq((9L, "z", "w")).toDF("id", "v", "op"), Seq("id")).contains(2))
+    assert(t.history().last._2 == "append")
+    assert(t.read().columns.toSeq == Seq("id", "v"))
+    assert(t.read().orderBy("id").select("id", "v").as[(Long, String)]
+      .collect().toSeq == Seq((1L, "a"), (2L, "B2"), (5L, "e"), (9L, "z")))
+  }
+
+  test("no table yet: insert clauses create it even when they claim no row") {
+    val t = freshTable()
+    assert(t.mergeConditional(base(), Seq("id"),
+      Seq(NotMatchedInsert(Some(col("s.x") > 100)))).contains(0))
+    assert(t.read().count() == 0)
+    assert(t.read().columns.toSeq == Seq("id", "v", "x"))
   }
 }

@@ -419,7 +419,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // racing append lands v1 BEFORE the delete commits
     t.commitAppend(Seq((10L, "x")).toDF("id", "v"))              // v1: file B
     val kept = t.read(Some(0)).where(col("id") =!= 1L)
-    val v = t.commitRewrite("delete", base, Seq(fileA), kept, base.rows - 1)
+    val v = t.commitRewrite("delete", base, Seq(fileA), kept)
     // the rewrite rebased onto the appended head: nothing lost, no abort
     assert(v == 2)
     assert(t.read().orderBy("id").select("id", "v").as[(Long, String)]
@@ -439,7 +439,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.update(col("id") === 2L, Map("v" -> lit("B"))).contains(1))
     val kept = t.read(Some(0)).where(col("id") =!= 1L)
     val err = intercept[RuntimeException] {
-      t.commitRewrite("delete", base, Seq(fileA), kept, base.rows - 1)
+      t.commitRewrite("delete", base, Seq(fileA), kept)
     }
     // the abort names BOTH sides: our action+base and the racing commit
     assert(err.getMessage.contains("delete") &&
@@ -452,7 +452,7 @@ class VersionedTableSpec extends AnyFunSuite {
     t2.commitOverwrite(Seq((9L, "z")).toDF("id", "v"))
     val err2 = intercept[RuntimeException] {
       t2.commitRewrite("delete", base2, base2.files,
-        t2.read(Some(0)).limit(0), 0L)
+        t2.read(Some(0)).limit(0))
     }
     assert(err2.getMessage.contains("replaced the whole table"), err2.getMessage)
   }
@@ -690,7 +690,7 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(t.deleteMoR(col("id") === 5L).contains(1)) // racing DV lands v1
     val kept = t.read(Some(0)).where(col("id") =!= 1L)
     val err = intercept[RuntimeException] {
-      t.commitRewrite("delete", base, base.files, kept, base.rows - 1)
+      t.commitRewrite("delete", base, base.files, kept)
     }
     assert(err.getMessage.contains("deletion vector") &&
       err.getMessage.contains("v0") && err.getMessage.contains("v1"),
@@ -941,7 +941,7 @@ class VersionedTableSpec extends AnyFunSuite {
     // racing append lands between optimize's snapshot read and commit
     t.commitAppend(Seq((3L, "c")).toDF("id", "v")) // v2: disjoint file
     val v = t.commitRewrite("optimize", base, base.files,
-      t.read(Some(1)).repartition(1), base.rows)
+      t.read(Some(1)).repartition(1))
     assert(v == 3)
     // compacted old files + the racing append's file, no row lost
     assert(t.read().select("id").as[Long].collect().sorted.toSeq ==
