@@ -105,15 +105,15 @@ object Merge {
   final case class NotMatchedBySourceUpdate(condition: Option[Column],
                                             set: Map[String, Column]) extends MergeClause
 
-  def isMatched(cl: MergeClause): Boolean = cl match {
+  private[lake] def isMatched(cl: MergeClause): Boolean = cl match {
     case _: MatchedUpdate | _: MatchedDelete => true
     case _                                   => false
   }
-  def isBySource(cl: MergeClause): Boolean = cl match {
+  private[lake] def isBySource(cl: MergeClause): Boolean = cl match {
     case _: NotMatchedBySourceDelete | _: NotMatchedBySourceUpdate => true
     case _                                                         => false
   }
-  def isInsert(cl: MergeClause): Boolean = cl.isInstanceOf[NotMatchedInsert]
+  private[lake] def isInsert(cl: MergeClause): Boolean = cl.isInstanceOf[NotMatchedInsert]
 
   /** `c` with every name reference not already qualified by `side`
     * qualified by it: a one-sided clause's plain names resolve in the
@@ -142,19 +142,20 @@ object Merge {
     *  - a slice row with a source partner takes the first matched
     *    clause that holds (update image, delete, or carried through);
     *  - a slice row without one takes the first by-source clause;
-    *  - with `withInserts` (a FULL outer join) a source row without a
-    *    slice partner takes the first insert clause, or drops. That is
-    *    only sound when the slice holds every live key the source
-    *    carries — the matched-file probe guarantees it — so source rows
-    *    unmatched here are unmatched by the whole table.
+    *  - with matched AND insert clauses (a FULL outer join) a source
+    *    row without a slice partner takes the first insert clause, or
+    *    drops. The matched-file probe that chose the slice put every
+    *    live key the source carries in it, so source rows unmatched
+    *    here are unmatched by the whole table.
     * Without matched clauses the join sees only the distinct source
-    * keys: a key sent twice must not duplicate the target row it
-    * matches. `columns` is the target schema's column order. Pure —
+    * keys, and insert clauses are the caller's (no probe ran): a key
+    * sent twice must not duplicate the target row it matches.
+    * `columns` is the target schema's column order. Pure —
     * [[VersionedTable.mergeConditional]] drives it under the commit
     * protocol; MergeClauseSpec pins the semantics. */
-  def rewrite(slice: DataFrame, source: DataFrame, keys: Seq[String],
-              clauses: Seq[MergeClause], columns: Seq[String],
-              withInserts: Boolean): DataFrame = {
+  private[lake] def rewrite(slice: DataFrame, source: DataFrame, keys: Seq[String],
+                            clauses: Seq[MergeClause], columns: Seq[String]): DataFrame = {
+    val withInserts = clauses.exists(isMatched) && clauses.exists(isInsert)
     val indexed =
       (if (withInserts) clauses else clauses.filterNot(isInsert)).zipWithIndex
     val src =
@@ -192,8 +193,8 @@ object Merge {
   /** Source rows an insert clause claims (aliased `s`), projected to
     * `columns`. The rows must already be unmatched by the whole target:
     * the caller's probe or full-key anti-join decided that. */
-  def inserts(unmatched: DataFrame, clauses: Seq[MergeClause],
-              columns: Seq[String]): DataFrame = {
+  private[lake] def inserts(unmatched: DataFrame, clauses: Seq[MergeClause],
+                            columns: Seq[String]): DataFrame = {
     require(clauses.forall(isInsert), "inserts takes insert clauses only")
     unmatched.as("s")
       .withColumn("_g_act", firstMatch(clauses.zipWithIndex))

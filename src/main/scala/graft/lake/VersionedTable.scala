@@ -773,12 +773,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     def positioned(df: DataFrame): DataFrame = df.select(col("*"),
       substring_index(col("_metadata.file_path"), "/", -1).as("_g_file"),
       col("_metadata.row_index").as("_g_pos"))
-    val cap = spark.conf.getOption("spark.graft.lake.dvBroadcastMaxRows")
-      .map(_.trim.toLong).getOrElse(4000000L)
-    val logged = dvs.flatMap(f =>
-      fileMetaIndex.get(f).filter(_.rows >= 0).map(f -> _.rows)).toMap
-    def marked = logged.values.sum + fileRows(dvs.filterNot(logged.contains))
-    if (dvs.nonEmpty && marked > cap) {
+    if (dvs.nonEmpty && dvOversized(dvs)) {
       // oversized vectors: the distributed anti-join (same semantics,
       // join-shaped cost; the DV side is deleted-rows-sized)
       val dv = readFiles(dvs, VersionedTable.DvSchema)
@@ -812,6 +807,18 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       }
       if (withPos) positioned(live) else live
     }
+  }
+
+  /** True when the vectors `dvs` carry more marked positions than
+    * `spark.graft.lake.dvBroadcastMaxRows` lets the driver hold — the
+    * total as the commit log records it per vector file (the footers
+    * for files it has no count for). Above it nothing decodes vectors
+    * on the driver: the overlay anti-joins, [[liveRowCount]] counts
+    * with a job. */
+  private def dvOversized(dvs: Seq[String]): Boolean = {
+    val cap = spark.conf.getOption("spark.graft.lake.dvBroadcastMaxRows")
+      .map(_.trim.toLong).getOrElse(4000000L)
+    fileRows(dvs) > cap
   }
 
   /** Per-version DV broadcast cache for [[dvOverlay]] — committed
@@ -2417,7 +2424,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   /** Insert-only merge (delta-rs `when_not_matched_insert_all`): source
     * rows whose keys exist in the snapshot are dropped, the rest append
     * — [[mergeConditional]] with one unconditional insert clause. A
-    * no-op source commits nothing.
+    * no-op source commits nothing. Source columns the table lacks are
+    * projected away (Delta's insert-all rule without schema evolution),
+    * as for every merge; a new column needs an explicit evolving append.
     */
   def insertOnlyMerge(source: DataFrame, keys: Seq[String]): Option[Int] =
     mergeConditional(source, keys, Seq(Merge.NotMatchedInsert(None)))
@@ -2773,8 +2782,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       toPhysical(rewritten, StructType.fromDDL(c.schemaDdl), physMap(c)),
       nextVersion, pcols = c.pcols)
     val readSet = affected.toSet
-    val (dvs, _) = splitDv(c.files)
-    val rowDelta = fileRows(files) - liveRowCount(affected.filterNot(isDv), dvs)
+    val rowDelta = fileRows(files) - liveRowCount(c, affected.filterNot(isDv))
     commitRebasing(action, c, readSet,
       mkFiles = headC => headC.files.filterNot(readSet) ++ files,
       mkRows = headC => headC.rows + rowDelta,
@@ -3132,8 +3140,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
             maxRetries = 0, "", -1L, skipEmpty = true))
         else {
           val rewritten = ins.foldLeft(Merge.rewrite(scan(c, Some(affected)),
-            source, keys, clauses, columns,
-            withInserts = matched.nonEmpty && insertCls.nonEmpty))(_.unionByName(_))
+            source, keys, clauses, columns))(_.unionByName(_))
           checkConstraints(rewritten, c.constraints)
           Some(commitRewrite("merge", c, affected, rewritten, maxRetries = retries))
         }
@@ -3282,15 +3289,23 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     commitRewrite("replaceFiles", c, replaced, df, txnApp = txnApp, txnVer = txnVer)
   }
 
-  /** Live rows in data `files`: their footer-exact row counts
-    * ([[fileRows]]) minus the deletion-vector marks targeting them —
-    * metadata, never a data scan. */
-  private def liveRowCount(files: Seq[String], dvs: Seq[String]): Long = {
-    // marked positions from the driver-side vector decode, not a job
+  /** Live rows in data `files` of snapshot `c`: their footer-exact row
+    * counts ([[fileRows]]) minus the deletion-vector marks targeting
+    * them. A rewrite of EVERY data file (optimize) replaces the head's
+    * whole live total `c.rows` and decodes nothing; otherwise the marks
+    * come from the driver-side vector decode (memoized, bounded by the
+    * overlay's broadcast cap) or, above the cap, from one count over
+    * the vector files — never a data scan. */
+  private def liveRowCount(c: Commit, files: Seq[String]): Long = {
+    val (dvs, data) = splitDv(c.files)
     val fileSet = files.toSet
-    val marks = dvs.iterator.flatMap(dvVector)
-      .collect { case (f, ps) if fileSet(f) => ps.length.toLong }.sum
-    fileRows(files) - marks
+    if (data.forall(fileSet)) c.rows
+    else if (dvs.isEmpty) fileRows(files)
+    else fileRows(files) - (
+      if (dvOversized(dvs))
+        readFiles(dvs, VersionedTable.DvSchema).filter(col("file").isin(files: _*)).count()
+      else dvs.iterator.flatMap(dvVector)
+        .collect { case (f, ps) if fileSet(f) => ps.length.toLong }.sum)
   }
 
   /** Compact the current snapshot to ~targetRowsPerFile (content

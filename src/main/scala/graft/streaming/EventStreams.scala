@@ -248,6 +248,8 @@ object EventStreams {
     * safety from the key merge, plus an auditable version per batch and
     * time travel across batches (what the reference's delta-rs append
     * gave it, minus the duplicate rows its append-only mode produced).
+    * Batch columns the table lacks are projected away, as in every
+    * merge; evolve the table with an explicit append first.
     */
   def writeToVersioned(events: DataFrame, targetPath: String, keys: Seq[String],
                        checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =

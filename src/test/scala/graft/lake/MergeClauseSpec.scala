@@ -268,6 +268,18 @@ class MergeClauseSpec extends AnyFunSuite {
       .collect().toSeq == Seq((1L, "a"), (2L, "B2"), (5L, "e"), (9L, "z")))
   }
 
+  test("insertOnlyMerge projects away extra source columns (Delta's insert-all rule)") {
+    val t = freshTable()
+    t.commitOverwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    assert(t.insertOnlyMerge(Seq((2L, "B2", "x"), (5L, "e", "y")).toDF("id", "v", "op"),
+      Seq("id")).contains(1))
+    assert(t.history().last._2 == "append")
+    assert(t.read().columns.toSeq == Seq("id", "v"))
+    assert(t.read().orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a"), (2L, "b"), (5L, "e")))
+    assert(t.rowCountAt(1) == 3)
+  }
+
   test("no table yet: insert clauses create it even when they claim no row") {
     val t = freshTable()
     assert(t.mergeConditional(base(), Seq("id"),

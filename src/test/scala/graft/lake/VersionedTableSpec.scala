@@ -617,6 +617,33 @@ class VersionedTableSpec extends AnyFunSuite {
       .collect().sorted.toSeq == Seq(8L, 9L))
   }
 
+  dvTest("rewrite row totals under vectors: partial delete, update, compaction and optimize") {
+    val t = freshTable()
+    t.commitOverwrite((1L to 10L).map(i => (i, s"r$i")).toDF("id", "v").coalesce(1)) // v0
+    for (k <- 1 to 3)
+      t.commitAppend((k * 10L + 1 to k * 10L + 10).map(i => (i, s"r$i")).toDF("id", "v")
+        .coalesce(1))
+    // one mark in each of the four data files
+    assert(t.deleteMoR(col("id").isin(2L, 12L, 22L, 33L)).contains(4))
+    // the recorded total must equal the rows a scan of the snapshot holds
+    // (read().count() would be answered from the recorded total itself)
+    def scanned = t.read().select("id").as[Long].collect().length.toLong
+    def recorded = t.rowCountAt(t.latestVersion().get)
+    assert(recorded == 36L && scanned == 36L)
+    // partial rewrites of one marked file while the others keep theirs
+    assert(t.delete(col("id") === 15L).contains(5))
+    assert(recorded == 35L && scanned == 35L)
+    assert(t.update(col("id") === 25L, Map("v" -> lit("x"))).contains(6))
+    assert(recorded == 35L && scanned == 35L)
+    // the two rewritten files are the small ones: a partial compaction
+    assert(t.compactSmallFiles(20L, minSmallFiles = 2).contains(7))
+    assert(recorded == 35L && scanned == 35L)
+    // every data file at once: the vectors drop, the live total carries
+    t.optimize(100L)
+    assert(t.readCommit(t.latestVersion().get).files.forall(!_.startsWith("dv-")))
+    assert(recorded == 35L && scanned == 35L)
+  }
+
   dvTest("racing MoR deletes, disjoint rows in the SAME data file: both land (row-level validation)") {
     val path = Files.createTempDirectory("graft-vt").toString + "/t"
     VersionedTable(spark, path)
