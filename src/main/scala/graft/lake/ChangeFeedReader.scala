@@ -1,7 +1,7 @@
 package graft.lake
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 
@@ -68,10 +68,7 @@ final class ChangeFeedReader(val table: VersionedTable, statePath: String) {
     * advance from a replayed batch is a no-op, never a rewind). */
   def advance(toVersion: Int): Unit = {
     if (toVersion <= lastProcessed()) return
-    val tmp = Paths.get(statePath + s".tmp-${System.nanoTime()}")
-    Files.write(tmp, LogCodec.encodeVersion(toVersion).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(statePath),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    LakeLog.replaceLocal(Paths.get(statePath), LogCodec.encodeVersion(toVersion))
   }
 
   /** poll → apply → advance in one call: `fn` sees (changes, head);

@@ -5,40 +5,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{abs, array_repeat, coalesce, col, count, explode, lit, when, not}
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import LakeLog.Commit
+
 /** A versioned Parquet table with a Delta-style transaction log —
   * the storage semantics the reference gets from delta-rs
   * (`/root/reference/main.py:391-475` writes Delta tables), rebuilt over
   * plain Parquet since no Delta jars ship in this environment.
   *
-  * Protocol (mirrors the observable parts of the Delta log):
+  * The log — commit records, checkpoints, the checkpoint pointer, the
+  * vacuum horizon, snapshot resolution, the exclusive publish and the
+  * stats and bloom sidecar files — is [[LakeLog]]. This class owns the
+  * data files and every Spark plan: staging, the deletion-vector
+  * overlay, reads, the change feed, DML and DDL.
+  *
+  * Protocol (mirrors the observable parts of Delta):
   *  - data files live flat in the table dir, named `v{N}-{nonce}-...` so
   *    no two commits ever collide — not even two writers racing for the
   *    SAME version number (the loser's staged files become vacuum-able
   *    orphans, never clobbering the winner's data);
-  *  - `_graft_log/v{N}.json` is the commit record: the INCREMENTAL
-  *    `add`/`remove` file deltas vs snapshot N-1 (plus action, schema
-  *    DDL, row count) — O(commit), never O(table), exactly Delta's
-  *    add/remove-action model;
-  *  - every `checkpointInterval` commits, `_graft_log/checkpoint-v{N}
-  *    .json` snapshots the COMPLETE file list of version N (Delta's
-  *    parquet checkpoint). Readers resolve snapshot V from the nearest
-  *    checkpoint ≤ V plus at most `checkpointInterval` tail records, so
-  *    a 10⁵-commit table reads a bounded handful of log files instead of
-  *    replaying its history;
-  *  - a commit stages its JSON under a dot-temp name and renames into
-  *    place only if version N doesn't exist yet — optimistic concurrency:
-  *    the second of two racing writers fails with a conflict, it never
-  *    silently clobbers (same guarantee level as Delta on a
-  *    non-transactional object store). Blind appends auto-retry on
-  *    conflict by rebasing their already-staged files onto the new head
+  *  - a commit stages its data files first, then publishes its record
+  *    only if version N doesn't exist yet — optimistic concurrency: the
+  *    second of two racing writers fails with a conflict, it never
+  *    silently clobbers. Blind appends auto-retry on conflict by
+  *    rebasing their already-staged files onto the new head
   *    (metadata-only; see [[commitAppend]]); rewrites validate their
   *    FILE-LEVEL READ-SET against the racing commits and rebase when
   *    every racer touched disjoint files — only genuine overlap (or a
   *    table replacement / schema change) aborts, loudly naming both
   *    commits (see [[rebaseTarget]] — Delta's serializable conflict
-  *    rules). Checkpoints are derived and
-  *    idempotent — a failed checkpoint write degrades resolution cost,
-  *    never correctness;
+  *    rules);
   *  - appends are schema-checked against the current snapshot
   *    (exact match, or supersets when `allowNewColumns` — Delta's
   *    mergeSchema);
@@ -48,320 +43,35 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    (older snapshots stop being readable — Delta semantics) and
   *    records the retention horizon; time travel / restore / change
   *    feeds below it fail loudly with the boundary in the message
-  *    instead of a raw missing-file scan error. It never touches
-  *    `_graft_log`, so checkpoint + tail resolution of retained
-  *    versions survives any vacuum.
+  *    instead of a raw missing-file scan error. It never deletes log
+  *    files.
   *
   * Scale notes: snapshot reads hand Spark an explicit file list, so
   * partition pruning/pushdown work unchanged, and `optimize` +
   * `zorderLayout` compose (cluster, then commit). Cold resolution of the
-  * latest snapshot is O(1) in table lifetime via the `_last_checkpoint`
-  * pointer (2 small reads + ≤interval tail records, no log listing);
-  * `versions()`/time-travel far behind the pointer still list the log
-  * directory (names only).
+  * latest snapshot is O(1) in table lifetime (see [[LakeLog]]).
   */
 final class VersionedTable(spark: SparkSession, val tablePath: String,
                            val checkpointInterval: Int = 10) {
-  private val logDir = s"$tablePath/_graft_log"
   private def fs: FileSystem =
     new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  /** This writer's host identity for claim-file ownership (pid liveness
-    * is only meaningful on the host that observed it). */
-  private lazy val localHost: String =
-    try java.net.InetAddress.getLocalHost.getHostName
-    catch { case _: Throwable => "unknown-host" }
 
-  // ---- log access ----------------------------------------------------
-
-  private def versionFile(v: Int) = new Path(logDir, f"v$v%08d.json")
+  /** The table's transaction log ([[LakeLog]]): commit records,
+    * checkpoints, snapshot resolution, publishing and sidecar files. */
+  private[lake] lazy val log = new LakeLog(fs, tablePath, checkpointInterval,
+    LakeLog.PublishSettings(
+      spark.conf.getOption("spark.graft.lake.commitPublisher"),
+      spark.conf.getOption("spark.graft.lake.unsafeSingleWriterPublish")
+        .exists(_.trim.equalsIgnoreCase("true"))))
 
   /** All committed versions, ascending; empty for a fresh path. */
-  def versions(): Seq[Int] = {
-    val dir = new Path(logDir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d{8}\\.json") => n.substring(1, 9).toInt }
-      .sorted.toSeq
-  }
+  def versions(): Seq[Int] = log.versions()
 
-  /** Newest committed version. With a `_last_checkpoint` pointer this
-    * probes forward from the pointed version (≤ interval + writers-since
-    * existence checks — O(1) in table lifetime); only pointer-less tables
-    * pay the full log listing. Versions are gap-free by construction
-    * (writeCommit renames v, v+1, ... in sequence), so the first missing
-    * file ends the probe. */
-  def latestVersion(): Option[Int] = lastCheckpointVersion() match {
-    case Some(p) =>
-      var v = p
-      while (fs.exists(versionFile(v + 1))) v += 1
-      Some(v)
-    case None => versions().lastOption
-  }
+  /** Newest committed version — O(1) in table lifetime once the log has
+    * a checkpoint pointer. */
+  def latestVersion(): Option[Int] = log.latestVersion()
 
-  /** Logical snapshot view of a version: `files` is the COMPLETE file
-    * list (resolved from checkpoint + tail deltas on read). Writers hand
-    * in full lists too — [[writeCommit]] derives the incremental record.
-    */
-  private[lake] case class Commit(version: Int, action: String, files: Seq[String],
-                            schemaDdl: String, rows: Long, ts: Long,
-                            txnApp: String = "", txnVer: Long = -1L,
-                            dvTargets: Seq[String] = Nil,
-                            constraints: Seq[(String, String)] = Nil,
-                            colMap: Seq[(String, String)] = Nil,
-                            droppedPhys: Seq[String] = Nil,
-                            pcols: Seq[String] = Nil,
-                            props: Seq[(String, String)] = Nil)
-
-  // Log files are small UTF-8 JSON documents that LogCodec encodes and
-  // decodes (a spark.read.json would cost a job per lookup).
-  private def readBody(p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-  private def writeBody(p: Path, body: String): Unit = {
-    val out = fs.create(p, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Decoded commit records by version. Committed records are immutable,
-    * so the memo never goes stale; it makes the commit protocol's
-    * repeated metadata lookups and a poll's range walks (e.g.
-    * [[changeTypesPossible]] then [[changesBetween]]) one file read per
-    * record. Capped: cleared when it outgrows `DeltaMemoCap`. */
-  private val deltaMemo =
-    scala.collection.concurrent.TrieMap[Int, LogCodec.CommitRecord]()
-  private val DeltaMemoCap = 1024
-
-  private def readDelta(v: Int): LogCodec.CommitRecord =
-    deltaMemo.getOrElse(v, {
-      val p = versionFile(v)
-      val d = LogCodec.decodeCommit(readBody(p), p)
-      // every file meta that passes through resolution accumulates in
-      // the name-keyed index (names globally unique, content immutable
-      // — an entry can never go stale); the explicit-subset reader
-      // answers statuses from it with zero filesystem probes
-      d.addMeta.foreach { case (n, m) => fileMetaIndex.put(n, m) }
-      if (deltaMemo.size >= DeltaMemoCap) deltaMemo.clear()
-      deltaMemo.put(v, d)
-      d
-    })
-
-  // ---- checkpoints -----------------------------------------------------
-
-  private def checkpointFile(v: Int) = new Path(logDir, f"checkpoint-v$v%08d.json")
-
-  private[lake] def checkpointVersions(): Seq[Int] = {
-    val dir = new Path(logDir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.matches("checkpoint-v\\d{8}\\.json") =>
-        n.substring(12, 20).toInt }
-      .sorted.toSeq
-  }
-
-  /** A checkpoint's file list and file meta. Legacy checkpoints carry
-    * no meta: sizes unknown for the base files (readers fall back to
-    * one listing). */
-  private def readCheckpointFiles(v: Int): (Seq[String], Map[String, VersionedTable.FileMeta]) = {
-    val p = checkpointFile(v)
-    val (files, meta) = LogCodec.decodeCheckpoint(readBody(p), p)
-    meta.foreach { case (n, m) => fileMetaIndex.put(n, m) }
-    (files, meta)
-  }
-
-  /** Name-keyed union of every file meta this instance has seen (log
-    * records, checkpoints, own staging) — the status oracle behind
-    * [[readFiles]]' probe-free subset reads. Grows with files observed
-    * (≈80 B/entry); entries are immutable by the naming protocol. */
-  private val fileMetaIndex =
-    scala.collection.concurrent.TrieMap.empty[String, VersionedTable.FileMeta]
-
-  // ---- _last_checkpoint pointer (Delta parity) -------------------------
-
-  /** O(1) pointer to the newest checkpoint, so cold snapshot resolution
-    * of the CURRENT version reads 2 small files + ≤interval tail records
-    * without ever listing `_graft_log` — the listing cost is what grows
-    * with table lifetime (10⁶ commits = 10⁶ directory entries). The
-    * pointer is derived state with the same contract as checkpoints:
-    * best-effort write, and any read problem (missing, torn, pointing at
-    * a checkpoint that never landed, or too far behind the requested
-    * version) falls back to the directory listing — correctness never
-    * depends on it. */
-  private val lastCheckpointPath = new Path(logDir, "_last_checkpoint")
-
-  private def lastCheckpointVersion(): Option[Int] = try {
-    if (!fs.exists(lastCheckpointPath)) None
-    else {
-      // Stale/torn guard: trust the pointer only if its checkpoint exists.
-      LogCodec.decodeVersion(readBody(lastCheckpointPath))
-        .filter(v => fs.exists(checkpointFile(v)))
-    }
-  } catch { case _: Throwable => None }
-
-  /** Newest checkpoint ≤ v — pointer fast path when it serves `v` within
-    * one interval (the hot case: reading the latest snapshot), directory
-    * listing otherwise (time travel far behind the pointer, or a lost /
-    * torn / lagging pointer). */
-  private def checkpointAtOrBefore(v: Int): Option[Int] =
-    lastCheckpointVersion().filter(p => p <= v && v - p <= checkpointInterval)
-      .orElse(checkpointVersions().filter(_ <= v).lastOption)
-
-  /** Replace `dst` with `tmp` atomically (REPLACE semantics — for
-    * derived, monotonically-updated pointer files, NOT commit records):
-    * on `file:` schemes `ATOMIC_MOVE` guarantees a reader never sees a
-    * missing or torn file; Hadoop's delete-then-rename would open a
-    * window where the pointer is simply gone (and a crash inside it
-    * loses the pointer entirely). Non-local stores keep delete+rename —
-    * both pointer readers already treat a missing file as a safe
-    * fallback. */
-  private def publishReplace(tmp: Path, dst: Path): Unit =
-    if (fs.getUri.getScheme == "file") {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      // drop the Hadoop checksum sidecar the nio move left behind
-      fs.delete(new Path(tmp.getParent, s".${tmp.getName}.crc"), false)
-      ()
-    } else {
-      fs.delete(dst, false)
-      if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
-      ()
-    }
-
-  private def writeLastCheckpointPointer(v: Int): Unit = try {
-    if (lastCheckpointVersion().exists(_ >= v)) return // monotonic
-    val tmp = new Path(logDir, s".tmp-lastckpt-${System.nanoTime()}")
-    writeBody(tmp, LogCodec.encodeVersion(v))
-    publishReplace(tmp, lastCheckpointPath)
-  } catch { case e: Throwable =>
-    System.err.println(s"[lake] _last_checkpoint write failed " +
-      s"(resolution falls back to log listing): ${e.getMessage}")
-  }
-
-  /** Checkpoints are derived state: write-once via tmp+rename (never
-    * torn), and a failure is logged, not thrown — readers just pay more
-    * tail records until the next one lands. */
-  private def writeCheckpoint(c: Commit, meta: Map[String, VersionedTable.FileMeta]): Unit = try {
-    val dst = checkpointFile(c.version)
-    if (fs.exists(dst)) { writeLastCheckpointPointer(c.version); return }
-    val tmp = new Path(logDir, s".tmp-ckpt-v${c.version}-${System.nanoTime()}.json")
-    writeBody(tmp, LogCodec.encodeCheckpoint(c.version, c.rows, c.ts, c.files,
-      meta, c.schemaDdl))
-    if (fs.rename(tmp, dst)) writeLastCheckpointPointer(c.version)
-    else fs.delete(tmp, false)
-  } catch { case e: Throwable =>
-    System.err.println(s"[lake] checkpoint write failed at v${c.version} " +
-      s"(resolution falls back to more tail records): ${e.getMessage}")
-  }
-
-  // ---- vacuum horizon (time-travel interlock) --------------------------
-
-  /** Earliest version whose data files vacuum still guarantees —
-    * everything below it is contractually dead even if some of its files
-    * happen to survive (e.g. because a later RESTORE re-references
-    * them). Written by [[vacuum]] (monotonic, tmp+rename); reads below
-    * it fail LOUDLY with the boundary in the message instead of a raw
-    * missing-file error from deep inside a scan — the Delta-style
-    * "time travel below the retention horizon" contract. A missing or
-    * torn horizon file reads as "no vacuum ever ran" (the pre-interlock
-    * behavior: stranded reads fail at scan time). */
-  private val vacuumHorizonPath = new Path(logDir, "_vacuum_horizon")
-
-  private def vacuumHorizon(): Int = try {
-    if (!fs.exists(vacuumHorizonPath)) -1
-    else LogCodec.decodeHorizon(readBody(vacuumHorizonPath)).getOrElse(-1)
-  } catch { case _: Throwable => -1 }
-
-  private def writeVacuumHorizon(h: Int): Unit = try {
-    if (vacuumHorizon() >= h) return // monotonic
-    val tmp = new Path(logDir, s".tmp-vachorizon-${System.nanoTime()}")
-    writeBody(tmp, LogCodec.encodeHorizon(h, System.currentTimeMillis()))
-    // atomic replace: no window where the horizon file is missing, and a
-    // crash mid-update can't lose the previous horizon. (Racing vacuums
-    // remain the caller's contract — see vacuum's minAgeMs note.)
-    publishReplace(tmp, vacuumHorizonPath)
-  } catch { case e: Throwable =>
-    System.err.println(s"[lake] _vacuum_horizon write failed (stranded " +
-      s"time travel will fail at scan time instead of loudly): ${e.getMessage}")
-  }
-
-  private def checkVacuumHorizon(v: Int, what: String): Unit = {
-    val h = vacuumHorizon()
-    if (v < h) sys.error(
-      s"$what version $v is below the vacuum horizon v$h — its data files " +
-        s"were vacuumed; earliest readable version is v$h " +
-        s"(vacuum retention decides the horizon)")
-  }
-
-  // ---- snapshot resolution ---------------------------------------------
-
-  /** A resolved snapshot: the complete file list plus the per-file
-    * size/row metadata the log recorded for it (entries absent for
-    * files added by pre-meta commits — their consumers fall back to
-    * one directory listing for just those names). */
-  private case class Snap(files: Seq[String],
-                          meta: Map[String, VersionedTable.FileMeta])
-
-  /** Last resolved (version, snapshot) — commits and ascending history
-    * walks extend it by one delta instead of re-reading from the
-    * checkpoint. Committed log records are immutable, so a cached
-    * snapshot can never go stale, even with concurrent writers on other
-    * handles. */
-  @volatile private var lastSnap: Option[(Int, Snap)] = None
-
-  private def applyDeltas(base: Snap, from: Int, to: Int): Snap = {
-    var files = base.files
-    var meta = base.meta
-    (from to to).foreach { i =>
-      val d = readDelta(i)
-      if (d.full) { files = d.add; meta = d.addMeta }
-      else {
-        val rm = d.remove.toSet
-        files = files.filterNot(rm) ++ d.add
-        meta = (if (rm.isEmpty) meta else meta -- rm) ++ d.addMeta
-      }
-    }
-    Snap(files, meta)
-  }
-
-  /** Complete snapshot (file list + file meta) of version `v`: nearest
-    * base (cache or checkpoint) + tail deltas — bounded by
-    * `checkpointInterval` records from a cold handle. The cache-first
-    * fast path (sequential commits, history walks) applies deltas
-    * straight off the cached snapshot and never lists the log
-    * directory; the checkpoint listing happens only on cold or
-    * long-jump resolution, where it's amortized over ≥ an interval's
-    * worth of avoided record reads. */
-  private def resolveSnap(v: Int): Snap = {
-    lastSnap match {
-      case Some((cv, cs)) if cv == v => return cs
-      case Some((cv, cs)) if cv < v && v - cv <= checkpointInterval =>
-        val snap = applyDeltas(cs, cv + 1, v)
-        lastSnap = Some((v, snap))
-        return snap
-      case _ => ()
-    }
-    val ckpt = checkpointAtOrBefore(v)
-    val cached = lastSnap.filter { case (cv, _) => cv <= v }
-    val snap = (cached, ckpt) match {
-      case (Some((cv, cs)), Some(ck)) if cv >= ck =>
-        if (cv == v) cs else applyDeltas(cs, cv + 1, v)
-      case (_, Some(ck)) =>
-        val (baseFiles, baseMeta) = readCheckpointFiles(ck)
-        val base = Snap(baseFiles, baseMeta)
-        if (ck == v) base else applyDeltas(base, ck + 1, v)
-      case (Some((cv, cs)), None) =>
-        if (cv == v) cs else applyDeltas(cs, cv + 1, v)
-      case (None, None) =>
-        applyDeltas(Snap(Seq.empty, Map.empty), 0, v)
-    }
-    lastSnap = Some((v, snap))
-    snap
-  }
-
-  private def resolveFiles(v: Int): Seq[String] = resolveSnap(v).files
+  private[lake] def readCommit(v: Int): Commit = log.readCommit(v)
 
   /** Per-file byte size and row count of the snapshot at `version`, as
     * recorded in the commit log's add actions (Delta's `size`/`stats`
@@ -372,233 +82,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   def snapshotFileMeta(version: Option[Int] = None): Map[String, VersionedTable.FileMeta] = {
     val v = version.orElse(latestVersion())
       .getOrElse(sys.error(s"no committed versions at $tablePath"))
-    resolveSnap(v).meta
-  }
-
-  /** (checkpoint used, tail records applied) for resolving `v` from cold
-    * state — the spec pins that this stays ≤ checkpointInterval. */
-  private[lake] def resolutionCost(v: Int): (Option[Int], Int) = {
-    val ckpt = checkpointAtOrBefore(v)
-    (ckpt, v - ckpt.getOrElse(-1))
-  }
-
-  /** True when [[checkpointAtOrBefore]] for `v` was served by the
-    * `_last_checkpoint` pointer alone (no log-directory listing) — the
-    * spec pins that reading the LATEST snapshot from a cold handle stays
-    * on this O(1) path no matter how many commits the table has. */
-  private[lake] def pointerServes(v: Int): Boolean =
-    lastCheckpointVersion().exists(p => p <= v && v - p <= checkpointInterval)
-
-  private[lake] def readCommit(v: Int): Commit = {
-    val d = readDelta(v)
-    Commit(d.version, d.action, resolveFiles(v), d.schemaDdl, d.rows, d.ts,
-      d.txnApp, d.txnVer, d.dvTargets, d.constraints, d.colMap, d.droppedPhys,
-      d.pcols, d.props)
-  }
-
-  /** Publish `tmp` at `dst` atomically, FAILING (false) if `dst` exists —
-    * the primitive the whole optimistic-concurrency protocol rests on.
-    * Hadoop rename is NOT that primitive on a POSIX local filesystem:
-    * `RawLocalFileSystem.rename` bottoms out in `File.renameTo`, which
-    * silently REPLACES an existing destination — so two writers racing
-    * the same version could both "win", the loser overwriting the
-    * winner's committed record (caught live by the 8-way contention
-    * spec). On `file:` schemes we therefore publish via
-    * `Files.createLink`, whose EEXIST failure is atomic at the syscall
-    * level (the classic O_EXCL-by-hardlink trick); stores whose rename
-    * already refuses an existing destination (HDFS contract) keep the
-    * exists+rename path. */
-  /** Storage capability dispatch for the publish primitive (r18 — the
-    * commit protocol now NAMES its storage contract instead of assuming
-    * it, Delta's LogStore shape):
-    *  - a configured [[VersionedTable.CommitPublisher]]
-    *    (`spark.graft.lake.commitPublisher`) always wins — the plug
-    *    point for object stores that need an external arbiter (a DynamoDB
-    *    conditional put, a database row, a lease service);
-    *  - LOCAL filesystems (file:, or any RawLocalFileSystem-backed
-    *    scheme) use the hard-link / O_EXCL-claim protocol below;
-    *  - HDFS-like stores (hdfs:, viewfs:) use exists+rename — their
-    *    rename contract REFUSES an existing destination, so
-    *    rename-if-absent is atomic there;
-    *  - anything else (plain S3A and friends: no atomic
-    *    rename-if-absent) FAILS LOUDLY at the first commit rather than
-    *    silently running a protocol whose multi-writer safety doesn't
-    *    hold. `spark.graft.lake.unsafeSingleWriterPublish=true` opts a
-    *    SINGLE-writer deployment back in, with a one-time warning. */
-  private def publishExclusive(tmp: Path, dst: Path): Boolean =
-    commitPublisher match {
-      case Some(p) => p.publishIfAbsent(fs, tmp, dst)
-      case None =>
-        val raw = fs match {
-          case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-          case f => f
-        }
-        if (fs.getUri.getScheme == "file" ||
-            raw.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem])
-          publishExclusiveLocal(tmp, dst)
-        else fs.getUri.getScheme match {
-          case "hdfs" | "viewfs" => !fs.exists(dst) && fs.rename(tmp, dst)
-          case other =>
-            if (spark.conf.getOption("spark.graft.lake.unsafeSingleWriterPublish")
-                .exists(_.trim.equalsIgnoreCase("true"))) {
-              if (!unsafePublishWarned.getAndSet(true))
-                System.err.println(s"[lake] UNSAFE publish on '$other': " +
-                  "exists+rename is not atomic here — multi-writer commits " +
-                  "can clobber each other. Single-writer deployments only.")
-              !fs.exists(dst) && fs.rename(tmp, dst)
-            } else sys.error(
-              s"graft-lake: scheme '$other' has no atomic rename-if-absent, " +
-                "so the optimistic-concurrency commit protocol cannot run " +
-                "safely. Configure spark.graft.lake.commitPublisher with a " +
-                "graft.lake.VersionedTable.CommitPublisher backed by an " +
-                "external arbiter, or set " +
-                "spark.graft.lake.unsafeSingleWriterPublish=true for a " +
-                "strictly single-writer deployment.")
-        }
-    }
-
-  private val unsafePublishWarned =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** The configured publish arbiter, instantiated once per handle. */
-  private lazy val commitPublisher: Option[VersionedTable.CommitPublisher] =
-    spark.conf.getOption("spark.graft.lake.commitPublisher").map { cn =>
-      Class.forName(cn).getDeclaredConstructor().newInstance()
-        .asInstanceOf[VersionedTable.CommitPublisher]
-    }
-
-  private def publishExclusiveLocal(tmp: Path, dst: Path): Boolean =
-    {
-      val t = java.nio.file.Paths.get(tmp.toUri.getPath)
-      val d = java.nio.file.Paths.get(dst.toUri.getPath)
-      try {
-        java.nio.file.Files.createLink(d, t)
-        fs.delete(tmp, false) // fs-level: also removes the checksum sidecar
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: UnsupportedOperationException =>
-          // FS without hard-link support: the old exists+rename probe
-          // here silently reinstated the TOCTOU clobber this path exists
-          // to prevent. Arbitrate through an O_EXCL claim file instead
-          // (`Files.createFile` is atomic at the syscall level): the
-          // claim serializes the exists-check + rename, so exclusivity
-          // holds even though rename itself would replace. The claim is
-          // RELEASED on every exit (win, lose, or rename failure) — and
-          // a claim left by a crashed writer self-heals: a later writer
-          // finding a stale claim (old, with no published dst) removes
-          // it and reports conflict, so the caller's retry proceeds
-          // instead of the table wedging forever. Every writer on the
-          // same FS takes this same branch, so mixed-mode races with
-          // the hardlink path can't happen.
-          System.err.println(s"[lake] no hard-link support at ${dst.getParent}" +
-            s" — publishing ${dst.getName} via O_EXCL claim file")
-          val claim = java.nio.file.Paths.get(
-            new Path(dst.getParent, s".claim-${dst.getName}").toUri.getPath)
-          try {
-            // O_EXCL create + owner identity (pid@host) in one call: a
-            // later SAME-HOST writer can verify the claimant is DEAD
-            // before stealing, instead of guessing from age (a live
-            // writer stalled in a GC pause must never lose its claim —
-            // stealing from it would reinstate the exists+rename TOCTOU
-            // this branch prevents)
-            java.nio.file.Files.write(claim,
-              (ProcessHandle.current().pid().toString + "@" + localHost)
-                .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-              java.nio.file.StandardOpenOption.CREATE_NEW,
-              java.nio.file.StandardOpenOption.WRITE)
-            try { !fs.exists(dst) && fs.rename(tmp, dst) }
-            finally { java.nio.file.Files.deleteIfExists(claim); () }
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              val age = try System.currentTimeMillis() -
-                java.nio.file.Files.getLastModifiedTime(claim).toMillis
-              catch { case _: Throwable => 0L }
-              val owner = try {
-                val s = new String(java.nio.file.Files.readAllBytes(claim),
-                  java.nio.charset.StandardCharsets.UTF_8).trim
-                "^(\\d+)@(.+)$".r.findFirstMatchIn(s)
-                  .map(m => (m.group(1).toLong, m.group(2)))
-              } catch { case _: Throwable => None }
-              // Steal rules, least-risk first:
-              //  - same host + owner pid provably dead → steal after a
-              //    short grace (the owner can never publish);
-              //  - everything else — remote host (its pids mean nothing
-              //    here), unreadable claim, or a pid that LOOKS alive
-              //    (could be the OS recycling a dead writer's pid) —
-              //    only after a stall far beyond any plausible pause,
-              //    and never when the record was in fact published.
-              //    The long window trades a bounded wedge (30 min) for
-              //    never clobbering a live writer; without it a
-              //    recycled pid would wedge the table forever.
-              val longStallMs = 30L * 60 * 1000
-              val stealable = owner match {
-                case Some((pid, host)) if host == localHost =>
-                  if (!ProcessHandle.of(pid).isPresent) age > 5000L
-                  else age > longStallMs
-                case _ => age > longStallMs
-              }
-              if (stealable && !fs.exists(dst)) {
-                System.err.println(s"[lake] removing stale claim " +
-                  s"${claim.getFileName} (${age}ms old, owner " +
-                  s"${owner.fold("unknown") { case (p, h) => s"$p@$h" }}, " +
-                  s"no published record)")
-                java.nio.file.Files.deleteIfExists(claim)
-              }
-              false // caller raises conflict; its retry finds the claim free
-          }
-      }
-    }
-
-  private[lake] def writeCommit(c: Commit,
-                                metaHint: Map[String, VersionedTable.FileMeta] = Map.empty): Unit = {
-    val dir = new Path(logDir)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val dst = versionFile(c.version)
-    if (fs.exists(dst))
-      sys.error(s"concurrent commit conflict: version ${c.version} already exists")
-    val prevSnap = if (c.version == 0) Snap(Seq.empty, Map.empty)
-                   else resolveSnap(c.version - 1)
-    val prev = prevSnap.files
-    val prevSet = prev.toSet
-    val curSet = c.files.toSet
-    val add = c.files.filterNot(prevSet)
-    val remove = prev.filterNot(curSet)
-    // Per-file meta for the add action: files this instance staged are
-    // in the memo; re-reference commits (RESTORE) pass the historical
-    // snapshot's meta as `metaHint`; anything else (another instance's
-    // orphan adopted by hand) pays one status probe — O(add), never
-    // O(table). Unknown rows (-1) stay unknown; unknown size only if
-    // even the probe failed.
-    val addMeta: Map[String, VersionedTable.FileMeta] = add.map { n =>
-      n -> metaHint.getOrElse(n, fileMetaIndex.getOrElse(n, {
-        val sz = try fs.getFileStatus(new Path(tablePath, n)).getLen
-                 catch { case _: Throwable => -1L }
-        VersionedTable.FileMeta(sz, -1L)
-      }))
-    }.toMap
-    // txnApp/txnVer (Delta's setTransaction) ride the record itself, so
-    // "which batch landed" can never diverge from "what data landed"
-    val body = LogCodec.encodeCommit(LogCodec.CommitRecord(c.version, c.action,
-      add, remove, c.schemaDdl, c.rows, c.ts, txnApp = c.txnApp,
-      txnVer = c.txnVer, dvTargets = c.dvTargets, constraints = c.constraints,
-      colMap = c.colMap, droppedPhys = c.droppedPhys, addMeta = addMeta,
-      pcols = c.pcols, props = c.props))
-    val tmp = new Path(logDir, s".tmp-v${c.version}-${System.nanoTime()}.json")
-    writeBody(tmp, body)
-    if (fs.exists(dst) || !publishExclusive(tmp, dst)) {
-      fs.delete(tmp, false)
-      sys.error(s"concurrent commit conflict: version ${c.version} already exists")
-    }
-    // the writer's own snapshot cache must look exactly like a re-read
-    // of the record it just published: staging meta carries no mtime,
-    // the commit's ts is the files' add time (readDelta stamps the same)
-    val snapMeta = (prevSnap.meta -- remove) ++
-      addMeta.filter(_._2.size >= 0).map { case (n, m) =>
-        n -> (if (m.mtime >= 0) m else m.copy(mtime = c.ts)) }
-    lastSnap = Some((c.version, Snap(c.files, snapMeta)))
-    if (c.version > 0 && c.version % checkpointInterval == 0)
-      writeCheckpoint(c, snapMeta)
+    log.resolveSnap(v).meta
   }
 
   // ---- data staging --------------------------------------------------
@@ -650,7 +134,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // they carry no data but would ride the snapshot forever, and with
     // no min/max stats to prune on, every stats-scoped read and rewrite
     // keeps them conservatively. The footer pass that decides this also
-    // records each survivor's row count in [[fileMetaIndex]], so
+    // records each survivor's row count in [[LakeLog.fileMetaIndex]], so
     // [[fileRows]] right after the commit doesn't re-open the same
     // footers; the staging listing already knows each part's byte length —
     // captured here so the commit record's add action carries
@@ -693,7 +177,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         val name = f"${prefix}v$v%08d-$nonce-part-$i%05d.parquet"
         if (!fs.rename(p, new Path(tablePath, name)))
           sys.error(s"failed to move staged file $p")
-        fileMetaIndex.put(name, VersionedTable.FileMeta(len, cnt))
+        log.fileMetaIndex.put(name, VersionedTable.FileMeta(len, cnt))
         name -> footer
     }
     fs.delete(stageDir, true)
@@ -954,7 +438,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   def snapshotStatsAt(version: Int)
       : (Seq[String], Map[String, Map[String, FileStats.ColStats]]) = {
     val c = readCommit(version)
-    (splitDv(c.files)._2, readAllStats())
+    (splitDv(c.files)._2, log.stats.all())
   }
 
   /** The logical→physical column-name overlay at a pinned version
@@ -976,13 +460,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   // selective predicate on a 100 TB table into a megabyte-scale read
   // (row-group pushdown still applies inside surviving files).
 
-  // Nonce-suffixed so two writers racing for one version never collide
-  // on the sidecar either; stats lines are keyed by (globally unique)
-  // file name, so a loser's sidecar describes only orphan files and is
-  // simply never consulted.
-  private def statsFile(v: Int, nonce: String) =
-    new Path(logDir, f"v$v%08d-$nonce-stats.jsonl")
-
   private def writeStats(names: Seq[String], v: Int, nonce: String,
       footers: Seq[(String, org.apache.parquet.hadoop.metadata.ParquetMetadata)] = Nil,
       schema: Option[StructType] = None): Unit = try {
@@ -1000,9 +477,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       FileStats.collect(spark, names.map(n => s"$tablePath/$n")))
     val lines = FileStats.sidecarLines(stats)
     if (lines.isEmpty) return
-    val dir = new Path(logDir)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    writeBody(statsFile(v, nonce), lines.mkString("\n") + "\n")
+    log.stats.write(v, nonce, lines)
   } catch { case e: Throwable =>
     // Stats are an optimization: a failed collection must never fail the
     // commit — files without stats are simply never pruned.
@@ -1011,9 +486,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   }
 
   // ---- bloom sidecars (r19 — see BloomSidecars' scaladoc) --------------
-
-  private def bloomSidecarFile(v: Int, nonce: String) =
-    new Path(logDir, f"v$v%08d-$nonce-bloom.jsonl")
 
   /** Bloom-indexed columns: the `bloom.columns` table property, else the
     * session conf — empty means the feature is off (the default). */
@@ -1042,10 +514,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val lines = BloomSidecars.collect(spark,
       names.map(n => s"$tablePath/$n"), cols, maxItems, fpp)
     if (lines.isEmpty) return
-    val dir = new Path(logDir)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    writeBody(bloomSidecarFile(v, nonce), lines.sortBy(l => (l._1, l._2))
-      .map { case (f, c, b64) => LogCodec.encodeBloomLine(f, c, b64) }.mkString("\n") + "\n")
+    log.blooms.write(v, nonce, lines.sortBy(l => (l._1, l._2))
+      .map { case (f, c, b64) => LogCodec.encodeBloomLine(f, c, b64) })
   } catch { case e: Throwable =>
     // blooms are an optimization with the stats posture: a failed
     // collection never fails the commit — the files are just never
@@ -1054,49 +524,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       s"(no bloom skipping for its files): ${e.getMessage}")
   }
 
-  /** Sidecar paths at the current head (cached per head, like the
-    * stats snapshot) — the distributed gear hands these straight to a
-    * Spark job without driver-side content reads. */
-  private def bloomSidecars(): Seq[Path] = {
-    val head = latestVersion().getOrElse(-1)
-    bloomPathsSnapshot match {
-      case Some((v, p)) if v == head => return p
-      case _ => ()
-    }
-    val dir = new Path(logDir)
-    val paths =
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).map(_.getPath)
-        .filter(_.getName.matches("v\\d{8}(-[0-9a-f-]+)?-bloom\\.jsonl"))
-        .sortBy(_.getName).toSeq
-    bloomPathsSnapshot = Some((head, paths))
-    paths
-  }
-  @volatile private var bloomPathsSnapshot: Option[(Int, Seq[Path])] = None
-
-  /** Driver-gear view: file → physical col → serialized bloom, parsed
-    * once per sidecar (write-once contract), assembled per head. */
-  private def readAllBlooms(): Map[String, Map[String, Array[Byte]]] = {
-    val head = latestVersion().getOrElse(-1)
-    bloomSnapshot match {
-      case Some((v, m)) if v == head => return m
-      case _ => ()
-    }
-    val assembled = bloomSidecars().flatMap { p =>
-      bloomCache.getOrElseUpdate(p.getName, {
-        val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
-        val lines = try src.getLines().toList finally src.close()
-        lines.flatMap(LogCodec.decodeBloomLine)
-      })
-    }.groupBy(_._1).map { case (f, seq) =>
-      f -> seq.map(t => t._2 -> t._3).toMap }
-    bloomSnapshot = Some((head, assembled))
-    assembled
-  }
-  private val bloomCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(String, String, Array[Byte])]]
-  @volatile private var bloomSnapshot:
-      Option[(Int, Map[String, Map[String, Array[Byte]]])] = None
   private val bloomDeserCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), org.apache.spark.util.sketch.BloomFilter]
 
@@ -1115,7 +542,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val enabled = spark.conf.getOption("spark.graft.lake.bloom.enabled")
       .forall(_.trim.equalsIgnoreCase("true"))
     if (!enabled) return files
-    val sidecars = bloomSidecars()
+    val sidecars = log.blooms.paths()
     if (sidecars.isEmpty) return files
     val terms = BloomSidecars.pointTerms(resolved, schema,
       schema.fieldNames.toSet)
@@ -1124,7 +551,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       .getOption("spark.graft.lake.bloom.driverMaxFiles")
       .map(_.trim.toInt).getOrElse(4096)
     if (files.size <= driverMax) {
-      val blooms = readAllBlooms()
+      val blooms = log.blooms.all()
       files.filter { f =>
         blooms.get(f).forall { byPhys =>
           val logical = byPhys.collect {
@@ -1145,51 +572,6 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       files.filterNot(dropped)
     }
   }
-
-  /** All stats lines across every sidecar, keyed file → column → stats.
-    * O(total files ever committed) driver-side metadata — the same order
-    * as the commit records themselves.
-    *
-    * CACHED per head version (r17): a filtered read used to re-list and
-    * re-parse EVERY sidecar — an O(commits) planning pass per query that
-    * dwarfed the scan on a long-lived table. Sidecars are write-once
-    * (nonce names, immutable content), so per-sidecar parses cache
-    * forever; the assembled map caches against the head version and a
-    * repeat read of an unchanged table costs ZERO log-dir listings
-    * (the head probe itself is the O(1) pointer path). A racing
-    * writer's new sidecar always lands before its commit, so observing
-    * the new head version strictly implies the refresh sees it. */
-  private def readAllStats(): Map[String, Map[String, FileStats.ColStats]] = {
-    val head = latestVersion().getOrElse(-1)
-    statsSnapshot match {
-      case Some((v, m)) if v == head => return m
-      case _ => ()
-    }
-    val dir = new Path(logDir)
-    if (!fs.exists(dir)) return Map.empty
-    // Nonce-less pattern accepted too: sidecars written by the pre-nonce
-    // staging format must keep contributing stats after an upgrade.
-    val sidecars = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.matches("v\\d{8}(-[0-9a-f-]+)?-stats\\.jsonl")).sortBy(_.getName)
-    val assembled = sidecars.toSeq.flatMap { p =>
-      sidecarCache.getOrElseUpdate(p.getName, {
-        val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
-        val lines = try src.getLines().toList finally src.close()
-        lines.flatMap(LogCodec.decodeStatsLine)
-      })
-    }.groupBy(_._1).map { case (f, seq) =>
-      f -> seq.map(t => t._2 -> t._3).toMap
-    }
-    statsSnapshot = Some((head, assembled))
-    assembled
-  }
-
-  /** Write-once sidecar parses (by name) + the assembled map pinned to
-    * the head version it was built at. */
-  private val sidecarCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(String, String, FileStats.ColStats)]]
-  @volatile private var statsSnapshot:
-      Option[(Int, Map[String, Map[String, FileStats.ColStats]])] = None
 
   /** The user's Column resolved against the snapshot schema: analyzing a
     * dummy Filter turns the ColumnNode tree into catalyst expressions
@@ -1219,7 +601,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
                            colMap: Map[String, String] = Map.empty,
                            droppedPhys: Seq[String] = Nil,
                            alias: String = null): Seq[String] = {
-    val stats = readAllStats()
+    val stats = log.stats.all()
     val e = resolvedPredicate(predicate, StructType.fromDDL(schemaDdl), alias)
     // stats sidecars are keyed by the PHYSICAL (in-file) column names;
     // the predicate references logical names — remap before matching so
@@ -1319,7 +701,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
             map.getOrElse(k, k))))
     }
     if (constrained.isEmpty) return data
-    val stats = readAllStats()
+    val stats = log.stats.all()
     val (scoped, always) = data.partition { f =>
       stats.get(f).exists(st => constrained.forall { case (_, _, p) =>
         !dead(p) && st.contains(p) })
@@ -1493,7 +875,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         StructField("rows", org.apache.spark.sql.types.LongType, nullable = false),
         StructField("bytes", org.apache.spark.sql.types.LongType, nullable = false)))
     val (dvs, data) = splitDv(c.files)
-    val stats = readAllStats()
+    val stats = log.stats.all()
     val meta = snapshotFileMeta(Some(v))
     // one EXTERNAL-value tuple per file, or a metadata miss
     def tupleOf(f: String): Option[(Seq[Any], Long, Long)] = for {
@@ -1553,7 +935,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   def snapshotDataFiles(version: Option[Int] = None): Seq[String] = {
     val v = version.orElse(latestVersion())
       .getOrElse(sys.error(s"no committed versions at $tablePath"))
-    version.foreach(checkVacuumHorizon(_, "time travel to"))
+    version.foreach(log.checkVacuumHorizon(_, "time travel to"))
     splitDv(readCommit(v).files)._2.sorted
   }
 
@@ -1566,7 +948,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
                         version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion())
       .getOrElse(sys.error(s"no committed versions at $tablePath"))
-    version.foreach(checkVacuumHorizon(_, "time travel to"))
+    version.foreach(log.checkVacuumHorizon(_, "time travel to"))
     scan(readCommit(v), Some(dataFiles))
   }
 
@@ -1575,7 +957,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * snapshot v−1, so a feed can start no earlier than the vacuum
     * horizon + 1. Returns 0 when no stranding vacuum ever ran. */
   def changeFeedFloor(): Int = {
-    val h = vacuumHorizon()
+    val h = log.vacuumHorizon()
     if (h > 0) h + 1 else 0
   }
 
@@ -1583,7 +965,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * log-record metadata, the streaming source's admission-control
     * unit for bounding a backlog's micro-batches. */
   def commitChangedFileCount(v: Int): Int = {
-    val d = readDelta(v)
+    val d = log.record(v)
     d.add.size + d.remove.size
   }
 
@@ -1594,12 +976,12 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * budget built on this is exact for new-format logs and a lower
     * bound on legacy ones — admission control, never correctness. */
   def commitChangedBytes(v: Int): Long = {
-    val d = readDelta(v)
+    val d = log.record(v)
     val added = d.addMeta.valuesIterator.map(m => math.max(0L, m.size)).sum
     val removed =
       if (d.remove.isEmpty || d.full) 0L
       else {
-        val prevMeta = resolveSnap(v - 1).meta
+        val prevMeta = log.resolveSnap(v - 1).meta
         d.remove.iterator.flatMap(prevMeta.get).map(m => math.max(0L, m.size)).sum
       }
     added + removed
@@ -1630,7 +1012,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   /** The current constraint set (name → SQL expression). Carried in
     * full on every commit record, so this is one record read. */
   def constraints(): Seq[(String, String)] =
-    latestVersion().map(v => readDelta(v).constraints).getOrElse(Nil)
+    latestVersion().map(v => log.record(v).constraints).getOrElse(Nil)
 
   /** Enforce `cs` on `df`: SQL CHECK semantics — a row violates only
     * when the expression evaluates to FALSE (null passes). ALL
@@ -1863,10 +1245,15 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * the batch, and the replay commits nothing instead of
     * double-applying the deltas. */
   def commitOverwriteIdempotent(df: DataFrame, appId: String,
-                                batchId: Long): Option[Int] = {
+                                batchId: Long): Option[Int] =
+    fenced(appId, batchId)(Some(overwriteWithTxn(df, appId, batchId)))
+
+  /** The setTransaction ledger fence every idempotent writer runs first:
+    * None when `appId` already committed a batch id ≥ `batchId`, else
+    * `write`'s result. */
+  private def fenced(appId: String, batchId: Long)(write: => Option[Int]): Option[Int] = {
     require(appId.nonEmpty, "appId must be non-empty")
-    if (lastCommittedBatch(appId).exists(_ >= batchId)) None
-    else Some(overwriteWithTxn(df, appId, batchId))
+    if (lastCommittedBatch(appId).exists(_ >= batchId)) None else write
   }
 
   private def overwriteWithTxn(df: DataFrame, txnApp: String, txnVer: Long,
@@ -1885,7 +1272,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val v = nextVersion
     val files = stage(df, v, pcols = pcols)
     // footer-exact row count — no second evaluation of the input
-    writeCommit(Commit(v, "overwrite", files, df.schema.toDDL,
+    log.writeCommit(Commit(v, "overwrite", files, df.schema.toDDL,
       fileRows(files), System.currentTimeMillis(),
       txnApp = txnApp, txnVer = txnVer,
       constraints = prevCons, pcols = pcols, props = props))
@@ -1942,9 +1329,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   def convertFromParquet(): Int = {
     latestVersion() match {
       case Some(head) =>
-        if (readDelta(0).action == "convert") return head
+        if (log.record(0).action == "convert") return head
         sys.error(s"convertFromParquet: $tablePath is already a " +
-          s"graft-lake table (v0 action '${readDelta(0).action}')")
+          s"graft-lake table (v0 action '${log.record(0).action}')")
       case None => ()
     }
     val root = new Path(tablePath)
@@ -1989,7 +1376,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // sidecar BEFORE the commit record (the stats write-ordering
     // protocol): a reader observing v0 always finds its stats
     writeStats(names, 0, nonce)
-    writeCommit(Commit(0, "convert", names, schema.toDDL,
+    log.writeCommit(Commit(0, "convert", names, schema.toDDL,
       counted.map(_._3).sum, System.currentTimeMillis()), metaHint = meta)
     0
   }
@@ -2047,13 +1434,13 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
 
   /** The table's partition columns (empty when unpartitioned). */
   def partitionColumns(): Seq[String] =
-    latestVersion().map(readDelta(_).pcols).getOrElse(Nil)
+    latestVersion().map(log.record(_).pcols).getOrElse(Nil)
 
   /** Partition columns AT a pinned version — what a snapshot-pinned
     * consumer (the file index) must use; partitioning is fixed at
     * creation, but the pin keeps the no-re-resolve discipline. */
   def partitionColumnsAt(version: Int): Seq[String] =
-    readDelta(version).pcols
+    log.record(version).pcols
 
   /** Per-file partition-value tuples of the snapshot at `version`, in
     * CATALYST INTERNAL form, recovered from the stats layer: the
@@ -2081,7 +1468,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // data schema — keep the flat path for that degenerate shape
     if (fields.size == schema.size) return None
     val (_, data) = splitDv(c.files)
-    val stats = readAllStats()
+    val stats = log.stats.all()
     // pcols can never be renamed/dropped (DDL guards), so the stats key
     // is the logical name
     def tupleOf(f: String): Option[org.apache.spark.sql.catalyst.InternalRow] =
@@ -2117,7 +1504,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   /** Table properties (TBLPROPERTIES) at the head — definition
     * metadata carried on every commit record. */
   def properties(): Seq[(String, String)] =
-    latestVersion().map(readDelta(_).props).getOrElse(Nil)
+    latestVersion().map(log.record(_).props).getOrElse(Nil)
 
   /** Set (upsert) table properties as a metadata-only commit. Same
     * no-rebase rule as constraints: racing definition changes abort. */
@@ -2156,11 +1543,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   /** Idempotent [[replacePartitions]] keyed (`appId`, `batchId`) in the
     * streaming/refresh txn ledger. */
   def replacePartitionsIdempotent(df: DataFrame, appId: String,
-                                  batchId: Long): Option[Int] = {
-    require(appId.nonEmpty, "appId must be non-empty")
-    if (lastCommittedBatch(appId).exists(_ >= batchId)) None
-    else replacePartitionsTxn(df, appId, batchId)
-  }
+                                  batchId: Long): Option[Int] =
+    fenced(appId, batchId)(replacePartitionsTxn(df, appId, batchId))
 
   private def replacePartitionsTxn(df: DataFrame, txnApp: String,
                                    txnVer: Long): Option[Int] = {
@@ -2222,11 +1606,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     */
   def commitAppendIdempotent(df: DataFrame, appId: String, batchId: Long,
                              allowNewColumns: Boolean = false,
-                             maxRetries: Int = 10): Option[Int] = {
-    require(appId.nonEmpty, "appId must be non-empty")
-    if (lastCommittedBatch(appId).exists(_ >= batchId)) None
-    else appendWithTxn(df, allowNewColumns, maxRetries, appId, batchId)
-  }
+                             maxRetries: Int = 10): Option[Int] =
+    fenced(appId, batchId)(appendWithTxn(df, allowNewColumns, maxRetries, appId, batchId))
 
   /** [[commitAppendIdempotent]] for an incremental applier that must
     * not record an empty batch: stages `df` once and commits nothing
@@ -2248,7 +1629,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   def lastCommittedBatch(appId: String): Option[Long] = {
     var v = latestVersion().getOrElse(-1)
     while (v >= 0) {
-      val d = readDelta(v)
+      val d = log.record(v)
       if (d.txnApp == appId) return Some(d.txnVer)
       v -= 1
     }
@@ -2342,7 +1723,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
             s"v${prevCommit.map(_.version).getOrElse(-1)} — staged files " +
             s"bind to the old physical layout; re-run the append")
         try {
-          writeCommit(Commit(v, "append",
+          log.writeCommit(Commit(v, "append",
             prevCommit.map(_.files).getOrElse(Seq.empty) ++ files, schema,
             prevCommit.map(_.rows).getOrElse(0L) + rows,
             System.currentTimeMillis(), txnApp, txnVer,
@@ -2369,7 +1750,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   }
 
   /** Exact row count of `files`: the per-file meta staging and the log
-    * recorded ([[fileMetaIndex]]), else the parquet footers — O(files)
+    * recorded ([[LakeLog.fileMetaIndex]]), else the parquet footers — O(files)
     * metadata reads, zero data scanned. Footers open in parallel: on an
     * object store each open is a remote round-trip, and a many-file
     * append paying them serially on the driver would undo the win over
@@ -2378,7 +1759,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     import scala.collection.parallel.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     files.par.map { f =>
-      fileMetaIndex.get(f).map(_.rows).filter(_ >= 0).getOrElse {
+      log.fileMetaIndex.get(f).map(_.rows).filter(_ >= 0).getOrElse {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
           .fromPath(new Path(s"$tablePath/$f"), conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -2395,7 +1776,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   def read(version: Option[Int] = None): DataFrame = {
     val v = version.orElse(latestVersion())
       .getOrElse(sys.error(s"no committed versions at $tablePath"))
-    version.foreach(checkVacuumHorizon(_, "time travel to"))
+    version.foreach(log.checkVacuumHorizon(_, "time travel to"))
     scan(readCommit(v))
   }
 
@@ -2407,7 +1788,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * monotonicity (O(history) log-record reads, the same order as
     * `versions()` itself). None if the table didn't exist yet. */
   def versionAt(tsMillis: Long): Option[Int] =
-    versions().filter(v => readDelta(v).ts <= tsMillis) match {
+    versions().filter(v => log.record(v).ts <= tsMillis) match {
       case Seq() => None
       case vs    => Some(vs.max)
     }
@@ -2419,7 +1800,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     read(Some(versionAt(tsMillis).getOrElse(sys.error(
       s"no version committed at or before timestamp $tsMillis at " +
         s"$tablePath (earliest commit: ${versions().headOption
-          .map(v => readDelta(v).ts).getOrElse(-1L)})"))))
+          .map(v => log.record(v).ts).getOrElse(-1L)})"))))
 
   /** Insert-only merge (delta-rs `when_not_matched_insert_all`): source
     * rows whose keys exist in the snapshot are dropped, the rest append
@@ -2466,7 +1847,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     var ins = false
     var del = false
     ((fromVersion + 1) to toVersion).foreach { v =>
-      val d = readDelta(v)
+      val d = log.record(v)
       if (d.dvTargets.nonEmpty) {
         del = true
         if (d.add.exists(n => !isDv(n))) ins = true
@@ -2483,14 +1864,14 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // Reading version v's changes touches its removed files, which live
     // in snapshot v-1 — so the whole range needs fromVersion at or above
     // the vacuum horizon (h <= 0 means no stranding vacuum ever ran).
-    val h = vacuumHorizon()
+    val h = log.vacuumHorizon()
     if (h > 0 && fromVersion < h) sys.error(
       s"change feed from version $fromVersion is below the vacuum horizon " +
         s"v$h — replaced files of vacuumed versions are gone; earliest " +
         s"readable change range starts at v$h")
     val batches = ((fromVersion + 1) to toVersion).flatMap { v =>
       // The incremental log IS the change record: no snapshot diffing.
-      val d = readDelta(v)
+      val d = log.record(v)
       // change rows surface under version v's LOGICAL schema (post-
       // rename names — Delta CDF behavior); physical names are stable
       // across renames, so v's map applies to files of any age
@@ -2508,7 +1889,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // the statuses (a handle that has not seen a file yet learns its
       // meta by resolving the snapshot holding it — no status probes)
       def logRead(names: Seq[String], rec: LogCodec.CommitRecord, at: Int): DataFrame = {
-        if (!names.forall(fileMetaIndex.contains)) resolveSnap(at)
+        if (!names.forall(log.fileMetaIndex.contains)) log.resolveSnap(at)
         readFiles(names, physReadSchema(rec.schemaDdl, rec.colMap.toMap))
       }
       def tagged(names: Seq[String], v: Int, change: String): DataFrame =
@@ -2542,8 +1923,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // vectors are snapshot v-1's, so the overlay is keyed by v-1, and
       // the replaced files are read under v-1's physical schema.
       def replaced = {
-        val prevDvs = resolveFiles(v - 1).filter(isDv)
-        aligned(dvOverlay(logRead(removed.filterNot(isDv), readDelta(v - 1), v - 1),
+        val prevDvs = log.resolveSnap(v - 1).files.filter(isDv)
+        aligned(dvOverlay(logRead(removed.filterNot(isDv), log.record(v - 1), v - 1),
           prevDvs, v - 1))
       }
       (added.nonEmpty, removed.nonEmpty) match {
@@ -2633,7 +2014,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // every pruned read, mutation pre-scan, and DV overlay. Legacy
     // pre-meta files fall back.
     val metas = names.flatMap(n =>
-      fileMetaIndex.get(n).filter(_.size >= 0).map(n -> _))
+      log.fileMetaIndex.get(n).filter(_.size >= 0).map(n -> _))
     if (metas.size == names.size)
       org.apache.spark.sql.graft.GraftFileIndex.subsetRead(
         spark, tablePath, metas, schema)
@@ -2670,7 +2051,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           s"definitions that landed in between were never validated against " +
           s"the new set; re-run against the fresh snapshot")
     ((base.version + 1) to head).foreach { v =>
-      val d = readDelta(v)
+      val d = log.record(v)
       if (d.full || d.action == "overwrite") sys.error(
         s"rewrite conflict: this $action (based on v${base.version}) lost " +
           s"to racing commit v$v (${d.action}), which replaced the whole " +
@@ -2731,7 +2112,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     while (true) {
       val headC = rebaseTarget(action, base, readSet, onDvOverlap)
       try {
-        writeCommit(Commit(headC.version + 1, action, mkFiles(headC),
+        log.writeCommit(Commit(headC.version + 1, action, mkFiles(headC),
           if (schemaDdlOverride == null) base.schemaDdl else schemaDdlOverride,
           mkRows(headC), System.currentTimeMillis(),
           txnApp = txnApp, txnVer = txnVer,
@@ -3199,11 +2580,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * Gold refresh is the canonical caller). */
   def replaceWhereIdempotent(predicate: org.apache.spark.sql.Column,
                              df: DataFrame, appId: String,
-                             batchId: Long): Option[Int] = {
-    require(appId.nonEmpty, "appId must be non-empty")
-    if (lastCommittedBatch(appId).exists(_ >= batchId)) None
-    else replaceWhereTxn(predicate, df, appId, batchId)
-  }
+                             batchId: Long): Option[Int] =
+    fenced(appId, batchId)(replaceWhereTxn(predicate, df, appId, batchId))
 
   /** None only when the degenerate-append path was zombie-fenced by a
     * racing instance that already committed this (txnApp, txnVer) —
@@ -3268,11 +2646,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * setTransaction ledger as every streaming/refresh writer: a replay
     * with a batch id the ledger already covers commits nothing. */
   def replaceFilesIdempotent(replaced: Seq[String], df: DataFrame,
-                             appId: String, batchId: Long): Option[Int] = {
-    require(appId.nonEmpty, "appId must be non-empty")
-    if (lastCommittedBatch(appId).exists(_ >= batchId)) None
-    else Some(replaceFilesTxn(replaced, df, appId, batchId))
-  }
+                             appId: String, batchId: Long): Option[Int] =
+    fenced(appId, batchId)(Some(replaceFilesTxn(replaced, df, appId, batchId)))
 
   private def replaceFilesTxn(replaced: Seq[String], df: DataFrame,
                               txnApp: String, txnVer: Long): Int = {
@@ -3369,7 +2744,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   def restore(version: Int): Int = {
     require(versions().contains(version),
       s"restore: version $version does not exist at $tablePath")
-    checkVacuumHorizon(version, "restore of")
+    log.checkVacuumHorizon(version, "restore of")
     val c = readCommit(version)
     val missing = c.files.filterNot(f => fs.exists(new Path(s"$tablePath/$f")))
     if (missing.nonEmpty) sys.error(
@@ -3387,11 +2762,11 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // the restored version's column mapping travels with its files;
     // droppedPhys accumulates BOTH histories so a later evolution can
     // never re-bind a physical name that lives in either file set
-    val curDropped = latestVersion().map(readDelta(_).droppedPhys).getOrElse(Nil)
+    val curDropped = latestVersion().map(log.record(_).droppedPhys).getOrElse(Nil)
     // re-referenced files carry their ORIGINAL recorded meta forward —
     // the restored version's snapshot map has it, so the restore commit
     // stays status-probe-free
-    writeCommit(Commit(v, "restore", c.files, c.schemaDdl, c.rows,
+    log.writeCommit(Commit(v, "restore", c.files, c.schemaDdl, c.rows,
       System.currentTimeMillis(), constraints = cons,
       colMap = c.colMap,
       droppedPhys = (curDropped ++ c.droppedPhys).distinct,
@@ -3399,7 +2774,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // properties are current DEFINITION — they survive the rollback
       // like constraints do
       pcols = c.pcols, props = properties()),
-      metaHint = resolveSnap(version).meta)
+      metaHint = log.resolveSnap(version).meta)
     v
   }
 
@@ -3450,7 +2825,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       .flatMap(readCommit(_).files).toSet
     keep.headOption
       .filter(_ => keep.size < vs.size && droppedRefs.exists(deletedNames))
-      .foreach(writeVacuumHorizon)
+      .foreach(log.writeVacuumHorizon)
     deletable.length
   }
 

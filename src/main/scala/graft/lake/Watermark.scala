@@ -1,7 +1,7 @@
 package graft.lake
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 /** S1–S3: the reference's incremental-extraction watermark
   * (`metadata_ingestion.json`; read `/root/reference/main.py:19-38`,
@@ -43,11 +43,8 @@ final class Watermark(path: String) {
 
   /** S3: upsert one table's last_value, atomically (temp file + move). */
   def update(table: String, entry: WatermarkEntry): Unit = {
-    val json = LogCodec.encodeWatermarks(readAll() + (table -> entry))
-    val tmp = Paths.get(path + ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(path), StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
+    LakeLog.replaceLocal(Paths.get(path),
+      LogCodec.encodeWatermarks(readAll() + (table -> entry)))
   }
 
   /** Batch high-water-mark predicate: `col > last_value` as a SQL string

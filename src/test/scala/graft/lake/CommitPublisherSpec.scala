@@ -190,6 +190,8 @@ class CommitPublisherSpec extends AnyFunSuite {
       val leftover = fs.listStatus(new Path(t.tablePath, "_graft_log"))
         .map(_.getPath.getName).filter(_.startsWith(".arbiter-"))
       assert(leftover.isEmpty, s"arbiter entries left: ${leftover.toSeq}")
+      // every checkpoint holds what a cold replay of records 0..v holds
+      assert(LakeLogSpec.checkpointsVsReplay(fs, t.tablePath) == ((Seq(10, 20), Nil)))
     } finally s.conf.unset("spark.graft.lake.commitPublisher")
   }
 

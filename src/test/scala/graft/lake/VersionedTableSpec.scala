@@ -108,12 +108,12 @@ class VersionedTableSpec extends AnyFunSuite {
     val t = freshTable()
     t.commitOverwrite(Seq((1L, "a")).toDF("id", "v"))
     // a racing writer won version 1 first
-    val winner = t.Commit(1, "append", Seq("v00000001-part-00000.parquet"),
+    val winner = LakeLog.Commit(1, "append", Seq("v00000001-part-00000.parquet"),
       "id BIGINT, v STRING", 2L, 0L)
-    t.writeCommit(winner)
+    t.log.writeCommit(winner)
     // the slow writer tries to commit the same version
     val err = intercept[RuntimeException] {
-      t.writeCommit(t.Commit(1, "overwrite", Seq.empty, "id BIGINT", 0L, 1L))
+      t.log.writeCommit(LakeLog.Commit(1, "overwrite", Seq.empty, "id BIGINT", 0L, 1L))
     }
     assert(err.getMessage.contains("concurrent commit conflict"))
     // the winner's record is untouched and the chain continues past it
@@ -245,26 +245,26 @@ class VersionedTableSpec extends AnyFunSuite {
     (1 until 100).foreach(i => t.commitAppend(Seq((i.toLong, i.toLong)).toDF("id", "x")))
     assert(t.versions().size == 100)
     // checkpoints landed on the interval grid
-    assert(t.checkpointVersions() == (10 to 90 by 10).toSeq)
+    assert(t.log.checkpointVersions() == (10 to 90 by 10).toSeq)
     // cold-handle resolution of the head reads ONE checkpoint + ≤interval tail records
-    val (ckpt, tail) = t.resolutionCost(99)
+    val (ckpt, tail) = t.log.resolutionCost(99)
     assert(ckpt.contains(90) && tail <= 10, s"resolution used ckpt=$ckpt tail=$tail")
     // a fresh handle (no cache) reads the full snapshot correctly
     val reopened = VersionedTable(spark, t.tablePath, checkpointInterval = 10)
     assert(reopened.read().count() == 100)
     assert(reopened.read().agg(sum($"x")).as[Long].head() == (0L until 100L).sum)
     // time travel BEFORE the first checkpoint replays only pre-checkpoint deltas
-    assert(reopened.resolutionCost(7) == ((None, 8)))
+    assert(reopened.log.resolutionCost(7) == ((None, 8)))
     assert(reopened.read(Some(7)).count() == 8)
     // time travel BETWEEN checkpoints resolves from the nearest one below
-    assert(reopened.resolutionCost(55)._1.contains(50))
+    assert(reopened.log.resolutionCost(55)._1.contains(50))
     assert(reopened.read(Some(55)).count() == 56)
     // vacuum never touches the log: checkpoint + tail resolution of the
     // retained versions survives, and the horizon still applies to data.
     // (The append-only chain keeps every file referenced, so compact
     // first — v100 rewrites all 100 files and orphans the originals.)
     assert(reopened.optimize(targetRowsPerFile = 1000) == 100)
-    assert(reopened.checkpointVersions() == (10 to 100 by 10).toSeq)
+    assert(reopened.log.checkpointVersions() == (10 to 100 by 10).toSeq)
     val deleted = reopened.vacuum(retainVersions = 1, minAgeMs = 0L)
     assert(deleted >= 90)
     assert(reopened.read().count() == 100)
@@ -281,29 +281,29 @@ class VersionedTableSpec extends AnyFunSuite {
     // commits the table has accumulated.
     val reopened = VersionedTable(spark, t.tablePath, checkpointInterval = 10)
     assert(reopened.latestVersion().contains(59))
-    assert(reopened.pointerServes(59), "pointer must serve the latest snapshot")
-    assert(reopened.resolutionCost(59) == ((Some(50), 9)))
+    assert(reopened.log.pointerServes(59), "pointer must serve the latest snapshot")
+    assert(reopened.log.resolutionCost(59) == ((Some(50), 9)))
     assert(reopened.read().count() == 60)
     // Time travel far behind the pointer is NOT pointer-served — it
     // falls back to the listing and still resolves from the right base.
-    assert(!reopened.pointerServes(25))
-    assert(reopened.resolutionCost(25)._1.contains(20))
+    assert(!reopened.log.pointerServes(25))
+    assert(reopened.log.resolutionCost(25)._1.contains(20))
     assert(reopened.read(Some(25)).count() == 26)
     // Pointer LOSS: delete the file — correctness unaffected, resolution
     // degrades to the directory listing.
     val ptr = java.nio.file.Paths.get(t.tablePath, "_graft_log", "_last_checkpoint")
     java.nio.file.Files.delete(ptr)
     val lost = VersionedTable(spark, t.tablePath, checkpointInterval = 10)
-    assert(!lost.pointerServes(59))
-    assert(lost.resolutionCost(59)._1.contains(50))
+    assert(!lost.log.pointerServes(59))
+    assert(lost.log.resolutionCost(59)._1.contains(50))
     assert(lost.read().count() == 60)
     // The next checkpoint boundary rewrites the pointer.
     lost.commitAppend(Seq((60L, 60L)).toDF("id", "x"))
-    assert(lost.pointerServes(60))
+    assert(lost.log.pointerServes(60))
     // Pointer TEAR: garbage content is ignored (fallback), never fatal.
     java.nio.file.Files.write(ptr, "{\"ver".getBytes("UTF-8"))
     val torn = VersionedTable(spark, t.tablePath, checkpointInterval = 10)
-    assert(!torn.pointerServes(60))
+    assert(!torn.log.pointerServes(60))
     assert(torn.read().count() == 61)
   }
 
@@ -907,7 +907,8 @@ class VersionedTableSpec extends AnyFunSuite {
     val results = new java.util.concurrent.ConcurrentHashMap[Int, Either[Throwable, Int]]()
     val threads = (1 to n).map { i =>
       val th = new Thread(() => {
-        val h = VersionedTable(spark, path)
+        // interval 2: the race lands checkpoints for the replay check
+        val h = VersionedTable(spark, path, checkpointInterval = 2)
         latch.await()
         results.put(i,
           try Right(h.commitAppend(Seq((i.toLong, s"w$i")).toDF("id", "v")))
@@ -928,6 +929,9 @@ class VersionedTableSpec extends AnyFunSuite {
       (0L to n.toLong))
     // cumulative row accounting survived every rebase (1 base + n appends)
     assert(t.history().last._3 == (n + 1).toLong)
+    // every checkpoint holds what a cold replay of records 0..v holds
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(LakeLogSpec.checkpointsVsReplay(fs, path) == ((Seq(2, 4, 6, 8), Nil)))
   }
 
   test("delete and append race end-to-end through the public API: both always land") {
