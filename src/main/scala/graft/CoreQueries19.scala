@@ -112,9 +112,9 @@ object CoreQueries19 {
       t.update(col("c_mktsegment") === "AUTOMOBILE" && col("c_acctbal") > 9000,
         Map("c_mktsegment" -> lit("LUXURY")))                             // v4
       t.optimize(targetRowsPerFile = 100000)                              // v5
-      // ledger proof the MoR commits rewrote nothing: each delete-dv
-      // added exactly ONE file (the vector) and removed none, and the
-      // update-dv only ADDED (vector + new images)
+      // proof the MoR commits rewrote nothing: each delete-dv added
+      // vector files only (one per marking task) and kept every data
+      // file, and the update-dv kept them all and ADDED new images
       val ledger = t.historyDF().orderBy("version")
         .select("action", "n_files").collect()
         .map(r => (r.getString(0), r.getInt(1))).toSeq
@@ -122,8 +122,10 @@ object CoreQueries19 {
       if (actions != Seq("overwrite", "delete-dv", "delete-dv", "update-dv",
           "update", "optimize"))
         sys.error(s"q_lake_dv: unexpected commit chain $actions")
-      if (ledger(1)._2 != ledger(0)._2 + 1 || ledger(2)._2 != ledger(0)._2 + 2 ||
-          ledger(3)._2 <= ledger(2)._2 + 1)
+      val data = (0 to 3).map(v => t.snapshotDataFiles(Some(v)).toSet)
+      if (data(1) != data(0) || data(2) != data(0) ||
+          !data(0).subsetOf(data(3)) || data(3).size <= data(0).size ||
+          ledger(1)._2 <= ledger(0)._2 || ledger(2)._2 <= ledger(1)._2)
         sys.error(s"q_lake_dv: MoR commit rewrote data files: $ledger")
       t.read()
         .select(col("c_custkey"), col("c_mktsegment").as("segment"),

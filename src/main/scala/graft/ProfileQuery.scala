@@ -19,6 +19,11 @@ import org.apache.spark.sql.SparkSession
   * submission order with the gaps (driver-side work between jobs —
   * planning, footer reads, renames, checkpoint writes) made explicit,
   * because at commit-heavy shapes the DRIVER gaps are often the cost.
+  *
+  * Beside each run's time it prints the generated classes that run
+  * compiled (Spark's codegen compilation count): the cold run's count
+  * is the query's plan bodies, and a warm run that still compiles
+  * classes re-plans a shape per run or overflows Spark's code cache.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
@@ -72,22 +77,28 @@ object ProfileQuery {
     })
 
     val all = SparkEntry.queries
+    def compiled(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     names.foreach { n =>
       require(all.contains(n), s"unknown query $n")
+      val c0 = compiled()
       val t0Cold = System.nanoTime()
       all(n)(spark, sfDir).count()
       val cold = (System.nanoTime() - t0Cold) / 1e9
+      val coldClasses = compiled() - c0
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       jobs.clear(); stageToJob.clear(); order.clear()
+      val c1 = compiled()
       val t0 = System.nanoTime()
       val df = all(n)(spark, sfDir)
       df.count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val warmClasses = compiled() - c1
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       println(f"\n===== $n cold=${cold}%.3f s  warm=${wall}%.3f s  " +
-        f"jobs=${jobs.size} =====")
+        f"jobs=${jobs.size}  classes compiled cold=$coldClasses warm=$warmClasses =====")
       import scala.jdk.CollectionConverters._
       var prevEnd = 0L
       var jobSum = 0.0; var gapSum = 0.0

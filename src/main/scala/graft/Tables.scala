@@ -95,12 +95,7 @@ object Tables {
     */
   def statePartitions(s: SparkSession, distinctKeys: => Long): Int =
     s.conf.getOption("spark.graft.stream.statePartitions")
-      .map { raw =>
-        val n = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-          s"spark.graft.stream.statePartitions must be an integer, got '$raw'"))
-        require(n > 0, s"spark.graft.stream.statePartitions must be positive, got '$raw'")
-        n
-      }
+      .map(GraftConf.parseLong("spark.graft.stream.statePartitions", _, 1L, Int.MaxValue).toInt)
       .getOrElse(math.max(1L, math.min(distinctKeys,
         s.sessionState.conf.numShufflePartitions.toLong)).toInt)
 

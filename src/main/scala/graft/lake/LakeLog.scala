@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, StandardCopyOption}
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -175,7 +176,7 @@ private[lake] final class LakeLog(fs: FileSystem, tablePath: String,
       replaceMonotonic(lastCheckpointPath, lastCheckpointVersion().getOrElse(-1),
         version, LogCodec.encodeVersion(version),
         "resolution falls back to log listing")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       scala.util.Try(fs.delete(tmp, false))
       System.err.println(s"[lake] checkpoint write failed at v$version " +
         s"(resolution falls back to more tail records): ${e.getMessage}")
@@ -206,7 +207,7 @@ private[lake] final class LakeLog(fs: FileSystem, tablePath: String,
         fs.delete(dst, false)
         if (!fs.rename(tmp, dst)) fs.delete(tmp, false)
       }
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       scala.util.Try(fs.delete(tmp, false))
       System.err.println(s"[lake] ${dst.getName} write failed ($degrades): ${e.getMessage}")
     }

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * Gold refresh cost is CHANGE-proportional in both directions: the
   * poll reads only the new commits' files, and the state apply reads +
   * rewrites only the FILES holding the batch's touched buckets (the
-  * state is written repartitioned by bucket so every bucket lives in
+  * state is written range-partitioned by bucket so every bucket lives in
   * exactly one file, and file min/max stats prune the replaceWhere
   * pre-scan — Delta's dynamic partition overwrite, expressed through
   * data skipping). The unit of refresh I/O is therefore the FILE, and
@@ -50,17 +50,19 @@ import org.apache.spark.sql.functions._
   * Aggregates maintained: n / vsum (avg = vsum/n at read) — plain
   * signed-group algebra — plus vmin / vmax with the standard
   * incremental-view rescan fallback: inserts tighten min/max for free;
-  * a delete that ties-or-beats a group's stored extremum triggers a
-  * recompute of JUST that group from the Silver snapshot at the
-  * consumed version (a keyed semi-join rescan, cost proportional to
-  * the affected groups, never the table).
+  * a delete that ties-or-beats a group's stored extremum makes that
+  * group take its min/max from the Silver snapshot at the consumed
+  * version, read in the same fold for just the buckets a valued delete
+  * reached (cost proportional to those buckets' rows, never the
+  * table).
   *
   * @param goldStateFiles target file count for the Gold state's
-  *   bucket-aligned layout: state writes hash-repartition by bucket
-  *   into this many partitions (EXPLICIT count — AQE would otherwise
-  *   coalesce a small refresh into one file and the next refresh's
-  *   bucket pruning would have nothing to skip). See the sizing
-  *   contract above.
+  *   bucket-aligned layout: state writes range-partition by bucket
+  *   into at most this many partitions, and into one per bucket when
+  *   the written state holds fewer buckets (EXPLICIT count — AQE would
+  *   otherwise coalesce a small refresh into one file and the next
+  *   refresh's bucket pruning would have nothing to skip). See the
+  *   sizing contract above.
   * @param goldRefreshCrossover the hit-file fraction above which a
   *   Gold refresh abandons the FILE-scoped path
   *   ([[VersionedTable.replaceFilesIdempotent]]: read the hit files
@@ -126,7 +128,7 @@ final class Medallion(spark: SparkSession, root: String,
                     keys: Seq[String]): Option[Int] = {
     fastForward(silver, "silver", silverCursor)
     val from = silverCursor.lastProcessed()
-    silverCursor.poll().map { case (changes0, head) =>
+    silverCursor.poll().map { case (changes, head) =>
       val alreadyLanded =
         silver.lastCommittedBatch("silver").exists(_ >= head.toLong)
       if (!alreadyLanded) {
@@ -136,24 +138,41 @@ final class Medallion(spark: SparkSession, root: String,
         // leg's jobs never run (zero cluster round trips for the
         // common append-only sync's delete leg at any scale).
         val (mayIns, mayDel) = silverCursor.table.changeTypesPossible(from, head)
-        val changes = changes0.cache()
-        try {
+        // The two legs read the change feed once each, uncached: the
+        // delete leg's `_change_type` filter prunes the feed's insert
+        // branches at planning. A `cache()` of the feed costs a job and
+        // a columnar build with its own generated classes per refresh,
+        // against a re-read of change-sized files (the refresh measured
+        // 7 jobs and 30 code-cache entries with it, 4 and 20 without).
+        if (mayDel)
+          silver.deleteMoR(clean(changes.filter(col("_change_type") === "delete")
+              .drop("_commit_version", "_change_type"))
+            .select(keys.map(col): _*), keys)
+        if (mayIns) {
+          // When no delete in the range comes after an insert (the
+          // common round: deletes, then the next append), a delete row
+          // can never rank above an insert of its key, so the insert
+          // rows alone net to the same finals and the feed's delete
+          // branches drop out of this leg's plan.
+          val kinds = ((from + 1) to head).map(v =>
+            v -> silverCursor.table.changeTypesPossible(v - 1, v))
+          val lastDel = kinds.collect { case (v, (_, true)) => v }.maxOption
+          val firstIns = kinds.collect { case (v, (true, _)) => v }.minOption
+          val ranked =
+            if (lastDel.forall(d => firstIns.forall(d <= _)))
+              changes.filter(col("_change_type") === "insert")
+            else changes
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(keys.map(col): _*)
             .orderBy(desc("_commit_version"),
               when(col("_change_type") === "insert", 1).otherwise(0).desc)
-          val finals = changes.withColumn("_g_rk", row_number().over(w))
+          val finals = ranked.withColumn("_g_rk", row_number().over(w))
             .filter(col("_g_rk") === 1).drop("_g_rk")
-          if (mayDel)
-            silver.deleteMoR(clean(changes.filter(col("_change_type") === "delete")
-                .drop("_commit_version", "_change_type"))
-              .select(keys.map(col): _*), keys)
-          if (mayIns)
-            silver.appendNonEmptyIdempotent(
-              clean(finals.filter(col("_change_type") === "insert")
-                .drop("_commit_version", "_change_type")),
-              "silver", head.toLong)
-        } finally changes.unpersist()
+          silver.appendNonEmptyIdempotent(
+            clean(finals.filter(col("_change_type") === "insert")
+              .drop("_commit_version", "_change_type")),
+            "silver", head.toLong)
+        }
       }
       silverCursor.advance(head)
       head
@@ -189,34 +208,49 @@ final class Medallion(spark: SparkSession, root: String,
     * else's files survive by identity) and how many groups needed the
     * min/max delete-rescan (0 on insert-only batches).
     *
-    * Algorithm, change-proportional at every step:
-    *  1. batch partials: one keyed aggregation over the polled change
-    *     rows — signed n/vsum, plus insert-side and delete-side min/max;
-    *  2. `touched` = the partials' distinct buckets (an O(touched)
-    *     driver list — the same dynamic-partition-overwrite accounting
-    *     Delta does);
-    *  3. prior state from ONLY the files whose stats intersect those
-    *     buckets (one read, survivors included — they pass through the
-    *     fold untouched) full-outer-joins the partials: n/vsum fold
-    *     algebraically; min/max tighten from inserts for free, and a
-    *     group whose delete-side extremum ties-or-beats its candidate
-    *     min/max is flagged for rescan — conservative, never wrong: the
-    *     rescan recomputes truth;
-    *  4. flagged groups recompute min/max from the Silver snapshot AS OF
-    *     the consumed version (a broadcast semi-join — cost ∝ affected
-    *     groups' rows, and consistent with the n/vsum fold even if
-    *     Silver has moved past `head` meanwhile);
-    *  5. the new state for the hit files (touched buckets' groups plus
-    *     their file-sharing survivors) lands via
-    *     [[VersionedTable.replaceFilesIdempotent]], repartitioned by
-    *     bucket so the state files stay bucket-aligned for the NEXT
-    *     refresh's pruning. Groups netting to zero drop out; files the
-    *     touched buckets don't reach are never read or rewritten.
+    * Algorithm, change-proportional at every step, in two actions:
+    *  1. batch metadata: the distinct (bucket, a delete there carried a
+    *     non-null value) pairs of the polled change rows, collected
+    *     without a shuffle ([[org.apache.spark.sql.graft.DistinctCollect]])
+    *     from the fold's own change projection, so step 2 reuses its
+    *     generated classes: the touched buckets (an O(touched) driver
+    *     list, the same dynamic-partition-overwrite accounting Delta
+    *     does) and the buckets where a delete carried a value (only
+    *     their groups can ever need a min/max rescan);
+    *  2. one fold, written as the new state: the prior state of ONLY
+    *     the files whose stats intersect the touched buckets (survivors
+    *     included — they pass through the fold untouched), the change
+    *     rows as signed partials, and — when a delete carried a value —
+    *     Silver's rows AS OF the consumed version in those buckets
+    *     (consistent with the n/vsum fold even if Silver has moved past
+    *     `head` meanwhile), all unioned in one row shape, range-
+    *     partitioned by bucket and grouped by (bucket, key). n/vsum
+    *     fold algebraically; min/max tighten from inserts for free, and
+    *     a group whose delete-side extremum ties-or-beats its candidate
+    *     min/max takes its rescanned Silver min/max instead —
+    *     conservative, never wrong. The range partitioning is the
+    *     fold's only shuffle: it keeps every bucket in one state file
+    *     for the NEXT refresh's pruning (each file a contiguous bucket
+    *     range, so its min/max stats prune tightly), writes no empty
+    *     partition when the state holds fewer buckets than
+    *     `goldStateFiles`, and the grouping inherits it. Groups netting
+    *     to zero drop out; files the touched buckets don't reach are
+    *     never read or rewritten. The new state lands via
+    *     [[VersionedTable.replaceFilesIdempotent]], and the rescanned
+    *     group count is an accumulator the same write fills
+    *     ([[org.apache.spark.sql.graft.CountWhere]]; an observed metric
+    *     measured two more generated stages, its node breaking the
+    *     write's whole-stage span).
+    * On the benchmark's medallion round a refresh runs 4 jobs (the
+    * metadata collect, the range partitioner's sample, the fold's map
+    * stage and the write) and compiles 16 generated classes; a cached
+    * partials table, a full outer join with the state and a counted,
+    * cached fold measured 12 jobs and 39 classes.
     */
   def refreshGoldStats(bucket: Column, key: Column,
                        value: Column): Option[GoldRefresh] = {
     fastForward(gold, "gold", goldCursor)
-    goldCursor.poll().map { case (changes0, head) =>
+    goldCursor.poll().map { case (changes, head) =>
       if (gold.lastCommittedBatch("gold").exists(_ >= head.toLong)) {
         // CROSS-PROCESS second chance: the in-process replay window is
         // closed by fastForward above (cursor >= ledger before every
@@ -227,167 +261,142 @@ final class Medallion(spark: SparkSession, root: String,
       } else {
         val isIns = col("_change_type") === "insert"
         val sign = when(isIns, lit(1L)).otherwise(lit(-1L))
-        val parts = changes0
-          .groupBy(bucket.as("bucket"), key.as("key"))
-          .agg(sum(sign).as("_pn"), sum(value * sign).as("_pvsum"),
-            min(when(isIns, value)).as("_ins_min"),
-            max(when(isIns, value)).as("_ins_max"),
-            min(when(not(isIns), value)).as("_del_min"),
-            max(when(not(isIns), value)).as("_del_max"))
-          .cache()
-        try {
-          // one driver round-trip for all the batch metadata: the
-          // touched buckets (collect_set skips nulls — count them
-          // separately), and whether any delete carried a non-null
-          // value (only then can a min/max rescan ever be needed)
-          val meta = parts.agg(
-            collect_set(col("bucket")).as("_bks"),
-            sum(when(col("bucket").isNull, 1L).otherwise(0L)).as("_nullb"),
-            max(col("_del_min").isNotNull || col("_del_max").isNotNull)
-              .as("_mayRescan")).head()
-          val hasNullBucket = !meta.isNullAt(1) && meta.getLong(1) > 0
-          val touched: Seq[Any] = meta.getSeq[Any](0) ++
-            (if (hasNullBucket) Seq(null) else Nil)
-          val mayRescan = !meta.isNullAt(2) && meta.getBoolean(2)
-          if (touched.nonEmpty) {
-            // null-SAFE bucket scope: isin() is null-blind, so a batch
-            // whose bucket expression yields NULL for some rows would
-            // otherwise neither read the prior null-bucket state nor
-            // pass the replaceWhere scope check — wedging the refresh
-            val nonNull = touched.filterNot(_ == null)
-            val inNonNull =
-              if (nonNull.nonEmpty) col("bucket").isin(nonNull: _*) else lit(false)
-            val bucketScope =
-              if (hasNullBucket) inNonNull || col("bucket").isNull
-              else inNonNull
-            val empty = parts.select(col("bucket"), col("key"),
-              col("_pn").as("n"), col("_pvsum").as("vsum"),
-              col("_ins_min").as("vmin"), col("_ins_max").as("vmax")).limit(0)
-            // FILE-granular scope (round 16, was a bucket-scoped
-            // replaceWhere behind a touched ≥ files/2 fallback): ask
-            // the stats layer WHICH state files the touched buckets hit
-            // (O(log metadata)), read those files ONCE — every row,
-            // including survivor buckets that merely share a file with
-            // a touched one: they flow through the fold untouched (no
-            // partial joins to them) and are re-included in the
-            // replacement content — and land via replaceFilesIdempotent,
-            // which swaps exactly those files. One read + one write of
-            // the hit files, where the predicate path (replaceWhere)
-            // paid ~three reads for its pre-scan + kept-rows machinery
-            // (measured 1.5× SLOWER than a full overwrite at
-            // half-the-buckets; the file path measures 0.66–0.79× at a
-            // 62% hit fraction, SCALE.md "Gold refresh goes
-            // FILE-granular", r16). The plain overwrite remains the
-            // fallback when the hit FRACTION crosses
-            // `goldRefreshCrossover` — at that point reading the rest
-            // of the state costs less than the scope bookkeeping.
-            val (hitFiles, totalFiles) = gold.latestVersion() match {
-              case None => (Seq.empty[String], 0)
-              case Some(_) => (gold.candidateFiles(bucketScope),
-                gold.snapshotDataFiles().size)
-            }
-            // STRICT >: at crossover = 1.0 even an every-file hit
-            // stays on the scoped path, matching the "≥ 1 never
-            // falls back" contract above
-            val fullRewrite = totalFiles > 0 &&
-              hitFiles.size > totalFiles * goldRefreshCrossover
-            val cur = gold.latestVersion() match {
-              case None                 => empty
-              case Some(_) if fullRewrite => gold.read()
-              case Some(_)              => gold.readSnapshotFiles(hitFiles)
-            }
-            // NULL-SAFE group join: bucket/key may legitimately be null
-            // (SQL GROUP BY groups nulls), and a plain equi-join would
-            // fail to fold a null group's prior state with its partial
-            val j = cur.as("c").join(parts.as("p"),
-              col("c.bucket") <=> col("p.bucket") &&
-                col("c.key") <=> col("p.key"), "full_outer")
-            val candMin = least(col("c.vmin"), col("p._ins_min"))
-            val candMax = greatest(col("c.vmax"), col("p._ins_max"))
-            // a deleted value that ties-or-beats the candidate extremum
-            // MAY have been the extremum — recompute that group. least/
-            // greatest skip nulls, so insert-only groups never flag.
-            val rescan =
-              (col("p._del_min").isNotNull &&
-                (candMin.isNull || col("p._del_min") <= candMin)) ||
-              (col("p._del_max").isNotNull &&
-                (candMax.isNull || col("p._del_max") >= candMax))
-            val merged = j.select(
-              coalesce(col("c.bucket"), col("p.bucket")).as("bucket"),
-              coalesce(col("c.key"), col("p.key")).as("key"),
-              (coalesce(col("c.n"), lit(0L)) + coalesce(col("p._pn"), lit(0L)))
-                .as("n"),
-              (coalesce(col("c.vsum"), lit(0)) + coalesce(col("p._pvsum"), lit(0)))
-                .as("vsum"),
-              candMin.as("vmin"), candMax.as("vmax"),
-              coalesce(rescan, lit(false)).as("_rescan"))
-              .filter(col("n") > 0)
-            // a rescan is only POSSIBLE when the batch deleted a row
-            // with a non-null value (mayRescan, from the metadata agg) —
-            // insert-only refreshes skip the flagged-count job entirely
-            if (mayRescan) merged.cache()
-            try {
-              val flagged = merged.filter(col("_rescan"))
-                .select("bucket", "key")
-              val nRescan = if (mayRescan) flagged.count() else 0L
-              val state =
-                if (nRescan == 0)
-                  merged.drop("_rescan")
-                else {
-                  // truth for the flagged groups: Silver AS OF the
-                  // consumed version, keyed semi-join (flagged is tiny —
-                  // broadcast), one aggregation over just their rows.
-                  // Null-safe joins throughout: a flagged group's
-                  // bucket/key may be null.
-                  val re = silver.read(Some(head))
-                    .select(bucket.as("bucket"), key.as("key"),
-                      value.as("_v")).as("s")
-                    .join(broadcast(flagged).as("f"),
-                      col("s.bucket") <=> col("f.bucket") &&
-                        col("s.key") <=> col("f.key"), "left_semi")
-                    .groupBy("bucket", "key")
-                    .agg(min("_v").as("_rmin"), max("_v").as("_rmax"))
-                  merged.as("m")
-                    .join(broadcast(re).as("r"),
-                      col("m.bucket") <=> col("r.bucket") &&
-                        col("m.key") <=> col("r.key"), "left_outer")
-                    .select(col("m.bucket").as("bucket"),
-                      col("m.key").as("key"), col("n"), col("vsum"),
-                      when(col("_rescan"), col("_rmin")).otherwise(col("vmin"))
-                        .as("vmin"),
-                      when(col("_rescan"), col("_rmax")).otherwise(col("vmax"))
-                        .as("vmax"))
-                }
-              // bucket-aligned files: the NEXT refresh's stats pruning
-              // depends on each file covering few buckets. The partition
-              // count is bounded by what THIS refresh replaces — k hit
-              // files come back as ~k files (a one-bucket refresh stages
-              // one file, not goldStateFiles mostly-empty shuffle
-              // tasks) — EXCEPT on the full-rewrite path, whose output
-              // is the ENTIRE state and must respect the sizing contract
-              // regardless of how few buckets triggered it
-              val aligned = state.repartition(
-                if (fullRewrite) goldStateFiles
-                else math.max(1, math.min(goldStateFiles,
-                  math.max(touched.size, hitFiles.size))),
-                col("bucket"))
-              gold.latestVersion() match {
-                case None => gold.commitOverwriteIdempotent(
-                  aligned, "gold", head.toLong)
-                case Some(_) if fullRewrite => gold.commitOverwriteIdempotent(
-                  aligned, "gold", head.toLong)
-                case Some(_) => gold.replaceFilesIdempotent(
-                  hitFiles, aligned, "gold", head.toLong)
-              }
-              goldCursor.advance(head)
-              GoldRefresh(head, touched, nRescan)
-            } finally { if (mayRescan) merged.unpersist(); () }
-          } else {
-            // a metadata-only / netted-empty range: nothing to fold
-            goldCursor.advance(head)
-            GoldRefresh(head, Seq.empty, 0L)
+        // the fold's rows, one shape for every source and every
+        // refresh (a first refresh with no prior state and one
+        // without a rescan source compile the same fold): _n and
+        // _sv/_pv sum to n and vsum, _lo/_hi bound the candidate
+        // min/max, _del carries deleted values, _rv the rescanned
+        // Silver values. The change rows carry typed nulls for the
+        // columns only other sources fill; unionByName null-fills
+        // the rest.
+        val signed = changes.select(bucket.as("bucket"), key.as("key"),
+          sign.as("_n"), (value * sign).as("_pv"),
+          when(isIns, value).as("_lo"), when(isIns, value).as("_hi"),
+          when(not(isIns), value).as("_del"))
+        val partials = signed.select(col("*"),
+          lit(null).cast(signed.select(sum("_pv")).schema.head.dataType).as("_sv"),
+          lit(null).cast(signed.schema("_del").dataType).as("_rv"))
+        // one driver round-trip for all the batch metadata: the distinct
+        // (bucket, a delete there carried a non-null value) pairs — a
+        // null bucket is a value like any other — collected without a
+        // shuffle from the fold's own change rows, so the fold's write
+        // reuses this action's generated classes
+        val meta = org.apache.spark.sql.graft.DistinctCollect(partials,
+          col("bucket"), col("_del").isNotNull)
+        val touched: Seq[Any] = meta.map(_.get(0)).distinct
+        val rescanBuckets: Seq[Any] = meta.filter(_.getBoolean(1)).map(_.get(0))
+        if (touched.isEmpty) {
+          // a metadata-only / netted-empty range: nothing to fold
+          goldCursor.advance(head)
+          GoldRefresh(head, Seq.empty, 0L)
+        } else {
+          // null-SAFE bucket scope: isin() is null-blind, so a batch
+          // whose bucket expression yields NULL for some rows would
+          // otherwise neither read the prior null-bucket state nor
+          // pass the replaceWhere scope check — wedging the refresh
+          def scope(b: Column, bks: Seq[Any]): Column = {
+            val nonNull = bks.filterNot(_ == null)
+            val in = if (nonNull.nonEmpty) b.isin(nonNull: _*) else lit(false)
+            if (bks.contains(null)) in || b.isNull else in
           }
-        } finally parts.unpersist()
+          // FILE-granular scope (round 16, was a bucket-scoped
+          // replaceWhere behind a touched ≥ files/2 fallback): ask
+          // the stats layer WHICH state files the touched buckets hit
+          // (O(log metadata)), read those files ONCE — every row,
+          // including survivor buckets that merely share a file with
+          // a touched one: they flow through the fold untouched (no
+          // partial joins to them) and are re-included in the
+          // replacement content — and land via replaceFilesIdempotent,
+          // which swaps exactly those files. One read + one write of
+          // the hit files, where the predicate path (replaceWhere)
+          // paid ~three reads for its pre-scan + kept-rows machinery
+          // (measured 1.5× SLOWER than a full overwrite at
+          // half-the-buckets; the file path measures 0.66–0.79× at a
+          // 62% hit fraction, SCALE.md "Gold refresh goes
+          // FILE-granular", r16). The plain overwrite remains the
+          // fallback when the hit FRACTION crosses
+          // `goldRefreshCrossover` — at that point reading the rest
+          // of the state costs less than the scope bookkeeping.
+          val (hitFiles, totalFiles) = gold.latestVersion() match {
+            case None => (Seq.empty[String], 0)
+            case Some(_) => (gold.candidateFiles(scope(col("bucket"), touched)),
+              gold.snapshotDataFiles().size)
+          }
+          // STRICT >: at crossover = 1.0 even an every-file hit
+          // stays on the scoped path, matching the "≥ 1 never
+          // falls back" contract above
+          val fullRewrite = totalFiles > 0 &&
+            hitFiles.size > totalFiles * goldRefreshCrossover
+          val prior = gold.latestVersion().map { _ =>
+            (if (fullRewrite) gold.read() else gold.readSnapshotFiles(hitFiles))
+              .select(col("bucket"), col("key"), col("n").as("_n"),
+                col("vsum").as("_sv"), col("vmin").as("_lo"), col("vmax").as("_hi"))
+          }
+          // truth for the groups a delete may have stripped of their
+          // extremum: Silver AS OF the consumed version, in just the
+          // buckets a valued delete reached. Its rows join the fold as
+          // they are: a per-group pre-aggregation before the fold's
+          // shuffle adds a stage, two aggregate bodies and their
+          // projections per refresh, against shuffling three narrow
+          // columns of the rescanned buckets' rows.
+          val rescan = if (rescanBuckets.isEmpty) None else Some(
+            silver.read(Some(head))
+              .select(bucket.as("bucket"), key.as("key"), value.as("_rv"))
+              .filter(scope(col("bucket"), rescanBuckets)))
+          val rows = (prior.toSeq ++ rescan).foldLeft(partials)(
+            _.unionByName(_, allowMissingColumns = true))
+          // bucket-aligned files: the NEXT refresh's stats pruning
+          // depends on each file covering few buckets. The partition
+          // count is bounded by what THIS refresh replaces — k hit
+          // files come back as ~k files (a one-bucket refresh stages
+          // one file, not goldStateFiles mostly-empty shuffle
+          // tasks) — EXCEPT on the full-rewrite path, whose output
+          // is the ENTIRE state and must respect the sizing contract
+          // regardless of how few buckets triggered it. Range, not
+          // hash, partitioning: the partitioner's sample bounds the
+          // partitions by the buckets present, where a hash
+          // partitioning wrote goldStateFiles tasks for a state of a
+          // few buckets (a steady refresh of the benchmark round took
+          // 370 ms with it, 210 ms with the range partitioner's
+          // sampling job).
+          val nParts =
+            if (fullRewrite) goldStateFiles
+            else math.max(1, math.min(goldStateFiles,
+              math.max(touched.size, hitFiles.size)))
+          val candMin = min("_lo")
+          val candMax = max("_hi")
+          val delMin = min("_del")
+          val delMax = max("_del")
+          // a deleted value that ties-or-beats the candidate extremum
+          // MAY have been the extremum — take that group's rescanned
+          // truth. Insert-only groups never flag (null _del), and
+          // without a rescan source no delete carried a value.
+          val flagged = coalesce(
+            (delMin.isNotNull && (candMin.isNull || delMin <= candMin)) ||
+              (delMax.isNotNull && (candMax.isNull || delMax >= candMax)),
+            lit(false))
+          val rescanned = spark.sparkContext.longAccumulator("gold rescanned groups")
+          val state = rows.repartitionByRange(nParts, col("bucket"))
+            .groupBy("bucket", "key")
+            .agg(coalesce(sum("_n"), lit(0L)).as("n"),
+              (coalesce(sum("_sv"), lit(0)) + coalesce(sum("_pv"), lit(0))).as("vsum"),
+              when(flagged, min("_rv")).otherwise(candMin).as("vmin"),
+              when(flagged, max("_rv")).otherwise(candMax).as("vmax"),
+              flagged.as("_rescan"))
+            .filter(col("n") > 0)
+            .filter(org.apache.spark.sql.graft.CountWhere.column(col("_rescan"), rescanned))
+            .drop("_rescan")
+          gold.latestVersion() match {
+            case Some(_) if !fullRewrite =>
+              gold.replaceFilesIdempotent(hitFiles, state, "gold", head.toLong)
+            case _ => gold.commitOverwriteIdempotent(state, "gold", head.toLong)
+          }
+          // (a write a concurrent refresher fenced runs nothing and
+          // counts nothing)
+          val nRescan = rescanned.sum
+          goldCursor.advance(head)
+          GoldRefresh(head, touched, nRescan)
+        }
       }
     }
   }

@@ -1,10 +1,13 @@
 package graft.lake
 
+import scala.util.control.NonFatal
+
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{abs, array_repeat, coalesce, col, count, explode, lit, when, not}
 import org.apache.spark.sql.types.{StructField, StructType}
 
+import graft.GraftConf
 import LakeLog.Commit
 
 /** A versioned Parquet table with a Delta-style transaction log —
@@ -61,8 +64,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   private[lake] lazy val log = new LakeLog(fs, tablePath, checkpointInterval,
     LakeLog.PublishSettings(
       spark.conf.getOption("spark.graft.lake.commitPublisher"),
-      spark.conf.getOption("spark.graft.lake.unsafeSingleWriterPublish")
-        .exists(_.trim.equalsIgnoreCase("true"))))
+      GraftConf.boolean(spark.conf,
+        "spark.graft.lake.unsafeSingleWriterPublish", default = false)))
 
   /** All committed versions, ascending; empty for a fresh path. */
   def versions(): Seq[Int] = log.versions()
@@ -232,8 +235,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
           spark, this, tablePath, c.version))
       case Some(names) => readFiles(names, physReadSchema(c))
     }
-    alignToSchema(dvOverlay(base, splitDv(c.files)._1, c.version,
-        withPos = keep.nonEmpty),
+    alignToSchema(dvOverlay(base, splitDv(c.files)._1, withPos = keep.nonEmpty),
       StructType.fromDDL(c.schemaDdl), keep, physMap(c))
   }
 
@@ -249,7 +251,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * `_g_file` (file name) and `_g_pos` (`_metadata.row_index`) to the
     * output under either gear; with no vectors this is the base scan
     * (plus those two columns when asked). */
-  private def dvOverlay(base: DataFrame, dvs: Seq[String], v: Int,
+  private def dvOverlay(base: DataFrame, dvs: Seq[String],
                         withPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.substring_index
     // substring_index, not split+element_at: one substring per row
@@ -270,28 +272,33 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       // no join build side, no per-row string hashing,
       // scan+filter+consumer in one codegen span. Measured ~5× over
       // the anti-join on scan-bound aggregates (SCALE.md r17).
-      // Broadcast cached per version, built from the per-file decoded
-      // vectors: a new version decodes only the vectors it added.
-      val live = if (dvs.isEmpty) base else {
-        val b = dvBroadcasts.getOrElseUpdate(v, {
-          if (dvBroadcasts.size > 64) dvBroadcasts.clear()
-          import scala.collection.parallel.CollectionConverters._
-          dvs.filterNot(dvDecoded.contains).par.foreach(dvVector)
-          val parts = dvs.flatMap(dvVector).groupMap(_._1)(_._2)
-          spark.sparkContext.broadcast(parts.map {
-            case (f, Seq(ps)) => f -> ps
-            case (f, pss) =>
-              val all = pss.toArray.flatten
-              java.util.Arrays.sort(all)
-              f -> all
-          })
-        })
-        base.filter(org.apache.spark.sql.graft.DvNotDeleted.column(
-          col("_metadata.file_path"), col("_metadata.row_index"), b))
-      }
+      val live = if (dvs.isEmpty) base
+        else base.filter(org.apache.spark.sql.graft.DvNotDeleted.column(
+          col("_metadata.file_path"), col("_metadata.row_index"), dvBroadcast(dvs)))
       if (withPos) positioned(live) else live
     }
   }
+
+  /** The vectors `dvs` as one broadcast map file → sorted positions,
+    * cached per vector list (a snapshot's list for the overlay, one
+    * commit's list for the change feed) and built from the per-file
+    * decoded vectors: a new version decodes only the vectors it added.
+    * The broadcast is a reference in the generated code, so every
+    * version's filter shares one compiled class. */
+  private def dvBroadcast(dvs: Seq[String]): org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]] =
+    dvBroadcasts.getOrElseUpdate(dvs, {
+      if (dvBroadcasts.size > 64) dvBroadcasts.clear()
+      import scala.collection.parallel.CollectionConverters._
+      dvs.filterNot(dvDecoded.contains).par.foreach(dvVector)
+      val parts = dvs.flatMap(dvVector).groupMap(_._1)(_._2)
+      spark.sparkContext.broadcast(parts.map {
+        case (f, Seq(ps)) => f -> ps
+        case (f, pss) =>
+          val all = pss.toArray.flatten
+          java.util.Arrays.sort(all)
+          f -> all
+      })
+    })
 
   /** True when the vectors `dvs` carry more marked positions than
     * `spark.graft.lake.dvBroadcastMaxRows` lets the driver hold — the
@@ -300,15 +307,15 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     * on the driver: the overlay anti-joins, [[liveRowCount]] counts
     * with a job. */
   private def dvOversized(dvs: Seq[String]): Boolean = {
-    val cap = spark.conf.getOption("spark.graft.lake.dvBroadcastMaxRows")
-      .map(_.trim.toLong).getOrElse(4000000L)
+    val cap = GraftConf.long(spark.conf, "spark.graft.lake.dvBroadcastMaxRows",
+      4000000L, min = 0L)
     fileRows(dvs) > cap
   }
 
-  /** Per-version DV broadcast cache for [[dvOverlay]] — committed
+  /** [[dvBroadcast]]'s cache, keyed by vector list — committed
     * vectors are immutable, so an entry can never go stale. */
   @transient private lazy val dvBroadcasts =
-    scala.collection.concurrent.TrieMap.empty[Int,
+    scala.collection.concurrent.TrieMap.empty[Seq[String],
       org.apache.spark.broadcast.Broadcast[Map[String, Array[Long]]]]
 
   /** One committed deletion vector, decoded on the driver straight
@@ -478,7 +485,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val lines = FileStats.sidecarLines(stats)
     if (lines.isEmpty) return
     log.stats.write(v, nonce, lines)
-  } catch { case e: Throwable =>
+  } catch { case NonFatal(e) =>
     // Stats are an optimization: a failed collection must never fail the
     // commit — files without stats are simply never pruned.
     System.err.println(s"[lake] stats collection failed for v$v " +
@@ -495,33 +502,42 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     raw.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).distinct
   }
 
-  private def bloomParam(prop: String, conf: String): Option[String] =
-    properties().find(_._1 == prop).map(_._2)
-      .orElse(spark.conf.getOption(conf))
+  /** A bloom setting: the table property `prop`, else the session key
+    * `conf`, parsed as a double in [min, max] — a malformed value fails
+    * the commit naming the key it came from. */
+  private def bloomParam(prop: String, conf: String, default: Double,
+                         min: Double, max: Double): Double =
+    properties().find(_._1 == prop).map(p => GraftConf.parseDouble(prop, p._2, min, max))
+      .orElse(spark.conf.getOption(conf).map(GraftConf.parseDouble(conf, _, min, max)))
+      .getOrElse(default)
 
-  private def writeBlooms(names: Seq[String], v: Int, nonce: String): Unit = try {
+  private def writeBlooms(names: Seq[String], v: Int, nonce: String): Unit = {
     val logicalCols = bloomColumnsConfigured()
     if (logicalCols.isEmpty || names.isEmpty) return
-    // staged frames carry PHYSICAL column names — translate the
-    // configured logical names before collecting
-    val phys = latestVersion().map(h => physMap(readCommit(h)))
-      .getOrElse(Map.empty)
-    val cols = logicalCols.map(c => phys.getOrElse(c, c))
-    val fpp = bloomParam("bloom.fpp", "spark.graft.lake.bloom.fpp")
-      .map(_.trim.toDouble).getOrElse(0.01)
-    val maxItems = bloomParam("bloom.maxItems", "spark.graft.lake.bloom.maxItems")
-      .map(_.trim.toLong).getOrElse(100000L)
-    val lines = BloomSidecars.collect(spark,
-      names.map(n => s"$tablePath/$n"), cols, maxItems, fpp)
-    if (lines.isEmpty) return
-    log.blooms.write(v, nonce, lines.sortBy(l => (l._1, l._2))
-      .map { case (f, c, b64) => LogCodec.encodeBloomLine(f, c, b64) })
-  } catch { case e: Throwable =>
-    // blooms are an optimization with the stats posture: a failed
-    // collection never fails the commit — the files are just never
-    // bloom-pruned
-    System.err.println(s"[lake] bloom collection failed for v$v " +
-      s"(no bloom skipping for its files): ${e.getMessage}")
+    // settings parse OUTSIDE the collection's catch: a malformed value
+    // is a configuration error, not a failed optimization
+    val fpp = bloomParam("bloom.fpp", "spark.graft.lake.bloom.fpp", 0.01,
+      min = Double.MinPositiveValue, max = 1.0 - 1e-12)
+    val maxItems = bloomParam("bloom.maxItems", "spark.graft.lake.bloom.maxItems",
+      100000, min = 1, max = Long.MaxValue.toDouble).toLong
+    try {
+      // staged frames carry PHYSICAL column names — translate the
+      // configured logical names before collecting
+      val phys = latestVersion().map(h => physMap(readCommit(h)))
+        .getOrElse(Map.empty)
+      val cols = logicalCols.map(c => phys.getOrElse(c, c))
+      val lines = BloomSidecars.collect(spark,
+        names.map(n => s"$tablePath/$n"), cols, maxItems, fpp)
+      if (lines.nonEmpty)
+        log.blooms.write(v, nonce, lines.sortBy(l => (l._1, l._2))
+          .map { case (f, c, b64) => LogCodec.encodeBloomLine(f, c, b64) })
+    } catch { case NonFatal(e) =>
+      // blooms are an optimization with the stats posture: a failed
+      // collection never fails the commit — the files are just never
+      // bloom-pruned
+      System.err.println(s"[lake] bloom collection failed for v$v " +
+        s"(no bloom skipping for its files): ${e.getMessage}")
+    }
   }
 
   private val bloomDeserCache = scala.collection.concurrent.TrieMap
@@ -539,17 +555,16 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
                          schema: StructType, inv: Map[String, String],
                          dead: Set[String]): Seq[String] = {
     if (files.isEmpty) return files
-    val enabled = spark.conf.getOption("spark.graft.lake.bloom.enabled")
-      .forall(_.trim.equalsIgnoreCase("true"))
+    val enabled = GraftConf.boolean(spark.conf,
+      "spark.graft.lake.bloom.enabled", default = true)
     if (!enabled) return files
     val sidecars = log.blooms.paths()
     if (sidecars.isEmpty) return files
     val terms = BloomSidecars.pointTerms(resolved, schema,
       schema.fieldNames.toSet)
     if (terms.isEmpty) return files
-    val driverMax = spark.conf
-      .getOption("spark.graft.lake.bloom.driverMaxFiles")
-      .map(_.trim.toInt).getOrElse(4096)
+    val driverMax = GraftConf.int(spark.conf,
+      "spark.graft.lake.bloom.driverMaxFiles", 4096, min = 0)
     if (files.size <= driverMax) {
       val blooms = log.blooms.all()
       files.filter { f =>
@@ -1900,15 +1915,25 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
         // MoR delete/update: the change set is exactly the rows at the
         // marked positions (plus, for update-dv, the new images in the
         // commit's added data files) — read ONLY the targeted files
-        // (cost ∝ the mutation, never the table) and semi-join the
-        // vector. The marked rows were live at the writer's base by
-        // construction (the mark pass scans through the overlay; racing
-        // DVs are row-disjoint), so no prior-DV subtraction is needed.
-        val dvPos = readFiles(d.add.filter(isDv), VersionedTable.DvSchema)
-          .select(col("file").as("_g_file"), col("pos").as("_g_pos"))
-        val dels = aligned(dvOverlay(logRead(d.dvTargets, d, v), Nil, v, withPos = true)
-            .join(dvPos, Seq("_g_file", "_g_pos"), "left_semi")
-            .drop("_g_file", "_g_pos"))
+        // (cost ∝ the mutation, never the table) and keep the rows the
+        // commit's vectors mark: the overlay's scan-local filter,
+        // negated, under the overlay's size gear (a semi-join with the
+        // vector files above it). The marked rows were live at the
+        // writer's base by construction (the mark pass scans through
+        // the overlay; racing DVs are row-disjoint), so no prior-DV
+        // subtraction is needed.
+        val dvs = d.add.filter(isDv)
+        val targets = logRead(d.dvTargets, d, v)
+        val marked =
+          if (dvOversized(dvs)) {
+            val dvPos = readFiles(dvs, VersionedTable.DvSchema)
+              .select(col("file").as("_g_file"), col("pos").as("_g_pos"))
+            dvOverlay(targets, Nil, withPos = true)
+              .join(dvPos, Seq("_g_file", "_g_pos"), "left_semi")
+              .drop("_g_file", "_g_pos")
+          } else targets.filter(not(org.apache.spark.sql.graft.DvNotDeleted.column(
+            col("_metadata.file_path"), col("_metadata.row_index"), dvBroadcast(dvs))))
+        val dels = aligned(marked)
           .withColumn("_commit_version", lit(v))
           .withColumn("_change_type", lit("delete"))
         val newData = d.add.filterNot(isDv)
@@ -1925,7 +1950,7 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       def replaced = {
         val prevDvs = log.resolveSnap(v - 1).files.filter(isDv)
         aligned(dvOverlay(logRead(removed.filterNot(isDv), log.record(v - 1), v - 1),
-          prevDvs, v - 1))
+          prevDvs))
       }
       (added.nonEmpty, removed.nonEmpty) match {
         case (false, false) => None
@@ -2254,17 +2279,17 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     dvFiles.flatMap(dvVector(_).keys).distinct.sorted
 
   /** Stage the (file, pos) of `marked` rows — a [[scan]] keeping
-    * [[DvPos]] — as one deletion-vector file: (vector files, marked
-    * rows), or None when no row is marked (staging drops zero-row part
-    * files, so nothing is left behind). One small file per commit: the
-    * vector is marked-rows-sized. repartition, NOT coalesce —
-    * coalesce(1) would propagate up the shuffle-free mark pipeline and
-    * run the whole mark scan in a single task; the shuffle barrier moves
-    * only the marked rows. */
+    * [[DvPos]] — as deletion-vector files: (vector files, marked rows),
+    * or None when no row is marked (staging drops zero-row part files,
+    * so nothing is left behind). Each mark-scan task that marks a row
+    * writes one small vector file, straight from the scan: no shuffle
+    * stage per commit (a `repartition(1)` barrier measured one extra
+    * job and stage per deletion-vector commit, four per medallion
+    * round), and no `coalesce(1)`, which would run the whole mark scan
+    * in one task. */
   private def stageDv(marked: DataFrame): Option[(Seq[String], Long)] = {
     val dvFiles = stage(
-      marked.select(col("_g_file").as("file"), col("_g_pos").as("pos"))
-        .repartition(1),
+      marked.select(col("_g_file").as("file"), col("_g_pos").as("pos")),
       nextVersion, prefix = "dv-", collectStats = false)
     if (dvFiles.isEmpty) None else Some((dvFiles, fileRows(dvFiles)))
   }
@@ -2542,15 +2567,17 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val hits = scan(c, keep = Seq("_g_file"))
       .select(keys.map(col) :+ col("_g_file"): _*)
       .join(srcKeys, keys)
-    val files = hits.groupBy("_g_file")
-      .agg(org.apache.spark.sql.functions.max("_g_n")).collect()
-    if (files.exists(_.getLong(1) > 1)) {
+    // (file, source multiplicity) pairs, deduplicated per task: a
+    // groupBy by file here measured one more shuffle, stage and job
+    // per merge and 5 more generated classes
+    val pairs = org.apache.spark.sql.graft.DistinctCollect(hits, col("_g_file"), col("_g_n"))
+    if (pairs.exists(_.getLong(1) > 1)) {
       val dup = hits.filter(col("_g_n") > 1).select(keys.map(col): _*).head()
       sys.error(s"merge: multiple source rows match the target row with key " +
         s"${keys.zip(dup.toSeq).mkString(", ")} — a matched target row must " +
         s"be claimed by exactly one source row")
     }
-    files.map(_.getString(0)).toSeq
+    pairs.map(_.getString(0)).distinct
   }
 
   /** Predicate-scoped overwrite (Delta's `replaceWhere`): atomically

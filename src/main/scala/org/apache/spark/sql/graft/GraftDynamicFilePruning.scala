@@ -72,16 +72,16 @@ case class GraftAutoFilePruning(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = session.conf.getOption("spark.graft.lake.dfp.auto")
-      .forall(_.trim.equalsIgnoreCase("true"))
+    val enabled = graft.GraftConf.boolean(session.conf,
+      "spark.graft.lake.dfp.auto", default = true)
     if (!enabled) plan
     else plan.transformDown {
       case j: Join => rewrite(j).getOrElse(j)
     }
   }
 
-  private def minFiles: Int = session.conf
-    .getOption("spark.graft.lake.dfp.minFiles").map(_.trim.toInt).getOrElse(8)
+  private def minFiles: Int =
+    graft.GraftConf.int(session.conf, "spark.graft.lake.dfp.minFiles", 8, min = 0)
 
   /** The fact-side scan subtree: the native relation under attribute
     * Projects and benign Filters. `output` is the subtree's own output

@@ -83,8 +83,8 @@ class GraftFileIndex(spark: SparkSession, val table: VersionedTable,
   private val statuses: Map[String, FileStatus] = {
     val root = new Path(path)
     val meta = table.snapshotFileMeta(Some(pinnedVersion))
-    val verify = spark.conf.getOption("spark.graft.lake.verifyListing")
-      .exists(_.trim.equalsIgnoreCase("true"))
+    val verify = graft.GraftConf.boolean(spark.conf,
+      "spark.graft.lake.verifyListing", default = false)
     val fromLog = snapshot.flatMap(n => meta.get(n).map(m =>
       n -> new FileStatus(m.size, false, 1, 128L * 1024 * 1024,
         math.max(0L, m.mtime), new Path(root, n)))).toMap

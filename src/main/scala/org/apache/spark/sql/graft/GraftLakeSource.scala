@@ -398,15 +398,8 @@ class GraftLakeSink(spark: SparkSession, path: String, appId: String,
             // MICRO-BATCH at typical update sizes (SCALE.md r18
             // adjudication); above the threshold it takes over, so there
             // is still NO cap — just a cheaper gear below it.
-            val collectCap = spark.conf
-              .getOption("spark.graft.lake.updateScopeCollectThreshold")
-              .map { raw =>
-                try raw.trim.toInt
-                catch {
-                  case _: NumberFormatException => throw new IllegalArgumentException(
-                    s"spark.graft.lake.updateScopeCollectThreshold must be an integer, got '$raw'")
-                }
-              }.getOrElse(1000)
+            val collectCap = graft.GraftConf.int(spark.conf,
+              "spark.graft.lake.updateScopeCollectThreshold", 1000, min = 0)
             val smallKeys = keysDf.limit(collectCap + 1).collect()
             val hit =
               if (smallKeys.length > collectCap)

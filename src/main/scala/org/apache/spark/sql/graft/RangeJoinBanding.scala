@@ -35,7 +35,7 @@ object RangeJoinBanding extends Rule[LogicalPlan] with PredicateHelper {
   val BIN_SIZE_KEY = "spark.graft.rangeJoin.binSize"
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val binSize = conf.getConfString(BIN_SIZE_KEY, "0").toLong
+    val binSize = graft.GraftConf.parseLong(BIN_SIZE_KEY, conf.getConfString(BIN_SIZE_KEY, "0"))
     if (binSize <= 0) return plan
     plan.transform {
       case j @ Join(left, right, Inner, Some(cond), hint) =>

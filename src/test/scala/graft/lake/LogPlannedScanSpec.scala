@@ -213,24 +213,7 @@ class LogPlannedScanSpec extends AnyFunSuite {
     }
   }
 
-  /** (result, Spark jobs started while `body` ran): a listener counts
-    * job starts, with the async listener bus drained on both sides. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.graft.ListenerDrain.drain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = body
-      org.apache.spark.graft.ListenerDrain.drain(sc)
-      (r, jobs.get())
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) = graft.SparkCounts.jobsDuring(spark)(body)
 
   test("planning a change feed runs no Spark job and probes no data file: append, MoR delete, CoW rewrite") {
     val path = countingPath()

@@ -43,6 +43,19 @@ class MergeClauseSpec extends AnyFunSuite {
   ).toDF("id", "v", "x")
 
   test("CDC apply: ONE commit updates some matched rows, deletes others, inserts new keys") {
+    cdcApply()
+  }
+
+  // the rewrite's other full-outer join gear: a source too large to
+  // broadcast sort-merges instead of hashing (forced here by turning
+  // broadcasts off)
+  test("CDC apply through the sort-merge join gear gives the same commit") {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try cdcApply()
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  private def cdcApply(): Unit = {
     val t = freshTable()
     t.commitOverwrite(base()) // v0
     // mixed CDC batch — the extra `op` column is condition-frame-only:
