@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.storage.StorageLevel
 
 /** One switch for every lineage-cut / reuse-materialization point in
   * the engine (the r9 verdict's cluster-durability item).
@@ -46,17 +49,40 @@ object CheckpointStrategy {
     * via the configured strategy. Eager in both modes. */
   def cut(df: DataFrame): DataFrame = reliableDir match {
     case Some(dir) =>
-      val sc = df.sparkSession.sparkContext
-      // compute() runs setCheckpointDir INSIDE the per-key lock, so a
-      // concurrent first cut() can never observe the map entry before
-      // the dir is actually set (put-before-set race), and a changed
-      // configuration re-applies exactly once.
-      configured.compute(sc, (_, prev) => {
-        if (prev != dir) sc.setCheckpointDir(dir)
-        dir
-      })
+      useDir(df.sparkSession.sparkContext, dir)
       df.checkpoint()
     case None => df.localCheckpoint()
+  }
+
+  /** [[cut]] for a caller that needs the row count and then one pass
+    * over the rows: ONE job materializes and counts them (a `cut()`
+    * then `count()` is two jobs, and the count's aggregate compiles two
+    * whole-stage classes of its own), and the rows come back as the
+    * materialized `RDD[InternalRow]`, so the pass needs no encoder. Wrap
+    * them with `GraftColumnBridge.ofInternalRows` to query them again. */
+  def cutRows(df: DataFrame): (RDD[InternalRow], Long) = {
+    val rows = df.queryExecution.toRdd.map(_.copy())
+    reliableDir match {
+      case Some(dir) =>
+        useDir(df.sparkSession.sparkContext, dir)
+        // persisted, so the checkpoint write after the count re-reads
+        // the blocks instead of recomputing the plan
+        rows.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+      case None => rows.localCheckpoint()
+    }
+    (rows, rows.count())
+  }
+
+  // compute() runs setCheckpointDir INSIDE the per-key lock, so a
+  // concurrent first cut() can never observe the map entry before the
+  // dir is actually set (put-before-set race), and a changed
+  // configuration re-applies exactly once.
+  private def useDir(sc: org.apache.spark.SparkContext, dir: String): Unit = {
+    configured.compute(sc, (_, prev) => {
+      if (prev != dir) sc.setCheckpointDir(dir)
+      dir
+    })
+    ()
   }
 
   /** `df.cut()` sugar so call sites read like the old

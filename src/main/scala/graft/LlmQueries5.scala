@@ -77,10 +77,10 @@ object LlmQueries5 {
       val nDropped = buckets
         .agg(coalesce(sum(when(size(col("xs")) > 1000, 1L).otherwise(0L)),
           lit(0L)).as("n_dropped_buckets"))
-      // shared pair-expansion helper (Dedup.expandPairs) — one
+      // shared pair-expansion helper (Dedup.orderedPairs) — one
       // implementation of the combination idiom across the engine
       buckets.filter(size(col("xs")).between(2, 1000))
-        .select(explode(Dedup.expandPairs(col("xs"), (_, _) => lit(true))).as("p"))
+        .select(explode(Dedup.orderedPairs(col("xs"))).as("p"))
         .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
         .groupBy("id1", "id2")
         .agg(count(lit(1)).as("shared"))

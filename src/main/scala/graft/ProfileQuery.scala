@@ -24,6 +24,11 @@ import org.apache.spark.sql.SparkSession
   * compiled (Spark's codegen compilation count): the cold run's count
   * is the query's plan bodies, and a warm run that still compiles
   * classes re-plans a shape per run or overflows Spark's code cache.
+  * Run under an unbounded cache, the cold count is the query's working
+  * set: the cache entries it needs so that no warm run compiles again.
+  * Raise the cache for such a measurement with a JVM property on a
+  * copy (`-Dspark.sql.codegen.cache.maxEntries=5000`); the engine code
+  * never sets it.
   */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {

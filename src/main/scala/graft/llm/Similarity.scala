@@ -245,29 +245,38 @@ object Similarity {
     * collisions, deduped. Exposed separately for the operating-curve
     * sweep (q_ann_sweep): candidate count per query is the re-rank cost
     * a band count buys, traded against the recall it delivers.
+    *
+    * `vec_id` and `query_id` are keys (one row per id on each side). A
+    * pair colliding in several bands is kept only in the LOWEST band where
+    * it collides: both sides carry their whole band array, so that is a
+    * row filter on the join output instead of a `dropDuplicates` — which
+    * carried both embedding arrays and so planned as a sort-based
+    * aggregate (two sorts and a shuffle ahead of the top-k's own). Norms
+    * are computed once per row on each side, not once per pair.
     */
   def lshScored(corpus: DataFrame, queries: DataFrame,
                 numPlanes: Int = 16, bands: Int = 2,
                 dim: Int = 64): DataFrame = {
     val planes = hyperplanes(numPlanes, dim)
     val corpusBanded = corpus
-      .select(col("vec_id"), col("embedding"),
-        posexplode(bandedSignature(col("embedding"), planes, bands))
-          .as(Seq("band", "bucket")))
+      .select(col("vec_id"), col("embedding"), sumSq(col("embedding")).as("csq"),
+        bandedSignature(col("embedding"), planes, bands).as("sig_c"))
+      .select(col("*"), posexplode(col("sig_c")).as(Seq("band", "bucket")))
     val queryBanded = queries
-      .select(col("query_id"), col("qe"),
-        posexplode(bandedSignature(col("qe"), planes, bands))
-          .as(Seq("band", "bucket")))
+      .select(col("query_id"), col("qe"), sumSq(col("qe")).as("qsq"),
+        bandedSignature(col("qe"), planes, bands).as("sig_q"))
+      .select(col("*"), posexplode(col("sig_q")).as(Seq("band", "bucket")))
+    // no band below this row's band collides (with 2 bands:
+    // band = 0 OR sig_c[0] != sig_q[0])
+    val lowestCollision = (0 until bands - 1)
+      .map(b => col("band") <= b || col("sig_c")(b) =!= col("sig_q")(b))
+      .reduceOption(_ && _).getOrElse(lit(true))
     corpusBanded
       .join(queryBanded, Seq("band", "bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
+      .filter(col("vec_id") =!= col("query_id") && lowestCollision)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("embedding"), col("qe"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("cosine",
-        round(dot(col("embedding"), col("qe")) /
-          sqrt(sumSq(col("embedding")) * sumSq(col("qe"))), 6))
-      .select("query_id", "neighbor_id", "cosine")
+        round(dot(col("embedding"), col("qe")) / sqrt(col("csq") * col("qsq")), 6)
+          .as("cosine"))
   }
 
   /** IVF-PQ ANN top-k — the composition the two component families

@@ -17,4 +17,11 @@ object GraftColumnBridge {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** `internalCreateDataFrame` re-export (private[sql]): a frame over
+    * rows already in Catalyst's internal form, with no encoder between
+    * (e.g. the output of an untyped partition pass). */
+  def ofInternalRows(spark: SparkSession,
+                     rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                     schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }
