@@ -81,7 +81,7 @@ object LlmQueries5 {
       // implementation of the combination idiom across the engine
       buckets.filter(size(col("xs")).between(2, 1000))
         .select(explode(Dedup.orderedPairs(col("xs"))).as("p"))
-        .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
+        .select(col("p.b1").as("id1"), col("p.b2").as("id2"))
         .groupBy("id1", "id2")
         .agg(count(lit(1)).as("shared"))
         .crossJoin(broadcast(nDropped))

@@ -98,13 +98,11 @@ object Dedup {
       GraftColumnBridge.expression(c), byteOffset))
   }
 
-  // (r19 measured, on the explode + grouped-min banding minhash used
-  // then: widening the shingle exploders LOSES — the one-task scan's
-  // map-side partial min-aggregation already compresses to tiny per-doc
-  // signatures before any shuffle, so repartitioning the raw text first
-  // costs more than the parallelism returns: q_dedup_minhash
-  // 1.14→1.31s, q_dedup_incremental 2.73→4.06s, q_dedup_simhash
-  // 1.34→1.58s in same-order A/B at sf0.1.)
+  // (r19 measured: repartitioning the raw text before banding LOSES —
+  // q_dedup_minhash 1.14→1.31s, q_dedup_incremental 2.73→4.06s,
+  // q_dedup_simhash 1.34→1.58s in same-order A/B at sf0.1. Measured when
+  // the minhash signature was a grouped aggregation; not re-checked on
+  // the per-row signature.)
 
   /** Ordered in-bucket pairs `(id1, id2)` of a SORTED member-struct
     * array (first struct field `doc_id`) — THE single implementation of
@@ -113,27 +111,24 @@ object Dedup {
     * cannot drift apart by convention. With `keepEither` the struct's
     * second field is the batch flag and only pairs with ≥1 flagged
     * member are expanded. Native and codegen'd
-    * (org.apache.spark.sql.graft.OrderedPairsExpr): the HOF formulation
-    * (`flatten(transform(slice…))`) is a `CodegenFallback`, so its
-    * `Generate` split the pair pipeline into one more whole-stage class
-    * per use — and the filters the two verify consumers inferred above
-    * it differed, so the whole expansion planned (and compiled) twice. */
+    * (org.apache.spark.sql.graft.OrderedPairsExpr): a HOF formulation is
+    * a `CodegenFallback` and splits the stage around its `Generate`. */
   private[graft] def orderedPairs(xs: Column, keepEither: Boolean = false): Column = {
     GraftColumnBridge.column(org.apache.spark.sql.graft.OrderedPairsExpr(
-      GraftColumnBridge.expression(xs), "id1", "id2", keepEither))
+      GraftColumnBridge.expression(xs), keepEither))
   }
 
   /** Distinct `(id1, id2)` pairs of every bucket (`xs`, sorted member
     * structs) holding 2..maxBucket members. Pairs with a null id are
-    * dropped HERE, where every consumer can see it: each verify joins on
+    * dropped HERE, where every consumer sees it: each verify join is on
     * both ids, and a null filter the optimizer inferred above the
-    * `distinct` for one consumer only made the two consumers' plans
-    * differ, so the pair shuffle was not reused. */
+    * `distinct` for one consumer only would make the consumers' plans
+    * differ, so the pair shuffle would not be reused. */
   private def expandBuckets(buckets: DataFrame, maxBucket: Int,
                             keepEither: Boolean): DataFrame =
     buckets.filter(size(col("xs")).between(2, maxBucket))
       .select(explode(orderedPairs(col("xs"), keepEither)).as("p"))
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
+      .select(col("p.b1").as("id1"), col("p.b2").as("id2"))
       .filter(col("id1").isNotNull && col("id2").isNotNull)
       .distinct()
 
@@ -180,20 +175,20 @@ object Dedup {
   /** The `bands` LSH buckets of a shingle array's `numHashes`-minhash
     * signature ([[permConstants]] family over [[md5Int]] shingle hashes,
     * Horner base 131 mod [[HashP]] per band), as one native per-row call
-    * (org.apache.spark.sql.graft.MinhashBandsExpr). The explode + grouped
-    * `min` formulation it replaces is value-identical on key `doc_id`s but
-    * shuffled every shingle hash and ran a 32-aggregate hash aggregation
-    * (a stage and six generated classes more per MinHash plan). */
+    * (org.apache.spark.sql.graft.MinhashBandsExpr): per row, so a
+    * signature needs no shuffle of shingle hashes and no aggregation. */
   private def minhashBands(shingleArr: Column, numHashes: Int, bands: Int): Column =
     GraftColumnBridge.column(org.apache.spark.sql.graft.MinhashBandsExpr(
       GraftColumnBridge.expression(shingleArr), numHashes, bands))
 
-  /** Exact shingle-Jaccard verification of a (tiny, ~linear) candidate
-    * pair set. The corpus is semi-joined to candidate ids BEFORE
-    * shingling, so the verify pass scans the corpus once and shingles
-    * only docs appearing in some candidate pair (~the near-dup
-    * population); those shingle arrays are broadcast and the pairs
-    * stream past them, so document payloads never shuffle.
+  /** Exact shingle-Jaccard verification of a candidate pair set. The
+    * corpus is semi-joined to candidate ids BEFORE shingling, so the
+    * verify re-shingles only docs appearing in some candidate pair (~the
+    * near-dup population). When Spark's own size estimate puts those
+    * shingled docs under its broadcast threshold they are broadcast once
+    * and the pairs stream past them; otherwise the planner picks both
+    * endpoint joins itself, so a population too large to broadcast
+    * (corpus scale) sort-merges instead of failing on the driver.
     */
   private def verifyJaccard(docs: DataFrame, candidates: DataFrame,
                             shingleN: Int, threshold: Double): DataFrame = {
@@ -203,19 +198,26 @@ object Dedup {
     // pipeline via ReusedExchange in ONE action, 0.26 s, and the cut
     // forced three actions, 1.2 s. LlmBudgetSpec pins that query's job
     // count.) Both consumers below read `candidates` from ONE pair
-    // shuffle: the id list re-reads it through a ReusedExchange, and the
-    // id list needs no `distinct` (a semi-join's build side may repeat
-    // keys). The shingled candidate docs are scanned once and broadcast
-    // once: both endpoint joins probe the same broadcast (the second is
-    // a ReusedExchange), with the pair set as the streamed side.
+    // shuffle: the id list re-reads it through a ReusedExchange, and it
+    // needs no `distinct` (a semi-join's build side may repeat keys). A
+    // semi-join can only build its right side, so the planner broadcasts
+    // the id list exactly when it fits, with no hint.
     val candIds = candidates
       .select(explode(array(col("id1"), col("id2"))).as("doc_id"))
     val withShingles = docs
-      .join(broadcast(candIds), Seq("doc_id"), "left_semi")
+      .join(candIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), shingles(col("text"), shingleN).as("sh"))
+    // Left to itself the planner broadcasts the smaller-estimated side of
+    // the first join, the pair set, so the docs are scanned and shingled
+    // once streamed and once more for the second join's broadcast (two
+    // more generated classes per run). Hinting the shingle side when it
+    // fits probes ONE broadcast twice (the second is a ReusedExchange).
+    val fits = withShingles.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      withShingles.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val shingled = if (fits) broadcast(withShingles) else withShingles
     candidates
-      .join(broadcast(withShingles.as("a")), col("id1") === col("a.doc_id"))
-      .join(broadcast(withShingles.as("b")), col("id2") === col("b.doc_id"))
+      .join(shingled.as("a"), col("id1") === col("a.doc_id"))
+      .join(shingled.as("b"), col("id2") === col("b.doc_id"))
       .select(col("id1"), col("id2"),
         (size(array_intersect(col("a.sh"), col("b.sh"))) * lit(1.0) /
           size(array_union(col("a.sh"), col("b.sh")))).as("jaccard"))
@@ -253,13 +255,12 @@ object Dedup {
                               numHashes: Int = 32, bands: Int = 8,
                               maxBucket: Int = 1000): DataFrame = {
     // One banding pass over the tagged union (r20): banding is per-doc,
-    // so banding corpus∪batch with an is_new flag on the group key is
-    // value-identical to banding the sides separately (the store path,
+    // so banding corpus∪batch with an is_new flag riding along on each
+    // row is value-identical to banding the sides separately, in one
+    // scan and one signature pass (the store path,
     // [[minhashPairsFromStore]], still bands them separately — there the
     // corpus side comes back from a PERSISTED store, which is the
-    // production shape). Inline recomputation paid two scans + two
-    // signature aggregations for the same rows; the fused pass pays one
-    // of each (plan: two HashAggregate subtrees + union → one).
+    // production shape).
     val tagged = corpus.withColumn("is_new", lit(false))
       .unionByName(batch.withColumn("is_new", lit(true)))
     val banded = bandedMinhash(tagged, shingleN, numHashes, bands,

@@ -13,11 +13,9 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, LongTy
   * minhashes each — element `b` is band `b`'s bucket.
   *
   * This is the per-row form of the signature the DuckDB oracle replays
-  * (`list_min` per permutation over the row's shingle hashes). The
-  * explode + grouped-`min` formulation it replaces computed the same
-  * values through a `doc_id` shuffle and a 32-aggregate hash aggregation
-  * whose projections took Spark's generated-code cache six entries. An
-  * empty or null shingle array has no signature (null).
+  * (`list_min` per permutation over the row's shingle hashes); per row,
+  * it needs no `doc_id` shuffle and no aggregation. An empty or null
+  * shingle array has no signature (null).
   */
 case class MinhashBandsExpr(child: Expression, numHashes: Int, bands: Int)
     extends UnaryExpression with ExpectsInputTypes {

@@ -15,8 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StructField
   * bucket). With `keepEither`, field 1 of the struct is a boolean flag
   * and a pair is kept only when `flag(x) OR flag(y)` is TRUE under SQL's
   * three-valued OR — the incremental dedup's "≥1 batch endpoint" rule.
-  * The output struct's fields are named `first` and `second` and carry
-  * the key's type.
+  * The output struct's fields are `b1` and `b2`, of the key's type.
   *
   * The HOF formulation (`flatten(transform(xs, (x, i) ->
   * filter(transform(slice(xs, i+2, size(xs)-i-1), y -> struct(x, y,
@@ -28,11 +27,10 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StructField
   * generated code calls the static [[OrderedPairs.compute]], so the
   * whole row stays inside codegen. Output order matches the HOF version
   * exactly: anchor-major, then array order — for a sorted input array
-  * that is exactly the `first < second` pair set in lexicographic order.
+  * that is exactly the `b1 < b2` pair set in lexicographic order.
   * A null element pairs like any other, as a null key (and a null flag).
   */
-case class OrderedPairsExpr(child: Expression, first: String = "b1",
-                            second: String = "b2", keepEither: Boolean = false)
+case class OrderedPairsExpr(child: Expression, keepEither: Boolean = false)
     extends UnaryExpression {
 
   private def elementType: DataType = child.dataType match {
@@ -63,8 +61,8 @@ case class OrderedPairsExpr(child: Expression, first: String = "b1",
   }
 
   override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField(first, keyType, nullable = true),
-    StructField(second, keyType, nullable = true))), containsNull = false)
+    StructField("b1", keyType, nullable = true),
+    StructField("b2", keyType, nullable = true))), containsNull = false)
   override def prettyName: String = "ordered_pairs"
 
   @transient private lazy val spec: OrderedPairs.Spec = elementType match {

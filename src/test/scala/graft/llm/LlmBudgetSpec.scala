@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.functions._
@@ -126,6 +127,32 @@ class LlmBudgetSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     info(s"q_dedup_threshold_sweep: $jobs jobs")
     assert(rows.nonEmpty)
     assert(jobs <= SweepJobs, s"q_dedup_threshold_sweep ran $jobs jobs, budget $SweepJobs")
+  }
+
+  test("the MinHash verify broadcasts nothing when nothing fits Spark's broadcast threshold") {
+    // the near-dup population is sized for corpus scale: the shingled
+    // candidate docs are broadcast only under Spark's own threshold, and
+    // with none (or a tiny one) the verify sort-merges to the same pairs
+    def pairsOf(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val default = Dedup.minhashPairs(docs, 0.7)
+    val expected = pairsOf(default)
+    val reused = collect(default.queryExecution.executedPlan) {
+      case r: ReusedExchangeExec if r.child.isInstanceOf[BroadcastExchangeExec] => r
+    }
+    assert(reused.nonEmpty, s"the shingle broadcast is not reused:\n${default.queryExecution.executedPlan}")
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      for (threshold <- Seq("-1", "1024")) {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        val df = Dedup.minhashPairs(docs, 0.7)
+        assert(pairsOf(df) == expected, s"threshold $threshold")
+        if (threshold == "-1") {
+          val plan = df.queryExecution.executedPlan
+          val bcasts = collect(plan) { case b: BroadcastExchangeExec => b }
+          assert(bcasts.isEmpty, s"threshold -1 still broadcasts:\n$plan")
+        }
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   /** Spark jobs per kernel call on this corpus (before the native pair

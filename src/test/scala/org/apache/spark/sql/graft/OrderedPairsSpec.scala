@@ -26,12 +26,11 @@ class OrderedPairsSpec extends AnyFunSuite {
     flatten(transform(xs, (x, i) =>
       filter(
         transform(slice(xs, i + lit(2), size(xs) - i - 1),
-          y => struct(key(x).as("first"), key(y).as("second"), keep(x, y).as("keep"))),
+          y => struct(key(x).as("b1"), key(y).as("b2"), keep(x, y).as("keep"))),
         p => p.getField("keep"))))
 
   private def native(xs: Column, keepEither: Boolean): Column =
-    GraftColumnBridge.column(OrderedPairsExpr(GraftColumnBridge.expression(xs),
-      "first", "second", keepEither))
+    GraftColumnBridge.column(OrderedPairsExpr(GraftColumnBridge.expression(xs), keepEither))
 
   private val memberType = ArrayType(StructType(Seq(
     StructField("doc_id", LongType), StructField("is_new", BooleanType))))
@@ -86,7 +85,7 @@ class OrderedPairsSpec extends AnyFunSuite {
       val generated = df.select(native(col("xs"), keepEither)).collect().map(pairsOf).toSeq
       val interpreted = rows.map { r =>
         val arr = Literal(toCatalyst(r.getSeq[Row](0)), memberType)
-        val out = OrderedPairsExpr(arr, "first", "second", keepEither).eval()
+        val out = OrderedPairsExpr(arr, keepEither).eval()
           .asInstanceOf[ArrayData]
         (0 until out.numElements()).map { k =>
           val p = out.getStruct(k, 2)
