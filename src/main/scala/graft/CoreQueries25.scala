@@ -146,8 +146,9 @@ object CoreQueries25 {
     // Per-file BLOOM skipping on a layout min/max provably cannot
     // prune: orders HASH-distributed by o_orderkey (every file's key
     // range covers the keyspace), point lookup on a mid-keyspace key.
-    // In-query proofs: (a) with blooms disabled the stats layer keeps
-    // EVERY file (the fixture defeats min/max by construction);
+    // In-query proofs: (a) every file's recorded o_orderkey [min, max]
+    // holds the key, so stats alone keep EVERY file (the fixture
+    // defeats min/max by construction);
     // (b) with blooms the candidate set is a strict subset; (c) the
     // instrumented FS shows execution opened only that subset. The
     // oracle recomputes the row from raw parquet.
@@ -163,25 +164,21 @@ object CoreQueries25 {
       val dir = graft.lake.Scratch.dir("graft-vt-bloom") + "/t"
       val t = graft.lake.VersionedTable(s, "gprobe://" + dir)
       s.conf.set("spark.graft.lake.bloom.columns", "o_orderkey")
-      s.conf.set("spark.graft.lake.bloom.maxItems", "20000")
       try {
         t.commitOverwrite(orders(s, d)
           .select("o_orderkey", "o_orderpriority", "o_totalprice")
           .repartition(16, col("o_orderkey")))
-      } finally {
-        s.conf.unset("spark.graft.lake.bloom.columns")
-        s.conf.unset("spark.graft.lake.bloom.maxItems")
-      }
+      } finally s.conf.unset("spark.graft.lake.bloom.columns")
       val mx = orders(s, d).agg(max("o_orderkey")).head().getLong(0)
       val key = orders(s, d).filter(col("o_orderkey") >= mx / 2)
         .agg(min("o_orderkey")).head().getLong(0)
       val total = t.snapshotDataFiles().size
-      s.conf.set("spark.graft.lake.bloom.enabled", "false")
-      val statsOnly = try t.candidateFiles(col("o_orderkey") === key)
-      finally s.conf.unset("spark.graft.lake.bloom.enabled")
-      if (statsOnly.size != total)
+      val (files, stats) = t.snapshotStatsAt(t.latestVersion().get)
+      val statsKeep = files.count(f => stats.get(f).flatMap(_.get("o_orderkey"))
+        .forall(c => c.min.exists(BigDecimal(_) <= key) && c.max.exists(BigDecimal(_) >= key)))
+      if (statsKeep != total)
         sys.error(s"q_lake_bloom_skipping: fixture failed — stats alone " +
-          s"pruned ${total - statsOnly.size} of $total (layout not uniform?)")
+          s"prune ${total - statsKeep} of $total (layout not uniform?)")
       val bloomHit = t.candidateFiles(col("o_orderkey") === key)
       if (bloomHit.isEmpty || bloomHit.size >= total)
         sys.error(s"q_lake_bloom_skipping: expected a strict subset, " +

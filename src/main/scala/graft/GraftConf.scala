@@ -2,23 +2,15 @@ package graft
 
 import org.apache.spark.sql.RuntimeConfig
 
-/** Typed reads of the engine's `spark.graft.*` keys, one per value type:
-  * (key, default, range). A set value that does not parse as its type,
-  * or falls outside its range, fails with an `IllegalArgumentException`
-  * naming the key and the value — never a bare `NumberFormatException`,
-  * and never a boolean that silently reads as off because it was spelled
-  * `yes`. An unset key reads as its default. The keys stay string
-  * literals at each call site, where `ConfKeysSpec` finds them.
+/** Typed parses of the engine's `spark.graft.*` values: numbers in a
+  * range, booleans read from the session with a default. A set value
+  * that does not parse as its type, or falls outside its range, fails
+  * with an `IllegalArgumentException` naming the key and the value —
+  * never a bare `NumberFormatException`, and never a boolean that
+  * silently reads as off because it was spelled `yes`. The keys stay
+  * string literals at each call site, where `ConfKeysSpec` finds them.
   */
 object GraftConf {
-  def long(conf: RuntimeConfig, key: String, default: Long,
-           min: Long = Long.MinValue, max: Long = Long.MaxValue): Long =
-    conf.getOption(key).fold(default)(parseLong(key, _, min, max))
-
-  def int(conf: RuntimeConfig, key: String, default: Int,
-          min: Int = Int.MinValue, max: Int = Int.MaxValue): Int =
-    conf.getOption(key).fold(default)(parseLong(key, _, min, max).toInt)
-
   def boolean(conf: RuntimeConfig, key: String, default: Boolean): Boolean =
     conf.getOption(key).fold(default)(parseBoolean(key, _))
 

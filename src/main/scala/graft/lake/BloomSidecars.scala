@@ -21,11 +21,12 @@ import org.apache.spark.util.sketch.BloomFilter
   * `v{N}-{nonce}-bloom.jsonl` sidecar (`{"file","col","b64"}` lines,
   * write-once, name-keyed — the stats-sidecar contract). Opt-in via
   * table property `bloom.columns` (comma-separated; falls back to the
-  * session conf `spark.graft.lake.bloom.columns`), sized by
-  * `bloom.maxItems` (default 100000) and `bloom.fpp` (default 0.01) —
-  * ~120 KB per (file, column) at the defaults; what was requested but
-  * not written (missing column, collection failure) is logged, never
-  * silent.
+  * session conf `spark.graft.lake.bloom.columns`), sized for the
+  * commit's largest file's row count (staging recorded it) at
+  * `bloom.fpp` (default 0.01) — ~1.2 bytes per row per (file, column),
+  * within the caps of Spark's own runtime bloom filters; what was
+  * requested but not written (missing column, collection failure) is
+  * logged, never silent.
   *
   * Consultation — conservative by construction, against the TOP-LEVEL
   * CONJUNCTS only (a disjunct may hold through its other branch, so OR
@@ -33,8 +34,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * dropped iff some conjunct `col = v` / `col IN (…)` / `col <=> v`
   * (non-null, type-exact) tests NEGATIVE against the file's bloom for
   * `col`. Files or columns without blooms always stay. Two gears:
-  *  - DRIVER (≤ `spark.graft.lake.bloom.driverMaxFiles`, default 4096
-  *    bloomed files): deserialized filters cached per sidecar, the
+  *  - DRIVER (≤ 4096 candidate files): deserialized filters cached, the
   *    membership test is a driver-side hash probe per (file, term);
   *  - DISTRIBUTED above that: the sidecar lines are joined against the
   *    terms as a Spark job ([[BloomFilterMightContain]] over the

@@ -241,11 +241,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
 
   /** The ONE deletion-vector overlay, over any file-source frame
     * exposing `_metadata`: rows marked in `dvs` (the DV list of
-    * snapshot `v`) are dropped. Two gears, chosen from the vectors'
-    * total marked positions as the commit log records them (the DV
-    * parquet footers for files it has no count for): up to
-    * `spark.graft.lake.dvBroadcastMaxRows` the vectors broadcast as a
-    * scan-local row-index filter
+    * snapshot `v`) are dropped. Two gears, chosen by [[dvOversized]]
+    * from the vectors' size: while Spark would broadcast them the
+    * vectors broadcast as a scan-local row-index filter
     * ([[org.apache.spark.sql.graft.DvNotDeleted]]); above it, the
     * distributed anti-join on (`_g_file`, `_g_pos`). `withPos` appends
     * `_g_file` (file name) and `_g_pos` (`_metadata.row_index`) to the
@@ -300,16 +298,16 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       })
     })
 
-  /** True when the vectors `dvs` carry more marked positions than
-    * `spark.graft.lake.dvBroadcastMaxRows` lets the driver hold — the
-    * total as the commit log records it per vector file (the footers
-    * for files it has no count for). Above it nothing decodes vectors
-    * on the driver: the overlay anti-joins, [[liveRowCount]] counts
-    * with a job. */
+  /** True when the vectors `dvs`, as a broadcast map (8 bytes per
+    * marked position, the total as the commit log records it per vector
+    * file, the footers for files it has no count for), exceed Spark's
+    * `autoBroadcastJoinThreshold` — the bound Merge and the MinHash
+    * verify also follow; `-1` always anti-joins. Above it nothing
+    * decodes vectors on the driver: the overlay anti-joins,
+    * [[liveRowCount]] counts with a job. */
   private def dvOversized(dvs: Seq[String]): Boolean = {
-    val cap = GraftConf.long(spark.conf, "spark.graft.lake.dvBroadcastMaxRows",
-      4000000L, min = 0L)
-    fileRows(dvs) > cap
+    val cap = spark.sessionState.conf.autoBroadcastJoinThreshold
+    cap < 0 || 8L * fileRows(dvs) > cap
   }
 
   /** [[dvBroadcast]]'s cache, keyed by vector list — committed
@@ -502,24 +500,20 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     raw.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).distinct
   }
 
-  /** A bloom setting: the table property `prop`, else the session key
-    * `conf`, parsed as a double in [min, max] — a malformed value fails
-    * the commit naming the key it came from. */
-  private def bloomParam(prop: String, conf: String, default: Double,
-                         min: Double, max: Double): Double =
-    properties().find(_._1 == prop).map(p => GraftConf.parseDouble(prop, p._2, min, max))
-      .orElse(spark.conf.getOption(conf).map(GraftConf.parseDouble(conf, _, min, max)))
-      .getOrElse(default)
-
   private def writeBlooms(names: Seq[String], v: Int, nonce: String): Unit = {
     val logicalCols = bloomColumnsConfigured()
     if (logicalCols.isEmpty || names.isEmpty) return
-    // settings parse OUTSIDE the collection's catch: a malformed value
-    // is a configuration error, not a failed optimization
-    val fpp = bloomParam("bloom.fpp", "spark.graft.lake.bloom.fpp", 0.01,
-      min = Double.MinPositiveValue, max = 1.0 - 1e-12)
-    val maxItems = bloomParam("bloom.maxItems", "spark.graft.lake.bloom.maxItems",
-      100000, min = 1, max = Long.MaxValue.toDouble).toLong
+    // the fpp — table property `bloom.fpp`, else the session key —
+    // parses OUTSIDE the collection's catch: a malformed value is a
+    // configuration error naming its key, not a failed optimization
+    val fppKey = "spark.graft.lake.bloom.fpp"
+    val fpp = properties().find(_._1 == "bloom.fpp")
+      .orElse(spark.conf.getOption(fppKey).map(fppKey -> _))
+      .fold(0.01) { case (key, raw) =>
+        GraftConf.parseDouble(key, raw, min = Double.MinPositiveValue, max = 1.0 - 1e-12) }
+    // sized for the largest file (staging recorded every row count):
+    // a smaller one just gets a lower false-positive rate
+    val maxItems = names.map(n => log.fileMetaIndex(n).rows).max
     try {
       // staged frames carry PHYSICAL column names — translate the
       // configured logical names before collecting
@@ -546,26 +540,21 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   /** Bloom layer under [[pruneByStats]]: drop `files` members PROVABLY
     * excluded by a top-level point conjunct against their per-file
     * blooms. Conservative everywhere blooms are absent. Two gears by
-    * snapshot size — driver probe below
-    * `spark.graft.lake.bloom.driverMaxFiles` (default 4096), a Spark
-    * job over the sidecar lines above it (filters never aggregate on
-    * the driver at 10⁶ files). */
+    * snapshot size — driver probe up to
+    * [[VersionedTable.BloomDriverMaxFiles]] files, a Spark job over the
+    * sidecar lines above it (filters never aggregate on the driver at
+    * 10⁶ files). */
   private def bloomPrune(files: Seq[String],
                          resolved: org.apache.spark.sql.catalyst.expressions.Expression,
                          schema: StructType, inv: Map[String, String],
                          dead: Set[String]): Seq[String] = {
     if (files.isEmpty) return files
-    val enabled = GraftConf.boolean(spark.conf,
-      "spark.graft.lake.bloom.enabled", default = true)
-    if (!enabled) return files
     val sidecars = log.blooms.paths()
     if (sidecars.isEmpty) return files
     val terms = BloomSidecars.pointTerms(resolved, schema,
       schema.fieldNames.toSet)
     if (terms.isEmpty) return files
-    val driverMax = GraftConf.int(spark.conf,
-      "spark.graft.lake.bloom.driverMaxFiles", 4096, min = 0)
-    if (files.size <= driverMax) {
+    if (files.size <= VersionedTable.BloomDriverMaxFiles) {
       val blooms = log.blooms.all()
       files.filter { f =>
         blooms.get(f).forall { byPhys =>
@@ -2914,6 +2903,10 @@ object VersionedTable {
     * it per file so resolution from a checkpoint keeps the original add
     * time. -1 = unknown (legacy checkpoints, in-flight staging). */
   case class FileMeta(size: Long, rows: Long, mtime: Long = -1L)
+
+  /** Above this many candidate files the bloom probe runs as a Spark
+    * job instead of on the driver. */
+  private val BloomDriverMaxFiles = 4096
 
   /** Deletion-vector sidecar schema: deleted row positions by file. */
   private[lake] val DvSchema: org.apache.spark.sql.types.StructType =

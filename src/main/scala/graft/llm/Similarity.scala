@@ -300,7 +300,6 @@ object Similarity {
                 m: Int = 4, dim: Int = 64, nProbe: Int = 2,
                 corpusSize: Long = 0): DataFrame = {
     require(dim % m == 0, "dim must split evenly into m subspaces")
-    val sub = dim / m
     val n = if (corpusSize > 0) corpusSize else corpus.count()
     val stride = math.max(1L, math.sqrt(n.toDouble).toLong)
     val cents = ivfCentroids(corpus, n)
@@ -313,7 +312,20 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
 
-    // PQ codes + per-query LUT — pqTopK's chains verbatim
+    val (codes, lut) = pqCodesAndLut(corpus, queries, m, dim / m, stride)
+    // ADC over candidates only: codes restricted to probed-cell members
+    // BEFORE the LUT join, so scoring work is O(candidates · m)
+    adcTopK(cand.join(codes, "vec_id")
+      .join(broadcast(lut), Seq("query_id", "j", "code")), m, k)
+  }
+
+  /** The PQ half [[pqTopK]] and [[ivfPqTopK]] share: sample codebooks
+    * (every `stride`-th vector's `m` subvectors of width `sub`), each
+    * corpus vector's nearest code per subspace — `(vec_id, j, code)`,
+    * L2² with ties to the lower code — and each query's lookup table
+    * of subspace distances to every code, `(query_id, j, code, pd)`. */
+  private def pqCodesAndLut(corpus: DataFrame, queries: DataFrame, m: Int,
+                            sub: Int, stride: Long): (DataFrame, DataFrame) = {
     def subSlices(v: Column) =
       array((0 until m).map(j => slice(v, j * sub + 1, sub)): _*)
     val codebook = corpus.filter(col("vec_id") % stride === 0)
@@ -322,13 +334,13 @@ object Similarity {
       .withColumn("csq", sumSq(col("csub")))
     def l2sq(v: Column, vsq: Column) =
       vsq - lit(2.0) * dot(v, col("csub")) + col("csq")
-    val wCode = Window.partitionBy("vec_id", "j").orderBy(col("d2"), col("code"))
+    val wAssign = Window.partitionBy("vec_id", "j").orderBy(col("d2"), col("code"))
     val codes = corpus
       .select(col("vec_id"), posexplode(subSlices(col("embedding"))).as(Seq("j", "vsub")))
       .withColumn("vsq", sumSq(col("vsub")))
       .join(broadcast(codebook), "j")
       .withColumn("d2", l2sq(col("vsub"), col("vsq")))
-      .withColumn("rn", row_number().over(wCode)).filter(col("rn") === 1)
+      .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
       .select(col("vec_id"), col("j"), col("code"))
     val lut = queries
       .select(col("query_id"), posexplode(subSlices(col("qe"))).as(Seq("j", "qsub")))
@@ -336,14 +348,16 @@ object Similarity {
       .join(broadcast(codebook), "j")
       .withColumn("pd", l2sq(col("qsub"), col("qsq")))
       .select(col("query_id"), col("j"), col("code"), col("pd"))
+    (codes, lut)
+  }
 
-    // ADC over candidates only: codes restricted to probed-cell members
-    // BEFORE the LUT join, so scoring work is O(candidates · m)
+  /** ADC top-k over scored `(query_id, vec_id, j, pd)` rows: per-subspace
+    * sums added in FIXED subspace order so both engines sum identically,
+    * ranked ascending, ties to the lower neighbor id. */
+  private def adcTopK(scored: DataFrame, m: Int, k: Int): DataFrame = {
     val parts = (0 until m).map(j => sum(when(col("j") === j, col("pd"))).as(s"p$j"))
     val w = Window.partitionBy("query_id").orderBy(col("adc"), col("neighbor_id"))
-    cand.join(codes, "vec_id")
-      .join(broadcast(lut), Seq("query_id", "j", "code"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
+    scored.groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
       .agg(parts.head, parts.tail: _*)
       .withColumn("adc", round((0 until m).map(j => col(s"p$j")).reduce(_ + _), 6))
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
@@ -374,7 +388,6 @@ object Similarity {
              m: Int = 4, dim: Int = 64, centroidEvery: Long = 0,
              corpusSize: Long = 0): DataFrame = {
     require(dim % m == 0, "dim must split evenly into m subspaces")
-    val sub = dim / m
     // corpusSize > 0 skips the count job (see ivfTopK).
     val stride =
       if (centroidEvery > 0) centroidEvery
@@ -382,39 +395,8 @@ object Similarity {
         val n = if (corpusSize > 0) corpusSize else corpus.count()
         math.max(1L, math.sqrt(n.toDouble).toLong)
       }
-    def subSlices(v: Column) =
-      array((0 until m).map(j => slice(v, j * sub + 1, sub)): _*)
-    val codebook = corpus.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("code"),
-        posexplode(subSlices(col("embedding"))).as(Seq("j", "csub")))
-      .withColumn("csq", sumSq(col("csub")))
-    def l2sq(v: Column, vsq: Column) =
-      vsq - lit(2.0) * dot(v, col("csub")) + col("csq")
-
-    val wAssign = Window.partitionBy("vec_id", "j").orderBy(col("d2"), col("code"))
-    val assigned = corpus
-      .select(col("vec_id"), posexplode(subSlices(col("embedding"))).as(Seq("j", "vsub")))
-      .withColumn("vsq", sumSq(col("vsub")))
-      .join(broadcast(codebook), "j")
-      .withColumn("d2", l2sq(col("vsub"), col("vsq")))
-      .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("j"), col("code"))
-
-    val lut = queries
-      .select(col("query_id"), posexplode(subSlices(col("qe"))).as(Seq("j", "qsub")))
-      .withColumn("qsq", sumSq(col("qsub")))
-      .join(broadcast(codebook), "j")
-      .withColumn("pd", l2sq(col("qsub"), col("qsq")))
-      .select(col("query_id"), col("j"), col("code"), col("pd"))
-
-    val parts = (0 until m).map(j => sum(when(col("j") === j, col("pd"))).as(s"p$j"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc"), col("neighbor_id"))
-    assigned.join(broadcast(lut), Seq("j", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id").as("neighbor_id"))
-      .agg(parts.head, parts.tail: _*)
-      .withColumn("adc", round((0 until m).map(j => col(s"p$j")).reduce(_ + _), 6))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
-      .select("query_id", "neighbor_id", "adc", "rn")
+    val (codes, lut) = pqCodesAndLut(corpus, queries, m, dim / m, stride)
+    adcTopK(codes.join(broadcast(lut), Seq("j", "code"))
+      .filter(col("vec_id") =!= col("query_id")), m, k)
   }
 }

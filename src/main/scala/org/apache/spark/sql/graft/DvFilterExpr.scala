@@ -27,9 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `readSnapshotFiles`, the SQL door's native replan, the change
   * feed's replaced-file side, and every mutation pre-scan and rewrite
   * (CoW, MoR, merge, replaceWhere, optimize, compaction) — when the
-  * snapshot's total deleted-position count fits the broadcast budget
-  * (`spark.graft.lake.dvBroadcastMaxRows`, default 4M ≈ 32 MB of
-  * longs); larger vectors take the distributed anti-join gear — same
+  * snapshot's deleted positions, at 8 bytes each, fit Spark's
+  * `autoBroadcastJoinThreshold` (10 MB ≈ 1.3M positions by default);
+  * larger vectors take the distributed anti-join gear — same
   * semantics, join-shaped cost. Codegen'd; the interpreted eval path
   * mirrors it for completeness.
   */

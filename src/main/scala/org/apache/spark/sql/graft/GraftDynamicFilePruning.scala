@@ -47,12 +47,11 @@ import graft.lake.{FileStats, VersionedTable}
   * same duplication Spark's own runtime bloom filters accept.
   *
   * Fires only when ALL of:
-  *  - `spark.graft.lake.dfp.auto` (default true);
   *  - the fact side is the native log-planned relation
   *    ([[GraftFileIndex]]) under pure attribute Projects / deterministic
   *    subquery-free Filters, non-streaming, unmapped, DV-free;
-  *  - the snapshot has ≥ `spark.graft.lake.dfp.minFiles` (default 8)
-  *    data files — below that the bookkeeping outweighs any pruning;
+  *  - the snapshot has ≥ 8 data files — below that the bookkeeping
+  *    outweighs any pruning;
   *  - at least one equi-key is a stats-eligible fact column that is
   *    NOT a partition column (partition keys belong to Spark's own
   *    DPP, which the r18 partitionSchema already feeds);
@@ -66,22 +65,18 @@ import graft.lake.{FileStats, VersionedTable}
   * the pruned file set is a SUPERSET of the files holding any dim key,
   * and the join above still applies its own condition — so for every
   * fire-eligible join type the rewritten query is row-for-row the
-  * original. Declines are silent and cost nothing.
+  * original. Declines are silent and cost nothing. To turn the rule
+  * off, name it in `spark.sql.optimizer.excludedRules`, as any other
+  * pre-CBO rule.
   */
 case class GraftAutoFilePruning(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = graft.GraftConf.boolean(session.conf,
-      "spark.graft.lake.dfp.auto", default = true)
-    if (!enabled) plan
-    else plan.transformDown {
-      case j: Join => rewrite(j).getOrElse(j)
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+    case j: Join => rewrite(j).getOrElse(j)
   }
 
-  private def minFiles: Int =
-    graft.GraftConf.int(session.conf, "spark.graft.lake.dfp.minFiles", 8, min = 0)
+  private val MinFiles = 8
 
   /** The fact-side scan subtree: the native relation under attribute
     * Projects and benign Filters. `output` is the subtree's own output
@@ -169,7 +164,7 @@ case class GraftAutoFilePruning(session: SparkSession)
       val usable = oriented.filter { case (fk, _) =>
         FileStats.statKind(fk.dataType).isDefined }
       if (usable.isEmpty) return None
-      if (table.snapshotDataFiles(Some(v)).size < minFiles) return None
+      if (table.snapshotDataFiles(Some(v)).size < MinFiles) return None
       val keysPlan = Project(usable.map(_._2), dim)
       val factStats = fact.stats
       Some(GraftDynamicFileScan(f.output, table, v,

@@ -396,10 +396,9 @@ class GraftLakeSink(spark: SparkSession, path: String, appId: String,
             // scope (stats join + distinct + collect) is what removes the
             // key-count cap, but it costs a measured ~2× wall floor PER
             // MICRO-BATCH at typical update sizes (SCALE.md r18
-            // adjudication); above the threshold it takes over, so there
+            // adjudication); above 1000 keys it takes over, so there
             // is still NO cap — just a cheaper gear below it.
-            val collectCap = graft.GraftConf.int(spark.conf,
-              "spark.graft.lake.updateScopeCollectThreshold", 1000, min = 0)
+            val collectCap = 1000
             val smallKeys = keysDf.limit(collectCap + 1).collect()
             val hit =
               if (smallKeys.length > collectCap)

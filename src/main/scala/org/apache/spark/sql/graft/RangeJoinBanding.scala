@@ -28,15 +28,18 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Scope guards: inner joins, no existing cross-side equality (those
   * already hash-join — also makes the rule idempotent, since the rewrite
   * introduces one), integral range columns (cast timestamps to
-  * micros first), deterministic bounds, B > 0.
+  * micros first), deterministic bounds. B must be ≥ 1 when set.
   */
 object RangeJoinBanding extends Rule[LogicalPlan] with PredicateHelper {
 
   val BIN_SIZE_KEY = "spark.graft.rangeJoin.binSize"
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val binSize = graft.GraftConf.parseLong(BIN_SIZE_KEY, conf.getConfString(BIN_SIZE_KEY, "0"))
-    if (binSize <= 0) return plan
+    // unset means off; a set value below 1 fails naming the key
+    val binSize = conf.getConfString(BIN_SIZE_KEY, null) match {
+      case null => return plan
+      case raw => graft.GraftConf.parseLong(BIN_SIZE_KEY, raw, min = 1L)
+    }
     plan.transform {
       case j @ Join(left, right, Inner, Some(cond), hint) =>
         rewrite(j, left, right, cond, hint, binSize).getOrElse(j)

@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every `spark.graft.*` key the engine reads is documented: the string
   * literals under `src/main` must name exactly the keys in README.md's
   * "Configuration keys" table (key, default, live user), so a new knob
-  * cannot land undocumented and a deleted one cannot linger there. */
+  * cannot land undocumented and a deleted one cannot linger there; and
+  * every literal under `src/test` must be one of them, since a test
+  * setting a deleted key is a silent no-op that runs only one gear. */
 class ConfKeysSpec extends AnyFunSuite {
   private val Literal = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)".r
   private val TableRow = "^\\| `(spark\\.graft\\.[^`]+)` \\|".r
@@ -29,5 +31,10 @@ class ConfKeysSpec extends AnyFunSuite {
     assert(code.nonEmpty, "no spark.graft.* literals found under src/main")
     assert((code -- readme).isEmpty, s"undocumented keys: ${(code -- readme).toSeq.sorted}")
     assert((readme -- code).isEmpty, s"documented keys no code reads: ${(readme -- code).toSeq.sorted}")
+  }
+
+  test("every spark.graft.* key named under src/test is one src/main reads") {
+    val stale = sourceKeys(Paths.get("src/test")) -- sourceKeys(Paths.get("src/main"))
+    assert(stale.isEmpty, s"tests name keys the engine never reads: ${stale.toSeq.sorted}")
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lake.VersionedTable
@@ -23,24 +22,14 @@ class GraftConfSpec extends AnyFunSuite {
     assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
   }
 
-  private def dvTable(): VersionedTable = {
-    val t = VersionedTable(spark, Files.createTempDirectory("graft-conf").toString)
-    t.commitOverwrite((1L to 6L).map(i => (i, s"r$i")).toDF("id", "v"))
-    assert(t.deleteMoR(col("id") <= 2L).isDefined)
-    t
-  }
-
   test("integer keys: a malformed or out-of-range value fails naming the key and value") {
-    val key = "spark.graft.lake.dvBroadcastMaxRows"
-    assert(GraftConf.long(spark.conf, key, 7L) == 7L) // unset: the default
-    assert(withConf(key, " 12 ")(GraftConf.long(spark.conf, key, 7L, min = 0L)) == 12L)
-    Seq("lots", "1.5", "-1").foreach { bad =>
-      failsNaming(key, bad)(withConf(key, bad)(GraftConf.long(spark.conf, key, 7L, min = 0L)))
-    }
-    // where the engine reads it: the deletion-vector overlay's size gear
-    val t = dvTable()
-    failsNaming(key, "lots")(withConf(key, "lots")(t.read().count()))
-    assert(withConf(key, "0")(t.read().count()) == 4L) // the anti-join gear
+    val key = "spark.graft.stream.statePartitions"
+    def parse(raw: String) = GraftConf.parseLong(key, raw, min = 1L, max = Int.MaxValue)
+    assert(parse(" 12 ") == 12L)
+    Seq("lots", "1.5", "0", "2147483648").foreach(bad => failsNaming(key, bad)(parse(bad)))
+    // where the engine reads it: the streaming aggregate's state width
+    failsNaming(key, "lots")(withConf(key, "lots")(Tables.statePartitions(spark, 1L)))
+    assert(withConf(key, "3")(Tables.statePartitions(spark, 1L)) == 3)
   }
 
   test("boolean keys take true or false in any case and fail naming the key otherwise") {
@@ -56,11 +45,6 @@ class GraftConfSpec extends AnyFunSuite {
     val fresh = VersionedTable(spark, Files.createTempDirectory("graft-conf").toString)
     fresh.commitOverwrite(Seq((1L, "a")).toDF("id", "v"))
     failsNaming(key, "yes")(withConf(key, "yes")(fresh.read().collect()))
-    val t = dvTable()
-    withConf("spark.graft.lake.bloom.columns", "id")(
-      t.commitAppend(Seq((7L, "r7")).toDF("id", "v")))
-    failsNaming("spark.graft.lake.bloom.enabled", "on")(
-      withConf("spark.graft.lake.bloom.enabled", "on")(t.candidateFiles(col("id") === 7L)))
   }
 
   test("a malformed bloom.fpp fails the commit naming the key instead of dropping the blooms") {
@@ -70,12 +54,12 @@ class GraftConfSpec extends AnyFunSuite {
     val head = t.latestVersion()
     failsNaming("bloom.fpp", "often")(t.commitAppend(Seq((2L, "b")).toDF("id", "v")))
     assert(t.latestVersion() == head) // nothing committed
-    failsNaming("spark.graft.lake.bloom.maxItems", "0")(
-      withConf("spark.graft.lake.bloom.maxItems", "0") {
-        t.setProperties(Seq("bloom.fpp" -> "0.05"))
-        t.commitAppend(Seq((2L, "b")).toDF("id", "v"))
-      })
+    // so does the session key when no table property is set
+    t.unsetProperties(Seq("bloom.fpp"))
+    failsNaming("spark.graft.lake.bloom.fpp", "2")(
+      withConf("spark.graft.lake.bloom.fpp", "2")(t.commitAppend(Seq((2L, "b")).toDF("id", "v"))))
     // a well-formed value commits with blooms
+    t.setProperties(Seq("bloom.fpp" -> "0.05"))
     assert(t.commitAppend(Seq((2L, "b")).toDF("id", "v")) > head.get)
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.graft.GraftDynamicFileScanExec
   *    join type and with extra fact-side filters captured;
   *  - every decline path declines: partition-key joins (Spark DPP's
   *    job), non-selective dims, small tables, preserved outer sides,
-  *    DV overlays, the conf kill-switch.
+  *    DV overlays, the rule named in `spark.sql.optimizer.excludedRules`.
   */
 class AutoDfpSpec extends AnyFunSuite {
   private lazy val base = TestSpark.spark
@@ -28,6 +28,14 @@ class AutoDfpSpec extends AnyFunSuite {
     * injected there, exactly as a user session configured with
     * spark.sql.extensions=graft.GraftExtensions. */
   private lazy val es: SparkSession = GraftSqlSessions.withDml(base)
+
+  /** `f` with the rule turned off the way Spark turns off any
+    * optimizer rule. */
+  private def ruleExcluded[A](f: => A): A = {
+    es.conf.set("spark.sql.optimizer.excludedRules",
+      classOf[org.apache.spark.sql.graft.GraftAutoFilePruning].getName)
+    try f finally es.conf.unset("spark.sql.optimizer.excludedRules")
+  }
 
   private def dfpScans(df: DataFrame): Seq[GraftDynamicFileScanExec] = {
     val plan = df.queryExecution.executedPlan match {
@@ -75,13 +83,12 @@ class AutoDfpSpec extends AnyFunSuite {
     assert(openedFact.subsetOf(t.snapshotDataFiles().toSet),
       "opened a file outside the snapshot")
     // control: rule off, same query, same session
-    es.conf.set("spark.graft.lake.dfp.auto", "false")
-    try {
+    ruleExcluded {
       val control = t.read().join(hot, col("k") === col("dk"))
         .groupBy("tag").agg(count(lit(1)).as("n"), sum("v").as("sv"))
       assert(dfpScans(control).isEmpty)
       assert(got.sortBy(_.toString) == control.collect().toSeq.sortBy(_.toString))
-    } finally es.conf.unset("spark.graft.lake.dfp.auto")
+    }
   }
 
   test("captured fact-side filters re-apply inside the nested read") {
@@ -120,35 +127,32 @@ class AutoDfpSpec extends AnyFunSuite {
     val (t, dim) = fixture()
     // non-selective dim (no filter)
     assert(dfpScans(t.read().join(dim, col("k") === col("dk"))).isEmpty)
-    // conf off
-    es.conf.set("spark.graft.lake.dfp.auto", "false")
-    try assert(dfpScans(t.read().join(dim.filter(col("dk") < 10),
-      col("k") === col("dk"))).isEmpty)
-    finally es.conf.unset("spark.graft.lake.dfp.auto")
-    // small table (< minFiles files)
+    // rule excluded: the same eligible join plans the plain scan
+    def eligible = t.read().join(dim.filter(col("dk") < 10), col("k") === col("dk"))
+    assert(dfpScans(eligible).nonEmpty)
+    ruleExcluded(assert(dfpScans(eligible).isEmpty))
+    // small table (< 8 files)
     val small = VersionedTable(es,
       Files.createTempDirectory("graft-autodfp-small").toString + "/t")
     small.commitOverwrite(es.range(0, 100).toDF("k").coalesce(2))
     assert(dfpScans(small.read().join(dim.filter(col("dk") < 10),
       col("k") === col("dk"))).isEmpty)
-    // partition-key join: Spark's own DPP territory — decline
+    // partition-key join: Spark's own DPP territory — decline (10
+    // partition files, so the size gate is not what declines)
     val part = VersionedTable(es,
       Files.createTempDirectory("graft-autodfp-part").toString + "/t")
     part.commitOverwritePartitioned(es.range(0, 1000).toDF("k")
       .withColumn("p", (col("k") % 10).cast("int")), Seq("p"))
-    es.conf.set("spark.graft.lake.dfp.minFiles", "1")
-    try {
-      val dimp = dim.filter(col("dk") < 3).withColumnRenamed("dk", "dp")
-        .withColumn("dp", col("dp").cast("int"))
-      assert(dfpScans(part.read().join(dimp, col("p") === col("dp"))).isEmpty)
-      // DV overlay: MoR delete leaves deletion vectors → decline
-      val (t2, dim2) = fixture()
-      es.conf.set("spark.graft.lake.dfp.minFiles", "1")
-      t2.deleteMoR(col("k") === 7L)
-      val j2 = t2.read().join(dim2.filter(col("dk") < 50), col("k") === col("dk"))
-      assert(dfpScans(j2).isEmpty, "fired through a DV overlay")
-      assert(j2.count() == 49) // k=7 deleted
-    } finally es.conf.unset("spark.graft.lake.dfp.minFiles")
+    assert(part.snapshotDataFiles().size >= 8)
+    val dimp = dim.filter(col("dk") < 3).withColumnRenamed("dk", "dp")
+      .withColumn("dp", col("dp").cast("int"))
+    assert(dfpScans(part.read().join(dimp, col("p") === col("dp"))).isEmpty)
+    // DV overlay: MoR delete leaves deletion vectors → decline
+    val (t2, dim2) = fixture()
+    t2.deleteMoR(col("k") === 7L)
+    val j2 = t2.read().join(dim2.filter(col("dk") < 50), col("k") === col("dk"))
+    assert(dfpScans(j2).isEmpty, "fired through a DV overlay")
+    assert(j2.count() == 49) // k=7 deleted
   }
 
   test("empty dim keys scope to an empty read; null keys stay correct") {

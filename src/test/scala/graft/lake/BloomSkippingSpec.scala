@@ -14,7 +14,8 @@ import graft.TestSpark
   * where stats prune nothing, result equivalence, conservative
   * behavior (no sidecar, nulls, non-point predicates, OR trees,
   * type-mismatched literals), IN-lists, both gears (driver probe and
-  * the distributed job), and the property/conf activation surface. */
+  * the distributed job), bloom sizing from the files' row counts, and
+  * the property/conf activation surface. */
 class BloomSkippingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -24,20 +25,14 @@ class BloomSkippingSpec extends AnyFunSuite {
   private def fixture(bloomOn: Boolean = true) = {
     val dir = Files.createTempDirectory("graft-bloom").toString + "/t"
     val t = VersionedTable(spark, dir)
-    if (bloomOn) {
-      spark.conf.set("spark.graft.lake.bloom.columns", "k,tag")
-      spark.conf.set("spark.graft.lake.bloom.maxItems", "2000")
-    }
+    if (bloomOn) spark.conf.set("spark.graft.lake.bloom.columns", "k,tag")
     try {
       t.commitOverwrite(spark.range(0, 4000).toDF("id")
         .select(col("id").as("k"),
           concat(lit("t"), col("id")).as("tag"),
           (col("id") * 2.5).as("v"))
         .repartition(8, col("k"))) // hash layout: ranges fully overlap
-    } finally {
-      spark.conf.unset("spark.graft.lake.bloom.columns")
-      spark.conf.unset("spark.graft.lake.bloom.maxItems")
-    }
+    } finally spark.conf.unset("spark.graft.lake.bloom.columns")
     t
   }
 
@@ -103,21 +98,40 @@ class BloomSkippingSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-bloom-prop").toString + "/t"
     val t = VersionedTable(spark, dir)
     t.commitOverwrite(spark.range(0, 10).toDF("k")) // seed so properties commit works
-    t.setProperties(Seq("bloom.columns" -> "k", "bloom.maxItems" -> "2000"))
+    t.setProperties(Seq("bloom.columns" -> "k"))
     t.commitOverwrite(spark.range(0, 4000).toDF("id")
       .select(col("id").as("k"), (col("id") % 7).as("g"))
       .repartition(8, col("k")))
-    val total = t.snapshotDataFiles().size
+    val files = t.snapshotDataFiles()
     val driverHit = t.candidateFiles(col("k") === 77L)
-    assert(driverHit.nonEmpty && driverHit.size < total)
-    // force the distributed gear and compare
-    spark.conf.set("spark.graft.lake.bloom.driverMaxFiles", "0")
-    try {
-      val distHit = t.candidateFiles(col("k") === 77L)
-      assert(distHit.toSet == driverHit.toSet,
-        s"gears disagree: driver=$driverHit dist=$distHit")
-      assert(t.readWhere(col("k") === 77L).count() == 1)
-    } finally spark.conf.unset("spark.graft.lake.bloom.driverMaxFiles")
+    assert(driverHit.nonEmpty && driverHit.size < files.size)
+    // the distributed gear (snapshots above 4096 files) over the same
+    // sidecars: stats keep every file of the hash layout, so it must
+    // drop exactly the files the driver probe dropped
+    val dropped = BloomSidecars.droppedFilesDistributed(spark,
+      t.log.blooms.paths().map(_.toString),
+      Seq(BloomSidecars.PointTerm("k", Seq(77L), org.apache.spark.sql.types.LongType)),
+      Map.empty, Set.empty)
+    val distHit = files.filterNot(dropped)
+    assert(distHit.toSet == driverHit.toSet,
+      s"gears disagree: driver=$driverHit dist=$distHit")
+    assert(t.readWhere(col("k") === 77L).count() == 1)
+  }
+
+  test("blooms are sized from the files' row counts: 250k-row files still prune absent keys") {
+    val t = VersionedTable(spark,
+      Files.createTempDirectory("graft-bloom-size").toString + "/t")
+    spark.conf.set("spark.graft.lake.bloom.columns", "k")
+    try t.commitOverwrite(spark.range(0, 1000000).select((col("id") * 2).as("k"))
+      .repartition(4, col("k")))
+    finally spark.conf.unset("spark.graft.lake.bloom.columns")
+    assert(t.snapshotDataFiles().size == 4)
+    // odd keys are absent; each lies inside every file's [min, max], so
+    // only the blooms can drop a file. Sized for 250k rows at fpp 0.01,
+    // about 1 of the 80 probes survives; an undersized filter saturates.
+    val absent = (1 to 20).map(i => 2L * i * 49999 + 1)
+    val kept = absent.map(k => t.candidateFiles(col("k") === k).size).sum
+    assert(kept <= 4, s"$kept of 80 file probes survived")
   }
 
   test("DML rewrites keep bloom coverage consistent (CoW rewrite re-blooms its files)") {

@@ -142,7 +142,7 @@ class LakeSqlSpec extends AnyFunSuite {
     // conjunct must not take the data filter's pruning down with it
     assert(GraftLakeRelation.lastScanFiles.get(dir) < t.snapshotDataFiles().size)
     // the oversized-vector fallback is the anti-join — same rows
-    spark.conf.set("spark.graft.lake.dvBroadcastMaxRows", "1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val big = VersionedTable(spark, dir) // fresh handle: no broadcast cache
       val joinPlan = big.read().queryExecution.executedPlan.toString
@@ -151,7 +151,7 @@ class LakeSqlSpec extends AnyFunSuite {
       assert(big.read().count() == 90)
       assert(big.readWhere(col("id") <= 10).count() == 9)
       assert(GraftLakeRelation.lastScanFiles.get(dir) < big.snapshotDataFiles().size)
-    } finally spark.conf.unset("spark.graft.lake.dvBroadcastMaxRows")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     // a metadata-only added column stays on the fast path, null-filled
     val dir2 = scratch("graft-sql-native2") + "/t"
     val t2 = VersionedTable(spark, dir2)

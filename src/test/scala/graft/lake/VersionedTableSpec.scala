@@ -581,14 +581,15 @@ class VersionedTableSpec extends AnyFunSuite {
   // ---- deletion vectors (merge-on-read deletes) ------------------------
 
   /** Registers `body` once per DV overlay gear: under `name` at the
-    * default budget (broadcast row-index filter), and under
-    * `name [anti-join gear]` with `spark.graft.lake.dvBroadcastMaxRows`
-    * at 0, so every vector — single-row ones too — takes the anti-join. */
+    * default broadcast threshold (broadcast row-index filter), and
+    * under `name [anti-join gear]` with Spark's
+    * `autoBroadcastJoinThreshold` at -1, so every vector — single-row
+    * ones too — takes the anti-join. */
   private def dvTest(name: String)(body: => Any): Unit = {
     test(name)(body)
     test(s"$name [anti-join gear]") {
-      spark.conf.set("spark.graft.lake.dvBroadcastMaxRows", "0")
-      try body finally spark.conf.unset("spark.graft.lake.dvBroadcastMaxRows")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 

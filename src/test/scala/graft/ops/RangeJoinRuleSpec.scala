@@ -75,6 +75,24 @@ class RangeJoinRuleSpec extends AnyFunSuite {
     }
   }
 
+  test("a binSize below 1 fails naming the key instead of turning the rule off") {
+    withExtSession { s =>
+      import s.implicits._
+      val key = org.apache.spark.sql.graft.RangeJoinBanding.BIN_SIZE_KEY
+      val (points, intervals) = fixtures(s)
+      Seq("0", "-100").foreach { bad =>
+        s.conf.set(key, bad)
+        try {
+          val e = intercept[Exception](
+            points.join(intervals, $"t" >= $"lo" && $"t" <= $"hi").collect())
+          val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .map(_.getMessage).mkString(" | ")
+          assert(msgs.contains(key) && msgs.contains(s"'$bad'"), msgs)
+        } finally s.conf.unset(key)
+      }
+    }
+  }
+
   test("joins with an equi key are left alone (already hash joins)") {
     withExtSession { s =>
       import s.implicits._
