@@ -173,9 +173,8 @@ object CoreQueries25 {
       val key = orders(s, d).filter(col("o_orderkey") >= mx / 2)
         .agg(min("o_orderkey")).head().getLong(0)
       val total = t.snapshotDataFiles().size
-      val (files, stats) = t.snapshotStatsAt(t.latestVersion().get)
-      val statsKeep = files.count(f => stats.get(f).flatMap(_.get("o_orderkey"))
-        .forall(c => c.min.exists(BigDecimal(_) <= key) && c.max.exists(BigDecimal(_) >= key)))
+      val statsKeep = t.filesHitByKeys(s.range(1).select(lit(key).as("o_orderkey")),
+        Seq("o_orderkey")).size
       if (statsKeep != total)
         sys.error(s"q_lake_bloom_skipping: fixture failed — stats alone " +
           s"prune ${total - statsKeep} of $total (layout not uniform?)")

@@ -24,7 +24,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * session conf `spark.graft.lake.bloom.columns`), sized for the
   * commit's largest file's row count (staging recorded it) at
   * `bloom.fpp` (default 0.01) — ~1.2 bytes per row per (file, column),
-  * within the caps of Spark's own runtime bloom filters; what was
+  * at most [[MaxFilterBytes]] (1 MB ≈ 870k rows at 0.01; a larger file
+  * gets a higher false-positive rate, never a larger filter); what was
   * requested but not written (missing column, collection failure) is
   * logged, never silent.
   *
@@ -34,7 +35,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * dropped iff some conjunct `col = v` / `col IN (…)` / `col <=> v`
   * (non-null, type-exact) tests NEGATIVE against the file's bloom for
   * `col`. Files or columns without blooms always stay. Two gears:
-  *  - DRIVER (≤ 4096 candidate files): deserialized filters cached, the
+  *  - DRIVER (≤ 4096 candidate files and ≤ 256 MB of bloom sidecars —
+  *    the driver loads every sidecar): deserialized filters cached, the
   *    membership test is a driver-side hash probe per (file, term);
   *  - DISTRIBUTED above that: the sidecar lines are joined against the
   *    terms as a Spark job ([[BloomFilterMightContain]] over the
@@ -43,6 +45,12 @@ import org.apache.spark.util.sketch.BloomFilter
   *    never gigabytes of filters.
   */
 object BloomSidecars {
+
+  /** The largest filter written for one (file, column). Every filter of
+    * a commit is collected to the driver to write its sidecar, and the
+    * driver gear loads every sidecar, so the size of one is bounded by a
+    * constant, not by the file's row count. */
+  val MaxFilterBytes: Long = 1L << 20
 
   final case class PointTerm(col: String, values: Seq[Any], dt: DataType)
 
@@ -116,7 +124,8 @@ object BloomSidecars {
       System.err.println(s"[lake] bloom.columns requests '$c' but the " +
         "committed files do not carry it — no bloom written"))
     if (present.isEmpty) return Nil
-    val numBits = BloomFilter.optimalNumOfBits(maxItems, fpp)
+    val numBits = math.min(BloomFilter.optimalNumOfBits(maxItems, fpp),
+      8 * MaxFilterBytes)
     // Build aggregate columns through the bridge: BloomFilterAggregate
     // is internal (the engine's own runtime-filter machinery uses it).
     val aggCols = present.map { c =>

@@ -6,7 +6,7 @@ import java.nio.file.{Files, StandardCopyOption}
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 import LakeLog.{Commit, Snap}
 import VersionedTable.FileMeta
@@ -71,8 +71,10 @@ private[lake] final class LakeLog(fs: FileSystem, tablePath: String,
 
   /** The log directory's entries (empty for a fresh table) — the one
     * listing behind versions, checkpoints and sidecar discovery. */
-  private def listLog(): Seq[Path] =
-    if (!fs.exists(logDir)) Nil else fs.listStatus(logDir).map(_.getPath).toSeq
+  private def listLog(): Seq[Path] = listLogStatus().map(_.getPath)
+
+  private def listLogStatus(): Seq[FileStatus] =
+    if (!fs.exists(logDir)) Nil else fs.listStatus(logDir).toSeq
 
   private def numbered(name: scala.util.matching.Regex): Seq[Int] =
     listLog().map(_.getName).collect { case name(n) => n.toInt }.sorted
@@ -545,16 +547,22 @@ private[lake] final class LakeLog(fs: FileSystem, tablePath: String,
     }
 
     /** This kind's sidecar files at the current head. */
-    def paths(): Seq[Path] = sidecarListing()._2.filter(p => Name.matches(p.getName))
+    def paths(): Seq[Path] = listed(sidecarListing()._2).map(_.getPath)
+
+    /** Total bytes of [[paths]], from the same listing. */
+    def bytes(): Long = listed(sidecarListing()._2).map(_.getLen).sum
+
+    private def listed(all: Seq[FileStatus]): Seq[FileStatus] =
+      all.filter(st => Name.matches(st.getPath.getName))
 
     /** file → column → value across every sidecar at the current head. */
     def all(): Map[String, Map[String, T]] = {
-      val (head, listed) = sidecarListing()
+      val (head, listing) = sidecarListing()
       assembled match {
         case Some((h, m)) if h == head => return m
         case _ => ()
       }
-      val m = listed.filter(p => Name.matches(p.getName)).flatMap { p =>
+      val m = listed(listing).map(_.getPath).flatMap { p =>
         parsed.getOrElseUpdate(p.getName, {
           val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
           try src.getLines().toList.flatMap(decode) finally src.close()
@@ -569,14 +577,15 @@ private[lake] final class LakeLog(fs: FileSystem, tablePath: String,
   val blooms = new Sidecars[Array[Byte]]("bloom", LogCodec.decodeBloomLine)
 
   /** (head version, sidecar files in name order), listed once per head. */
-  @volatile private var sidecarsAt: Option[(Int, Seq[Path])] = None
+  @volatile private var sidecarsAt: Option[(Int, Seq[FileStatus])] = None
 
-  private def sidecarListing(): (Int, Seq[Path]) = {
+  private def sidecarListing(): (Int, Seq[FileStatus]) = {
     val head = latestVersion().getOrElse(-1)
     sidecarsAt match {
       case Some(l @ (h, _)) if h == head => l
       case _ =>
-        val l = (head, listLog().filter(_.getName.endsWith(".jsonl")).sortBy(_.getName))
+        val l = (head, listLogStatus().filter(_.getPath.getName.endsWith(".jsonl"))
+          .sortBy(_.getPath.getName))
         sidecarsAt = Some(l)
         l
     }

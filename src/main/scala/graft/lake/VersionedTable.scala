@@ -242,8 +242,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
   /** The ONE deletion-vector overlay, over any file-source frame
     * exposing `_metadata`: rows marked in `dvs` (the DV list of
     * snapshot `v`) are dropped. Two gears, chosen by [[dvOversized]]
-    * from the vectors' size: while Spark would broadcast them the
-    * vectors broadcast as a scan-local row-index filter
+    * from the vectors' size: up to 4M marked positions the vectors
+    * broadcast as a scan-local row-index filter
     * ([[org.apache.spark.sql.graft.DvNotDeleted]]); above it, the
     * distributed anti-join on (`_g_file`, `_g_pos`). `withPos` appends
     * `_g_file` (file name) and `_g_pos` (`_metadata.row_index`) to the
@@ -298,17 +298,16 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
       })
     })
 
-  /** True when the vectors `dvs`, as a broadcast map (8 bytes per
-    * marked position, the total as the commit log records it per vector
-    * file, the footers for files it has no count for), exceed Spark's
-    * `autoBroadcastJoinThreshold` — the bound Merge and the MinHash
-    * verify also follow; `-1` always anti-joins. Above it nothing
-    * decodes vectors on the driver: the overlay anti-joins,
+  /** True when the vectors `dvs` carry more than
+    * [[VersionedTable.DvBroadcastMaxPositions]] marked positions (the
+    * total as the commit log records it per vector file, the footers
+    * for files it has no count for), or when Spark's
+    * `autoBroadcastJoinThreshold` is -1 (no broadcasts). Above it
+    * nothing decodes vectors on the driver: the overlay anti-joins,
     * [[liveRowCount]] counts with a job. */
-  private def dvOversized(dvs: Seq[String]): Boolean = {
-    val cap = spark.sessionState.conf.autoBroadcastJoinThreshold
-    cap < 0 || 8L * fileRows(dvs) > cap
-  }
+  private def dvOversized(dvs: Seq[String]): Boolean =
+    spark.sessionState.conf.autoBroadcastJoinThreshold < 0 ||
+      fileRows(dvs) > VersionedTable.DvBroadcastMaxPositions
 
   /** [[dvBroadcast]]'s cache, keyed by vector list — committed
     * vectors are immutable, so an entry can never go stale. */
@@ -514,6 +513,9 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     // sized for the largest file (staging recorded every row count):
     // a smaller one just gets a lower false-positive rate
     val maxItems = names.map(n => log.fileMetaIndex(n).rows).max
+    if (properties().exists(_._1 == "bloom.maxItems"))
+      System.err.println(s"[lake] table property bloom.maxItems is ignored " +
+        s"at $tablePath: blooms are sized from the files' row counts")
     try {
       // staged frames carry PHYSICAL column names — translate the
       // configured logical names before collecting
@@ -534,16 +536,21 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     }
   }
 
+  /** The driver bloom gear's bound on total sidecar bytes; 0 runs the
+    * distributed gear on any table. */
+  @volatile private[lake] var bloomDriverMaxBytes = VersionedTable.BloomDriverMaxBytes
+
   private val bloomDeserCache = scala.collection.concurrent.TrieMap
     .empty[(String, String), org.apache.spark.util.sketch.BloomFilter]
 
   /** Bloom layer under [[pruneByStats]]: drop `files` members PROVABLY
     * excluded by a top-level point conjunct against their per-file
     * blooms. Conservative everywhere blooms are absent. Two gears by
-    * snapshot size — driver probe up to
-    * [[VersionedTable.BloomDriverMaxFiles]] files, a Spark job over the
-    * sidecar lines above it (filters never aggregate on the driver at
-    * 10⁶ files). */
+    * size — driver probe up to [[VersionedTable.BloomDriverMaxFiles]]
+    * candidate files while the bloom sidecars (all of which it loads)
+    * total at most [[bloomDriverMaxBytes]], a Spark job over the sidecar
+    * lines otherwise (filters never aggregate on the driver at 10⁶
+    * files). */
   private def bloomPrune(files: Seq[String],
                          resolved: org.apache.spark.sql.catalyst.expressions.Expression,
                          schema: StructType, inv: Map[String, String],
@@ -554,7 +561,8 @@ final class VersionedTable(spark: SparkSession, val tablePath: String,
     val terms = BloomSidecars.pointTerms(resolved, schema,
       schema.fieldNames.toSet)
     if (terms.isEmpty) return files
-    if (files.size <= VersionedTable.BloomDriverMaxFiles) {
+    if (files.size <= VersionedTable.BloomDriverMaxFiles &&
+        log.blooms.bytes() <= bloomDriverMaxBytes) {
       val blooms = log.blooms.all()
       files.filter { f =>
         blooms.get(f).forall { byPhys =>
@@ -2904,9 +2912,18 @@ object VersionedTable {
     * time. -1 = unknown (legacy checkpoints, in-flight staging). */
   case class FileMeta(size: Long, rows: Long, mtime: Long = -1L)
 
-  /** Above this many candidate files the bloom probe runs as a Spark
-    * job instead of on the driver. */
+  /** Above this many candidate files, or [[BloomDriverMaxBytes]] of
+    * bloom sidecars, the bloom probe runs as a Spark job instead of on
+    * the driver. 256 MB of base64 lines hold about 190 filters at the
+    * 1 MB cap, or about 1600 sized for 100k rows. */
   private val BloomDriverMaxFiles = 4096
+  private val BloomDriverMaxBytes = 256L << 20
+
+  /** The most marked positions the deletion-vector overlay broadcasts
+    * (a 32 MB map): the row-index filter read 16M rows 5.8× faster than
+    * the anti-join with 1.5M positions marked and 10× faster with 4M
+    * (SCALE.md, "DV overlay gears at 1.5M–4M marked positions"). */
+  private val DvBroadcastMaxPositions = 4000000L
 
   /** Deletion-vector sidecar schema: deleted row positions by file. */
   private[lake] val DvSchema: org.apache.spark.sql.types.StructType =

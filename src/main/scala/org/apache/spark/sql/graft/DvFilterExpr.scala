@@ -26,11 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * overlay, so every lake reader uses it — `read`, `readWhere`,
   * `readSnapshotFiles`, the SQL door's native replan, the change
   * feed's replaced-file side, and every mutation pre-scan and rewrite
-  * (CoW, MoR, merge, replaceWhere, optimize, compaction) — when the
-  * snapshot's deleted positions, at 8 bytes each, fit Spark's
-  * `autoBroadcastJoinThreshold` (10 MB ≈ 1.3M positions by default);
-  * larger vectors take the distributed anti-join gear — same
-  * semantics, join-shaped cost. Codegen'd; the interpreted eval path
+  * (CoW, MoR, merge, replaceWhere, optimize, compaction) — up to 4M
+  * deleted positions (a 32 MB map) unless Spark's
+  * `autoBroadcastJoinThreshold` is -1; larger vectors take the
+  * distributed anti-join gear — same semantics, join-shaped cost. Codegen'd; the interpreted eval path
   * mirrors it for completeness.
   */
 case class DvNotDeleted(left: Expression, right: Expression,

@@ -98,24 +98,47 @@ class BloomSkippingSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-bloom-prop").toString + "/t"
     val t = VersionedTable(spark, dir)
     t.commitOverwrite(spark.range(0, 10).toDF("k")) // seed so properties commit works
-    t.setProperties(Seq("bloom.columns" -> "k"))
+    t.setProperties(Seq("bloom.columns" -> "k,g"))
     t.commitOverwrite(spark.range(0, 4000).toDF("id")
       .select(col("id").as("k"), (col("id") % 7).as("g"))
       .repartition(8, col("k")))
+    // the gears must resolve blooms through the column map (k is now
+    // `key`) and discard a dropped column's blooms (the old g held
+    // 0..6; the re-added g is null everywhere, so `g = 100` must not
+    // prune on the dead filter)
+    t.renameColumn("k", "key")
+    t.dropColumn("g")
+    t.addColumn("g", org.apache.spark.sql.types.LongType)
     val files = t.snapshotDataFiles()
-    val driverHit = t.candidateFiles(col("k") === 77L)
-    assert(driverHit.nonEmpty && driverHit.size < files.size)
-    // the distributed gear (snapshots above 4096 files) over the same
-    // sidecars: stats keep every file of the hash layout, so it must
-    // drop exactly the files the driver probe dropped
-    val dropped = BloomSidecars.droppedFilesDistributed(spark,
-      t.log.blooms.paths().map(_.toString),
-      Seq(BloomSidecars.PointTerm("k", Seq(77L), org.apache.spark.sql.types.LongType)),
-      Map.empty, Set.empty)
-    val distHit = files.filterNot(dropped)
-    assert(distHit.toSet == driverHit.toSet,
-      s"gears disagree: driver=$driverHit dist=$distHit")
-    assert(t.readWhere(col("k") === 77L).count() == 1)
+    val dist = VersionedTable(spark, dir)
+    dist.bloomDriverMaxBytes = 0L
+    for (p <- Seq(col("key") === 77L, col("key") === 77L && col("g") === 100L)) {
+      val driverHit = t.candidateFiles(p)
+      assert(driverHit.nonEmpty && driverHit.size < files.size)
+      // the distributed gear (above 4096 candidate files or 256 MB of
+      // sidecars) over the same sidecars: stats keep every file of the
+      // hash layout, so it must keep exactly the driver probe's files
+      val distHit = dist.candidateFiles(p)
+      assert(distHit.toSet == driverHit.toSet,
+        s"gears disagree on $p: driver=$driverHit dist=$distHit")
+    }
+    assert(t.readWhere(col("key") === 77L).count() == 1)
+  }
+
+  test("a filter is capped at 1 MB: a file above the cap gets a full-size, sound bloom") {
+    val t = VersionedTable(spark,
+      Files.createTempDirectory("graft-bloom-cap").toString + "/t")
+    spark.conf.set("spark.graft.lake.bloom.columns", "k")
+    // 1M rows at fpp 0.01 would size a 1.2 MB filter
+    try t.commitOverwrite(spark.range(0, 1000000, 1, 1).select((col("id") * 2).as("k")))
+    finally spark.conf.unset("spark.graft.lake.bloom.columns")
+    val Seq(file) = t.snapshotDataFiles()
+    val bytes = t.log.blooms.all()(file)("k").length
+    assert(bytes <= BloomSidecars.MaxFilterBytes + 16, s"filter is $bytes bytes")
+    assert(bytes > BloomSidecars.MaxFilterBytes - 16, s"filter is $bytes bytes")
+    // no false negatives at the cap
+    for (k <- Seq(0L, 2L, 777778L, 1999998L))
+      assert(t.candidateFiles(col("k") === k) == Seq(file))
   }
 
   test("blooms are sized from the files' row counts: 250k-row files still prune absent keys") {

@@ -152,6 +152,14 @@ class LakeSqlSpec extends AnyFunSuite {
       assert(big.readWhere(col("id") <= 10).count() == 9)
       assert(GraftLakeRelation.lastScanFiles.get(dir) < big.snapshotDataFiles().size)
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    // only -1 moves the gear: a join threshold below the vectors'
+    // 80-byte map still reads through the row-index filter
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
+    try {
+      val small = VersionedTable(spark, dir).read()
+      assert(small.queryExecution.executedPlan.toString.contains("dv_not_deleted"))
+      assert(small.count() == 90)
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     // a metadata-only added column stays on the fast path, null-filled
     val dir2 = scratch("graft-sql-native2") + "/t"
     val t2 = VersionedTable(spark, dir2)
